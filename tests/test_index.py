@@ -510,3 +510,60 @@ def test_deferred_rel_respects_setter_assignment(spark, embeddings):
     _ = idx.points_df  # forces the thunk for the OTHER relation
     assert idx.graph_df is marker
     assert idx.points_df is not None
+
+
+def _search_tasks(spark, idx, queries, group):
+    """Run one search under job group ``group``; return (rows, tasks it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "search fan-out")
+    try:
+        rows = idx.search(queries, k=10, ef_search=32).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker lags task-end events until the listener bus drains
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tr = sc.statusTracker()
+    stages = [s for j in tr.getJobIdsForGroup(group) for s in tr.getJobInfo(j).stageIds]
+    return rows, sum(tr.getStageInfo(s).numCompletedTasks for s in stages)
+
+
+def test_search_fanout_sized_to_batch(spark, tmp_path):
+    """A batch whose row count Catalyst knows runs in
+    ceil(rows / MIN_QUERIES_PER_TASK) tasks (at most one per core) with
+    the kernel's exact rows; a parquet-read batch keeps its partitions."""
+    import math
+
+    import pandas as pd
+
+    from vamana_spark.index import kernels
+    from vamana_spark.index.vamana import MIN_QUERIES_PER_TASK
+
+    rng = np.random.default_rng(5)
+    V = rng.standard_normal((2000, 16)).astype(np.float32)
+    Q = rng.standard_normal((300, 16)).astype(np.float32)
+    params = VamanaParams(dim=16, alpha=1.2, R=16, L=32, ef_search=32, seed=42)
+    idx = VamanaIndex.build_local(spark, np.arange(2000), V, params)
+    qdf = spark.createDataFrame(
+        pd.DataFrame({"query_id": np.arange(300, dtype=np.int64), "query_vec": list(Q)}),
+        "query_id long, query_vec array<float>",
+    )
+    sc = spark.sparkContext
+    got, tasks = _search_tasks(spark, idx, qdf, "fanout-pandas")
+    assert tasks == min(sc.defaultParallelism, math.ceil(300 / MIN_QUERIES_PER_TASK))
+
+    P, ids, indptr, nbrs = idx._load_local()
+    rq, rid, rd, hops, comps = kernels.search_topk_batch(
+        P, kernels.pad_adjacency(indptr, nbrs, len(P)), idx.params.medoid, Q, 10, 32
+    )
+    got = got.sort_values(["query_id", "rank"]).reset_index(drop=True)
+    assert got["query_id"].tolist() == rq.tolist()
+    assert got["vec_id"].tolist() == ids[rid].tolist()
+    np.testing.assert_allclose(got["dist"].to_numpy(), rd, rtol=1e-6)
+    assert got["hops"].tolist() == hops[rq].tolist()
+    assert got["dist_comps"].tolist() == comps[rq].tolist()
+
+    path = str(tmp_path / "queries")
+    qdf.repartition(max(2, sc.defaultParallelism)).write.parquet(path)
+    fdf = spark.read.parquet(path)
+    _, tasks = _search_tasks(spark, idx, fdf, "fanout-parquet")
+    assert tasks == fdf.rdd.getNumPartitions()

@@ -2289,6 +2289,32 @@ def test_incremental_dedup_ranged_corpus_never_shuffles(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_incremental_dedup_dup_heavy_corpus(spark):
+    """A corpus holding many copies of each content gives the same
+    survivors: the verify tail matches distinct contents, not copies."""
+    new, seen = _inc_dedup_frames(spark)
+    heavy = seen.crossJoin(spark.range(20).withColumnRenamed("id", "_copy")).drop("_copy")
+    out = dedup.incremental_dedup(new, heavy, expected_seen=2, fpp=0.5)
+    assert sorted(r.doc_id for r in out.collect()) == [1000 + i for i in range(50)]
+
+
+def test_incremental_dedup_no_broadcast_when_disabled(spark):
+    """autoBroadcastJoinThreshold=-1: the verify tail shuffles instead of
+    broadcasting, with the same survivors."""
+    new, seen = _inc_dedup_frames(spark)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = dedup.incremental_dedup(new, seen, expected_seen=2, fpp=0.5)
+        got = sorted(r.doc_id for r in out.collect())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert got == [1000 + i for i in range(50)]
+    assert "BroadcastExchange" not in plan
+
+
 def test_incremental_dedup_empty_corpus(spark):
     new, _ = _inc_dedup_frames(spark)
     seen = new.where(F.lit(False))

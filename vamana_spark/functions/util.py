@@ -152,7 +152,24 @@ def bytes_conf(spark, key: str, default: int) -> int:
         return default
 
 
-def ensure_parallelism(df: DataFrame, min_factor: float = 0.5) -> DataFrame:
+def plan_row_count(df: DataFrame) -> int | None:
+    """Catalyst's row count for the plan, or None when it does not know
+    it (file scans without table statistics) or the JVM call fails. Free:
+    no Spark job. Defined for the LocalRelation that
+    ``createDataFrame(pandas)`` produces."""
+    try:
+        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+        return int(rc.get()) if rc.isDefined() else None
+    except Exception:
+        return None
+
+
+def ensure_parallelism(
+    df: DataFrame,
+    min_factor: float = 0.5,
+    min_rows_per_task: int | None = None,
+    max_rows_per_task: int | None = None,
+) -> DataFrame:
     """Round-robin repartition when the input has too few partitions for
     the cluster's cores.
 
@@ -160,6 +177,20 @@ def ensure_parallelism(df: DataFrame, min_factor: float = 0.5) -> DataFrame:
     (shingling, hashing) onto one core. On a real cluster a 100-TB table
     already has thousands of splits and this is a no-op — the check costs
     one plan inspection, no job.
+
+    Row-count fan-out: when ``min_rows_per_task`` is given and Catalyst
+    knows the row count (:func:`plan_row_count`), the input gets
+    ``min(defaultParallelism, ceil(rows / min_rows_per_task))``
+    partitions, raised to ``ceil(rows / max_rows_per_task)`` when that
+    cap is given. More partitions than that are merged with ``coalesce``
+    (narrow, no shuffle); fewer are round-robin repartitioned. Every Python task pays a fixed CPU cost before
+    its first row: 0.2-0.3 s per task measured on a 4-core VM with
+    PySpark 4.1, most of it ``importlib.invalidate_caches()`` in the
+    worker's ``setup_spark_files``, which re-reads the directory of
+    every zip and jar importer on the worker's path. A batch of a few
+    hundred rows is therefore cheaper in one or two tasks than spread
+    over every core. When the row count is unknown, or the lookup
+    fails, the rule above applies.
     """
     if df.isStreaming:
         # no RDD inspection on streams; micro-batch parallelism comes
@@ -167,6 +198,16 @@ def ensure_parallelism(df: DataFrame, min_factor: float = 0.5) -> DataFrame:
         return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, int(target * min_factor)):
+    parts = df.rdd.getNumPartitions()
+    rows = plan_row_count(df) if min_rows_per_task else None
+    if rows is not None:
+        want = min(target, -(-rows // min_rows_per_task))
+        if max_rows_per_task:
+            want = max(want, -(-rows // max_rows_per_task))
+        want = max(1, want)
+        if parts > want:
+            return df.coalesce(want)
+        return df.repartition(want) if parts < want else df
+    if parts < max(2, int(target * min_factor)):
         return df.repartition(target)
     return df

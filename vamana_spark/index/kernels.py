@@ -27,6 +27,15 @@ from typing import List, Optional, Tuple
 
 import numpy as np
 
+# random candidates per node that build_vamana_dense adds to each node's
+# exact nearest set, so the pruned graph keeps long edges on clustered data
+LONG_RANGE_CANDIDATES = 16
+
+# largest nq * n for which the batched searches keep an (nq, n) "seen"
+# bitmap (256 MB of bool); past it search_topk_batch falls back to the
+# slower single-expansion history path and the ADC search chunks queries
+BITMAP_MAX_CELLS = 256_000_000
+
 
 def dists_to(P: np.ndarray, ids: np.ndarray, q: np.ndarray) -> np.ndarray:
     """Squared L2 from query q to P[ids] — one vectorized BLAS-ish op."""
@@ -468,12 +477,22 @@ def build_vamana_dense(
     seed: int = 42,
     L: int = 0,
 ) -> Tuple[List[np.ndarray], int]:
-    """Dense Vamana build: exact candidate sets from the full pairwise
-    distance matrix (one BLAS gemm), then per-node RobustPrune + reverse
-    fix-up. For n where the n^2 matrix fits (~30k x 30k f32 = 3.6 GB at
-    the ceiling), this dominates the beam-search build: candidates are
-    exact (graph quality >= two-pass search-based build) and the hot loop
-    is pure vectorized NumPy.
+    """Dense Vamana build: candidate sets from the full pairwise distance
+    matrix (one BLAS gemm), then per-node RobustPrune + reverse fix-up.
+    For n where the n^2 matrix fits (~30k x 30k f32 = 3.6 GB at the
+    ceiling), the hot loop is pure vectorized NumPy and runs ~10x faster
+    than the beam-search build.
+
+    Each node's candidates are its C exact nearest points plus
+    ``LONG_RANGE_CANDIDATES`` seeded uniform-random points. The exact
+    set alone is NOT as good as the two-pass build: on clustered data
+    every exact candidate sits in the node's own cluster, the pruned
+    graph has no long edges, and beam search stalls in the medoid's
+    cluster (recall@10 0.73 at ef=32 on 5k points in 8 Gaussian blobs).
+    The random candidates stand in for the far nodes that the paper's
+    second pass picks up from the greedy-search visited set from the
+    medoid (DiskANN §2.3); RobustPrune keeps those that no nearer
+    neighbour dominates (recall@10 0.99 on the same corpus).
 
     The sharded build keeps per-shard n below the ceiling, so this is the
     default shard kernel; ``build_vamana`` remains for oversized single
@@ -501,9 +520,21 @@ def build_vamana_dense(
     # Each argpartition row holds C+1 distinct ids including self exactly
     # once, so a stable compaction of the non-self entries yields exactly
     # C candidates per row — no ragged loop needed.
-    cand_rows = np.where(order == np.arange(n)[:, None], -1, order)
+    rows = np.arange(n)[:, None]
+    cand_rows = np.where(order == rows, -1, order)
     compact = np.argsort(cand_rows < 0, axis=1, kind="stable")
     packed = np.take_along_axis(cand_rows, compact, axis=1)[:, :C]
+
+    # long-range candidates: S seeded random non-self ids per row, merged
+    # into the distance order. A random id that repeats an exact one (or
+    # itself) is harmless: the prune kills it when its twin is admitted.
+    S = min(LONG_RANGE_CANDIDATES, n - 1 - C)
+    if S > 0:
+        rnd = np.random.default_rng(seed).integers(0, n - 1, size=(n, S))
+        rnd += rnd >= rows  # skip self
+        packed = np.concatenate([packed, rnd], axis=1)
+        o = np.argsort(np.take_along_axis(D, packed, axis=1), axis=1, kind="stable")
+        packed = np.take_along_axis(packed, o, axis=1)
     pruned = robust_prune_batch(D, packed, float(alpha), R)
     graph: List[np.ndarray] = [row[row >= 0] for row in pruned]
 
@@ -642,7 +673,7 @@ def search_topk_batch(
     beam_d[:, 0] = np.einsum("ij,ij->i", diff0, diff0)
 
     arange_nq = np.arange(nq)
-    use_bitmap = nq * n <= 256_000_000
+    use_bitmap = nq * n <= BITMAP_MAX_CELLS
     Rmax = nbr_mat.shape[1]
     if use_bitmap:
         seen_map = np.zeros((nq, n), dtype=bool)
@@ -812,7 +843,7 @@ def search_topk_batch_adc(
     if nq == 0 or n == 0:
         z = np.array([], dtype=np.int64)
         return z, z, np.array([], dtype=np.float64)
-    max_cells = 256_000_000
+    max_cells = BITMAP_MAX_CELLS
     if nq * n > max_cells:
         step = max(1, max_cells // max(n, 1))
         rs, ids_, ds = [], [], []

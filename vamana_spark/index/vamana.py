@@ -48,11 +48,20 @@ SEARCH_SCHEMA = (
     "query_id long, vec_id long, dist double, rank int, hops int, dist_comps int"
 )
 
-# below this point count the dense build kernel (exact candidate sets from
-# one n^2 gemm) beats the beam-search build by ~10x; the n^2 f32 matrix at
-# the ceiling is ~1.6 GB — well inside an executor. Sharded builds keep
-# per-shard n under this, so the dense kernel is the common case.
+# below this point count the dense build kernel (candidate sets from one
+# n^2 gemm plus random long-range candidates) beats the beam-search build
+# by ~10x; the n^2 f32 matrix at the ceiling is ~1.6 GB — well inside an
+# executor. Sharded builds keep per-shard n under this, so the dense
+# kernel is the common case.
 DENSE_BUILD_MAX = 20_000
+
+# fewest queries a search task gets when the batch's row count is known.
+# Each Python task pays 0.2-0.3 s of fixed worker CPU (see
+# ensure_parallelism), the kernel time of ~1000 queries at ef=32 on a
+# 5k-point index (~0.29 ms per query). Measured on 4 cores, a 500-query
+# batch in 2 tasks takes 0.41-0.44 s per call and 0.9 s of CPU; in 1 task,
+# 0.46-0.48 s and 0.6 s of CPU; in 4 tasks (at ef=128), 0.46-0.48 s.
+MIN_QUERIES_PER_TASK = 256
 
 
 class _TierOverflow(Exception):
@@ -731,6 +740,20 @@ class VamanaIndex:
 
         Returns (query_id, vec_id, dist, rank, hops, dist_comps). The
         index is broadcast once; queries are partition-parallel.
+
+        Query fan-out: when Catalyst knows the batch's row count (as for
+        ``createDataFrame(pandas)``), the queries run in
+        ``min(defaultParallelism, ceil(rows / MIN_QUERIES_PER_TASK))``
+        tasks, merged by ``coalesce`` (no shuffle). Every Python task
+        pays 0.2-0.3 s of fixed worker CPU, so a 500-query batch on 4
+        cores costs less CPU in 2 tasks than in 4, and no more wall
+        time. Each task also gets at most ``BITMAP_MAX_CELLS / n``
+        queries, so the kernel always runs its bitmap path. With the row
+        count unknown (file scans) the queries keep their partitions
+        unless there are too few for the cores
+        (:func:`~vamana_spark.functions.util.ensure_parallelism`). The
+        kernel treats every query row alone, so the fan-out never
+        changes results.
         """
         ef = int(ef_search or self.params.ef_search)
         metric = self.params.metric
@@ -738,21 +761,25 @@ class VamanaIndex:
         medoid = int(self.params.medoid if self.params.medoid is not None else 0)
         # pad ONCE driver-side and broadcast the search-ready form, cached
         # on the instance — re-broadcasting per call re-ships the index
+        P, ids, indptr, nbrs = self._load_local()
+        n_points = P.shape[0]
         if self._bcast is None:
-            P, ids, indptr, nbrs = self._load_local()
             self._bcast = self.spark.sparkContext.broadcast(
-                (P, ids, kernels.pad_adjacency(indptr, nbrs, P.shape[0]))
+                (P, ids, kernels.pad_adjacency(indptr, nbrs, n_points))
             )
         bidx = self._bcast
 
         from vamana_spark.functions.util import ensure_parallelism
 
         # queries scale out across cores/executors — a single-split query
-        # file must not serialize the whole batch onto one task
+        # file must not serialize the whole batch onto one task — but a
+        # small batch of known size runs in few tasks
         qsel = ensure_parallelism(
             queries.select(
                 F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv")
-            )
+            ),
+            min_rows_per_task=MIN_QUERIES_PER_TASK,
+            max_rows_per_task=max(1, kernels.BITMAP_MAX_CELLS // max(1, n_points)),
         )
         if starts is not None:
             qsel = qsel.join(starts, "query_id", "left")

@@ -2051,19 +2051,24 @@ def _exact_verify_tail(
     # batch-sized (the small side by construction); feeds the clear
     # branch, the maybe branch AND the pricing count without replaying
     # the Bloom probe pipeline
-    flagged = flagged.localCheckpoint()
-    maybe = flagged.where(F.col("_maybe"))
-    clear = flagged.where(~F.col("_maybe"))
-    cand_h = maybe.select(F.xxhash64("_n").alias("_h")).distinct()
-    seen_matched = (
-        seen_norm.withColumn("_h", F.xxhash64("_n"))
-        .join(F.broadcast(cand_h), "_h", "left_semi")
-        .select("_n")
-    )
     from vamana_spark.functions.util import bytes_conf
 
     thresh = bytes_conf(
         flagged.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 << 20
+    )
+    flagged = flagged.localCheckpoint()
+    maybe = flagged.where(F.col("_maybe"))
+    clear = flagged.where(~F.col("_maybe"))
+    cand_h = maybe.select(F.xxhash64("_n").alias("_h")).distinct()
+    # distinct: a dup-heavy corpus holds many copies of one matched
+    # content; one row per distinct content keeps the broadcast below
+    # within the n_maybe gate. With broadcasts disabled (threshold < 0)
+    # the digest semi-join shuffles instead.
+    seen_matched = (
+        seen_norm.withColumn("_h", F.xxhash64("_n"))
+        .join(F.broadcast(cand_h) if thresh >= 0 else cand_h, "_h", "left_semi")
+        .select("_n")
+        .distinct()
     )
     n_maybe = maybe.count()  # cheap: reads the checkpoint
     if thresh >= 0 and n_maybe <= _VERIFY_BCAST_ROWS:

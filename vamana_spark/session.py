@@ -7,6 +7,36 @@ import threading
 
 from pyspark.sql import SparkSession
 
+# local-mode driver heap: this share of host RAM, within [1 GB, 16 GB]. In
+# local mode the Python workers and the JVM's off-heap memory sit outside
+# the heap, so it takes well under the whole machine.
+DRIVER_MEM_FRACTION = 0.25
+DRIVER_MEM_MIN_MB = 1024
+DRIVER_MEM_MAX_MB = 16 * 1024
+
+
+def host_defaults() -> tuple[str, str]:
+    """(local cores, driver memory) for a session on this host.
+
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override; else
+    the cores this process may run on and ``DRIVER_MEM_FRACTION`` of
+    physical RAM, clamped to [``DRIVER_MEM_MIN_MB``,
+    ``DRIVER_MEM_MAX_MB``]."""
+    if hasattr(os, "sched_getaffinity"):
+        cpus = len(os.sched_getaffinity(0))
+    else:
+        cpus = os.cpu_count() or 1
+    try:
+        mem_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        mem_bytes = 0
+    mem_mb = int(mem_bytes * DRIVER_MEM_FRACTION) >> 20
+    mem_mb = min(DRIVER_MEM_MAX_MB, max(DRIVER_MEM_MIN_MB, mem_mb))
+    return (
+        os.environ.get("SPARK_GRAFT_CPUS") or str(cpus),
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{mem_mb}m",
+    )
+
 
 def get_session(
     app_name: str = "vamana_spark",
@@ -17,6 +47,7 @@ def get_session(
     """Local-mode tuned session. On a real cluster the master/memory knobs
     come from spark-submit; only the SQL confs below matter there.
 
+    - Cores and driver memory fit the host (:func:`host_defaults`).
     - AQE on: runtime coalescing + skew-join splitting.
     - shuffle.partitions sized to cores in local mode (not the 200
       default, which makes 32-core local runs pay 6x task overhead).
@@ -24,13 +55,9 @@ def get_session(
       vanilla Spark refuses; we read ns-as-long and convert on load
       (sources.tables.load_table).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, host_mem = host_defaults()
     master = master or f"local[{cpus}]"
     shuffle = str(shuffle_partitions or cpus)
-    # SPARK_GRAFT_DRIVER_MEM lets CLI invocations (whose JVM starts
-    # inside get_session — no spark-submit to set it) size the local
-    # driver for 10M+ corpora; explicit argument still wins
-    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -42,7 +69,7 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory or "16g")
+        .config("spark.driver.memory", driver_memory or host_mem)
     )
     s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
