@@ -1,5 +1,7 @@
 """Pipeline operators: dedup / text / events / relational / similarity."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -2291,10 +2293,17 @@ def test_incremental_dedup_ranged_corpus_never_shuffles(spark):
 
 def test_incremental_dedup_dup_heavy_corpus(spark):
     """A corpus holding many copies of each content gives the same
-    survivors: the verify tail matches distinct contents, not copies."""
+    survivors, and the verify tail broadcasts distinct matched contents,
+    not copies: the anti-join's text broadcast sits on an aggregate."""
     new, seen = _inc_dedup_frames(spark)
     heavy = seen.crossJoin(spark.range(20).withColumnRenamed("id", "_copy")).drop("_copy")
     out = dedup.incremental_dedup(new, heavy, expected_seen=2, fpp=0.5)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.search(
+        r"BroadcastExchange HashedRelationBroadcastMode\(List\(input\[0, string.*\n"
+        r"\s*\+- HashAggregate\(keys=\[_n#",
+        plan,
+    ), plan
     assert sorted(r.doc_id for r in out.collect()) == [1000 + i for i in range(50)]
 
 

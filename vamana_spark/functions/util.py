@@ -168,7 +168,6 @@ def ensure_parallelism(
     df: DataFrame,
     min_factor: float = 0.5,
     min_rows_per_task: int | None = None,
-    max_rows_per_task: int | None = None,
 ) -> DataFrame:
     """Round-robin repartition when the input has too few partitions for
     the cluster's cores.
@@ -181,16 +180,16 @@ def ensure_parallelism(
     Row-count fan-out: when ``min_rows_per_task`` is given and Catalyst
     knows the row count (:func:`plan_row_count`), the input gets
     ``min(defaultParallelism, ceil(rows / min_rows_per_task))``
-    partitions, raised to ``ceil(rows / max_rows_per_task)`` when that
-    cap is given. More partitions than that are merged with ``coalesce``
-    (narrow, no shuffle); fewer are round-robin repartitioned. Every Python task pays a fixed CPU cost before
-    its first row: 0.2-0.3 s per task measured on a 4-core VM with
-    PySpark 4.1, most of it ``importlib.invalidate_caches()`` in the
-    worker's ``setup_spark_files``, which re-reads the directory of
-    every zip and jar importer on the worker's path. A batch of a few
-    hundred rows is therefore cheaper in one or two tasks than spread
-    over every core. When the row count is unknown, or the lookup
-    fails, the rule above applies.
+    partitions. More partitions than that are merged with ``coalesce``
+    (narrow, no shuffle); fewer are round-robin repartitioned. Every
+    Python task pays a fixed CPU cost before its first row: 0.2-0.3 s
+    per task measured on a 4-core VM with PySpark 4.1, most of it
+    ``importlib.invalidate_caches()`` in the worker's
+    ``setup_spark_files``, which re-reads the directory of every zip and
+    jar importer on the worker's path. A batch of a few hundred rows is
+    therefore cheaper in one or two tasks than spread over every core.
+    When the row count is unknown, or the lookup fails, the rule above
+    applies.
     """
     if df.isStreaming:
         # no RDD inspection on streams; micro-batch parallelism comes
@@ -201,10 +200,7 @@ def ensure_parallelism(
     parts = df.rdd.getNumPartitions()
     rows = plan_row_count(df) if min_rows_per_task else None
     if rows is not None:
-        want = min(target, -(-rows // min_rows_per_task))
-        if max_rows_per_task:
-            want = max(want, -(-rows // max_rows_per_task))
-        want = max(1, want)
+        want = max(1, min(target, -(-rows // min_rows_per_task)))
         if parts > want:
             return df.coalesce(want)
         return df.repartition(want) if parts < want else df

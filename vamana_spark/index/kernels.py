@@ -33,7 +33,7 @@ LONG_RANGE_CANDIDATES = 16
 
 # largest nq * n for which the batched searches keep an (nq, n) "seen"
 # bitmap (256 MB of bool); past it search_topk_batch falls back to the
-# slower single-expansion history path and the ADC search chunks queries
+# single-expansion history path and the ADC search chunks queries
 BITMAP_MAX_CELLS = 256_000_000
 
 

@@ -747,13 +747,12 @@ class VamanaIndex:
         tasks, merged by ``coalesce`` (no shuffle). Every Python task
         pays 0.2-0.3 s of fixed worker CPU, so a 500-query batch on 4
         cores costs less CPU in 2 tasks than in 4, and no more wall
-        time. Each task also gets at most ``BITMAP_MAX_CELLS / n``
-        queries, so the kernel always runs its bitmap path. With the row
-        count unknown (file scans) the queries keep their partitions
-        unless there are too few for the cores
-        (:func:`~vamana_spark.functions.util.ensure_parallelism`). The
-        kernel treats every query row alone, so the fan-out never
-        changes results.
+        time. With the row count unknown (file scans) the queries keep
+        their partitions unless there are too few for the cores
+        (:func:`~vamana_spark.functions.util.ensure_parallelism`). On
+        the kernel's bitmap path (every Arrow batch with rows x n <=
+        ``kernels.BITMAP_MAX_CELLS``) each query row is searched alone,
+        so the fan-out does not change results.
         """
         ef = int(ef_search or self.params.ef_search)
         metric = self.params.metric
@@ -761,11 +760,10 @@ class VamanaIndex:
         medoid = int(self.params.medoid if self.params.medoid is not None else 0)
         # pad ONCE driver-side and broadcast the search-ready form, cached
         # on the instance — re-broadcasting per call re-ships the index
-        P, ids, indptr, nbrs = self._load_local()
-        n_points = P.shape[0]
         if self._bcast is None:
+            P, ids, indptr, nbrs = self._load_local()
             self._bcast = self.spark.sparkContext.broadcast(
-                (P, ids, kernels.pad_adjacency(indptr, nbrs, n_points))
+                (P, ids, kernels.pad_adjacency(indptr, nbrs, P.shape[0]))
             )
         bidx = self._bcast
 
@@ -779,7 +777,6 @@ class VamanaIndex:
                 F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv")
             ),
             min_rows_per_task=MIN_QUERIES_PER_TASK,
-            max_rows_per_task=max(1, kernels.BITMAP_MAX_CELLS // max(1, n_points)),
         )
         if starts is not None:
             qsel = qsel.join(starts, "query_id", "left")

@@ -2030,11 +2030,15 @@ def _exact_verify_tail(
     r15 shape (guide §8.4 / §3.2 — move decisions on digests, attach
     the payload join back carefully): broadcast the candidate DIGESTS
     (xxhash64, 8 B per distinct maybe-content), pull only the
-    hash-matched corpus rows in one map-side semi-join (the corpus
-    STILL never shuffles on content), then make the result exact with
+    hash-matched corpus rows in one map-side semi-join (with broadcasts
+    enabled the corpus never shuffles on content), then make the result
+    exact with
     a candidate-sized text anti-join — digest collisions cannot cause
     a false drop because the final anti-join compares the full
-    normalized text.
+    normalized text. The matched corpus rows are deduplicated on
+    ``_n`` first, one Exchange hashpartitioning(_n) over candidate-
+    bounded rows, so a corpus holding many copies of one content
+    still moves one row per distinct matched content.
 
     The previous tail broadcast the candidate and confirmed TEXTS
     (two `F.broadcast` of full normalized documents). With a dup-heavy
@@ -2044,9 +2048,13 @@ def _exact_verify_tail(
     it would be a driver OOM. Moved bytes now: 8 B × |candidates|
     broadcast + one candidate-bounded movement of matched texts — as a
     broadcast while the maybe-count stays under the bound below (the
-    bench/ingest regime; keeps the anti-join exchange-free, same
-    count()-priced steering as search_pq's re-rank), as a
-    candidate-bounded shuffle past it.
+    bench/ingest regime; the anti-join's probe side does not
+    exchange, same count()-priced steering as search_pq's re-rank), as
+    a candidate-bounded shuffle past it.
+
+    With ``spark.sql.autoBroadcastJoinThreshold`` < 0 nothing
+    broadcasts: the digest semi-join then shuffles ALL of
+    ``seen_norm``, a full-corpus shuffle on content.
     """
     # batch-sized (the small side by construction); feeds the clear
     # branch, the maybe branch AND the pricing count without replaying
@@ -2063,7 +2071,7 @@ def _exact_verify_tail(
     # distinct: a dup-heavy corpus holds many copies of one matched
     # content; one row per distinct content keeps the broadcast below
     # within the n_maybe gate. With broadcasts disabled (threshold < 0)
-    # the digest semi-join shuffles instead.
+    # the digest semi-join shuffles the whole corpus instead.
     seen_matched = (
         seen_norm.withColumn("_h", F.xxhash64("_n"))
         .join(F.broadcast(cand_h) if thresh >= 0 else cand_h, "_h", "left_semi")
@@ -2096,7 +2104,9 @@ def incremental_dedup(
     (first occurrence within the batch, and not present in the corpus),
     schema = ``new_df``.
 
-    100 TB shape — the corpus NEVER shuffles on content:
+    100 TB shape — the corpus never shuffles on content while
+    broadcasts are enabled (with ``spark.sql.autoBroadcastJoinThreshold``
+    < 0 the verify tail's digest semi-join shuffles the whole corpus):
     - One narrow pass over ``seen_df`` (coalesced to ``max_build_tasks``
       so partial traffic is bounded at tasks × m/8 bytes) folds each
       task's content hashes into a Bloom bitmap emitted as 16 MiB
@@ -2172,7 +2182,8 @@ def incremental_dedup_ranged(
     WHOLE key space (10^9 keys at fpp=0.01 ≈ 1.2 GB on the driver and
     every executor); the sharded tier removes the broadcast but pays a
     corpus-wide digest shuffle. Here neither happens — the corpus
-    never shuffles AND no driver/broadcast artifact ever exceeds
+    never shuffles (while broadcasts are enabled; see
+    ``_exact_verify_tail``) AND no driver/broadcast artifact ever exceeds
     m/num_ranges bits (150 MB per pass for the 10^9-key example at
     num_ranges=8). The price is ``num_ranges`` narrow passes over the
     corpus for the build; at that scale, persist/localCheckpoint a

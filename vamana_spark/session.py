@@ -9,7 +9,8 @@ from pyspark.sql import SparkSession
 
 # local-mode driver heap: this share of host RAM, within [1 GB, 16 GB]. In
 # local mode the Python workers and the JVM's off-heap memory sit outside
-# the heap, so it takes well under the whole machine.
+# the heap, so it takes well under the whole machine. The fraction is a
+# chosen value, not a measured one.
 DRIVER_MEM_FRACTION = 0.25
 DRIVER_MEM_MIN_MB = 1024
 DRIVER_MEM_MAX_MB = 16 * 1024
@@ -55,6 +56,9 @@ def get_session(
       vanilla Spark refuses; we read ns-as-long and convert on load
       (sources.tables.load_table).
     """
+    # SPARK_GRAFT_DRIVER_MEM (read in host_defaults) lets CLI invocations
+    # (whose JVM starts inside get_session — no spark-submit to set it)
+    # size the local driver for 10M+ corpora; explicit argument still wins
     cpus, host_mem = host_defaults()
     master = master or f"local[{cpus}]"
     shuffle = str(shuffle_partitions or cpus)
