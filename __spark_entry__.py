@@ -10,42 +10,11 @@ from __future__ import annotations
 
 import os
 import sys
-import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-_SHIPPED = False
-_SHIP_LOCK = threading.Lock()
-
-
-def _ship_package(spark: SparkSession) -> None:
-    """Make ``vamana_spark`` importable on Python workers regardless of the
-    driver's cwd: zip the package and addPyFile it (idempotent, and
-    thread-safe: queries may be submitted from a driver thread pool —
-    guide §2.6 — and a concurrent first call used to race the zip write
-    + addPyFile into an 'exists and does not match contents' failure)."""
-    global _SHIPPED
-    if _SHIPPED:
-        return
-    with _SHIP_LOCK:
-        if _SHIPPED:
-            return
-        import shutil
-        import tempfile
-
-        pkg_dir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "vamana_spark"
-        )
-        tmp = tempfile.mkdtemp(prefix="vamana_spark_pyfiles_")
-        base = os.path.join(tmp, "vamana_spark_pkg")
-        shutil.make_archive(base, "zip", root_dir=os.path.dirname(pkg_dir),
-                            base_dir="vamana_spark")
-        spark.sparkContext.addPyFile(base + ".zip")
-        _SHIPPED = True
 
 
 def _configure(spark: SparkSession) -> SparkSession:
@@ -55,6 +24,8 @@ def _configure(spark: SparkSession) -> SparkSession:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # may be static in some sessions; events loader also copes
+    from vamana_spark.session import _ship_package
+
     _ship_package(spark)
     return spark
 

@@ -2324,6 +2324,40 @@ def test_incremental_dedup_no_broadcast_when_disabled(spark):
     assert "BroadcastExchange" not in plan
 
 
+def test_incremental_dedup_verify_gate_counts_bytes(spark):
+    """Few but long maybe-hit texts past autoBroadcastJoinThreshold: the
+    verify anti-join shuffles instead of broadcasting the texts, with the
+    same survivors as the broadcast plan."""
+    pad = " ".join(f"w{j}" for j in range(400))  # ~2.3 KB per doc
+    seen = spark.createDataFrame(
+        [(i, f"seen doc {i} {pad}") for i in range(60)], ["doc_id", "text"]
+    )
+    new = spark.createDataFrame(
+        [(1000 + i, f"new doc {i} {pad}") for i in range(20)]
+        + [(2000 + i, f"seen doc {i} {pad}") for i in range(0, 60, 2)],
+        ["doc_id", "text"],
+    )
+    text_bcast = "BroadcastExchange HashedRelationBroadcastMode(List(input[0, string"
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+
+    def run():
+        out = dedup.incremental_dedup(new, seen, expected_seen=2, fpp=0.5)
+        got = sorted(r.doc_id for r in out.collect())
+        return got, out._jdf.queryExecution().executedPlan().toString()
+
+    try:
+        spark.conf.set(key, str(10 << 20))
+        wide, wide_plan = run()
+        spark.conf.set(key, str(16 << 10))  # 30 matched texts alone are ~70 KB
+        narrow, narrow_plan = run()
+    finally:
+        spark.conf.set(key, old)
+    assert text_bcast in wide_plan, wide_plan
+    assert text_bcast not in narrow_plan, narrow_plan
+    assert narrow == wide == [1000 + i for i in range(20)]
+
+
 def test_incremental_dedup_empty_corpus(spark):
     new, _ = _inc_dedup_frames(spark)
     seen = new.where(F.lit(False))

@@ -14,8 +14,11 @@ selection; NumPy kernels enter only through Arrow-batched pandas UDFs
 inherently per-partition imperative (see SURVEY.md §2 R6-R8).
 """
 
+from vamana_spark import _zipcache
 from vamana_spark.params import VamanaParams
 from vamana_spark.index.vamana import VamanaIndex
+
+_zipcache.install()  # PySpark workers on Python < 3.13 only; see _zipcache
 
 __all__ = ["VamanaParams", "VamanaIndex"]
 __version__ = "0.1.0"

@@ -182,12 +182,17 @@ def ensure_parallelism(
     ``min(defaultParallelism, ceil(rows / min_rows_per_task))``
     partitions. More partitions than that are merged with ``coalesce``
     (narrow, no shuffle); fewer are round-robin repartitioned. Every
-    Python task pays a fixed CPU cost before its first row: 0.2-0.3 s
-    per task measured on a 4-core VM with PySpark 4.1, most of it
-    ``importlib.invalidate_caches()`` in the worker's
+    Python task pays a fixed CPU cost before its first row: ~0.07 s per
+    task, measured on a 4-core VM with PySpark 4.1 and Python 3.11 as
+    the CPU of an empty 4-task ``mapInPandas`` stage over 10k rows less
+    the same stage without Python. On Python < 3.13 the stock cost is
+    0.28 s, most of it ``importlib.invalidate_caches()`` in the worker's
     ``setup_spark_files``, which re-reads the directory of every zip and
-    jar importer on the worker's path. A batch of a few hundred rows is
-    therefore cheaper in one or two tasks than spread over every core.
+    jar importer on the worker's path; importing ``vamana_spark`` on a
+    worker skips those re-reads while the archives are unchanged
+    (``vamana_spark._zipcache``), so only a worker's first two tasks pay
+    them. A batch of a few hundred rows is still cheaper in one or two
+    tasks than spread over every core.
     When the row count is unknown, or the lookup fails, the rule above
     applies.
     """

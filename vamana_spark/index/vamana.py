@@ -56,11 +56,9 @@ SEARCH_SCHEMA = (
 DENSE_BUILD_MAX = 20_000
 
 # fewest queries a search task gets when the batch's row count is known.
-# Each Python task pays 0.2-0.3 s of fixed worker CPU (see
-# ensure_parallelism), the kernel time of ~1000 queries at ef=32 on a
-# 5k-point index (~0.29 ms per query). Measured on 4 cores, a 500-query
-# batch in 2 tasks takes 0.41-0.44 s per call and 0.9 s of CPU; in 1 task,
-# 0.46-0.48 s and 0.6 s of CPU; in 4 tasks (at ef=128), 0.46-0.48 s.
+# Each Python task pays ~0.07 s of fixed worker CPU (see
+# ensure_parallelism), the kernel time of ~250 queries at ef=32 on a
+# 5k-point index (~0.29 ms per query).
 MIN_QUERIES_PER_TASK = 256
 
 
@@ -745,11 +743,11 @@ class VamanaIndex:
         ``createDataFrame(pandas)``), the queries run in
         ``min(defaultParallelism, ceil(rows / MIN_QUERIES_PER_TASK))``
         tasks, merged by ``coalesce`` (no shuffle). Every Python task
-        pays 0.2-0.3 s of fixed worker CPU, so a 500-query batch on 4
-        cores costs less CPU in 2 tasks than in 4, and no more wall
-        time. With the row count unknown (file scans) the queries keep
-        their partitions unless there are too few for the cores
-        (:func:`~vamana_spark.functions.util.ensure_parallelism`). On
+        pays a fixed worker CPU cost (~0.07 s; see
+        :func:`~vamana_spark.functions.util.ensure_parallelism`), so a
+        500-query batch on 4 cores costs less CPU in 2 tasks than in 4.
+        With the row count unknown (file scans) the queries keep their
+        partitions unless there are too few for the cores. On
         the kernel's bitmap path (every Arrow batch with rows x n <=
         ``kernels.BITMAP_MAX_CELLS``) each query row is searched alone,
         so the fan-out does not change results.

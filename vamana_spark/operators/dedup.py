@@ -597,7 +597,14 @@ def minhash_near_dups(
     below the cap emit their full quadratic pair sets. That output is
     CORRECT (those pairs are real); within an over-cap bucket,
     member↔member similarity is only observed transitively through
-    the representative."""
+    the representative.
+
+    Eager: the call runs Spark jobs before it returns. It
+    ``localCheckpoint``s the banded signatures, the candidate pairs and
+    the candidate docs' shingle sets (one job each). A local checkpoint
+    truncates lineage and keeps its blocks only on the executors that
+    wrote them, so losing one of those executors fails the job that
+    reads them instead of recomputing."""
     if consumer not in _MINHASH_CONSUMER_CAPS:
         raise ValueError(
             f"consumer must be one of {sorted(_MINHASH_CONSUMER_CAPS)}, "
@@ -2010,17 +2017,6 @@ def flag_bloom_membership(
     return df.mapInPandas(_maybe_seen, schema=out_schema)
 
 
-#: Maybe-hit count under which the exact-verify anti-join's right side
-#: (the hash-matched corpus texts, ≤ one row per distinct maybe-content)
-#: is explicitly broadcast: ~24-token docs frame to ~200-300 B/row, so
-#: 200k rows ≈ 40-60 MB — comfortably a broadcast, far from the 8 GB
-#: relation cap; past the bound the anti-join degrades to a
-#: candidate-bounded shuffle (measured at the 10M rung: 2.1M maybe-hits
-#: is exactly the regime where the old forced text broadcast was the
-#: whole operator's whale).
-_VERIFY_BCAST_ROWS = 200_000
-
-
 def _exact_verify_tail(
     flagged: DataFrame, seen_norm: DataFrame, helpers: "tuple | list" = ("_n", "_maybe")
 ) -> DataFrame:
@@ -2047,10 +2043,11 @@ def _exact_verify_tail(
     operator (measured: the verify tail was ~400 of ~500 s); at 100 TB
     it would be a driver OOM. Moved bytes now: 8 B × |candidates|
     broadcast + one candidate-bounded movement of matched texts — as a
-    broadcast while the maybe-count stays under the bound below (the
-    bench/ingest regime; the anti-join's probe side does not
-    exchange, same count()-priced steering as search_pq's re-rank), as
-    a candidate-bounded shuffle past it.
+    broadcast while the maybe-hit texts' estimated size (one aggregate
+    over the checkpoint: count and total bytes of ``_n``) stays within
+    ``spark.sql.autoBroadcastJoinThreshold`` (the anti-join's probe
+    side then does not exchange), as a candidate-bounded shuffle past
+    it.
 
     With ``spark.sql.autoBroadcastJoinThreshold`` < 0 nothing
     broadcasts: the digest semi-join then shuffles ALL of
@@ -2070,7 +2067,7 @@ def _exact_verify_tail(
     cand_h = maybe.select(F.xxhash64("_n").alias("_h")).distinct()
     # distinct: a dup-heavy corpus holds many copies of one matched
     # content; one row per distinct content keeps the broadcast below
-    # within the n_maybe gate. With broadcasts disabled (threshold < 0)
+    # within the byte gate. With broadcasts disabled (threshold < 0)
     # the digest semi-join shuffles the whole corpus instead.
     seen_matched = (
         seen_norm.withColumn("_h", F.xxhash64("_n"))
@@ -2078,8 +2075,14 @@ def _exact_verify_tail(
         .select("_n")
         .distinct()
     )
-    n_maybe = maybe.count()  # cheap: reads the checkpoint
-    if thresh >= 0 and n_maybe <= _VERIFY_BCAST_ROWS:
+    # one job over the checkpoint prices the anti-join's build side:
+    # seen_matched holds at most one row per maybe-hit text, and an
+    # UnsafeRow of one string costs ~16 B (null bits + offset/size word)
+    # plus its bytes
+    n_maybe, text_bytes = maybe.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.octet_length("_n")), F.lit(0))
+    ).first()
+    if thresh >= 0 and text_bytes + 16 * n_maybe <= thresh:
         kept_maybe = maybe.join(F.broadcast(seen_matched), "_n", "left_anti")
     else:  # user disabled broadcasts, or candidate set too big to hold
         kept_maybe = maybe.join(seen_matched, "_n", "left_anti")
@@ -2140,6 +2143,15 @@ def incremental_dedup(
     explicitly there to avoid it. Bloom membership has NO false
     negatives, so every true duplicate is always dropped in both
     modes.
+
+    Eager: the call runs Spark jobs before it returns. The Bloom build
+    streams its chunks to the driver in both modes. With ``verify=True``
+    the verify tail also ``localCheckpoint``s the flagged batch and runs
+    one aggregate over it (the maybe-hit count and text bytes that
+    choose the anti-join's plan). A local checkpoint truncates lineage
+    and keeps its blocks only on the executors that wrote them, so
+    losing one of those executors fails the job that reads them instead
+    of recomputing.
     """
     norm = _content_norm if normalize else F.col
     if expected_seen is None:
@@ -2196,6 +2208,15 @@ def incremental_dedup_ranged(
     sharded tier uses, so filter occupancy stays uniform per range.
     The exact-verify tail runs ONCE over the union of all ranges'
     maybe-hits (one extra corpus pass total, not per range).
+
+    Eager: the call runs Spark jobs before it returns. It
+    ``localCheckpoint``s the routed batch, builds each range's Bloom
+    filter on the driver and checkpoints each range's flagged rows; with
+    ``verify=True`` the verify tail adds one more checkpoint and one
+    aggregate (see ``incremental_dedup``). A local checkpoint truncates
+    lineage and keeps its blocks only on the executors that wrote them,
+    so losing one of those executors fails the job that reads them
+    instead of recomputing.
     """
     import numpy as np
 
@@ -2332,6 +2353,14 @@ def incremental_dedup_sharded(
     Trade vs the broadcast tier: the corpus pays one digest-width
     shuffle here (the monolithic build moves only bitmap chunks), in
     exchange for O(m/num_filters) peak memory anywhere in the plan.
+
+    Eager: the call runs Spark jobs before it returns. It
+    ``localCheckpoint``s the per-shard filters (the corpus digest pass
+    and its shuffle); with ``verify=True`` the verify tail adds one more
+    checkpoint and one aggregate (see ``incremental_dedup``). A local
+    checkpoint truncates lineage and keeps its blocks only on the
+    executors that wrote them, so losing one of those executors fails
+    the job that reads them instead of recomputing.
     """
     import numpy as np
 
