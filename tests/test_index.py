@@ -179,26 +179,44 @@ def test_build_is_deterministic(spark, embeddings):
 
 
 def test_dense_build_without_arrow(spark, embeddings):
-    """r13 regression: the dense tier's local-relation fast path builds
-    from a pandas frame, which under a NO-Arrow session row-walks
+    """A pandas-built local relation, under a NO-Arrow session, row-walks
     lazily and rejects numpy int64 neighbor elements at first ACTION
     (caught driving __spark_entry__ from a session that never enabled
-    Arrow — the driver contract makes no Arrow promise). The conf-gated
-    fallback must produce a graph byte-identical to the Arrow path."""
+    Arrow — the driver contract makes no Arrow promise). The deferred
+    relation of a dense build and of add_points/delete_points results
+    must give the same graph with Arrow conversion on and off."""
     key = "spark.sql.execution.arrow.pyspark.enabled"
     params = lambda: VamanaParams(
         dim=64, alpha=1.2, R=16, L=32, ef_search=32, seed=42
     )
-    a = VamanaIndex.build(spark, embeddings, params())
-    ga = {r.ordinal: tuple(r.neighbors) for r in a.graph_df.collect()}
+    # maintenance results carry the same deferred relation: new points
+    # (negated copies under fresh ids), then a delete across old and new
+    extra = embeddings.where(F.col("vec_id") % 7 == 0).select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"),
+        F.transform("embedding", lambda x: -x).alias("embedding"),
+    )
+    doomed = embeddings.where(F.col("vec_id") % 9 == 4).select(
+        (F.col("vec_id") + 1_000_000 * (F.col("vec_id") % 2)).alias("vec_id")
+    )
+
+    def graphs():
+        idx = VamanaIndex.build(spark, embeddings, params())
+        grown = idx.add_points(extra)
+        shrunk = grown.delete_points(doomed)
+        return [
+            {r.ordinal: tuple(r.neighbors) for r in i.graph_df.collect()}
+            for i in (idx, grown, shrunk)
+        ]
+
+    ga = graphs()
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        b = VamanaIndex.build(spark, embeddings, params())
-        gb = {r.ordinal: tuple(r.neighbors) for r in b.graph_df.collect()}
+        gb = graphs()
     finally:
         spark.conf.set(key, old)
     assert ga == gb
+    assert len(ga[0]) < len(ga[1]) > len(ga[2])
 
 
 def test_build_tier_overflow_reroutes_to_sharded(spark, embeddings, monkeypatch):
@@ -388,6 +406,67 @@ def test_add_points_wires_new_points(spark, embeddings, queries):
     idx3 = idx2.add_points(delta)
     assert idx3 is idx2
     idx.release(); idx2.release()
+
+
+def test_add_points_keeps_one_row_per_new_id(spark, embeddings):
+    """A batch that repeats a NEW vec_id inserts it once (the first row
+    in the batch's order), so no vec_id ever holds two ordinals."""
+    p = VamanaParams(dim=64, alpha=1.2, R=16, L=32, ef_search=32, seed=3)
+    idx = VamanaIndex.build(spark, embeddings.where(F.col("vec_id") < 100), p)
+    first, second = [0.5] * 64, [-0.5] * 64
+    batch = spark.createDataFrame(
+        [(10_000, first), (10_000, second), (5, [0.0] * 64)],
+        "vec_id long, embedding array<float>",
+    )
+    idx2 = idx.add_points(batch)
+    assert idx2.data_size == idx.data_size + 1
+    vids = [r.vec_id for r in idx2.points_df.collect()]
+    assert len(vids) == len(set(vids)) == idx2.data_size
+    assert list(idx2.get_point(10_000).first().embedding) == first
+    idx.release(); idx2.release()
+
+
+def test_maintenance_results_keep_driver_cache(spark, embeddings):
+    """add_points and delete_points hand their result the driver arrays
+    (``_local``) and defer its DataFrame view, and leave the parent's
+    own deferred view unforced."""
+    p = VamanaParams(dim=64, alpha=1.2, R=16, L=32, ef_search=32, seed=3)
+    idx = VamanaIndex.build(spark, embeddings.where(F.col("vec_id") % 5 != 0), p)
+    grown = idx.add_points(embeddings.where(F.col("vec_id") % 5 == 0))
+    shrunk = grown.delete_points(
+        embeddings.where(F.col("vec_id") % 10 == 3).select("vec_id")
+    )
+    for i in (idx, grown, shrunk):
+        assert i._local is not None and i._rel_thunk is not None
+    n = embeddings.count()
+    assert grown.data_size == n
+    assert shrunk.data_size == shrunk.points_df.count() == shrunk.graph_df.count()
+    assert shrunk._rel_thunk is None and grown._rel_thunk is not None
+    idx.release(); grown.release(); shrunk.release()
+
+
+def test_delete_points_reproduces_committed_fixture(spark):
+    """delete_points on the committed sf0.01 base index gives exactly the
+    committed deleted index: the same (ordinal, vec_id) map and the same
+    adjacency rows, in order."""
+    import os
+
+    from vamana_spark.plans.declared import _FIXTURE_ROOT
+
+    fix = os.path.join(_FIXTURE_ROOT, "sf0.01")
+    base = VamanaIndex.load(spark, os.path.join(fix, "base"))
+    want = VamanaIndex.load(spark, os.path.join(fix, "deleted"))
+    got = base.delete_points(
+        base.points_df.where(F.col("vec_id") % 10 == 3).select("vec_id")
+    )
+
+    def rows(i):
+        pts = sorted((r.ordinal, r.vec_id) for r in i.points_df.collect())
+        g = sorted((r.ordinal, list(r.neighbors)) for r in i.graph_df.collect())
+        return pts, g
+
+    assert rows(got) == rows(want)
+    assert got.params.medoid == want.params.medoid
 
 
 def test_add_points_capacity_check(spark, embeddings):

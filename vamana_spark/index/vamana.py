@@ -29,6 +29,7 @@ Physical design
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
@@ -47,6 +48,7 @@ from vamana_spark.params import VamanaParams
 SEARCH_SCHEMA = (
     "query_id long, vec_id long, dist double, rank int, hops int, dist_comps int"
 )
+POINTS_SCHEMA = "vec_id long, ordinal long, embedding array<float>"
 
 # below this point count the dense build kernel (candidate sets from one
 # n^2 gemm plus random long-range candidates) beats the beam-search build
@@ -92,13 +94,11 @@ class VamanaIndex:
         self.params = params
         self._points_df = points_df  # vec_id long, ordinal long, embedding array<float>
         self._graph_df = graph_df    # ordinal long, neighbors array<long>
-        # deferred distributed view (r14, VERDICT r13 #1c): the dense
-        # tier's build hands the finished graph to the driver cache
-        # (_local) — the DataFrame view exists only for consumers that
-        # ask for it (save, maintenance, diagnostics), so its
-        # construction is a thunk forced on first access instead of a
-        # cost every toy-scale build pays up front. Spark semantics,
-        # applied to our own relation.
+        # deferred distributed view: the driver-local build tiers and the
+        # maintenance calls hand the finished graph to the driver cache
+        # (_local), and the DataFrame view exists only for consumers that
+        # ask for it (save, get_point, diagnostics) — a thunk forced on
+        # first access instead of a cost every call pays up front
         self._rel_thunk = None
         self._local: Optional[Tuple[np.ndarray, ...]] = None
         self._bcast = None  # broadcast (P, ids, padded adjacency), reused across searches
@@ -116,6 +116,17 @@ class VamanaIndex:
             self._points_df = points_df
         if self._graph_df is None:
             self._graph_df = graph_df
+
+    def _points_source(self):
+        """A callable returning this index's points relation without
+        forcing it now. It holds no reference to the index, so an index
+        derived from this one does not pin its driver arrays or its
+        search broadcast."""
+        if self._points_df is not None or self._rel_thunk is None:
+            df = self._points_df
+            return lambda: df
+        thunk = self._rel_thunk
+        return lambda: thunk()[0]
 
     @property
     def points_df(self) -> DataFrame:
@@ -177,8 +188,6 @@ class VamanaIndex:
         build fills n/medoid/mips_m — and the copy rides on the
         returned index (``index.params``).
         """
-        import dataclasses
-
         params = dataclasses.replace(params)
         params.validate()
         pts = df.select(
@@ -275,8 +284,6 @@ class VamanaIndex:
         rejected (ValueError — a local caller constructed them, so a
         silent filter would hide a bug, unlike the DataFrame tier's
         declarative dimension filter over arbitrary tables)."""
-        import dataclasses
-
         params = dataclasses.replace(params)
         params.validate()
         V = np.asarray(vectors, dtype=np.float32)
@@ -321,115 +328,33 @@ class VamanaIndex:
         caller holds the source DataFrame) lets the deferred relation
         reuse the original scan for points_df; without it the relation
         is reconstructed from the staged frame."""
-        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
-        pdf["ordinal"] = np.arange(len(pdf), dtype=np.int64)
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
         P = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
         Pt = _metric_transform(P, params.metric, params.mips_m)
         graph, medoid = _build_graph_kernel(Pt, params)
         params.n = int(Pt.shape[0])
         params.medoid = int(medoid)
-        # ONE local relation carries both the adjacency and the
-        # (vec_id, ordinal) map — halving the serialization round-trips
-        # this toy-scale tier can't amortize. Built from a pandas frame:
-        # with Arrow conversion on, the transfer is one columnar write
-        # instead of a row-pickled walk (r13, VERDICT r12 #1 — measured
-        # ~3x cheaper at n=2000); the object-dtype neighbor column
-        # Arrow-encodes as list<int64> directly. Without Arrow the
-        # pandas path row-walks and REJECTS numpy int64 elements
-        # (verified against a no-Arrow session), so fall back to the
-        # plain-Python-list relation with verifySchema=False — the rows
-        # are constructed as exactly (int, int, [int]), so verification
-        # can prove nothing the construction doesn't.
-        def _make_rel():
-            schema_str = "ordinal long, vec_id long, neighbors array<long>"
-            try:
-                arrow_on = str(
-                    spark.conf.get("spark.sql.execution.arrow.pyspark.enabled")
-                ).lower() == "true"
-            except Exception:
-                arrow_on = False
-            if arrow_on:
-                combined = spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            "ordinal": pdf["ordinal"].to_numpy(),
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "neighbors": [
-                                np.asarray(g, dtype=np.int64) for g in graph
-                            ],
-                        }
-                    ),
-                    schema_str,
-                )
-            else:
-                # the no-Arrow pandas path row-walks LAZILY (the type
-                # error would surface at first action, not here) — so
-                # the gate is the conf, not a try/except
-                combined = spark.createDataFrame(
-                    [
-                        (i, int(v), [int(x) for x in g])
-                        for i, (v, g) in enumerate(
-                            zip(pdf["vec_id"].tolist(), graph)
-                        )
-                    ],
-                    schema_str,
-                    verifySchema=False,
-                )
-            graph_df = combined.select("ordinal", "neighbors")
-            ord_map = combined.select("vec_id", "ordinal")
-            if pts is not None:
-                points_df = pts.join(F.broadcast(ord_map), "vec_id").select(
-                    "vec_id", "ordinal", "embedding"
-                )
-            else:
-                # build_local: no source DataFrame exists — the staged
-                # frame IS the point set, so the relation comes from it
-                # (same Arrow/no-Arrow gate as the graph relation above)
-                pschema = "vec_id long, ordinal long, embedding array<float>"
-                if arrow_on:
-                    points_df = spark.createDataFrame(
-                        pd.DataFrame(
-                            {
-                                "vec_id": pdf["vec_id"].to_numpy(),
-                                "ordinal": pdf["ordinal"].to_numpy(),
-                                "embedding": [
-                                    np.asarray(e, dtype=np.float32)
-                                    for e in pdf["embedding"]
-                                ],
-                            }
-                        ),
-                        pschema,
-                    )
-                else:
-                    points_df = spark.createDataFrame(
-                        [
-                            (int(v), int(o), [float(x) for x in e])
-                            for v, o, e in zip(
-                                pdf["vec_id"].tolist(),
-                                pdf["ordinal"].tolist(),
-                                pdf["embedding"],
-                            )
-                        ],
-                        pschema,
-                        verifySchema=False,
-                    )
-            return points_df, graph_df
-
-        # the distributed view is DEFERRED (r14): this tier's searches
-        # run off the driver-cached graph handed over below, so the
-        # local-relation transfer is forced only when a consumer first
-        # touches points_df/graph_df (save, add/delete, diagnostics)
-        idx = VamanaIndex(spark, params, None, None)
-        idx._rel_thunk = _make_rel
-        # the whole point set and adjacency are ALREADY on the driver in
-        # exactly the broadcastable form _load_local would re-collect
-        # from the cluster (two toPandas jobs) on the first search —
-        # hand them over instead of round-tripping (r13)
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         indptr, nbrs = kernels._to_csr(
             [np.asarray(g, dtype=np.int64) for g in graph], len(graph)
         )
-        idx._local = (Pt, pdf["vec_id"].to_numpy(dtype=np.int64), indptr, nbrs)
-        return idx
+        if pts is not None:
+            def points(ord_map):
+                return pts.join(F.broadcast(ord_map), "vec_id").select(
+                    "vec_id", "ordinal", "embedding"
+                )
+        else:
+            # build_local: no source DataFrame exists — the staged
+            # vectors ARE the point set
+            def points(ord_map):
+                return _rows_df(
+                    spark,
+                    POINTS_SCHEMA,
+                    vec_id=ids,
+                    ordinal=np.arange(len(ids)),
+                    embedding=P.tolist(),
+                )
+        return _local_index(spark, params, (Pt, ids, indptr, nbrs), points)
 
     @staticmethod
     def _build_sharded(
@@ -606,13 +531,14 @@ class VamanaIndex:
                 for pdf in batches:
                     if pdf.empty:
                         continue
-                    srcs = pdf["ordinal"] if "ordinal" in pdf else pdf["src"]
-                    yield _pad_prune_rows(
-                        Pv,
-                        srcs.to_numpy(dtype=np.int64),
-                        pdf["dsts"].to_list(),
-                        alpha_f,
-                        R,
+                    srcs = pdf["ordinal"].to_numpy(dtype=np.int64)
+                    yield pd.DataFrame(
+                        {
+                            "ordinal": srcs,
+                            "neighbors": _pad_prune_rows(
+                                Pv, srcs, pdf["dsts"].to_list(), alpha_f, R
+                            ),
+                        }
                     )
 
             graph_df = agg.select(
@@ -958,298 +884,188 @@ class VamanaIndex:
         only if it went over the degree cap (same append-or-prune rule
         as the build's bidirectional fix-up, vamana.h:270-287).
 
-        Distributed shape: wiring is one ``mapInPandas`` over the new
-        batch against the broadcast (points, graph) — the lockstep
-        batched search kernel, not per-row Python; the fix-up is one
-        explode/groupBy shuffle over TOUCHED old nodes only. The new
-        vectors come to the driver once to extend the broadcast matrix —
-        bounded by the broadcast-tier ceiling this index already fits.
-        Duplicate vec_ids are dropped (vec_id is the identity, §1.4);
-        ``max_points`` is enforced like the reference's capacity check
-        (vamana.h:102-104).
+        Driver-local shape: the index's (points, graph) arrays from
+        :meth:`_load_local` — so the broadcast-tier ceiling applies
+        (``MemoryError`` past ``BROADCAST_TIER_MAX_BYTES``; a larger
+        index is a ``PartitionedVamanaIndex``) — plus one Spark job that
+        collects ``new_df``. The wiring and the fix-up run as numpy on
+        the driver; the new index keeps its arrays cached for search and
+        builds its DataFrame view only when a consumer first touches it.
+        New points get ordinals ``n..n+m-1`` in ascending vec_id.
+
+        Ids already in the index are dropped, and of several rows with
+        the same new vec_id only the first in ``new_df``'s row order is
+        kept (vec_id is the identity, §1.4). ``max_points`` is enforced
+        like the reference's capacity check (vamana.h:102-104).
         """
         params = self.params
-        pts_new = (
+        P, ids, indptr, nbrs = self._load_local()  # transformed space
+        pdf = (
             new_df.select(
                 F.col(id_col).cast("long").alias("vec_id"),
                 F.col(vec_col).alias("embedding"),
             )
             .where(F.size(vec_col) == params.dim)
-            .join(self.points_df.select("vec_id"), "vec_id", "left_anti")
+            .toPandas()
         )
-        new_pdf = pts_new.toPandas()
-        m = len(new_pdf)
+        pdf = pdf.drop_duplicates("vec_id", keep="first")
+        pdf = pdf[~np.isin(pdf["vec_id"].to_numpy(dtype=np.int64), ids)]
+        m = len(pdf)
         if m == 0:
             return self
-        n_old_pts = int(params.n or self.points_df.count())
-        if params.max_points and n_old_pts + m > params.max_points:
+        n_old = P.shape[0]
+        if params.max_points and n_old + m > params.max_points:
             raise ValueError(
-                f"add_points: capacity exceeded ({n_old_pts}+{m} > "
+                f"add_points: capacity exceeded ({n_old}+{m} > "
                 f"max_points={params.max_points})"
             )
-        new_pdf = new_pdf.sort_values("vec_id", kind="mergesort").reset_index(
-            drop=True
-        )
-        old_P, _, indptr, nbrs = self._load_local()  # transformed space
-        n_old = old_P.shape[0]
-        Tnew = _metric_transform(
-            np.stack(new_pdf["embedding"].to_numpy()).astype(np.float32),
-            params.metric,
-            params.mips_m,
-        )
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
+        new_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        V = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
         if params.metric == "ip":
-            norms = np.linalg.norm(
-                np.stack(new_pdf["embedding"].to_numpy()).astype(np.float64), axis=1
-            )
+            norms = np.linalg.norm(V.astype(np.float64), axis=1)
             if norms.max() > float(params.mips_m) * (1 + 1e-6):
                 raise ValueError(
                     "add_points: new point norm exceeds the build-time "
                     "mips_m — the MIPS->L2 augmentation of EVERY point "
                     "depends on the max norm, so rebuild the index"
                 )
-        new_pdf["ordinal"] = np.arange(n_old, n_old + m, dtype=np.int64)
-        P_all = np.vstack([old_P, Tnew])
-        nbr_mat = kernels.pad_adjacency(indptr, nbrs, n_old)
-        bP = self.spark.sparkContext.broadcast((P_all, nbr_mat, n_old))
+        Tnew = _metric_transform(V, params.metric, params.mips_m)
+        P_all = np.vstack([P, Tnew])
         medoid = int(params.medoid if params.medoid is not None else 0)
-        L, R, alpha_f = int(params.L), int(params.R), float(params.alpha)
+        L, R, alpha = int(params.L), int(params.R), float(params.alpha)
 
-        # new_points comes from the driver SNAPSHOT (new_pdf), never by
-        # re-evaluating pts_new: a non-deterministic new_df (sample/limit)
-        # would otherwise diverge from the rows the graph was wired for
-        new_points = self.spark.createDataFrame(
-            [
-                (int(v), int(o), [float(x) for x in e])
-                for v, o, e in zip(
-                    new_pdf["vec_id"], new_pdf["ordinal"], new_pdf["embedding"]
-                )
-            ],
-            "vec_id long, ordinal long, embedding array<float>",
+        # wire: one batched search of the OLD graph, then RobustPrune
+        kk = min(L, n_old)
+        rq, rid, _, _, _ = kernels.search_topk_batch(
+            P, kernels.pad_adjacency(indptr, nbrs, n_old), medoid, Tnew, kk,
+            max(L, kk),
         )
+        order = np.argsort(rq, kind="stable")
+        bounds = np.searchsorted(rq[order], np.arange(m + 1))
+        rid = rid[order]
+        new_adj = [
+            kernels.robust_prune(
+                P_all, n_old + i, rid[bounds[i] : bounds[i + 1]], None, alpha, R
+            )
+            for i in range(m)
+        ]
 
-        def wire(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Pv, nbrv, n_oldv = bP.value
-            P_oldv = Pv[:n_oldv]
-            kk = min(L, n_oldv)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ords = pdf["ordinal"].to_numpy(dtype=np.int64)
-                Q = Pv[ords]
-                rq, rid, _, _, _ = kernels.search_topk_batch(
-                    P_oldv, nbrv, medoid, Q, kk, max(L, kk)
-                )
-                out_o, out_nb = [], []
-                for i, o in enumerate(ords):
-                    cand = rid[rq == i]
-                    adm = kernels.robust_prune(Pv, int(o), cand, None, alpha_f, R)
-                    out_o.append(int(o))
-                    out_nb.append([int(x) for x in adm])
-                yield pd.DataFrame({"ordinal": out_o, "neighbors": out_nb})
-
-        new_adj = new_points.select("ordinal").mapInPandas(
-            wire, schema="ordinal long, neighbors array<long>"
-        ).localCheckpoint(eager=True)
-
-        # reverse fix-up: p appended to each admitted u; over-cap u
-        # re-prunes over N(u) ∪ {new ps} (append-or-prune, vamana.h:270-287)
-        rev = new_adj.select(
-            F.col("ordinal").alias("_p"), F.explode("neighbors").alias("ordinal")
+        # reverse fix-up: each admitted u gets the new points that chose
+        # it; over-cap rows re-prune over N(u) ∪ {new ps}
+        rows = np.split(nbrs, indptr[1:-1])
+        dst = np.concatenate(new_adj)
+        src = np.repeat(np.arange(n_old, n_old + m), [a.size for a in new_adj])
+        by_dst = np.argsort(dst, kind="stable")
+        touched, first = np.unique(dst[by_dst], return_index=True)
+        extra = np.split(src[by_dst], first[1:])
+        repaired = _pad_prune_rows(
+            P_all,
+            touched,
+            [np.concatenate([rows[u], e]) for u, e in zip(touched, extra)],
+            alpha,
+            R,
         )
-        add_cand = rev.groupBy("ordinal").agg(F.collect_set("_p").alias("_extra"))
-        cand = self.graph_df.join(add_cand, "ordinal").select(
-            F.col("ordinal").alias("src"),
-            F.concat(F.col("neighbors"), F.col("_extra")).alias("dsts"),
-        )
-
-        def reprune(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Pv, _, _ = bP.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                yield _pad_prune_rows(
-                    Pv,
-                    pdf["src"].to_numpy(dtype=np.int64),
-                    pdf["dsts"].to_list(),
-                    alpha_f,
-                    R,
-                )
-
-        repaired = cand.mapInPandas(
-            reprune, schema="ordinal long, neighbors array<long>"
-        )
-        untouched = self.graph_df.join(
-            F.broadcast(add_cand.select("ordinal")), "ordinal", "left_anti"
-        )
-        new_graph = (
-            untouched.unionByName(repaired)
-            .unionByName(new_adj)
-            .localCheckpoint(eager=True)
-        )
-        bP.destroy()  # checkpoints are eager; don't leak an index-sized
-        # broadcast per incremental insert (same hygiene as build)
-        import dataclasses
+        for u, row in zip(touched, repaired):
+            rows[u] = row
+        indptr2, nbrs2 = kernels._to_csr(rows + new_adj, n_old + m)
 
         new_params = dataclasses.replace(params)
-        new_params.n = n_old_pts + m
-        return VamanaIndex(
+        new_params.n = n_old + m
+
+        old_points = self._points_source()
+
+        def points(ord_map):
+            return old_points().unionByName(
+                _rows_df(
+                    self.spark,
+                    POINTS_SCHEMA,
+                    vec_id=new_ids,
+                    ordinal=np.arange(n_old, n_old + m),
+                    embedding=V.tolist(),
+                )
+            )
+
+        return _local_index(
             self.spark,
             new_params,
-            self.points_df.unionByName(new_points),
-            new_graph,
+            (P_all, np.concatenate([ids, new_ids]), indptr2, nbrs2),
+            points,
         )
 
     def delete_points(self, ids: DataFrame, id_col: str = "vec_id") -> "VamanaIndex":
         """Delete points and repair the graph (FreshDiskANN-style
-        consolidate; complements ``partitioned.add_points`` for full
-        incremental maintenance). Returns a NEW index.
+        consolidate; complements ``add_points`` for full incremental
+        maintenance). Returns a NEW index.
 
         For every surviving node u that pointed at a deleted node d, the
-        candidate set becomes (N(u) \\ D) ∪ (∪_{d∈N(u)∩D} N(d) \\ D) —
-        deleted nodes are bridged through, then RobustPrune re-caps the
-        degree. Distributed shape: two equi-joins on the edge list (one
-        to find edges into D, one to pull D's out-edges) + one
-        groupBy(src) re-prune over Arrow batches; nodes with no deleted
-        neighbor keep their adjacency untouched and never enter the
-        shuffle.
+        candidate set becomes (N(u) \\ D) ∪ (∪_{d∈N(u)∩D} N(d) \\ D)
+        without u — deleted nodes are bridged through, then RobustPrune
+        re-caps the degree; a node left with no candidate keeps an empty
+        row. Nodes with no deleted neighbor keep their adjacency.
+        Survivors keep their relative ordinal order, renumbered densely
+        (ascending vec_id for an index from :meth:`build`). The medoid
+        stays if it survives, else the survivors' centroid-nearest point
+        becomes the entry.
+
+        Driver-local shape: the index's arrays from :meth:`_load_local`
+        (the broadcast-tier ceiling applies, as for ``add_points``) plus
+        one Spark job that collects ``ids``; the repair is numpy on the
+        driver, and the new index's DataFrame view is built only when a
+        consumer first touches it.
         """
-        delo = (
-            self.points_df.join(
-                ids.select(F.col(id_col).alias("vec_id")).distinct(), "vec_id"
-            )
-            .select(F.col("ordinal").alias("_del"))
+        P, vids, indptr, nbrs = self._load_local()
+        gone = (
+            ids.select(F.col(id_col).cast("long").alias("vec_id"))
+            .toPandas()["vec_id"]
+            .dropna()
+            .to_numpy(dtype=np.int64)
         )
-        # edge list once; deleted endpoints tagged by broadcast joins
-        edges = self.graph_df.select(
-            "ordinal", F.explode("neighbors").alias("dst")
-        ).withColumnRenamed("ordinal", "src")
-        bdel = F.broadcast(delo)
-        live_src = edges.join(
-            bdel, edges["src"] == F.col("_del"), "left_anti"
-        )
-        # surviving edges vs edges into the deleted set
-        into_del = live_src.join(bdel, F.col("dst") == F.col("_del")).select(
-            "src", F.col("dst").alias("_mid")
-        )
-        kept = live_src.join(
-            bdel, F.col("dst") == F.col("_del"), "left_anti"
-        )
-        # bridge: u -> d -> w  becomes candidate u -> w (w not deleted)
-        out_of_del = edges.join(
-            bdel, edges["src"] == F.col("_del")
-        ).select(F.col("src").alias("_mid"), F.col("dst").alias("bdst"))
-        bridge = (
-            into_del.join(out_of_del, "_mid")
-            .select("src", F.col("bdst").alias("dst"))
-            .join(bdel, F.col("dst") == F.col("_del"), "left_anti")
-            .where(F.col("src") != F.col("dst"))
-        )
-        # only nodes that actually lost an edge get re-pruned
-        affected = into_del.select("src").distinct()
-        cand = (
-            kept.join(F.broadcast(affected), "src")
-            .unionByName(bridge)
-            .groupBy("src")
-            .agg(F.collect_set("dst").alias("dsts"))
-        )
-
-        P, _, _, _ = self._load_local()
-        bP = self.spark.sparkContext.broadcast(P)
-        R = self.params.R
-        alpha_f = float(self.params.alpha)
-
-        def reprune(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Pv = bP.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                yield _pad_prune_rows(
-                    Pv,
-                    pdf["src"].to_numpy(dtype=np.int64),
-                    pdf["dsts"].to_list(),
-                    alpha_f,
-                    R,
-                )
-
-        repaired = cand.mapInPandas(
-            reprune, schema="ordinal long, neighbors array<long>"
-        )
-        untouched = (
-            self.graph_df.join(bdel, F.col("ordinal") == F.col("_del"), "left_anti")
-            .join(
-                F.broadcast(affected.select(F.col("src").alias("ordinal"))),
-                "ordinal",
-                "left_anti",
-            )
-            # drop any stale edge into D from nodes that were "untouched"
-            # only because every lost edge was into D (can't happen — an
-            # edge into D makes the node affected — but keep the invariant
-            # cheap and explicit)
-        )
-        new_graph_old = untouched.unionByName(repaired)
-
-        # compact the ordinal space: search's CSR requires dense 0..n'-1
-        # ordinals. Survivors re-ordinalize by ascending vec_id (the same
-        # rule build used, so relative order is preserved); the old->new
-        # map broadcasts as one int array and the adjacency remaps in the
-        # same Arrow pass that already touches every row.
-        survivors = self.points_df.join(
-            bdel, F.col("ordinal") == F.col("_del"), "left_anti"
-        )
-        new_points = assign_ordinals(
-            survivors.select("vec_id", "embedding"), "vec_id", "ordinal"
-        ).localCheckpoint(eager=True)
-        n_new = new_points.count()
-        if n_new == 0:
+        dead = np.isin(vids, gone)
+        live = ~dead
+        if not live.any():
             raise ValueError("delete_points: all points deleted")
-        remap_pdf = (
-            survivors.select("vec_id", F.col("ordinal").alias("_old"))
-            .join(new_points.select("vec_id", F.col("ordinal").alias("_new")), "vec_id")
-            .toPandas()
+        n = P.shape[0]
+        rows = np.split(nbrs, indptr[1:-1])
+        src = np.repeat(np.arange(n), np.diff(indptr))
+        affected = np.unique(src[dead[nbrs] & live[src]])
+        cands = []
+        for u in affected:
+            c = np.concatenate([rows[u]] + [rows[d] for d in rows[u][dead[rows[u]]]])
+            cands.append(np.unique(c[live[c] & (c != u)]))
+        pruned = _pad_prune_rows(
+            P, affected, cands, float(self.params.alpha), int(self.params.R)
         )
-        n_old = int(self.params.n or (remap_pdf["_old"].max() + 1))
-        remap = np.full(n_old, -1, dtype=np.int64)
-        remap[remap_pdf["_old"].to_numpy(dtype=np.int64)] = remap_pdf[
-            "_new"
-        ].to_numpy(dtype=np.int64)
-        brm = self.spark.sparkContext.broadcast(remap)
+        for u, row in zip(affected, pruned):
+            rows[u] = row
 
-        def renumber(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            m = brm.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ords = m[pdf["ordinal"].to_numpy(dtype=np.int64)]
-                nbrs = []
-                for g in pdf["neighbors"]:
-                    gg = m[np.asarray(g, dtype=np.int64)]
-                    nbrs.append(gg[gg >= 0])
-                yield pd.DataFrame({"ordinal": ords, "neighbors": nbrs})
-
-        new_graph = new_graph_old.mapInPandas(
-            renumber, schema="ordinal long, neighbors array<long>"
+        remap = np.cumsum(live) - 1
+        n_new = int(live.sum())
+        indptr2, nbrs2 = kernels._to_csr(
+            [remap[rows[u]] for u in np.flatnonzero(live)], n_new
         )
-        # a survivor whose whole 2-hop neighborhood was deleted has no
-        # candidate row at all — keep it with an empty adjacency so the
-        # dense-ordinal CSR stays well-formed (same guard as the builds)
-        orphans = (
-            new_points.select("ordinal")
-            .join(new_graph.select("ordinal"), "ordinal", "left_anti")
-            .withColumn("neighbors", F.array().cast("array<long>"))
-        )
-        new_graph = new_graph.unionByName(orphans).localCheckpoint(eager=True)
-
-        new_params = VamanaParams(**json.loads(self.params.to_json()))
+        P2 = P[live]
+        new_params = dataclasses.replace(self.params)
         new_params.n = n_new
         old_medoid = int(self.params.medoid or 0)
-        if old_medoid < n_old and remap[old_medoid] >= 0:
-            new_params.medoid = int(remap[old_medoid])
-        else:
-            med_vid = exact.medoid_approx(new_points.select("vec_id", "embedding"))
-            new_params.medoid = int(
-                new_points.where(F.col("vec_id") == med_vid).first()["ordinal"]
+        new_params.medoid = (
+            int(remap[old_medoid])
+            if old_medoid < n and live[old_medoid]
+            else kernels.medoid_of(P2)
+        )
+
+        old_points = self._points_source()
+
+        def points(ord_map):
+            return (
+                old_points().select("vec_id", "embedding")
+                .join(F.broadcast(ord_map), "vec_id")
+                .select("vec_id", "ordinal", "embedding")
             )
-        return VamanaIndex(self.spark, new_params, new_points, new_graph)
+
+        return _local_index(
+            self.spark, new_params, (P2, vids[live], indptr2, nbrs2), points
+        )
 
     # ------------------------------------------------------------ point/meta
 
@@ -1318,15 +1134,52 @@ def _pad_prune_rows(Pv, srcs, lists, alpha: float, R: int):
     """Shared pad-candidates-and-RobustPrune step used by the build's
     fix-up, delete_points' consolidate, and add_points' reverse fix-up:
     ragged candidate lists -> (-1)-padded matrix -> robust_prune_gather
-    -> stripped adjacency rows."""
-    C = max(len(x) for x in lists)
+    -> stripped adjacency rows (a row with no candidates stays empty)."""
+    C = max((len(x) for x in lists), default=0)
     cand = np.full((len(lists), C), -1, dtype=np.int64)
     for i, x in enumerate(lists):
         cand[i, : len(x)] = x
     pruned = kernels.robust_prune_gather(Pv, srcs, cand, alpha, R)
-    return pd.DataFrame(
-        {"ordinal": srcs, "neighbors": [row[row >= 0] for row in pruned]}
-    )
+    return [row[row >= 0] for row in pruned]
+
+
+def _rows_df(spark: SparkSession, schema: str, **cols) -> DataFrame:
+    """A local relation from equal-length driver columns, named as in
+    ``schema``. Array cells must be plain Python lists: with Arrow
+    conversion on, the frame goes over as one columnar write, and the
+    no-Arrow path, which walks the rows and rejects numpy elements inside
+    arrays, takes them as well."""
+    return spark.createDataFrame(pd.DataFrame(cols), schema)
+
+
+def _local_index(spark, params: VamanaParams, local, points) -> VamanaIndex:
+    """A VamanaIndex over driver arrays ``local`` = (P, ids, indptr, nbrs)
+    in ordinal order: searches run off ``_local`` directly, and the
+    DataFrame view waits behind ``_rel_thunk`` until a consumer (save,
+    get_point, diagnostics) first touches it. ``points(ord_map)`` returns
+    the points relation, given the (vec_id, ordinal) map of this index."""
+    _, ids, indptr, nbrs = local
+
+    def make_rel():
+        # ONE local relation carries both the adjacency and the
+        # (vec_id, ordinal) map
+        flat, ptr = nbrs.tolist(), indptr.tolist()
+        combined = _rows_df(
+            spark,
+            "ordinal long, vec_id long, neighbors array<long>",
+            ordinal=np.arange(len(ids)),
+            vec_id=ids,
+            neighbors=[flat[a:b] for a, b in zip(ptr[:-1], ptr[1:])],
+        )
+        return (
+            points(combined.select("vec_id", "ordinal")),
+            combined.select("ordinal", "neighbors"),
+        )
+
+    idx = VamanaIndex(spark, params, None, None)
+    idx._rel_thunk = make_rel
+    idx._local = local
+    return idx
 
 
 def _metric_transform(

@@ -51,8 +51,12 @@ def load_bin(spark: SparkSession, path: str) -> "VamanaIndex":
     Note the reference quirk (SURVEY.md §1.4): a loaded index is full
     (max_points = n), and ef_search is not persisted in the file — we
     default it to L, matching the loader's observable behavior.
+
+    The returned index starts with its driver cache (as a fresh build
+    does); its DataFrame view is built on first access.
     """
-    from vamana_spark.index.vamana import VamanaIndex
+    from vamana_spark.index import kernels
+    from vamana_spark.index.vamana import POINTS_SCHEMA, _local_index, _rows_df
 
     with open(path, "rb") as f:
         n, dim, R, L, alpha, medoid = struct.unpack("<IIIIfI", f.read(24))
@@ -73,12 +77,18 @@ def load_bin(spark: SparkSession, path: str) -> "VamanaIndex":
         dim=dim, max_points=n, alpha=round(float(alpha), 6), R=R, L=L,
         ef_search=L, medoid=int(medoid), n=n,
     )
-    points_rows = [
-        (int(ids[i]), i, [float(x) for x in pts[i]]) for i in range(n)
-    ]
-    points_df = spark.createDataFrame(
-        points_rows, "vec_id long, ordinal long, embedding array<float>"
+    # the file holds squared-L2 points (the default metric), so they are
+    # already the search-ready matrix
+    indptr, nbrs = kernels._to_csr(graph, n)
+    return _local_index(
+        spark,
+        params,
+        (pts, ids, indptr, nbrs),
+        lambda ord_map: _rows_df(
+            spark,
+            POINTS_SCHEMA,
+            vec_id=ids,
+            ordinal=np.arange(n),
+            embedding=pts.tolist(),
+        ),
     )
-    graph_rows = [(i, [int(x) for x in graph[i]]) for i in range(n)]
-    graph_df = spark.createDataFrame(graph_rows, "ordinal long, neighbors array<long>")
-    return VamanaIndex(spark, params, points_df, graph_df)
