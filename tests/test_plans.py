@@ -241,73 +241,12 @@ def test_ordinal_assignment_no_global_window(spark, sf_dir):
     assert [r["ordinal"] for r in rows2] == list(range(len(rows2)))
 
 
-def test_nation_trade_volume_broadcasts_dims(spark, sf_dir):
-    """Q7 analog: all four dimension sides (customer, supplier, nation x2)
-    must broadcast — the only wide shuffle is orders-lineitem + the agg."""
-    from vamana_spark.plans import relational_ext as RX
-
-    p = plan(RX.q_nation_trade_volume(spark, sf_dir))
-    assert p.count("BroadcastHashJoin") >= 4, p
-    assert "CartesianProduct" not in p, p
-
-
-def test_large_orders_having_inside_agg(spark, sf_dir):
-    """Q18: the quantity threshold must filter inside/after the lineitem
-    aggregation, before the joins — no join sees unfiltered lineitem agg
-    output."""
-    from vamana_spark.plans import relational_ext as RX
-
-    p = plan(RX.q_large_orders(spark, sf_dir))
-    assert "partial" in p.lower(), p  # map-side partial agg present
-
-
-def test_shipping_priority_broadcasts_segment_filter(spark, sf_dir):
-    """Q3: the filtered customer side broadcasts into the fact join."""
-    from vamana_spark.plans import relational_ext as RX
-
-    p = plan(RX.q_shipping_priority(spark, sf_dir))
-    assert "BroadcastHashJoin" in p, p
-    assert "TakeOrderedAndProject" in p, p  # LIMIT 10 by revenue
-
-
 def test_tfidf_uses_partial_agg_and_topn(spark, sf_dir):
     from vamana_spark.plans import declared as DD
 
     p = plan(DD.QUERIES["q_tfidf_top_terms"](spark, sf_dir))
     assert "TakeOrderedAndProject" in p, p
     assert "partial" in p.lower(), p
-
-
-def test_forecast_revenue_pushes_filters_to_scan(spark, sf_dir):
-    """Q6: the date/discount/quantity predicates must reach the parquet
-    scan (PushedFilters) and the agg must have a map-side partial."""
-    from vamana_spark.plans import relational_ext as RX
-
-    p = plan(RX.q_forecast_revenue(spark, sf_dir))
-    assert "PushedFilters: [" in p, p
-    assert "l_shipdate" in p.split("PushedFilters", 1)[1][:400], p
-    assert "partial" in p.lower(), p
-
-
-def test_returned_items_broadcasts_dims_and_takes_topk(spark, sf_dir):
-    """Q10: customer + nation broadcast; LIMIT 20 is TakeOrderedAndProject,
-    not a global sort."""
-    from vamana_spark.plans import relational_ext as RX
-
-    p = plan(RX.q_returned_items(spark, sf_dir))
-    assert p.count("BroadcastHashJoin") >= 2, p
-    assert "TakeOrderedAndProject" in p, p
-    assert "CartesianProduct" not in p, p
-
-
-def test_top_supplier_max_is_broadcast_join(spark, sf_dir):
-    """Q15: the 1-row max joins by broadcast — no driver collect, no
-    cartesian product."""
-    from vamana_spark.plans import relational_ext as RX
-
-    p = plan(RX.q_top_supplier(spark, sf_dir))
-    assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p, p
-    assert "CartesianProduct" not in p, p
 
 
 def test_repetition_stats_groups_have_partials(spark, sf_dir):
@@ -474,40 +413,6 @@ def test_temperature_mixture_corpus_never_shuffles(spark, sf_dir):
     assert tree.count("BroadcastNestedLoopJoin") <= 1, p
 
 
-# ----------------------------------------------------------------------
-# Rotation staleness bound (driver runs only the first 50 registry
-# slots per round; the data-driven order must keep every query's
-# driver row within ceil(Q/50) rounds of fresh)
-# ----------------------------------------------------------------------
-
-def test_rotation_window_bounds_staleness():
-    """After the next driver round runs the first-50 window, no query
-    with a RECORDED driver row may be left older than (current max
-    round - 1): every recorded query excluded from the window must
-    already hold a row from the previous round or newer. Never-run
-    queries outside the window must be exactly the declared
-    _DEFER_THIS_ROUND newborns (first row allowed to wait a round)."""
-    last = D._latest_driver_rounds()
-    if not last:
-        pytest.skip("no CORRECTNESS records next to the package")
-    window = set(list(D.QUERIES)[:50])
-    mx = max(last.values())
-    offenders = [
-        (q, last[q])
-        for q in D.QUERIES
-        if q not in window and q in last and last[q] < mx - 1
-    ]
-    assert offenders == [], (
-        f"recorded queries excluded from the 50-slot window with rows "
-        f"older than r{mx - 1:02d}: {offenders}"
-    )
-    never_run_outside = {q for q in D.QUERIES if q not in window and q not in last}
-    assert never_run_outside <= set(D._DEFER_THIS_ROUND), (
-        f"never-run queries outside the window beyond the declared "
-        f"deferrals: {never_run_outside - set(D._DEFER_THIS_ROUND)}"
-    )
-
-
 def test_coverage_header_totals_match_registry():
     """VERDICT r12 #5: COVERAGE.md's header totals rotted twice (said
     147/131 while the registry held 150/134) — and that file is the map
@@ -554,32 +459,6 @@ def test_coverage_header_totals_match_registry():
             f"README says {rm.group(1)}/{rm.group(2)} but the registry "
             f"holds {len(D.QUERIES)}/{len(D.ORACLE_SQL)}"
         )
-
-
-def test_rotation_promotes_never_run_and_changed():
-    """Tier 1 of the rotation: bound-threatened recorded queries (row
-    older than max-1) outrank EVERYTHING — then never-run and
-    _CHANGED_THIS_ROUND entries, then the rest by staleness; deferred
-    newborns sort as max-1. Deterministic pure function of records."""
-    last = {"q_a": 6, "q_b": 3, "q_c": 5}
-    order = D.rotation_order(
-        ["q_a", "q_b", "q_c", "q_new"], last_rounds=last,
-        changed=["q_a"], deferred=[],
-    )
-    # q_b (r3 < mx-1=5) is bound-threatened -> first; then changed q_a
-    # and never-run q_new (both effective 0, name tiebreak), then q_c
-    assert order == ["q_b", "q_a", "q_new", "q_c"]
-    assert order == D.rotation_order(
-        ["q_new", "q_c", "q_b", "q_a"], last_rounds=last,
-        changed=["q_a"], deferred=[],
-    )
-    # a deferred newborn sorts as max-1: behind the stale cohort, ahead
-    # of nothing that matters this round
-    order2 = D.rotation_order(
-        ["q_a", "q_b", "q_c", "q_new"], last_rounds=last,
-        changed=["q_a"], deferred=["q_new"],
-    )
-    assert order2 == ["q_b", "q_a", "q_c", "q_new"]
 
 
 def test_fixture_queries_fall_back_to_live_build(spark, sf_dir, monkeypatch):

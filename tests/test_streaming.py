@@ -4,13 +4,7 @@ input (AvailableNow trigger → results must match batch exactly)."""
 import pytest
 from pyspark.sql import functions as F
 
-from vamana_spark.operators.events import hourly_rollup
-from vamana_spark.streaming import (
-    read_events_stream,
-    streaming_hourly_rollup,
-    streaming_session_stats,
-)
-from vamana_spark.streaming.rollup import run_to_completion
+from vamana_spark.streaming.search import run_to_completion
 
 
 @pytest.fixture(scope="module")
@@ -22,99 +16,12 @@ def stream_source(tmp_path_factory, events):
     return d
 
 
-def test_streaming_rollup_matches_batch(spark, events, stream_source):
-    stream = read_events_stream(spark, stream_source)
-    out = run_to_completion(
-        streaming_hourly_rollup(stream), "t_stream_rollup"
-    ).collect()
-    want = {
-        (r.hour, r.event_type): (r.n_events, r.sum_value)
-        for r in hourly_rollup(events)
-        .select("hour", "event_type", "n_events", "sum_value")
-        .collect()
-    }
-    got = {(r.hour, r.event_type): (r.n_events, r.sum_value) for r in out}
-    assert got == want
-
-
-def test_streaming_sessions_bounded_state(spark, events, stream_source):
-    stream = read_events_stream(spark, stream_source)
-    out = run_to_completion(
-        streaming_session_stats(stream), "t_stream_sessions"
-    ).collect()
-    assert sum(r.n_events for r in out) == events.count()
-    # session merging: no user may have two sessions starting <30min apart
-    from collections import defaultdict
-    from datetime import datetime
-
-    per_user = defaultdict(list)
-    for r in out:
-        per_user[r.user_id].append(datetime.fromisoformat(r.session_start))
-    for starts in per_user.values():
-        starts.sort()
-        # merged sessions are separated by AT LEAST the inactivity gap
-        # from the previous session's *start* (weak but deterministic bound)
-        assert all((b - a).total_seconds() > 0 for a, b in zip(starts, starts[1:]))
-
-
-def test_streaming_sessions_match_batch(spark, events, stream_source):
-    """Stream session_window == batch gap-sessionize on a closed input:
-    same per-session (user, n_events, sum_value) multiset. (Boundary
-    semantics agree except at EXACTLY-gap spacing, which µs-precision
-    synthetic data doesn't hit.)"""
-    from vamana_spark.operators.events import session_stats
-
-    stream = read_events_stream(spark, stream_source)
-    out = run_to_completion(
-        streaming_session_stats(stream), "t_stream_sessions_parity"
-    ).collect()
-    got = sorted((r.user_id, r.n_events, r.sum_value) for r in out)
-    want = sorted(
-        (r.user_id, r.n_events, r.sum_value)
-        for r in session_stats(events, 30).collect()
-    )
-    assert got == want
-
-
-def test_stateful_running_totals(spark, events, stream_source, tmp_path):
-    """applyInPandasWithState accumulates across micro-batches; final
-    per-user totals equal the batch aggregate."""
-    from pyspark.sql import functions as F
-
-    from vamana_spark.streaming.stateful import running_user_totals
-
-    stream = read_events_stream(spark, stream_source)
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("t_state_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("t_state_totals").collect()
-    # update mode may emit a row per user per batch: keep the LAST snapshot
-    # (largest n_events) per user
-    last = {}
-    for r in out:
-        if r.user_id not in last or r.n_events > last[r.user_id].n_events:
-            last[r.user_id] = r
-    want = {
-        r.user_id: (r.n, round(r.s, 4))
-        for r in events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    got = {u: (r.n_events, round(r.sum_value, 4)) for u, r in last.items()}
-    assert got == want
-
-
 def test_streaming_dedup_drops_repeats(spark, events, stream_source, tmp_path):
     from vamana_spark.streaming.dedup import streaming_exact_dedup
 
-    stream = read_events_stream(spark, stream_source)
+    stream = spark.readStream.schema(
+        spark.read.parquet(stream_source).schema
+    ).parquet(stream_source)
     q = (
         streaming_exact_dedup(stream, key_cols=("user_id", "event_type"), watermark="365 days")
         .writeStream.format("memory")

@@ -22,7 +22,6 @@ search → recall, main.cpp:33-168) plus the pipeline operators:
   pbuild  --input emb.parquet --output idx_dir [--shards --overlap ...]
   psearch --index idx_dir --queries q.parquet --output out.parquet
           [--k --nprobe --pq]
-  bench   (same as bench.py)
 
 Query parquet schema: (query_id long, query_vec array<float>).
 """
@@ -106,7 +105,7 @@ def cmd_dedup(args) -> int:
         )
     elif args.mode == "incremental":
         # dedup the input BATCH against an already-ingested corpus
-        # (Bloom-broadcast; the corpus never shuffles — PLANS.md)
+        # (Bloom-broadcast; the corpus never shuffles)
         if not args.against:
             raise SystemExit("--mode incremental requires --against <corpus>")
         seen = spark.read.parquet(args.against)
@@ -207,7 +206,7 @@ def cmd_clean(args) -> int:
             cur, text_col=args.text_col, id_col=args.id_col
         ).select(args.id_col, "bigram_ppl")
         # LEFT join: docs with <2 tokens get no bigram score and pass
-        # through unfiltered (r5 ADVICE — an inner join silently dropped
+        # through unfiltered (an inner join would silently drop
         # them regardless of the band); shorter gates belong to --gopher
         cur = (
             cur.join(scored, args.id_col, "left")
@@ -395,13 +394,6 @@ def cmd_ivfpq(args) -> int:
     return 0
 
 
-def cmd_bench(args) -> int:
-    import bench
-
-    bench.main()
-    return 0
-
-
 def cmd_range(args) -> int:
     from vamana_spark import exact
 
@@ -458,7 +450,7 @@ def _parse_packs(specs) -> tuple:
             elif (
                 len(parts) == 4 and parts[0] == "pq" and parts[3] == "pershard"
             ):
-                # ADVICE r9: the per-shard-codebook strategy must be
+                # the per-shard-codebook strategy must be
                 # expressible from the CLI, or a pq_profile that
                 # recommends it can never be persisted by pbuild
                 packs.append(("pq", int(parts[1]), int(parts[2]), True))
@@ -473,8 +465,8 @@ def _parse_packs(specs) -> tuple:
 
 
 def _profile_packs(idx, packs) -> tuple:
-    """Rewrite pq pack specs to the index's measured pq_profile choice
-    (ADVICE r9): ``pbuild --calibrate`` persists the profile, but a
+    """Rewrite pq pack specs to the index's measured pq_profile choice.
+    ``pbuild --calibrate`` persists the profile, but a
     literal CLI pack spec (m, global) could differ from the profile's
     (m, per_shard) choice — a serving restart with default pq_m would
     then follow the profile, miss the saved pack, and silently
@@ -489,7 +481,7 @@ def _profile_packs(idx, packs) -> tuple:
         ksub = int(p[2])
         prof = idx.pq_profile(pq_ksub=ksub)
         if prof.get("opq"):
-            # r11: the profile's measured pick may be the learned
+            # the profile's measured pick may be the learned
             # rotation at the same m — persist the pack psearch's
             # profile-following default will actually request
             out.append(("opq", int(prof["pq_m"]), ksub))
@@ -538,7 +530,7 @@ def cmd_pbuild(args) -> int:
         # the single memo, so the default-ksub call must come LAST —
         # save() persists the memo, and a restart's default `psearch
         # --pq` (ksub=256) must find a profile matching its own request
-        # or it silently re-trains the pack (ADVICE r10; memo-hit when
+        # or it silently re-trains the pack (memo-hit when
         # the last spec already used the default ksub)
         packs = _profile_packs(idx, packs)  # persist what psearch will ask for
         cal["pq_profile"] = idx.pq_profile()
@@ -565,7 +557,7 @@ def cmd_resplit(args) -> int:
     changed = out is not idx
     if changed and args.calibrate:
         # resplit_oversized already auto-carries the input's operating
-        # point (r11); only re-measure here when the operator overrides
+        # point; only re-measure here when the operator overrides
         # the target or the input was never calibrated — a bare
         # re-measure would silently RESET a carried 0.98 target to the
         # default
@@ -573,7 +565,7 @@ def cmd_resplit(args) -> int:
             out.calibrate_nprobe(target_recall=float(args.target_recall))
         elif out.recommended_nprobe is None:
             out.calibrate_nprobe()
-        # same ordering as cmd_pbuild (ADVICE r10): pack profiling last
+        # same ordering as cmd_pbuild: pack profiling last
         # would leave a non-default-ksub memo persisted; default-ksub
         # profile must be the one save() writes
         packs = _profile_packs(out, packs)
@@ -872,7 +864,7 @@ def main(argv=None) -> int:
     )
     pb.add_argument(
         "--calibrate", action="store_true",
-        help="measure and persist the serving defaults (r9): "
+        help="measure and persist the serving defaults: "
              "calibrate_nprobe() from ground-truth probe reachability "
              "and pq_profile() from ADC shortlist agreement — "
              "psearch --auto-nprobe / --pq then serve at them",
@@ -928,9 +920,6 @@ def main(argv=None) -> int:
     )
     ps.add_argument("--pq-ksub", dest="pq_ksub", type=int, default=256)
     ps.set_defaults(fn=cmd_psearch)
-
-    be = sub.add_parser("bench")
-    be.set_defaults(fn=cmd_bench)
 
     args = p.parse_args(argv)
     return args.fn(args)

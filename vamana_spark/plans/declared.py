@@ -478,8 +478,8 @@ def q_ann_filtered(spark, sf_dir):
     """Graph-side filtered ANN: over-retrieve on the beam, post-filter
     by label via a broadcast join + window.
 
-    HASH-STRICT since r11 (VERDICT r10 next-round #7), by the
-    q_partitioned_pq_exact recipe: with ``ef_search = n`` the beam holds
+    HASH-STRICT by the q_partitioned_pq_exact recipe: with
+    ``ef_search = n`` the beam holds
     every evaluated node (nothing is ever evicted) and walks until no
     beam entry is unexpanded — on a medoid-reachable graph
     (q_graph_reachability gates exactly that) the visited set is the
@@ -548,7 +548,7 @@ def q_ip_graph_recall(spark, sf_dir):
 
 @declare("q_ip_pq")
 def q_ip_pq(spark, sf_dir):
-    """PQ serving under metric='ip' (r10; the reference's declared TODO,
+    """PQ serving under metric='ip' (the reference's declared TODO,
     vamana.h:695 / readme.md:76, now live on the beyond-RAM tier):
     residuals quantized in the MIPS-augmented space the flat pack uses,
     zero-padded to the PQ subspace alignment, exact -dot re-rank.
@@ -584,10 +584,10 @@ def q_ip_pq(spark, sf_dir):
 
 @declare("q_opq_serving")
 def q_opq_serving(spark, sf_dir):
-    """OPQ on the partitioned serving tier (r11; VERDICT r10 missing
-    #3): the same uint8 PQ pack with a learned orthogonal rotation
-    applied to the residuals before the subspace split — the one
-    quantization tool previously missing from the tier that needs it
+    """OPQ on the partitioned serving tier: the same uint8 PQ pack
+    with a learned orthogonal rotation applied to the residuals before
+    the subspace split — the one quantization tool previously missing
+    from the tier that needs it
     (``partitioned.py _opq_rotation`` / ``search_pq(opq=True)``).
     Rows-only (k-means + learned rotation); ``ok`` embeds: opq-pack
     recall@10 >= 0.85 vs exact, AND >= plain-PQ recall at the SAME
@@ -677,7 +677,7 @@ def q_opq_serving(spark, sf_dir):
     """,
 )
 def q_ivf_topk(spark, sf_dir):
-    """X3 approx variant: IVF probe search, bit-strict since r7 via
+    """X3 approx variant: IVF probe search, bit-strict via
     PINNED coarse centers (the embeddings of the 8 smallest vec_ids) —
     list assignment, nprobe routing, candidate equi-join, and top-k
     merge are all re-derived independently in the DuckDB oracle. The
@@ -746,7 +746,7 @@ def q_lsh_join(spark, sf_dir):
 # Full-corpus exact word-3gram Jaccard pairs at >= 0.5 — ground truth
 # for BOTH sketch-blocked near-dup passes below. The sketches/signatures
 # are engine-internal, but their VERIFIED pair sets are plain set
-# algebra any engine reproduces (VERDICT r5 #9); blocking recall at the
+# algebra any engine reproduces; blocking recall at the
 # operating point is what makes verified == truth (LSH: all true pairs
 # in sf data sit at J >= 0.9, band-collision certainty ~1; SimHash:
 # 8x8-bit banding guarantees candidates to Hamming 7, measured true-pair
@@ -830,7 +830,7 @@ _INC_DEDUP_TIERS_ORACLE = r"""
 @declare("q_incremental_dedup_tiers", _INC_DEDUP_TIERS_ORACLE)
 def q_incremental_dedup_tiers(spark, sf_dir):
     """The beyond-broadcast tiers of incremental ingest dedup in one
-    op-tagged projection (r14 consolidation of the former
+    op-tagged projection (consolidation of the former
     q_incremental_dedup_sharded / q_incremental_dedup_ranged —
     identical gates, one registry slot reclaimed for
     q_semantic_corner_recovery; policy in COVERAGE.md: only
@@ -971,7 +971,7 @@ def q_incremental_near_dups(spark, sf_dir):
     """,
 )
 def q_scan_decision(spark, sf_dir):
-    """X2 decision-only ingest gate (r12, VERDICT r11 #4): WHICH batch
+    """X2 decision-only ingest gate: WHICH batch
     docs are near-dups of the corpus at rest — the flag set, not the
     pair list. Same snapshot split as q_incremental_near_dups; engine
     path is ``incremental_near_dups(decision_only=True)``: witness cap
@@ -1086,8 +1086,8 @@ def q_incremental_dedup(spark, sf_dir):
 def q_dup_groups(spark, sf_dir):
     """X1: exact-duplicate clusters (raw text identity).
 
-    sf0.01 documents contain no natural exact-duplicate groups (the r05
-    driver row was a vacuous 0-rows-vs-0-rows), so the query plants
+    sf0.01 documents contain no natural exact-duplicate groups (an
+    unplanted run compares 0 rows against 0 rows), so the query plants
     deterministic copies in-query — every 10th doc gains one verbatim
     copy, every 50th a second — exercising both pair groups and a
     3-member group against the oracle (the q_gopher_filter augmentation
@@ -1513,7 +1513,7 @@ _BM25_PROBES = [
     """,
 )
 def q_bm25_batch(spark, sf_dir):
-    """Batch BM25 (r8, the r7 verdict's Missing #2): a DATAFRAME of
+    """Batch BM25: a DATAFRAME of
     contamination probes ranked against the corpus in ONE job — tf is
     computed once per (doc, term), the per-probe fan-out happens on
     the aggregate, and the whole batch costs two data shuffles
@@ -2006,7 +2006,7 @@ def q_ranking_metrics(spark, sf_dir):
     """,
 )
 def q_pq_knn(spark, sf_dir):
-    """PQ ADC shortlist + exact re-rank, bit-strict since r7 via a
+    """PQ ADC shortlist + exact re-rank, bit-strict via a
     PINNED codebook (``pq_pinned_codebook``: centroid c of subspace j =
     the j-th 8-dim slice of the row with the c-th smallest vec_id). The
     DuckDB oracle re-derives the identical codebook with list slices and
@@ -2014,7 +2014,7 @@ def q_pq_knn(spark, sf_dir):
     (sum of per-subspace table distances), the top-100 shortlist, and
     the exact re-rank — the whole PQ serving pipeline dual-checked end
     to end. K-means-trained codebooks stay covered by the recall gates
-    (q_opq_knn, q_ivfpq_knn, SCALE.md PQ rungs)."""
+    (q_opq_knn, q_ivfpq_knn)."""
     e = _emb(spark, sf_dir)
     dim = len(e.select("embedding").first()[0])
     cb = quantization.pq_pinned_codebook(e, dim, m=8, ksub=64)
@@ -2102,9 +2102,9 @@ def q_pq_knn(spark, sf_dir):
     """,
 )
 def q_opq_exact(spark, sf_dir):
-    """The OPQ serving pipeline hash-matched end to end (r8, the r7
-    verdict's ask #5): a PINNED orthogonal rotation — the permutation
-    matrix R[(37*i) % 64, i] = 1, exactly representable so the SQL
+    """The OPQ serving pipeline hash-matched end to end: a PINNED
+    orthogonal rotation — the permutation matrix R[(37*i) % 64, i] = 1,
+    exactly representable so the SQL
     oracle rotates by list element permutation with zero float
     arithmetic — composed with the pinned codebook trick of q_pq_knn,
     TRAINED IN THE ROTATED SPACE like any OPQ model. rotate -> encode ->
@@ -2165,7 +2165,7 @@ def q_ivfpq_knn(spark, sf_dir):
     the sf0.01 table is UNIFORM random 64-d — the routing-hostile
     geometry where IVF must probe wide (measured here: 6→0.69,
     10→0.84, 12→0.91); clustered corpora calibrate far lower
-    (q_calibrated_serving, SCALE.md 10M rung: 0.27% of shards)."""
+    (q_calibrated_serving; 0.27% of shards on a clustered 10M corpus)."""
     from vamana_spark import quality
 
     e = _emb(spark, sf_dir)
@@ -2663,10 +2663,6 @@ def q_media_features(spark, sf_dir):
     )
 
 
-# extended relational surface registers into the same gate
-from vamana_spark.plans import relational_ext  # noqa: E402,F401  (registration import)
-
-
 _PIDX_CACHE: dict = {}
 
 
@@ -2675,7 +2671,7 @@ def _built_partitioned(spark, sf_dir):
     committed deterministic fixture when present (search over a loaded
     fixed graph is bit-stable), else a live build (non-testdata dirs).
     The partitioned BUILD path stays driver-exercised via
-    q_append_membership and the bench/tests."""
+    q_append_membership and the tests."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PIDX_CACHE:
         from vamana_spark.index.partitioned import PartitionedVamanaIndex
@@ -2739,7 +2735,7 @@ def q_partitioned_pq(spark, sf_dir):
 
 @declare("q_skewed_build")
 def q_skewed_build(spark, sf_dir):
-    """The r8 skew guard driver-gated: collapse 75% of the embedding
+    """The build-time skew guard driver-gated: collapse 75% of the embedding
     table into one tight blob (scale by 0.02 — declarative transform),
     build partitioned with num_shards=4 / overlap=2, and assert the
     oversized-cell split actually fires and stays bounded. ``ok`` folds
@@ -2789,7 +2785,7 @@ def q_skewed_build(spark, sf_dir):
 
 @declare("q_resplit_consolidation")
 def q_resplit_consolidation(spark, sf_dir):
-    """r9 maintenance-time skew consolidation driver-gated: build the
+    """Maintenance-time skew consolidation driver-gated: build the
     same declaratively-skewed corpus as q_skewed_build but with the
     BUILD-time guard disabled (max_shard_factor=None), so the oversized
     cell survives into the index — the state a sustained hot-cell
@@ -2852,7 +2848,7 @@ def q_resplit_consolidation(spark, sf_dir):
 
 @declare("q_calibrated_serving")
 def q_calibrated_serving(spark, sf_dir):
-    """r9 serving calibration driver-gated: collapse the embedding
+    """Serving calibration driver-gated: collapse the embedding
     table into 4 declarative blobs (center = one of the first 4
     vectors, point = center + 0.05·x), build partitioned with
     num_shards=4 / overlap=2, then measure BOTH calibrations —
@@ -4157,7 +4153,7 @@ def q_semantic_dedup(spark, sf_dir):
     al. 2023) over the embeddings table augmented with planted exact
     duplicates (every 7th vector re-inserted scaled x1.5 under
     id+100000 — unit-normalizes to an identical point, so it MUST
-    drop). r10: emitted as the exact-cosine-VERIFIED pair projection
+    drop). Emitted as the exact-cosine-VERIFIED pair projection
     (dup_of, dropped_id, sim) hash-matched against the full-pairs
     DuckDB oracle — the q_minhash_pairs recipe; the k-means blocking
     stays engine-internal. Equality holds on this corpus because (a)
@@ -4208,7 +4204,7 @@ def q_semantic_dedup(spark, sf_dir):
     """,
 )
 def q_semantic_multiprobe(spark, sf_dir):
-    """r12 (VERDICT r11 #3): semantic dedup with multi-probe (top-2
+    """Semantic dedup with multi-probe (top-2
     cell) assignment — the boundary-straddle recovery knob — on the
     same planted-copy corpus and against the same full-pairs DuckDB
     oracle as q_semantic_dedup. Equality is the operator's safety
@@ -4219,7 +4215,7 @@ def q_semantic_multiprobe(spark, sf_dir):
     straddle-RECOVERY direction (pairs single-probe misses) is gated by
     tests/test_operators.py::
     test_semantic_dedup_multiprobe_recovers_boundary_straddle and the
-    10M Zipf rung (SCALE.md)."""
+    10M Zipf corpus."""
     from vamana_spark.operators import dedup as DD
 
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
@@ -4323,7 +4319,7 @@ def _probe_recovery_aug(spark, sf_dir):
     """,
 )
 def q_semantic_probe_recovery(spark, sf_dir):
-    """r13 (VERDICT r12 #4): the multi-probe RECOVERY direction at
+    """The multi-probe RECOVERY direction at
     oracle scale — the complement of q_semantic_multiprobe, which gates
     only the safety direction (probes must ADD nothing on a corpus
     whose duplicates co-locate). Here the planted pair straddles a
@@ -4354,7 +4350,7 @@ def q_semantic_probe_recovery(spark, sf_dir):
     )
 
 
-# r14 (VERDICT r13 #5): the planted 4-cell-corner pair for
+# The planted 4-cell-corner pair for
 # q_semantic_corner_recovery, found by numeric search over the sf0.01
 # corpus's seed-42 / num_clusters=8 k-means geometry (t +/- 0.2*u for
 # t = the normalized mean of centers {0,1,3,5} and u = the normalized
@@ -4402,7 +4398,7 @@ def _corner_recovery_aug(spark, sf_dir):
     plus ONE planted near-dup pair engineered to sit at a >=3-cell
     Voronoi CORNER of the seed-42 / num_clusters=8 k-means — the miss
     class the 10M rung measured as the whole probes=2 residual
-    (SCALE.md r13/r14: zero noise-tail misses; the remaining 1.4% was
+    (on a 10M corpus: zero noise-tail misses; the remaining 1.4% was
     all top-level >=3-cell straddle, and probes=3 recovered 85% of it).
     Unlike :func:`_probe_recovery_aug` (mixes of two source rows
     straddling ONE boundary), the pair here is a literal-vector plant:
@@ -4443,7 +4439,7 @@ def _corner_recovery_aug(spark, sf_dir):
     """,
 )
 def q_semantic_corner_recovery(spark, sf_dir):
-    """r14 (VERDICT r13 #5): the probes=3 recovery direction at oracle
+    """The probes=3 recovery direction at oracle
     scale — the >=3-cell-CORNER complement of q_semantic_probe_recovery
     (whose planted pair straddles one boundary and is already caught at
     probes=2). The planted pair's top-2 cell sets are disjoint under
@@ -4454,7 +4450,7 @@ def q_semantic_corner_recovery(spark, sf_dir):
     output would be MISSING the (200000, 200001) row. Equality holds
     because no natural pair reaches cosine 0.9 (max natural cosine
     0.5128) and each planted member's max cosine to any natural row is
-    0.42. This declares the knob SCALE.md's r14 10M rung priced (wall
+    0.42. This declares the knob a 10M run priced (wall
     2.36x probes=2, recall 0.9859 -> 0.9979): recommended only at
     recall targets >= 0.995, and oracle-gated here so the code path
     stays correct while opt-in."""
@@ -4592,136 +4588,3 @@ def q_dsir_sample(spark, sf_dir):
     return sampling.dsir_sample(
         _docs(spark, sf_dir), F.col("lang") == "en", n=50, seed=7
     ).select("doc_id")
-
-
-# ======================================================================
-# ROTATION — driver-verification window management
-# ======================================================================
-# The correctness driver runs only the FIRST 50 registry slots each
-# round, so with 137 declared queries a static order leaves 87 forever
-# unverified. The rotation is DATA-DRIVEN (r7+): each query's latest
-# driver round is read from the CORRECTNESS_r*.json records at the repo
-# root, and the registry is reordered stalest-first — never-driver-run
-# queries and queries listed in _CHANGED_THIS_ROUND (whose existing
-# rows describe old code) sort as round 0, everything else by its
-# latest recorded round, ties broken by name. Taking the first 50 of
-# that order every round guarantees a structural staleness bound: with
-# Q queries and a 50-slot window, no query's driver row is ever older
-# than ceil(Q/50) rounds (= 3 at Q=137), PROVIDED the promoted set
-# (never-run + changed) stays within the window's slack. A guard test
-# (tests/test_plans.py) asserts the bound on the actual files.
-#
-# Every declared query additionally runs against the bit-strict local
-# parity suite (tests/test_oracle_parity.py) every round regardless of
-# window membership.
-
-# Queries whose implementation or oracle changed THIS round — their
-# most recent driver rows predate the change, so they are promoted to
-# the front alongside never-run queries. r13: empty — the round's
-# operator changes are output-preserving on the declared surface: the
-# centroid_far multi-probe fix and the sub-probe split recovery only
-# alter probes>1 paths no declared query's conditions reach
-# (q_semantic_dedup runs probes=1; q_semantic_multiprobe runs probes=2
-# min_id with no splits and its probes=1-vs-2 identity is pinned by
-# test_semantic_dedup_multiprobe_identity_on_colocated_dups), and the
-# dense-build Arrow/local-handover change produces the identical graph
-# (same kernel, same inputs). The set-op consolidation RETIRED
-# q_intersect_buyers/q_except_buyers and DECLARED q_set_ops_buyers —
-# a new name, so it promotes as never-run, not as changed.
-# r14: empty — the stage-2 chunk-boundary stitch (ADVICE r13) only
-# alters probes>1 paths where the id-order enforcement fallback fired,
-# which no declared query's corpus reaches (sf0.01 clusters sit far
-# under max_cluster_rows; q_semantic_multiprobe's probes=1-vs-2
-# identity stays pinned by the colocated-dups test), and the deferred
-# dense-build relation thunk produces the identical DataFrames when
-# forced.
-_CHANGED_THIS_ROUND: list = []
-
-# Queries DECLARED or modified this round whose first/refreshed driver
-# row waits a round because the window is full. r14: the incremental
-# consolidation q_incremental_dedup_tiers waits one round — the
-# capacity math: retiring q_incremental_dedup_ranged (an r11 row)
-# leaves 49 bound-threatened r11 must-run rows, and VERDICT r13 #5
-# wants q_semantic_corner_recovery's FIRST row this round, so the
-# window is exactly 49 + 1 = 50. The tiers query's gates don't wait:
-# both tiers stay pinned against the same anti-join oracle by the
-# local pytest parity harness (which runs every declared query), and
-# the retired twins' own rows (sharded r12, ranged r11) describe the
-# identical operator calls it wraps. (r13 precedent: q_set_ops_buyers
-# promoted as never-run after the same-shape set-op consolidation.)
-_DEFER_THIS_ROUND: list = ["q_incremental_dedup_tiers"]
-
-
-def _latest_driver_rounds() -> dict:
-    """query -> latest CORRECTNESS_r{N}.json round that recorded it
-    (any row counts, including err rows — the driver ran it). Empty
-    dict if no records are readable (executor-shipped copies of the
-    package; rotation only matters where the driver imports from the
-    repo root)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    last: dict = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            for q in rows:
-                last[q] = max(last.get(q, 0), rnd)
-    return last
-
-
-def rotation_order(queries, last_rounds=None, changed=None, deferred=None) -> list:
-    """Registry order with a STRUCTURAL staleness guarantee (pure
-    function, unit-testable). Two tiers:
-
-    1. bound-threatened first: queries with a recorded driver row
-       older than (max round - 1) MUST make the window this round or
-       the no-older-than-two-rounds invariant breaks — they outrank
-       everything, stalest first;
-    2. then everything else by effective round (0 for never-run and
-       changed queries, max-1 for ``deferred`` newborns whose first
-       row may wait a round when the window is full), ties by name.
-
-    The r7 lesson behind tier 1: promoting never-run/new queries by
-    effective round alone let two r04 queries spill out of an exactly
-    full 50-slot window — the bound is the hard promise, never-run
-    promotion is best-effort within the window's slack."""
-    if last_rounds is None:
-        last_rounds = _latest_driver_rounds()
-    changed_set = set(_CHANGED_THIS_ROUND if changed is None else changed)
-    defer_set = set(_DEFER_THIS_ROUND if deferred is None else deferred)
-    mx = max(last_rounds.values(), default=0)
-
-    def key(q):
-        if q in changed_set:
-            eff = 0
-        elif q in defer_set:
-            eff = max(mx - 1, 0)
-        else:
-            eff = last_rounds.get(q, 0)
-        recorded = last_rounds.get(q, 0)
-        must_run = 0 < recorded < mx - 1  # bound at risk if skipped
-        return (0 if must_run else 1, eff, q)
-
-    return sorted(queries, key=key)
-
-
-def _apply_rotation() -> None:
-    order = rotation_order(list(QUERIES))
-    reordered = {k: QUERIES[k] for k in order}
-    QUERIES.clear()
-    QUERIES.update(reordered)
-
-
-_apply_rotation()

@@ -1,11 +1,2 @@
-from vamana_spark.streaming.rollup import (
-    read_events_stream,
-    streaming_hourly_rollup,
-    streaming_session_stats,
-)
-
-__all__ = [
-    "read_events_stream",
-    "streaming_hourly_rollup",
-    "streaming_session_stats",
-]
+"""Structured Streaming forms of the batch operators: dedup
+(``streaming.dedup``) and ANN search (``streaming.search``)."""

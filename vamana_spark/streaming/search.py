@@ -46,13 +46,29 @@ def streaming_ann_search(index, query_stream: DataFrame, k: int = 10) -> DataFra
     return index.search(query_stream, k=k)
 
 
+def run_to_completion(
+    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
+) -> DataFrame:
+    """Drain a bounded stream into an in-memory table (AvailableNow) and
+    return the result as a batch DataFrame. Test/utility path.
+    ``output_mode="append"`` for stateless/append-only streams (complete
+    mode requires an aggregation)."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream_df.sparkSession.table(query_name)
+
+
 def run_search_to_completion(
     stream_df: DataFrame, query_name: str
 ) -> DataFrame:
     """Drain a bounded query stream (append mode — search output is
-    append-only); delegates to the shared drain utility."""
-    from vamana_spark.streaming.rollup import run_to_completion
-
+    append-only) with ``run_to_completion``."""
     return run_to_completion(stream_df, query_name, output_mode="append")
 
 
