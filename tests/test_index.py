@@ -219,24 +219,6 @@ def test_dense_build_without_arrow(spark, embeddings):
     assert len(ga[0]) < len(ga[1]) > len(ga[2])
 
 
-def test_build_tier_overflow_reroutes_to_sharded(spark, embeddings, monkeypatch):
-    """When Catalyst's free plan-size estimate undershoots, the
-    broadcast-tier guard's post-pull check (_TierOverflow) must still
-    route the build to the sharded tier instead of building past the
-    ceiling."""
-    from vamana_spark.index import vamana as V
-
-    monkeypatch.setattr(
-        V.VamanaIndex, "_plan_size_bytes", staticmethod(lambda df: 1)
-    )
-    # ceiling below the actual point-set pull -> overflow fires
-    monkeypatch.setattr(V.VamanaIndex, "BROADCAST_TIER_MAX_BYTES", 64 * 4 * 100)
-    params = VamanaParams(dim=64, alpha=1.2, R=16, L=32, ef_search=32, seed=42)
-    idx = VamanaIndex.build(spark, embeddings, params)
-    assert idx.params.num_shards >= 2  # really took the sharded tier
-    assert idx.graph_df.count() == embeddings.count()
-
-
 def test_ip_metric_index_recall(spark, embeddings, queries):
     """Inner-product graph search via the exact MIPS->L2 reduction
     (augmented data component sqrt(M^2-||x||^2), query component 0):
@@ -353,18 +335,37 @@ def test_delete_points_orphan_survivor_keeps_dense_graph(spark):
 
 
 def test_build_auto_shards_over_broadcast_ceiling(spark, embeddings, monkeypatch):
-    # over-threshold single-tier build must auto-route to the sharded
-    # tier instead of pulling the whole point set to the driver
-    # (VamanaIndex.build guard, mirrors the search-side _load_local one)
-    monkeypatch.setattr(VamanaIndex, "BROADCAST_TIER_MAX_BYTES", 0)
+    """Past the broadcast-tier ceiling build no longer routes to the
+    sharded tier (that index could not be searched): it raises the
+    MemoryError that search on such an index would, pointing at
+    PartitionedVamanaIndex. Here the exact count trips (ceiling 0)."""
     p = VamanaParams(dim=64, alpha=1.2, R=16, L=32, ef_search=48, seed=42)
+    monkeypatch.setattr(VamanaIndex, "BROADCAST_TIER_MAX_BYTES", 0)
+    with pytest.raises(MemoryError, match="PartitionedVamanaIndex"):
+        VamanaIndex.build(spark, embeddings, p)
     assert p.num_shards == 1
-    idx = VamanaIndex.build(spark, embeddings, p)
-    assert p.num_shards == 1  # caller's params untouched (ADVICE r4)
-    assert idx.params.num_shards > 1  # guard rewrote the tier on the copy
-    hc = idx.health_check()
-    assert hc["ok"], hc
-    idx.release()
+
+
+def test_build_tier_overflow_reroutes_to_sharded(spark, embeddings, monkeypatch):
+    """When Catalyst's free plan-size estimate undershoots, the capped
+    pull is the guard: build raises the same MemoryError from it rather
+    than rerouting to the sharded tier."""
+    p = VamanaParams(dim=64, alpha=1.2, R=16, L=32, ef_search=48, seed=42)
+    monkeypatch.setattr(
+        VamanaIndex, "_plan_size_bytes", staticmethod(lambda df: 1)
+    )
+    monkeypatch.setattr(VamanaIndex, "BROADCAST_TIER_MAX_BYTES", 64 * 4 * 100)
+    pulled = []
+    single = VamanaIndex._build_single
+    monkeypatch.setattr(
+        VamanaIndex,
+        "_build_single",
+        staticmethod(lambda *a: pulled.append(1) or single(*a)),
+    )
+    with pytest.raises(MemoryError, match="PartitionedVamanaIndex"):
+        VamanaIndex.build(spark, embeddings, p)
+    assert pulled  # raised by the capped pull, not the count
+    assert p.num_shards == 1
 
 
 def test_build_phase_timings_diagnostic(spark, embeddings):
@@ -553,6 +554,27 @@ def test_build_local_validations(spark):
     idx = VamanaIndex.build_local(spark, np.arange(10)[::-1].copy(), V, p2)
     kept = sorted(r.vec_id for r in idx.points_df.collect())
     assert kept == [0, 1, 2, 3, 4, 5]
+
+
+def test_build_local_takes_beam_build_past_dense_max(spark, monkeypatch):
+    """build_local runs kernels.build_graph on the driver: past
+    DENSE_BUILD_MAX the index holds the per-node beam build's graph, at
+    or below it the dense build's."""
+    from vamana_spark.index import kernels
+
+    monkeypatch.setattr(kernels, "DENSE_BUILD_MAX", 50)
+    V = np.random.default_rng(4).standard_normal((120, 8)).astype(np.float32)
+    params = VamanaParams(dim=8, alpha=1.2, R=8, L=16, ef_search=16, seed=3)
+    for n, build in (
+        (120, lambda P: kernels.build_vamana(P, 8, 16, 1.2, 3)),
+        (50, lambda P: kernels.build_vamana_dense(P, 8, 1.2, 3)),
+    ):
+        idx = VamanaIndex.build_local(spark, np.arange(n), V[:n], params)
+        _, _, indptr, nbrs = idx._local
+        want, medoid = build(V[:n])
+        assert idx.params.medoid == medoid
+        got = [nbrs[indptr[i] : indptr[i + 1]].tolist() for i in range(n)]
+        assert got == [g.tolist() for g in want]
 
 
 def test_build_local_caps_before_tier_ceiling(spark, monkeypatch):

@@ -323,3 +323,27 @@ def test_cell_layout_and_subshard_properties(nsplit_list, seed):
     assert np.all(per_cell < ns[None, :]) and np.all(per_cell >= 0)
     assert np.array_equal(per_cell, _subshard_of(vids[:, None], ns[None, :]))
     assert np.all(_subshard_of(vids, np.ones(200, dtype=np.int64)) == 0)
+
+
+def test_adc_search_takes_the_float_walk():
+    """With an exact codebook (one subspace, one centroid per point) a
+    node's ADC distance equals its float distance, so below exhaustive
+    ef the PQ search must walk, and return, exactly what the float
+    search does. Small integer coordinates make both distance forms
+    exact, so the comparison does not hinge on rounding at ties."""
+    rng = np.random.default_rng(11)
+    n = 200
+    P = rng.integers(-8, 9, size=(n, 8)).astype(np.float32)
+    Q = rng.integers(-8, 9, size=(40, 8)).astype(np.float32)
+    graph, medoid = kernels.build_vamana_dense(P, 8, 1.2)
+    nbr_mat = kernels.pad_adjacency(*kernels._to_csr(graph, n), n)
+    cents = P[None]                                # m=1, ksub=n
+    codes = np.arange(n, dtype=np.uint8)[:, None]
+    for ef in (1, 4, 16, 48):
+        rq, rid, rd, _, _ = kernels.search_topk_batch(P, nbr_mat, medoid, Q, 5, ef)
+        aq, aid, ad = kernels.search_topk_batch_adc(
+            codes, cents, nbr_mat, medoid, Q, 5, ef
+        )
+        assert aq.tolist() == rq.tolist(), ef
+        assert aid.tolist() == rid.tolist(), ef
+        assert ad.tolist() == rd.tolist(), ef

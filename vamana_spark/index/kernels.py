@@ -5,16 +5,24 @@ run inside Arrow-batched pandas UDFs — SURVEY.md §4.2). Everything here
 is an original implementation of the published DiskANN/Vamana algorithm
 (Subramanya et al., NeurIPS'19), written against the paper:
 
-- ``greedy_search``  — beam search (reference analogue: greedySearch,
+- ``greedy_search``  — beam search for one query over any per-node
+  sequence of neighbour arrays (reference analogue: greedySearch,
   vamana.h:559-629) with hop / distance-computation counters (the
-  reference Go API stubs these, go_api/vamana_go_api.go:163-171).
+  reference Go API stubs these, go_api/vamana_go_api.go:163-171). The
+  per-node build walks it, and ``search_topk`` is the scalar reference
+  the batched search is tested against.
+- ``search_topk_batch`` / ``search_topk_batch_adc`` — the serving
+  searches. Both run one lockstep batched walk, ``_beam_walk``, and
+  differ only in the distance function they hand it: float32 vectors,
+  or a PQ lookup table over codes.
 - ``robust_prune``   — the *paper-correct iterative* RobustPrune (the
   reference ships a simplified non-iterative variant, vamana.h:722-760;
   SURVEY.md §2 R7 records the deliberate semantics decision).
-- ``build_vamana``   — two-pass build (pass 1 α=1.0, pass 2 α=α) with
-  bidirectional fix-up, matching BuildIndex semantics (vamana.h:221-332)
-  sequentially within a shard; cross-shard parallelism happens at the
-  Spark layer (sharded build, vamana.py).
+- ``build_graph``    — the one build rule: the dense build up to
+  ``DENSE_BUILD_MAX`` points, else ``build_vamana``, the two-pass build
+  (pass 1 α=1.0, pass 2 α=α) with bidirectional fix-up, matching
+  BuildIndex semantics (vamana.h:221-332) sequentially within a shard;
+  cross-shard parallelism happens at the Spark layer.
 
 Vectors are float32 at rest; all distance math is float32 matrix ops
 (BLAS) — recall tolerances dwarf fp error here, unlike the exact-oracle
@@ -23,7 +31,7 @@ path which uses float64 (exact.py).
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import Callable, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -35,6 +43,23 @@ LONG_RANGE_CANDIDATES = 16
 # bitmap (256 MB of bool); past it search_topk_batch falls back to the
 # single-expansion history path and the ADC search chunks queries
 BITMAP_MAX_CELLS = 256_000_000
+
+# beam entries each hop of the batched walk expands per query: the beam
+# converges in ~ef/EXPAND Python iterations instead of ~ef, cutting
+# interpreter + argpartition overhead ~EXPAND x for the same total
+# distance work. Expanding several entries changes the beam's eviction
+# order, so the visited set is not a strict superset of single
+# expansion; recall is empirically equal-or-better at the tested
+# operating points (the recall gate tests are the actual guarantee).
+# The result is still the top-k of the ef best visited nodes.
+EXPAND = 8
+
+# below this point count the dense build kernel (candidate sets from one
+# n^2 gemm plus random long-range candidates) beats the beam-search build
+# by ~10x; the n^2 f32 matrix at the ceiling is ~1.6 GB — well inside an
+# executor. Sharded builds keep per-shard n under this, so the dense
+# kernel is the common case.
+DENSE_BUILD_MAX = 20_000
 
 
 def dists_to(P: np.ndarray, ids: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -52,13 +77,13 @@ def medoid_of(P: np.ndarray) -> int:
 
 def greedy_search(
     P: np.ndarray,
-    indptr: np.ndarray,
-    nbrs: np.ndarray,
+    adj: Sequence[np.ndarray],
     start: int,
     q: np.ndarray,
     beam_width: int,
 ) -> Tuple[np.ndarray, np.ndarray, int, int]:
-    """Beam search over a CSR adjacency from ``start`` toward ``q``.
+    """Beam search from ``start`` toward ``q``. ``adj[i]`` is node i's
+    int64 neighbour array: CSR slices, or the build's mutable list.
 
     Returns (visited_ids, visited_dists, hops, dist_comps). The beam
     holds the ``beam_width`` best candidates seen; each round expands the
@@ -83,15 +108,15 @@ def greedy_search(
             break
         sub = np.flatnonzero(unv)
         cur_pos = sub[np.argmin(beam_d[sub])]
-        cur = beam_ids[cur_pos]
+        cur = int(beam_ids[cur_pos])
         visited[cur] = True
-        visited_ids.append(int(cur))
+        visited_ids.append(cur)
         visited_d.append(float(beam_d[cur_pos]))
         hops += 1
 
-        neigh = nbrs[indptr[cur] : indptr[cur + 1]]
-        fresh = neigh[~in_beam[neigh]]
-        if fresh.size:
+        neigh = adj[cur]
+        fresh = neigh[~in_beam[neigh]] if len(neigh) else neigh
+        if len(fresh):
             fresh = np.unique(fresh)
             fd = dists_to(P, fresh, q)
             dist_comps += fresh.size
@@ -204,9 +229,7 @@ def build_vamana(
     for a in (1.0, float(alpha)):
         for i in rng.permutation(n):
             i = int(i)
-            visited_ids, _, _, _ = _greedy_search_adj(
-                P, graph, medoid, P[i], L
-            )
+            visited_ids, _, _, _ = greedy_search(P, graph, medoid, P[i], L)
             cand = np.concatenate([visited_ids, graph[i]])
             graph[i] = robust_prune(P, i, cand, None, a, R)
             for j in graph[i]:
@@ -220,59 +243,6 @@ def build_vamana(
                 else:
                     graph[j] = np.append(graph[j], i)
     return graph, medoid
-
-
-def _greedy_search_adj(
-    P: np.ndarray,
-    graph: List[np.ndarray],
-    start: int,
-    q: np.ndarray,
-    beam_width: int,
-) -> Tuple[np.ndarray, np.ndarray, int, int]:
-    """greedy_search over a mutable list-of-arrays adjacency (build path)."""
-    n = P.shape[0]
-    visited = np.zeros(n, dtype=bool)
-    in_beam = np.zeros(n, dtype=bool)
-    beam_ids = np.array([start], dtype=np.int64)
-    beam_d = dists_to(P, beam_ids, q)
-    in_beam[start] = True
-    visited_ids: List[int] = []
-    visited_d: List[float] = []
-    hops = 0
-    comps = 1
-    while True:
-        unv = ~visited[beam_ids]
-        if not unv.any():
-            break
-        sub = np.flatnonzero(unv)
-        cur_pos = sub[np.argmin(beam_d[sub])]
-        cur = int(beam_ids[cur_pos])
-        visited[cur] = True
-        visited_ids.append(cur)
-        visited_d.append(float(beam_d[cur_pos]))
-        hops += 1
-        neigh = graph[cur]
-        fresh = neigh[~in_beam[neigh]] if len(neigh) else neigh
-        if len(fresh):
-            fresh = np.unique(fresh)
-            fd = dists_to(P, fresh, q)
-            comps += fresh.size
-            beam_ids = np.concatenate([beam_ids, fresh])
-            beam_d = np.concatenate([beam_d, fd])
-            in_beam[fresh] = True
-            if beam_ids.size > beam_width:
-                keep = np.argpartition(beam_d, beam_width - 1)[:beam_width]
-                drop = np.ones(beam_ids.size, dtype=bool)
-                drop[keep] = False
-                in_beam[beam_ids[drop]] = False
-                beam_ids = beam_ids[keep]
-                beam_d = beam_d[keep]
-    return (
-        np.asarray(visited_ids, dtype=np.int64),
-        np.asarray(visited_d, dtype=np.float64),
-        hops,
-        comps,
-    )
 
 
 def search_topk(
@@ -295,47 +265,12 @@ def search_topk(
     k = min(k, n)
     ef = max(ef_search, k)
     entry = medoid if start is None else start
-    visited_ids, visited_d, hops, comps = greedy_search(P, indptr, nbrs, entry, q, ef)
+    adj = np.split(nbrs, indptr[1:-1])  # per-node CSR slices
+    visited_ids, visited_d, hops, comps = greedy_search(P, adj, entry, q, ef)
     if visited_ids.size == 0:
         return visited_ids, visited_d, hops, comps
     order = np.lexsort((visited_ids, visited_d))[:k]
     return visited_ids[order], visited_d[order], hops, comps
-
-
-def robust_prune_presorted(
-    D_p: np.ndarray,
-    sorted_cand: np.ndarray,
-    D_full: np.ndarray,
-    alpha: float,
-    R: int,
-) -> np.ndarray:
-    """RobustPrune when the full pairwise distance row/matrix is available.
-
-    ``sorted_cand`` are candidate ids ascending by distance to p (self
-    excluded); ``D_p[c]`` = dist(p, c); ``D_full`` = full (n, n) matrix.
-    Vectorized: each admitted p* eliminates its dominated cone with one
-    matrix-row compare.
-    """
-    alive = np.ones(sorted_cand.size, dtype=bool)
-    out: List[int] = []
-    pos = 0
-    while len(out) < R:
-        while pos < alive.size and not alive[pos]:
-            pos += 1
-        if pos >= alive.size:
-            break
-        star = sorted_cand[pos]
-        out.append(int(star))
-        alive[pos] = False
-        live = np.flatnonzero(alive)
-        if live.size == 0:
-            break
-        c_live = sorted_cand[live]
-        kill = alpha * D_full[star, c_live] <= D_p[c_live]
-        alive[live[kill]] = False
-    return np.asarray(out, dtype=np.int64)
-
-
 
 
 def robust_prune_batch(
@@ -351,8 +286,9 @@ def robust_prune_batch(
     to that row's node, padded with -1; ``D`` the full distance matrix.
     Per-row prunes are independent, so all rows advance one admission per
     Python iteration — ~R iterations of flat (n_rows, C) ops instead of
-    n_rows sequential prune loops. Exact same output as
-    ``robust_prune_presorted`` row by row.
+    n_rows sequential prune loops. Each row follows ``robust_prune``'s
+    iterative rule over its presorted candidates, with distances read
+    from ``D``.
 
     Returns (n_rows, R) admitted ids padded with -1.
     """
@@ -494,9 +430,8 @@ def build_vamana_dense(
     medoid (DiskANN §2.3); RobustPrune keeps those that no nearer
     neighbour dominates (recall@10 0.99 on the same corpus).
 
-    The sharded build keeps per-shard n below the ceiling, so this is the
-    default shard kernel; ``build_vamana`` remains for oversized single
-    shards. Memory: O(n^2) f32 — the caller gates on n.
+    Memory: O(n^2) f32 — ``build_graph`` uses it up to
+    ``DENSE_BUILD_MAX`` points.
     """
     n = P.shape[0]
     if n == 0:
@@ -591,6 +526,18 @@ def build_vamana_dense(
     return graph, medoid
 
 
+def build_graph(
+    P: np.ndarray, R: int, L: int, alpha: float, seed: int
+) -> Tuple[List[np.ndarray], int]:
+    """The graph build every index runs: ``build_vamana_dense`` up to
+    ``DENSE_BUILD_MAX`` points (without L, so it takes max(2R, 64)
+    candidates per node), the per-node ``build_vamana`` past it.
+    Returns (graph, medoid)."""
+    if P.shape[0] <= DENSE_BUILD_MAX:
+        return build_vamana_dense(P, R, alpha, seed)
+    return build_vamana(P, R, L, alpha, seed)
+
+
 def pad_adjacency(indptr: np.ndarray, nbrs: np.ndarray, n: int) -> np.ndarray:
     """CSR -> (n, Rmax) int64 matrix padded with -1 (for batched gathers)."""
     degs = np.diff(indptr)
@@ -603,149 +550,142 @@ def pad_adjacency(indptr: np.ndarray, nbrs: np.ndarray, n: int) -> np.ndarray:
     return M
 
 
-def search_topk_batch(
-    P: np.ndarray,
-    nbr_mat: np.ndarray,
-    medoid: int,
-    Q: np.ndarray,
-    k: int,
-    ef_search: int,
-    starts: Optional[np.ndarray] = None,
-    expand: int = 8,
-) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Lockstep batched beam search: all queries advance one hop per
-    Python iteration — per-hop work is a handful of large vectorized ops
-    (gather, batched distances, membership via broadcast-compare, one
-    argpartition) instead of per-query small-array calls. The semantics
-    match greedy_search + top-k-of-visited (at natural termination the
-    beam IS the ef nearest visited set).
-
-    ``expand``: on the bitmap path, each hop expands the ``expand``
-    nearest UNVISITED beam entries per query instead of one — the beam
-    converges in ~ef/expand Python iterations instead of ~ef, cutting
-    interpreter+argpartition overhead ~expand× for the same total
-    distance work. Expanding B entries changes beam eviction order, so
-    the visited set is not a strict superset of single-expansion;
-    recall is empirically equal-or-better at the tested operating
-    points (the recall gate tests are the actual guarantee). The
-    result is still the top-k of the ef best visited nodes.
-
-    Returns (row_idx, ids, dists, hops, dist_comps): flat top-k results,
-    ``row_idx[j]`` = query row of result j (ranks ascend within a row).
-    """
-    nq, dim = Q.shape
-    n = P.shape[0]
-    if nq == 0 or n == 0:
-        z = np.array([], dtype=np.int64)
-        return z, z, np.array([], dtype=np.float64), z, z
-    k = min(k, n)
-    ef = max(ef_search, k)
-    max_hops = 4 * ef + 8
-
-    Pf = P.astype(np.float32, copy=False)
-    Qf = Q.astype(np.float32, copy=False)
-
+def _new_beam(starts: np.ndarray, d0: np.ndarray, ef: int):
+    """Per-query beams of width ef seeded with the start nodes: (ids,
+    dists, visited flags, hops, dist_comps); -1 / inf pad free slots."""
+    nq = starts.shape[0]
     beam_ids = np.full((nq, ef), -1, dtype=np.int64)
     beam_d = np.full((nq, ef), np.inf, dtype=np.float64)
-    beam_vis = np.zeros((nq, ef), dtype=bool)
-    hops = np.zeros(nq, dtype=np.int64)
-    comps = np.ones(nq, dtype=np.int64)
-
-    # "seen" history: an O(1)-lookup (nq, n) bitmap when it fits (~shard
-    # scale: 64 queries x 20k nodes = 1.3 MB), else a growing id list with
-    # broadcast-compare (memory-safe for broadcast-tier n in the millions,
-    # at O(hop) compare cost per hop).
-    #
-    # Bitmap semantics are EVALUATED-once (standard HNSW visited-set):
-    # a node is marked the moment its distance is computed, and never
-    # re-evaluated. Sound because the beam holds the ef best evaluated
-    # nodes and its threshold only tightens — a node dropped (or never
-    # admitted) can never beat re-admission later. This lets each hop
-    # compute distances ONLY for genuinely new nodes (sparse gather)
-    # instead of all Rmax neighbors, and replaces the O(Rmax*ef)
-    # beam-membership broadcast-compare with one bitmap lookup.
-    start_nodes = (
-        np.full(nq, medoid, dtype=np.int64) if starts is None
-        else np.asarray(starts, dtype=np.int64)
+    beam_ids[:, 0] = starts
+    beam_d[:, 0] = d0
+    return (
+        beam_ids,
+        beam_d,
+        np.zeros((nq, ef), dtype=bool),
+        np.zeros(nq, dtype=np.int64),
+        np.ones(nq, dtype=np.int64),
     )
-    diff0 = Pf[start_nodes] - Qf
-    beam_ids[:, 0] = start_nodes
-    beam_d[:, 0] = np.einsum("ij,ij->i", diff0, diff0)
 
+
+def _merge_beam(beam_ids, beam_d, beam_vis, rows, ids, d) -> None:
+    """Keep, for each of ``rows``, the ef nearest of its beam plus the
+    new (unvisited) candidates ``ids``/``d``; -1 / inf pad both."""
+    ef = beam_ids.shape[1]
+    all_ids = np.concatenate([beam_ids[rows], ids], axis=1)
+    all_d = np.concatenate([beam_d[rows], d], axis=1)
+    all_vis = np.concatenate(
+        [beam_vis[rows], np.zeros(ids.shape, dtype=bool)], axis=1
+    )
+    sel = np.argpartition(all_d, ef - 1, axis=1)[:, :ef]
+    beam_ids[rows] = np.take_along_axis(all_ids, sel, axis=1)
+    beam_d[rows] = np.take_along_axis(all_d, sel, axis=1)
+    beam_vis[rows] = np.take_along_axis(all_vis, sel, axis=1)
+
+
+def _beam_walk(
+    nbr_mat: np.ndarray,
+    n: int,
+    starts: np.ndarray,
+    ef: int,
+    dist: Callable[[np.ndarray, np.ndarray], np.ndarray],
+):
+    """Lockstep batched beam search, the walk both batched searches
+    share: all queries advance one hop per Python iteration, and each
+    hop expands the ``EXPAND`` nearest unvisited beam entries of every
+    query. ``dist(pts, qrow)`` gives the distances from query rows
+    ``qrow`` to nodes ``pts`` (two equal-length id arrays).
+
+    The "seen" set is an (nq, n) bitmap with EVALUATED-once semantics
+    (the standard HNSW visited set): a node is marked the moment its
+    distance is computed, and never re-evaluated. Sound because the beam
+    holds the ef best evaluated nodes and its threshold only tightens —
+    a node dropped (or never admitted) can never beat re-admission
+    later. So each hop computes distances ONLY for genuinely new nodes
+    (sparse gather), and beam membership is one bitmap lookup.
+
+    Returns the final beams (ids, dists) with per-query hops and
+    dist_comps.
+    """
+    nq = starts.shape[0]
     arange_nq = np.arange(nq)
-    use_bitmap = nq * n <= BITMAP_MAX_CELLS
+    beam_ids, beam_d, beam_vis, hops, comps = _new_beam(
+        starts, dist(starts, arange_nq), ef
+    )
+    seen_map = np.zeros((nq, n), dtype=bool)
+    seen_map[arange_nq, starts] = True
+    B = min(EXPAND, ef)
     Rmax = nbr_mat.shape[1]
-    if use_bitmap:
-        seen_map = np.zeros((nq, n), dtype=bool)
-        seen_map[arange_nq, start_nodes] = True
-        B = max(1, min(int(expand), ef))
-    else:
-        hist = np.full((nq, max_hops), -1, dtype=np.int64)
-        B = 1  # the broadcast-compare history path is single-expansion
+    width = B * Rmax
+    for _hop in range(4 * ef + 8):
+        bd = np.where(beam_vis | (beam_ids < 0), np.inf, beam_d)
+        psel = (
+            np.argpartition(bd, B - 1, axis=1)[:, :B]
+            if ef > B
+            else np.broadcast_to(np.arange(ef), (nq, ef))
+        )
+        pdist = np.take_along_axis(bd, psel, axis=1)          # (nq, B)
+        emask = np.isfinite(pdist)
+        rows = np.flatnonzero(emask.any(axis=1))
+        if rows.size == 0:
+            break
+        ra = rows.size
+        cdm = np.full((ra, width), np.inf)
+        idm = np.full((ra, width), -1, dtype=np.int64)
+        rmask = emask[rows]                                   # (ra, B)
+        rsel = psel[rows]
+        hops[rows] += rmask.sum(axis=1)
+        # evaluate the B expansion COLUMNS sequentially: each pass works
+        # on ~ra rows (cache-resident temps — one big fused pass measured
+        # 3x slower here purely from temp-array spill) and progressive
+        # seen_map marking makes a column's nodes invisible to the next
+        # column, so intra-hop duplicates need no sort-based dedup. The
+        # select + merge + argpartition still run ONCE per B expansions.
+        for c in range(B):
+            cm = rmask[:, c]
+            if not cm.any():
+                continue
+            ri = np.flatnonzero(cm)                           # idx into rows
+            erow = rows[ri]
+            eslot = rsel[ri, c]
+            cur = beam_ids[erow, eslot]
+            beam_vis[erow, eslot] = True
+            cand = nbr_mat[cur]                               # (mc, Rmax)
+            valid = cand >= 0
+            safe = np.clip(cand, 0, n - 1)
+            new = valid & ~seen_map[erow[:, None], safe]
+            fr, fc = np.nonzero(new)
+            pts, qrow = safe[fr, fc], erow[fr]
+            seen_map[qrow, pts] = True
+            cdm[ri[fr], c * Rmax + fc] = dist(pts, qrow)
+            idm[ri[fr], c * Rmax + fc] = pts
+            comps[erow] += np.bincount(fr, minlength=ri.size)
+        _merge_beam(beam_ids, beam_d, beam_vis, rows, idm, cdm)
+    return beam_ids, beam_d, hops, comps
+
+
+def _history_walk(
+    Pf: np.ndarray,
+    Qf: np.ndarray,
+    nbr_mat: np.ndarray,
+    starts: np.ndarray,
+    ef: int,
+):
+    """Float-only single-expansion walk for batches whose (nq, n) bitmap
+    would pass ``BITMAP_MAX_CELLS``: "seen" is the beam plus a growing
+    per-query list of expanded nodes, checked by broadcast-compare —
+    memory-safe for n in the millions, at O(hop) compare cost per hop.
+    Same return as ``_beam_walk``."""
+    nq = starts.shape[0]
+    n = Pf.shape[0]
+    max_hops = 4 * ef + 8
+    diff0 = Pf[starts] - Qf
+    beam_ids, beam_d, beam_vis, hops, comps = _new_beam(
+        starts, np.einsum("ij,ij->i", diff0, diff0), ef
+    )
+    arange_nq = np.arange(nq)
+    hist = np.full((nq, max_hops), -1, dtype=np.int64)
     for hop in range(max_hops):
         bd = np.where(beam_vis | (beam_ids < 0), np.inf, beam_d)
-        if use_bitmap and B > 1:
-            # expand the B nearest unvisited beam entries per query, but
-            # evaluate the B expansion COLUMNS sequentially: each pass
-            # works on ~ra rows (cache-resident temps — one big fused
-            # pass measured 3x slower here purely from temp-array spill)
-            # and progressive seen_map marking makes a column's nodes
-            # invisible to the next column, so intra-hop duplicates need
-            # no sort-based dedup. The select + merge + argpartition
-            # still run ONCE per B expansions — that's the win over
-            # single-expansion.
-            psel = (
-                np.argpartition(bd, B - 1, axis=1)[:, :B]
-                if bd.shape[1] > B
-                else np.broadcast_to(
-                    np.arange(bd.shape[1]), (nq, bd.shape[1])
-                )
-            )
-            pdist = np.take_along_axis(bd, psel, axis=1)      # (nq, B)
-            emask = np.isfinite(pdist)
-            rows = np.flatnonzero(emask.any(axis=1))
-            if rows.size == 0:
-                break
-            ra = rows.size
-            width = B * Rmax
-            cdm = np.full((ra, width), np.inf)
-            idm = np.full((ra, width), -1, dtype=np.int64)
-            rmask = emask[rows]                               # (ra, B)
-            rsel = psel[rows]
-            hops[rows] += rmask.sum(axis=1)
-            for c in range(B):
-                cm = rmask[:, c]
-                if not cm.any():
-                    continue
-                ri = np.flatnonzero(cm)                       # idx into rows
-                erow = rows[ri]
-                eslot = rsel[ri, c]
-                cur = beam_ids[erow, eslot]
-                beam_vis[erow, eslot] = True
-                cand = nbr_mat[cur]                           # (mc, Rmax)
-                valid = cand >= 0
-                safe = np.clip(cand, 0, n - 1)
-                new = valid & ~seen_map[erow[:, None], safe]
-                fr, fc = np.nonzero(new)
-                pts, qrow = safe[fr, fc], erow[fr]
-                seen_map[qrow, pts] = True
-                diff = Pf[pts] - Qf[qrow]                     # (mc', dim)
-                dists = np.einsum("ij,ij->i", diff, diff)
-                cdm[ri[fr], c * Rmax + fc] = dists
-                idm[ri[fr], c * Rmax + fc] = pts
-                comps[erow] += np.bincount(fr, minlength=ri.size)
-
-            all_ids = np.concatenate([beam_ids[rows], idm], axis=1)
-            all_d = np.concatenate([beam_d[rows], cdm], axis=1)
-            all_vis = np.concatenate(
-                [beam_vis[rows], np.zeros((ra, width), dtype=bool)], axis=1
-            )
-            sel = np.argpartition(all_d, ef - 1, axis=1)[:, :ef]
-            beam_ids[rows] = np.take_along_axis(all_ids, sel, axis=1)
-            beam_d[rows] = np.take_along_axis(all_d, sel, axis=1)
-            beam_vis[rows] = np.take_along_axis(all_vis, sel, axis=1)
-            continue
-
         pos = bd.argmin(axis=1)
         have = np.isfinite(bd[arange_nq, pos])
         if not have.any():
@@ -754,58 +694,80 @@ def search_topk_batch(
         rp = pos[rows]
         cur = beam_ids[rows, rp]
         beam_vis[rows, rp] = True
-        if not use_bitmap:
-            hist[rows, hop] = cur
+        hist[rows, hop] = cur
         hops[rows] += 1
 
         cand = nbr_mat[cur]                                   # (ra, Rmax)
         valid = cand >= 0
         safe = np.clip(cand, 0, n - 1)
-        if use_bitmap:
-            new = valid & ~seen_map[rows[:, None], safe]
-            # sparse evaluation: distances only for first-time nodes
-            fr, fc = np.nonzero(new)
-            pts, qrow = safe[fr, fc], rows[fr]
-            seen_map[qrow, pts] = True
-            diff = Pf[pts] - Qf[qrow]                         # (m, dim)
-            cd = np.full(cand.shape, np.inf)
-            cd[fr, fc] = np.einsum("ij,ij->i", diff, diff)
-            comps[rows] += np.bincount(fr, minlength=rows.size)
-        else:
-            in_beam = (cand[:, :, None] == beam_ids[rows][:, None, :]).any(axis=2)
-            in_hist = (cand[:, :, None] == hist[rows][:, None, : hop + 1]).any(axis=2)
-            new = valid & ~in_beam & ~in_hist
-            comps[rows] += new.sum(axis=1)
-            diff = Pf[safe] - Qf[rows][:, None, :]            # (ra, Rmax, dim)
-            cd = np.einsum("ijk,ijk->ij", diff, diff).astype(np.float64)
-            cd[~new] = np.inf
+        in_beam = (cand[:, :, None] == beam_ids[rows][:, None, :]).any(axis=2)
+        in_hist = (cand[:, :, None] == hist[rows][:, None, : hop + 1]).any(axis=2)
+        new = valid & ~in_beam & ~in_hist
+        comps[rows] += new.sum(axis=1)
+        diff = Pf[safe] - Qf[rows][:, None, :]                # (ra, Rmax, dim)
+        cd = np.einsum("ijk,ijk->ij", diff, diff).astype(np.float64)
+        cd[~new] = np.inf
+        _merge_beam(beam_ids, beam_d, beam_vis, rows, np.where(new, cand, -1), cd)
+    return beam_ids, beam_d, hops, comps
 
-        all_ids = np.concatenate([beam_ids[rows], np.where(new, cand, -1)], axis=1)
-        all_d = np.concatenate([beam_d[rows], cd], axis=1)
-        all_vis = np.concatenate(
-            [beam_vis[rows], np.zeros_like(new, dtype=bool)], axis=1
-        )
-        sel = np.argpartition(all_d, ef - 1, axis=1)[:, :ef]
-        beam_ids[rows] = np.take_along_axis(all_ids, sel, axis=1)
-        beam_d[rows] = np.take_along_axis(all_d, sel, axis=1)
-        beam_vis[rows] = np.take_along_axis(all_vis, sel, axis=1)
 
-    # per-row top-k of the (visited) beam, ascending dist then id
+def _topk_rows(
+    beam_ids: np.ndarray, beam_d: np.ndarray, k: int
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Flat per-row top-k of the final beams, ascending dist then id:
+    (row_idx, ids, dists)."""
     out_rows, out_ids, out_d = [], [], []
     order_d = np.where(beam_ids < 0, np.inf, beam_d)
-    for r in range(nq):
+    for r in range(beam_ids.shape[0]):
         o = np.lexsort((beam_ids[r], order_d[r]))
         o = o[np.isfinite(order_d[r][o])][:k]
         out_rows.append(np.full(o.size, r, dtype=np.int64))
         out_ids.append(beam_ids[r][o])
         out_d.append(beam_d[r][o])
-    return (
-        np.concatenate(out_rows) if out_rows else np.array([], dtype=np.int64),
-        np.concatenate(out_ids) if out_ids else np.array([], dtype=np.int64),
-        np.concatenate(out_d) if out_d else np.array([], dtype=np.float64),
-        hops,
-        comps,
+    return np.concatenate(out_rows), np.concatenate(out_ids), np.concatenate(out_d)
+
+
+def search_topk_batch(
+    P: np.ndarray,
+    nbr_mat: np.ndarray,
+    medoid: int,
+    Q: np.ndarray,
+    k: int,
+    ef_search: int,
+    starts: Optional[np.ndarray] = None,
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Lockstep batched beam search over float vectors (``_beam_walk``;
+    past ``BITMAP_MAX_CELLS`` the single-expansion history walk). Per-hop
+    work is a handful of large vectorized ops instead of per-query
+    small-array calls. The semantics match greedy_search +
+    top-k-of-visited (at natural termination the beam IS the ef nearest
+    visited set). ``starts``: per-query entry nodes (default: medoid).
+
+    Returns (row_idx, ids, dists, hops, dist_comps): flat top-k results,
+    ``row_idx[j]`` = query row of result j (ranks ascend within a row).
+    """
+    nq = Q.shape[0]
+    n = P.shape[0]
+    if nq == 0 or n == 0:
+        z = np.array([], dtype=np.int64)
+        return z, z, np.array([], dtype=np.float64), z, z
+    k = min(k, n)
+    ef = max(ef_search, k)
+    Pf = P.astype(np.float32, copy=False)
+    Qf = Q.astype(np.float32, copy=False)
+    start_nodes = (
+        np.full(nq, medoid, dtype=np.int64) if starts is None
+        else np.asarray(starts, dtype=np.int64)
     )
+    if nq * n <= BITMAP_MAX_CELLS:
+        def dist(pts: np.ndarray, qrow: np.ndarray) -> np.ndarray:
+            diff = Pf[pts] - Qf[qrow]                         # (m, dim)
+            return np.einsum("ij,ij->i", diff, diff)
+
+        beam_ids, beam_d, hops, comps = _beam_walk(nbr_mat, n, start_nodes, ef, dist)
+    else:
+        beam_ids, beam_d, hops, comps = _history_walk(Pf, Qf, nbr_mat, start_nodes, ef)
+    return (*_topk_rows(beam_ids, beam_d, k), hops, comps)
 
 
 def search_topk_batch_adc(
@@ -816,7 +778,6 @@ def search_topk_batch_adc(
     Q: np.ndarray,
     k: int,
     ef_search: int,
-    expand: int = 8,
 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Lockstep batched beam search where node distances come from PQ
     codes via an asymmetric-distance (ADC) lookup table instead of the
@@ -831,26 +792,24 @@ def search_topk_batch_adc(
     per-subspace codebooks; ``Q``: (nq, dim) raw query vectors (the LUT
     is built here, once per call, per query).
 
-    Same lockstep/expand-B structure as ``search_topk_batch``'s bitmap
-    path; query batches larger than the bitmap budget are chunked (the
-    dataset is never chunked — shard size is the caller's memory unit).
+    Same walk as ``search_topk_batch`` (``_beam_walk``); query batches
+    larger than the bitmap budget are chunked (the dataset is never
+    chunked — shard size is the caller's memory unit).
 
     Returns ``(row_idx, ids, adc_dists)`` flat top-k per query row
     (ranks ascend within a row); distances are APPROXIMATE (ADC).
     """
-    nq, dim = Q.shape
+    nq = Q.shape[0]
     n = codes.shape[0]
     if nq == 0 or n == 0:
         z = np.array([], dtype=np.int64)
         return z, z, np.array([], dtype=np.float64)
-    max_cells = BITMAP_MAX_CELLS
-    if nq * n > max_cells:
-        step = max(1, max_cells // max(n, 1))
+    if nq * n > BITMAP_MAX_CELLS:
+        step = max(1, BITMAP_MAX_CELLS // n)
         rs, ids_, ds = [], [], []
         for lo in range(0, nq, step):
             r, i, d = search_topk_batch_adc(
-                codes, cents, nbr_mat, medoid, Q[lo : lo + step],
-                k, ef_search, expand,
+                codes, cents, nbr_mat, medoid, Q[lo : lo + step], k, ef_search
             )
             rs.append(r + lo)
             ids_.append(i)
@@ -860,7 +819,6 @@ def search_topk_batch_adc(
     m, ksub, dsub = cents.shape
     k = min(k, n)
     ef = max(ef_search, k)
-    max_hops = 4 * ef + 8
 
     # LUT[q, j, c] = ||Q[q, sub_j] - cents[j, c]||^2  (nq*m*ksub doubles)
     Qd = Q.astype(np.float64, copy=False)
@@ -880,77 +838,9 @@ def search_topk_batch_adc(
         # dist[t] = sum_j lut[qrow[t], j, codes[pts[t], j]]
         return lut[qrow[:, None], _jj[None, :], codes[pts]].sum(axis=1)
 
-    beam_ids = np.full((nq, ef), -1, dtype=np.int64)
-    beam_d = np.full((nq, ef), np.inf)
-    beam_vis = np.zeros((nq, ef), dtype=bool)
-    arange_nq = np.arange(nq)
     start_nodes = np.full(nq, int(medoid), dtype=np.int64)
-    beam_ids[:, 0] = start_nodes
-    beam_d[:, 0] = adc(start_nodes, arange_nq)
-    seen_map = np.zeros((nq, n), dtype=bool)
-    seen_map[arange_nq, start_nodes] = True
-    B = max(1, min(int(expand), ef))
-    Rmax = nbr_mat.shape[1]
-
-    for _hop in range(max_hops):
-        bd = np.where(beam_vis | (beam_ids < 0), np.inf, beam_d)
-        psel = (
-            np.argpartition(bd, B - 1, axis=1)[:, :B]
-            if bd.shape[1] > B
-            else np.broadcast_to(np.arange(bd.shape[1]), (nq, bd.shape[1]))
-        )
-        pdist = np.take_along_axis(bd, psel, axis=1)
-        emask = np.isfinite(pdist)
-        rows = np.flatnonzero(emask.any(axis=1))
-        if rows.size == 0:
-            break
-        ra = rows.size
-        width = psel.shape[1] * Rmax
-        cdm = np.full((ra, width), np.inf)
-        idm = np.full((ra, width), -1, dtype=np.int64)
-        rmask = emask[rows]
-        rsel = psel[rows]
-        for c in range(psel.shape[1]):
-            cm = rmask[:, c]
-            if not cm.any():
-                continue
-            ri = np.flatnonzero(cm)
-            erow = rows[ri]
-            eslot = rsel[ri, c]
-            cur = beam_ids[erow, eslot]
-            beam_vis[erow, eslot] = True
-            cand = nbr_mat[cur]
-            valid = cand >= 0
-            safe = np.clip(cand, 0, n - 1)
-            new = valid & ~seen_map[erow[:, None], safe]
-            fr, fc = np.nonzero(new)
-            pts, qrow = safe[fr, fc], erow[fr]
-            seen_map[qrow, pts] = True
-            cdm[ri[fr], c * Rmax + fc] = adc(pts, qrow)
-            idm[ri[fr], c * Rmax + fc] = pts
-        all_ids = np.concatenate([beam_ids[rows], idm], axis=1)
-        all_d = np.concatenate([beam_d[rows], cdm], axis=1)
-        all_vis = np.concatenate(
-            [beam_vis[rows], np.zeros((ra, width), dtype=bool)], axis=1
-        )
-        sel = np.argpartition(all_d, ef - 1, axis=1)[:, :ef]
-        beam_ids[rows] = np.take_along_axis(all_ids, sel, axis=1)
-        beam_d[rows] = np.take_along_axis(all_d, sel, axis=1)
-        beam_vis[rows] = np.take_along_axis(all_vis, sel, axis=1)
-
-    out_rows, out_ids, out_d = [], [], []
-    order_d = np.where(beam_ids < 0, np.inf, beam_d)
-    for r in range(nq):
-        o = np.lexsort((beam_ids[r], order_d[r]))
-        o = o[np.isfinite(order_d[r][o])][:k]
-        out_rows.append(np.full(o.size, r, dtype=np.int64))
-        out_ids.append(beam_ids[r][o])
-        out_d.append(beam_d[r][o])
-    return (
-        np.concatenate(out_rows) if out_rows else np.array([], dtype=np.int64),
-        np.concatenate(out_ids) if out_ids else np.array([], dtype=np.int64),
-        np.concatenate(out_d) if out_d else np.array([], dtype=np.float64),
-    )
+    beam_ids, beam_d, _, _ = _beam_walk(nbr_mat, n, start_nodes, ef, adc)
+    return _topk_rows(beam_ids, beam_d, k)
 
 
 def brute_topk_batch(
@@ -990,7 +880,7 @@ def brute_topk_batch(
         # select k + a small margin: the norm-expansion distances carry
         # ~1e-6 cancellation residue, so when the true k-th and (k+1)-th
         # neighbors sit closer than that the float32 selection can admit
-        # the wrong one (r5 ADVICE). The margin rows are re-ranked on
+        # the wrong one. The margin rows are re-ranked on
         # EXACT recomputed distances below and the cut to k happens
         # after — a boundary flip now needs the true gap to beat the
         # residue across 8 extra candidates, not one.

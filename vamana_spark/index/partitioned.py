@@ -153,26 +153,24 @@ from vamana_spark.functions.util import bytes_conf as _bytes_conf  # noqa: E402
 
 
 def _make_rebuild_kernel(params: VamanaParams, graph: Optional[bool]):
-    """Per-shard (re)build kernel shared by ``add_points`` and
-    ``delete_points`` — the same per-shard graph auto rule as
-    ``build``: with ``graph=None`` a shard gets a Vamana graph only
-    when its row count exceeds the 4·ef·R flat crossover (below it the
-    searchers take the exact brute kernel and a graph is dead weight —
-    an append to a graph-free IVF-flat index must not silently pay the
-    O(n²) dense kernel the original build skipped)."""
+    """Per-shard (re)build kernel shared by ``build``, ``add_points``,
+    ``delete_points`` and ``resplit_oversized``, emitting
+    ``_SHARDS_SCHEMA`` rows. With ``graph=None`` a shard gets a Vamana
+    graph (``kernels.build_graph``) only when its row count exceeds the
+    4·ef·R flat crossover: below it the searchers take the exact brute
+    kernel and a graph is dead weight, and an append to a graph-free
+    IVF-flat index must not silently pay the O(n²) dense kernel the
+    original build skipped."""
     R, L, alpha, seed = params.R, params.L, params.alpha, params.seed
     ef_search = params.ef_search
     metric, mips_m = params.metric, params.mips_m
 
     def build_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         from vamana_spark.index import kernels as _k
-        from vamana_spark.index.vamana import (
-            DENSE_BUILD_MAX,
-            _metric_transform as _mt,
-        )
+        from vamana_spark.index.vamana import _metric_transform as _mt
 
-        # grouped on the collision-free salt key; the true shard id
-        # rides on the rows (same spread fix as build())
+        # grouped on the collision-free salt key (see build()); the true
+        # shard id rides on the rows
         shard = int(pdf["shard"].iloc[0])
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         P = _mt(
@@ -183,14 +181,11 @@ def _make_rebuild_kernel(params: VamanaParams, graph: Optional[bool]):
         want_graph = (
             graph if graph is not None else len(pdf) > 4 * ef_search * R
         )
-        if not want_graph:
-            adj = [[]] * len(pdf)  # IVF-flat: no per-shard graph
-        elif P.shape[0] <= DENSE_BUILD_MAX:
-            g, _ = _k.build_vamana_dense(P, R, alpha, seed + shard)
+        if want_graph:
+            g, _ = _k.build_graph(P, R, L, alpha, seed + shard)
             adj = [[int(x) for x in row] for row in g]
         else:
-            g, _ = _k.build_vamana(P, R, L, alpha, seed + shard)
-            adj = [[int(x) for x in row] for row in g]
+            adj = [[]] * len(pdf)  # IVF-flat: no per-shard graph
         return pd.DataFrame(
             {
                 "shard": shard,
@@ -498,8 +493,8 @@ class PartitionedVamanaIndex:
         ``brute_threshold=0`` — results stay exact within probed
         shards (equivalence-tested).
 
-        ``max_shard_factor``: oversized-cell splitting (r8, the skew
-        guard a clustered corpus needs). Voronoi cells of k-means
+        ``max_shard_factor``: oversized-cell splitting (the skew guard
+        a clustered corpus needs). Voronoi cells of k-means
         centers track CLUSTERS, not populations — on blobby data one
         cell can swallow several blobs (measured at the 1M k-blob rung:
         straggler cells crossed the graph crossover and their dense
@@ -515,8 +510,8 @@ class PartitionedVamanaIndex:
         nothing and the path is a no-op. ``None`` disables."""
         import dataclasses
 
-        # never mutate the caller's params (ADVICE r4, same as
-        # VamanaIndex.build): the copy carries n/num_shards on the index
+        # never mutate the caller's params (same as VamanaIndex.build):
+        # the copy carries n/num_shards on the index
         params = dataclasses.replace(params)
         params.validate()
         overlap = max(1, min(int(overlap), num_shards))
@@ -617,51 +612,6 @@ class PartitionedVamanaIndex:
             assign, schema="vec_id long, embedding array<float>, shard int"
         )
 
-        R, L, alpha, seed = params.R, params.L, params.alpha, params.seed
-        ef_search = params.ef_search
-        out_schema = (
-            "shard int, vec_id long, local_ord int, "
-            "embedding array<float>, neighbors array<int>"
-        )
-
-        def build_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from vamana_spark.index.vamana import (
-                DENSE_BUILD_MAX,
-                _metric_transform as _mt,
-            )
-
-            # grouped by the collision-free salt key; the true shard id
-            # rides on the rows
-            shard = int(pdf["shard"].iloc[0])
-            pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-            P = _mt(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float32),
-                metric,
-                mips_m,
-            )
-            want_graph = (
-                graph
-                if graph is not None
-                else len(pdf) > 4 * ef_search * R  # the flat brute crossover
-            )
-            if not want_graph:
-                adj = [[]] * len(pdf)  # IVF-flat: no per-shard graph
-            elif P.shape[0] <= DENSE_BUILD_MAX:
-                g, _ = kernels.build_vamana_dense(P, R, alpha, seed + shard)
-                adj = [[int(x) for x in row] for row in g]
-            else:
-                g, _ = kernels.build_vamana(P, R, L, alpha, seed + shard)
-                adj = [[int(x) for x in row] for row in g]
-            return pd.DataFrame(
-                {
-                    "shard": shard,
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "local_ord": np.arange(len(pdf), dtype=np.int32),
-                    "embedding": pdf["embedding"],
-                    "neighbors": adj,
-                }
-            )
-
         # Collision-free task spread: applyInPandas hash-partitions the
         # group key, and Murmur3 over a handful of small shard ids
         # routinely lands two shards in one shuffle bucket — which runs
@@ -671,7 +621,9 @@ class PartitionedVamanaIndex:
         shards_df = (
             _salted_by_shard(spark, assigned, num_shards)
             .groupBy("_gkey")
-            .applyInPandas(build_shard, schema=out_schema)
+            .applyInPandas(
+                _make_rebuild_kernel(params, graph), schema=_SHARDS_SCHEMA
+            )
         )
         # Materialize the shard kernels NOW with AQE partition
         # coalescing off: each group is CPU-BOUND (a dense Vamana build)
@@ -2077,7 +2029,7 @@ def add_points(
     between re-indexing a petabyte and re-indexing the few shards a
     daily delta lands in.
 
-    ``graph`` follows ``build``'s per-shard auto rule (r9): ``None``
+    ``graph`` follows ``build``'s per-shard auto rule: ``None``
     rebuilds a touched shard's graph only when its new row count
     exceeds the 4·ef·R flat crossover — below it the searchers take the
     exact brute kernel and a graph is dead weight, so a 5% append to a
@@ -2100,8 +2052,6 @@ def add_points(
     import pandas as pd
 
     from vamana_spark import exact as _exact
-    from vamana_spark.index import kernels as _k
-    from vamana_spark.index.vamana import DENSE_BUILD_MAX
 
     spark = index.spark
     params = index.params
@@ -2168,7 +2118,7 @@ def add_points(
         assign, schema="vec_id long, embedding array<float>, shard int"
     )
     # touched-shard set as a broadcast semi/anti join, not a collected
-    # literal list (r9): at production shard counts a wide delta
+    # literal list: at production shard counts a wide delta
     # touches 10^5+ shards and an isin() literal list bloats the plan;
     # the distinct-shard table is at most S rows either way
     touched_df = assigned.select("shard").distinct().cache()

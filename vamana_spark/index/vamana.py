@@ -50,34 +50,11 @@ SEARCH_SCHEMA = (
 )
 POINTS_SCHEMA = "vec_id long, ordinal long, embedding array<float>"
 
-# below this point count the dense build kernel (candidate sets from one
-# n^2 gemm plus random long-range candidates) beats the beam-search build
-# by ~10x; the n^2 f32 matrix at the ceiling is ~1.6 GB — well inside an
-# executor. Sharded builds keep per-shard n under this, so the dense
-# kernel is the common case.
-DENSE_BUILD_MAX = 20_000
-
 # fewest queries a search task gets when the batch's row count is known.
 # Each Python task pays ~0.07 s of fixed worker CPU (see
 # ensure_parallelism), the kernel time of ~250 queries at ef=32 on a
 # 5k-point index (~0.29 ms per query).
 MIN_QUERIES_PER_TASK = 256
-
-
-class _TierOverflow(Exception):
-    """Raised by _build_single when the ACTUAL pulled point set exceeds
-    the broadcast-tier ceiling (the free plan-size estimate undershot);
-    build() catches it and routes to the sharded tier."""
-
-    def __init__(self, n: int):
-        super().__init__(f"{n} points exceed the broadcast-tier ceiling")
-        self.n = n
-
-
-def _build_graph_kernel(P, params: VamanaParams):
-    if P.shape[0] <= DENSE_BUILD_MAX:
-        return kernels.build_vamana_dense(P, params.R, params.alpha, params.seed)
-    return kernels.build_vamana(P, params.R, params.L, params.alpha, params.seed)
 
 
 class VamanaIndex:
@@ -183,10 +160,14 @@ class VamanaIndex:
         per-phase wall seconds (diagnostic; forces an extra edge
         materialization, so don't pass it on the timed path).
 
-        The caller's ``params`` is never mutated (ADVICE r4): build
-        works on a copy — the auto-tier guard rewrites num_shards, and
-        build fills n/medoid/mips_m — and the copy rides on the
-        returned index (``index.params``).
+        With ``num_shards <= 1`` the whole point set comes to the
+        driver. A point set past ``BROADCAST_TIER_MAX_BYTES`` raises
+        ``MemoryError``, as search on such an index would: build a
+        ``PartitionedVamanaIndex`` instead.
+
+        The caller's ``params`` is never mutated, so one params object
+        can serve several builds: build fills n/medoid/mips_m on a copy,
+        and the copy rides on the returned index (``index.params``).
         """
         params = dataclasses.replace(params)
         params.validate()
@@ -207,33 +188,19 @@ class VamanaIndex:
             )
 
         if params.num_shards <= 1:
-            # auto-tier guard: _build_single pulls the whole point set to
-            # the driver; past the broadcast-tier ceiling that's a driver
-            # OOM, so route to the sharded tier instead of attempting it.
-            # Mirrors the search-side guard in _load_local.
-            #
-            # Fast path: Catalyst's plan-size estimate is free (no job).
-            # Float embedding columns barely compress, so the estimate
-            # tracks in-memory size closely; trust it only with a 4x
-            # margin, and _build_single's pull is CAPPED at the
-            # ceiling's row budget (_TierOverflow past it) so a
-            # pathological underestimate can neither OOM the driver nor
-            # build past the ceiling — it routes to the sharded tier.
+            # tier guard: _build_single pulls the whole point set to the
+            # driver, and past the broadcast-tier ceiling that is a
+            # driver OOM — and an index search could not load anyway.
+            # Catalyst's plan-size estimate is free (no job). Float
+            # embedding columns barely compress, so the estimate tracks
+            # in-memory size closely; trust it only with a 4x margin.
+            # _build_single's pull is also CAPPED at the ceiling's row
+            # budget, so a pathological underestimate cannot OOM the
+            # driver either.
             est = VamanaIndex._plan_size_bytes(pts)
             if est is None or est * 4 > VamanaIndex.BROADCAST_TIER_MAX_BYTES:
-                n_est = pts.count()  # slow path: exact guard
-                if n_est * params.dim * 4 > VamanaIndex.BROADCAST_TIER_MAX_BYTES:
-                    params.num_shards = max(2, -(-n_est // DENSE_BUILD_MAX))
-            if params.num_shards <= 1:
-                try:
-                    return VamanaIndex._build_single(spark, pts, params)
-                except _TierOverflow:
-                    # rare path (estimate undershot): the capped pull
-                    # saw only cap+1 rows, so size the shards from the
-                    # real count
-                    params.num_shards = max(
-                        2, -(-pts.count() // DENSE_BUILD_MAX)
-                    )
+                VamanaIndex._check_tier(pts.count() * params.dim * 4)
+            return VamanaIndex._build_single(spark, pts, params)
         # sharded tier: ordinals assigned distributedly (partition-offset
         # scheme — no single-task global window)
         pts = assign_ordinals(pts, "vec_id", "ordinal")
@@ -252,8 +219,8 @@ class VamanaIndex:
         # When the input fits, limit() returns every row (no selection
         # happens); when the plan-size estimate undershot
         # (pathologically compressible embeddings), the pull stops at
-        # cap+1 rows instead of OOMing the driver, and the overflow
-        # hands the build back to the sharded tier.
+        # cap+1 rows instead of OOMing the driver, and the tier check
+        # below raises.
         cap_rows = VamanaIndex.BROADCAST_TIER_MAX_BYTES // (params.dim * 4)
         pdf = pts.limit(cap_rows + 1).toPandas()
         if pdf.empty:
@@ -261,8 +228,7 @@ class VamanaIndex:
                 "VamanaIndex.build: no input rows (after dimension filter "
                 f"size(embedding) == {params.dim})"
             )
-        if len(pdf) > cap_rows:
-            raise _TierOverflow(len(pdf))
+        VamanaIndex._check_tier(len(pdf) * params.dim * 4)
         return VamanaIndex._build_from_pandas(spark, pdf, params, pts=pts)
 
     @classmethod
@@ -306,7 +272,7 @@ class VamanaIndex:
         if V.shape[0] * params.dim * 4 > cls.BROADCAST_TIER_MAX_BYTES:
             raise ValueError(
                 "build_local: input exceeds the broadcast tier ceiling — "
-                "use VamanaIndex.build on a DataFrame (sharded tier)"
+                "build a PartitionedVamanaIndex instead"
             )
         if params.metric == "ip" and params.mips_m is None:
             params.mips_m = float(
@@ -331,7 +297,9 @@ class VamanaIndex:
         pdf = pdf.sort_values("vec_id", kind="mergesort")
         P = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
         Pt = _metric_transform(P, params.metric, params.mips_m)
-        graph, medoid = _build_graph_kernel(Pt, params)
+        graph, medoid = kernels.build_graph(
+            Pt, params.R, params.L, params.alpha, params.seed
+        )
         params.n = int(Pt.shape[0])
         params.medoid = int(medoid)
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
@@ -456,10 +424,7 @@ class VamanaIndex:
             P = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
             P = _metric_transform(P, metric, mips_m)
             ords = pdf["ordinal"].to_numpy(dtype=np.int64)
-            if P.shape[0] <= DENSE_BUILD_MAX:
-                graph, _ = kernels.build_vamana_dense(P, R, alpha, seed + int(key[0]))
-            else:
-                graph, _ = kernels.build_vamana(P, R, L, alpha, seed + int(key[0]))
+            graph, _ = kernels.build_graph(P, R, L, alpha, seed + int(key[0]))
             return pd.DataFrame(
                 {
                     "src": ords,
@@ -483,7 +448,7 @@ class VamanaIndex:
         alpha_f = float(params.alpha)
         # ONE narrow shuffle of per-node arrays; flatten+distinct merges
         # the overlap-shard duplicates without a row-per-edge explosion.
-        # Explicit hash repartition (r14): left to AQE, the small edge
+        # Explicit hash repartition: left to AQE, the small edge
         # bytes coalesce the post-shuffle stage to ~1 partition,
         # serializing the CPU-bound Python re-prune that follows — bytes
         # are the wrong proxy for Python CPU (guide §2.5/§4). The
@@ -628,17 +593,23 @@ class VamanaIndex:
         except Exception:
             return None
 
+    @classmethod
+    def _check_tier(cls, est: int) -> None:
+        """MemoryError when ``est`` bytes of float32 points pass the
+        broadcast-tier ceiling — past it the index does not fit the
+        driver, and PartitionedVamanaIndex is the index to use."""
+        if est > cls.BROADCAST_TIER_MAX_BYTES:
+            raise MemoryError(
+                f"index ~{est/1e9:.1f} GB exceeds the broadcast tier "
+                f"ceiling ({cls.BROADCAST_TIER_MAX_BYTES/1e9:.0f} GB); "
+                "build a PartitionedVamanaIndex instead "
+                "(vamana_spark.index.partitioned)"
+            )
+
     def _load_local(self) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
         """(P, ids, indptr, nbrs) — the broadcastable in-memory form."""
         if self._local is None:
-            est = (self.params.n or 0) * self.params.dim * 4
-            if est > self.BROADCAST_TIER_MAX_BYTES:
-                raise MemoryError(
-                    f"index ~{est/1e9:.1f} GB exceeds the broadcast tier "
-                    f"ceiling ({self.BROADCAST_TIER_MAX_BYTES/1e9:.0f} GB); "
-                    "build a PartitionedVamanaIndex instead "
-                    "(vamana_spark.index.partitioned)"
-                )
+            self._check_tier((self.params.n or 0) * self.params.dim * 4)
             pdf = self.points_df.select("ordinal", "vec_id", "embedding").orderBy(
                 "ordinal"
             ).toPandas()
