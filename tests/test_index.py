@@ -368,6 +368,36 @@ def test_build_tier_overflow_reroutes_to_sharded(spark, embeddings, monkeypatch)
     assert p.num_shards == 1
 
 
+def test_grouped_map_kernels_raise_no_eval_type_warning(spark, embeddings, monkeypatch):
+    """``applyInPandas`` infers a function's eval type from its type
+    hints and warns "Cannot infer the eval type from type hints" when
+    they are partial (``pdf`` annotated, ``key`` not). Building every
+    grouped-map plan of the index and dedup layers raises no such
+    warning: the sharded build's shard kernel and its beyond-broadcast
+    prune, the partitioned build's shard kernel and its shard packer,
+    and ``semantic_dedup``'s giant-cluster split and cluster scan."""
+    import warnings
+
+    from vamana_spark.index.partitioned import PartitionedVamanaIndex
+    from vamana_spark.operators import dedup
+
+    pts = embeddings.where(F.col("vec_id") < 120)
+    p = VamanaParams(dim=64, alpha=1.2, R=8, L=16, ef_search=16, seed=1, num_shards=2)
+    rows = [(i, [float(i % 3), 1.0, 0.0]) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with monkeypatch.context() as m:
+            # past the ceiling the sharded build prunes per node group
+            m.setattr(VamanaIndex, "BROADCAST_TIER_MAX_BYTES", 0)
+            VamanaIndex.build(spark, pts, p)
+        pidx = PartitionedVamanaIndex.build(spark, pts, p, num_shards=2)
+        pidx._packed_df("flat")
+        dedup.semantic_dedup(emb, threshold=0.99, num_clusters=1, seed=1, max_cluster_rows=10)
+    bad = [str(w.message) for w in caught if "infer the eval type" in str(w.message)]
+    assert not bad, bad
+
+
 def test_build_phase_timings_diagnostic(spark, embeddings):
     timings = {}
     p = VamanaParams(
@@ -578,9 +608,10 @@ def test_build_local_takes_beam_build_past_dense_max(spark, monkeypatch):
 
 
 def test_build_local_caps_before_tier_ceiling(spark, monkeypatch):
-    """Code-review r14: the max_points cap must apply BEFORE the
-    broadcast-tier ceiling check (build() orderBy/limits before its
-    pull, so the ceiling judges the capped row set on both tiers)."""
+    """The max_points cap must apply BEFORE the broadcast-tier ceiling
+    check (build() orderBy/limits before its pull, so the ceiling judges
+    the capped row set on both tiers), and past the ceiling build_local
+    raises the same MemoryError as build."""
     params = VamanaParams(
         dim=4, alpha=1.2, R=8, L=16, ef_search=16, seed=1, max_points=6
     )
@@ -590,7 +621,7 @@ def test_build_local_caps_before_tier_ceiling(spark, monkeypatch):
     # 10 rows exceed the ceiling, the capped 6 rows fit exactly
     idx = VamanaIndex.build_local(spark, np.arange(10), V, params)
     assert sorted(r.vec_id for r in idx.points_df.collect()) == [0, 1, 2, 3, 4, 5]
-    with pytest.raises(ValueError, match="ceiling"):
+    with pytest.raises(MemoryError, match="ceiling"):
         VamanaIndex.build_local(
             spark, np.arange(10), V,
             VamanaParams(dim=4, alpha=1.2, R=8, L=16, ef_search=16, seed=1),

@@ -722,6 +722,91 @@ def test_lsh_cap_preserves_small_bucket_semantics(documents):
     assert a == b
 
 
+def test_lsh_candidates_match_band_equality_oracle(spark):
+    """Candidates equal a plain-Python band-equality oracle over the
+    collected signatures, which uses no band hash: every pair that
+    agrees on all values of some band, except that a bucket over the
+    cap contributes only (min id, member) pairs. ~300 docs in planted
+    groups of near-copies, plus one 20-doc identical cluster that is
+    over a cap of 8 and under 512."""
+    import itertools
+
+    rng = np.random.default_rng(5)
+    rows, did = [], 0
+    while did < 280:
+        base = [f"g{did}w{j}" for j in range(20)]
+        for v in range(int(rng.integers(1, 5))):
+            toks = list(base)
+            for pos in rng.integers(0, 20, v):
+                toks[int(pos)] = f"m{did}x{int(pos)}"
+            rows.append((did, " ".join(toks)))
+            did += 1
+    rows += [(1000 + i, "one identical cluster text for the cap " * 3) for i in range(20)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = {r.doc_id: list(r.minhash) for r in dedup.minhash_signatures(df).collect()}
+
+    def oracle(cap, bands=16, rpb=4):
+        out = set()
+        for b in range(bands):
+            buckets = {}
+            for i, sig in sigs.items():
+                buckets.setdefault(tuple(sig[b * rpb:(b + 1) * rpb]), []).append(i)
+            for ids in buckets.values():
+                ids.sort()
+                if len(ids) > cap:
+                    out |= {(ids[0], j) for j in ids[1:]}
+                else:
+                    out |= set(itertools.combinations(ids, 2))
+        return out
+
+    for cap in (512, 8):
+        want = oracle(cap)
+        got = [(r.a_id, r.b_id) for r in dedup.minhash_lsh_candidates(df, max_bucket_size=cap).collect()]
+        assert len(got) == len(set(got)), cap
+        assert set(got) == want, (cap, len(got), len(want))
+    # the fixture exercises both bucket kinds
+    assert len(oracle(512)) - len(oracle(8)) == 190 - 19
+
+
+def test_band_keys_match_python_reference(spark):
+    """``_band_keys`` is the splitmix64 fold of each band's exact values,
+    computed here with Python integers, and ``band_hash_array`` (the
+    Column form) and ``_band_rows`` (the candidate path, which signs the
+    text itself) both emit it."""
+    mask = (1 << 64) - 1
+
+    def mix(z):
+        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & mask
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & mask
+        return z ^ (z >> 31)
+
+    def key(vals):
+        acc = 0x9E3779B97F4A7C15
+        for v in vals:
+            acc = mix(acc ^ (v & mask))
+        return acc - (1 << 64) if acc >> 63 else acc
+
+    rng = np.random.default_rng(3)
+    sig = rng.integers(-(2**63), 2**63 - 1, size=(5, 64), dtype=np.int64)
+    want = [[key(row[b * 4:(b + 1) * 4].tolist()) for b in range(16)] for row in sig]
+    assert dedup._band_keys(sig.view(np.uint64), 16).tolist() == want
+
+    df = spark.createDataFrame(
+        [(i, row.tolist()) for i, row in enumerate(sig)], "doc_id long, minhash array<long>"
+    )
+    col = {r.doc_id: r.k for r in df.select("doc_id", dedup.band_hash_array("minhash", 64, 16).alias("k")).collect()}
+    assert [col[i] for i in range(5)] == want
+
+    docs = spark.createDataFrame(
+        [(i, f"document {i} has a few words of text") for i in range(5)], "doc_id long, text string"
+    )
+    sigs = {r.doc_id: r.minhash for r in dedup.minhash_signatures(docs).collect()}
+    rows = dedup._band_rows(docs, "text", "doc_id", 64, 16, 3).collect()
+    assert sorted((r.doc_id, r.band_id, r.band_hash) for r in rows) == [
+        (i, b, key(sigs[i][b * 4:(b + 1) * 4])) for i in range(5) for b in range(16)
+    ]
+
+
 def test_chunk_tokens_reassembles_and_strides(documents):
     # non-overlapping chunks concatenate back to the original token stream
     out = text.chunk_tokens(documents, max_len=16).orderBy("doc_id", "chunk_id")

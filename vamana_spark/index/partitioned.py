@@ -165,7 +165,7 @@ def _make_rebuild_kernel(params: VamanaParams, graph: Optional[bool]):
     ef_search = params.ef_search
     metric, mips_m = params.metric, params.mips_m
 
-    def build_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_shard(key, pdf):
         from vamana_spark.index import kernels as _k
         from vamana_spark.index.vamana import _metric_transform as _mt
 
@@ -254,7 +254,7 @@ def _make_shard_packer(
     kernel serves every metric, mirroring the broadcast tier.
     """
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         import io
 
         from vamana_spark.index.vamana import _metric_transform

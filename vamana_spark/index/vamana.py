@@ -249,7 +249,9 @@ class VamanaIndex:
         (n, dim). Rows whose width differs from ``params.dim`` are
         rejected (ValueError — a local caller constructed them, so a
         silent filter would hide a bug, unlike the DataFrame tier's
-        declarative dimension filter over arbitrary tables)."""
+        declarative dimension filter over arbitrary tables). Past
+        ``BROADCAST_TIER_MAX_BYTES`` (judged after the ``max_points``
+        cap) it raises the ``MemoryError`` that :meth:`build` raises."""
         params = dataclasses.replace(params)
         params.validate()
         V = np.asarray(vectors, dtype=np.float32)
@@ -269,11 +271,7 @@ class VamanaIndex:
             order = np.argsort(iv, kind="stable")[: params.max_points]
             order.sort()
             iv, V = iv[order], V[order]
-        if V.shape[0] * params.dim * 4 > cls.BROADCAST_TIER_MAX_BYTES:
-            raise ValueError(
-                "build_local: input exceeds the broadcast tier ceiling — "
-                "build a PartitionedVamanaIndex instead"
-            )
+        cls._check_tier(V.shape[0] * params.dim * 4)
         if params.metric == "ip" and params.mips_m is None:
             params.mips_m = float(
                 np.sqrt((V.astype(np.float64) ** 2).sum(axis=1)).max()
@@ -419,7 +417,7 @@ class VamanaIndex:
         R, L, alpha, seed, metric = params.R, params.L, params.alpha, params.seed, params.metric
         mips_m = params.mips_m
 
-        def build_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def build_shard(key, pdf):
             pdf = pdf.sort_values("ordinal").reset_index(drop=True)
             P = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
             P = _metric_transform(P, metric, mips_m)
@@ -524,7 +522,7 @@ class VamanaIndex:
                 .join(srcv, "src")
             )
 
-            def prune_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            def prune_group(key, pdf):
                 src = int(key[0])
                 dsts = pdf["dst"].to_numpy(dtype=np.int64)
                 if dsts.size <= R:

@@ -4,19 +4,20 @@ SimHash, n-gram Jaccard, embedding-cosine near-dup.
 Scale notes (the whole point of these):
 - Exact dedup is a hash-partitioned window — one shuffle on the content
   hash, map-side combine-free but skew-safe (hashes are uniform).
-- MinHash-LSH: the default path computes shingle sets AND the full
-  MinHash signature per row inside Arrow-batched pandas UDFs — zero
-  shuffles until the banded candidate equi-join on (band_id, band_hash).
-  At 100 TB that means exactly one shuffle for candidate generation and
+- MinHash-LSH: candidate generation shingles, signs and bands each
+  row in one Arrow-batched Python pass — zero shuffles until the one
+  shuffle on (band_id, band_hash) that turns buckets into candidate
+  pairs. At 100 TB that means one shuffle for candidate generation and
   one for Jaccard verification; the narrow, per-row signature stage
-  scales embarrassingly. A pure-Catalyst fallback (shingle → explode →
-  per-seed xxhash64 min → groupBy(doc)) is kept behind ``arrow=False``
-  (one extra shuffle; useful where Python workers are undesirable).
-  Measured at sf0.1 the Arrow shingler is ~10x the window-based Catalyst
-  shingler per row besides dropping its shuffle. Verification re-checks
-  exact Jaccard only on candidate pairs either way.
+  scales embarrassingly. ``minhash_signatures`` and ``shingle_sets``
+  keep a Catalyst fallback (shingle → explode → per-seed xxhash64 min
+  → groupBy(doc)) behind ``arrow=False`` (one extra shuffle); its
+  signatures follow a different hash rule, and banding them still
+  needs Python. Measured at sf0.1 the Arrow shingler is ~10x the
+  window-based Catalyst shingler per row besides dropping its shuffle.
+  Verification re-checks exact Jaccard only on candidate pairs.
 - SimHash buckets by 16-bit bands of a 64-bit signature (Hamming-ball
-  blocking), same equi-join shape.
+  blocking), same bucket-pair shape.
 """
 
 from __future__ import annotations
@@ -227,64 +228,56 @@ def _shingle_udf(n: int):
     return shingle
 
 
+def _signature_matrix(shingle_lists, num_hashes: int):
+    """uint64 (n, num_hashes) MinHash signatures of n shingle lists:
+    blake2b-8 base hash per shingle, seeded affine family, uint64
+    wraparound min. An empty or missing list gets an all-zero row."""
+    import numpy as np
+
+    a, b = _hash_family(num_hashes)
+    shingle_lists = list(shingle_lists)
+    out = np.zeros((len(shingle_lists), num_hashes), dtype=np.uint64)
+    for i, sh in enumerate(shingle_lists):
+        if sh is not None and len(sh):
+            base = _base_hashes(sh)
+            out[i] = (a[:, None] * base[None, :] + b[:, None]).min(axis=1)
+    return out
+
+
+def _text_signature_matrix(texts, num_hashes: int, shingle_n: int):
+    """Shingle each text and sign it (``_signature_matrix``) in one pass,
+    so the per-doc shingle strings never cross the Arrow boundary."""
+    return _signature_matrix((_shingles_py(t, shingle_n) for t in texts), num_hashes)
+
+
 @lru_cache(maxsize=None)
 def _text_signature_udf(num_hashes: int, shingle_n: int):
-    """text → array<long> MinHash signature in ONE Python pass (r15).
-
-    Fuses ``_shingle_udf`` ∘ ``_signature_udf``: shingling and the
-    affine-min fold run inside the same batch loop, so the per-doc
-    shingle string arrays never cross the Arrow boundary at all (guide
-    §4.2 — the strings used to be serialized JVM→Python→JVM→Python just
-    to be consumed once). Bit-identical to the two-step form: same
-    ``_shingles_py`` normalization, same blake2b-8 base hashes, same
-    seeded affine family, same uint64 wraparound min.
-    """
+    """text → array<long> MinHash signature in ONE Python pass
+    (``_text_signature_matrix``): bit-identical to
+    ``_signature_udf`` ∘ ``_shingle_udf``."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
-    a, b = _hash_family(num_hashes)
-
     @pandas_udf(ArrayType(LongType()))
     def signature(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            sh = _shingles_py(t, shingle_n)
-            if len(sh) == 0:  # unreachable (shingler emits >=1) — keep
-                out.append([0] * num_hashes)  # parity with _signature_udf
-                continue
-            base = _base_hashes(sh)
-            mins = (a[:, None] * base[None, :] + b[:, None]).min(axis=1)
-            out.append(mins.view(np.int64).tolist())
-        return pd.Series(out)
+        sig = _text_signature_matrix(texts, num_hashes, shingle_n)
+        return pd.Series(list(sig.view(np.int64)))
 
     return signature
 
 
 @lru_cache(maxsize=None)
 def _signature_udf(num_hashes: int):
-    """array<string> shingles → array<long> MinHash signature, per row.
-
-    Arrow batch in, NumPy (num_hashes, n_shingles) affine + min out —
-    no shuffle anywhere; uint64 wraparound is the modulus.
-    """
+    """array<string> shingles → array<long> MinHash signature, per row
+    (``_signature_matrix``) — no shuffle anywhere."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
-    a, b = _hash_family(num_hashes)
-
     @pandas_udf(ArrayType(LongType()))
     def signature(shs: pd.Series) -> pd.Series:
-        out = []
-        for sh in shs:
-            if sh is None or len(sh) == 0:
-                out.append([0] * num_hashes)
-                continue
-            base = _base_hashes(sh)
-            mins = (a[:, None] * base[None, :] + b[:, None]).min(axis=1)
-            out.append(mins.view(np.int64).tolist())
-        return pd.Series(out)
+        return pd.Series(list(_signature_matrix(shs, num_hashes).view(np.int64)))
 
     return signature
 
@@ -405,90 +398,193 @@ def minhash_signatures(
     return mins.select(F.col(id_col), sig.alias("minhash"))
 
 
-def band_hash_array(minhash_col: str, num_hashes: int, bands: int):
-    """array<long>[bands]: xxhash64 of each band's signature slice —
-    the LSH bucket keys. A pure column expression (stateless), so the
-    same banding serves the batch candidate join AND the streaming
-    dedup state key (streaming/dedup.streaming_minhash_dedup)."""
+_BAND_SEED = 0x9E3779B97F4A7C15  # splitmix64 increment: the fold's start value
+
+
+def _mix64(z):
+    """splitmix64 finalizer over a uint64 array (wraparound arithmetic).
+    A bijection on 64-bit values, so folding a band through it keeps
+    distinct slices apart up to 64-bit collisions."""
+    import numpy as np
+
+    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return z ^ (z >> np.uint64(31))
+
+
+def _band_keys(sig, bands: int):
+    """uint64 (n, num_hashes) MinHash signatures -> int64 (n, bands) LSH
+    bucket keys: each band's ``num_hashes/bands`` exact values folded in
+    order through ``_mix64``. The one banding rule of the MinHash
+    surface; it is plain numpy, so a key never depends on Python's
+    ``hash()`` or on the process that computed it."""
+    import numpy as np
+
+    n, num_hashes = sig.shape
+    sl = sig.reshape(n, bands, num_hashes // bands)
+    acc = np.full((n, bands), _BAND_SEED, dtype=np.uint64)
+    for r in range(sl.shape[2]):
+        acc = _mix64(acc ^ sl[:, :, r])
+    return acc.view(np.int64)
+
+
+def _sig_matrix(minhash: pd.Series, num_hashes: int):
+    """A pandas column of array<long> signatures as one uint64 matrix."""
+    import numpy as np
+
+    if len(minhash) == 0:
+        return np.zeros((0, num_hashes), dtype=np.uint64)
+    return np.stack(minhash.to_numpy()).astype(np.int64).view(np.uint64)
+
+
+@lru_cache(maxsize=None)
+def _band_hash_udf(num_hashes: int, bands: int):
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, LongType
+
+    @pandas_udf(ArrayType(LongType()))
+    def band_hashes(sigs: pd.Series) -> pd.Series:
+        return pd.Series(list(_band_keys(_sig_matrix(sigs, num_hashes), bands)))
+
+    return band_hashes
+
+
+def band_hash_array(minhash, num_hashes: int, bands: int):
+    """array<long>[bands]: the LSH bucket key of each band of a MinHash
+    signature column (a name or a Column), by ``_band_keys``, as a
+    pandas UDF column. It is stateless, so the same banding serves
+    ``incremental_near_dups`` and the streaming dedup state key
+    (streaming/dedup.streaming_minhash_dedup), and it equals the keys
+    ``minhash_lsh_candidates`` buckets on. Banding needs a Python
+    worker whichever way the signature was computed; see
+    ``_explode_bands`` for how to keep it in the signature's worker.
+
+    The keys are a splitmix64 fold, not the ``xxhash64`` of a
+    comma-joined slice that earlier versions computed. Candidate
+    equality is unchanged (exact band slices, up to 64-bit collisions),
+    but a streaming checkpoint written by an earlier version keys its
+    ``dropDuplicatesWithinWatermark`` state differently: restart such a
+    stream from a fresh checkpoint."""
     assert num_hashes % bands == 0
-    rpb = num_hashes // bands
-    return F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(minhash_col)[b * rpb + r].cast("string")
-                        for r in range(rpb)
-                    ],
-                )
-            )
-            for b in range(bands)
-        ]
+    return _band_hash_udf(num_hashes, bands)(minhash)
+
+
+def _explode_bands(sigs: DataFrame, num_hashes: int, bands: int, *cols) -> DataFrame:
+    """``cols`` of ``sigs`` plus one (band_id, band_hash) row per band of
+    its ``minhash`` column. The keys are projected before the explode,
+    so the optimizer nests ``band_hash_array`` in the signature's own
+    pandas UDF call where the signature is one (a chained call runs in
+    one Python worker; a band UDF under the explode would start a
+    second worker per task). The ``_outer`` explode is deliberate: the
+    key array is never empty, and a plain explode makes the optimizer
+    infer a ``size(_bk) > 0`` filter that it pushes below the
+    projection, which evaluates the whole UDF chain a second time."""
+    keyed = sigs.select(*cols, band_hash_array("minhash", num_hashes, bands).alias("_bk"))
+    return keyed.select(
+        *[c for c in keyed.columns if c != "_bk"],
+        F.posexplode_outer("_bk").alias("band_id", "band_hash"),
     )
 
 
-def _banded_pairs_capped(
+def _band_rows(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, bands: int, shingle_n: int
+) -> DataFrame:
+    """(id, text) -> one (id, band_id, band_hash) row per band, in one
+    Python pass: each text is shingled and signed by the
+    ``minhash_signatures`` rule (``_text_signature_matrix``), banded by
+    ``_band_keys``, and the rows leave the worker already exploded."""
+    import numpy as np
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from vamana_spark.functions.util import ensure_parallelism
+
+    schema = StructType(
+        [
+            df.schema[id_col],
+            StructField("band_id", IntegerType(), False),
+            StructField("band_hash", LongType(), False),
+        ]
+    )
+
+    def band(batches):
+        for pdf in batches:
+            sig = _text_signature_matrix(pdf[text_col], num_hashes, shingle_n)
+            yield pd.DataFrame(
+                {
+                    id_col: np.repeat(pdf[id_col].to_numpy(), bands),
+                    "band_id": np.tile(np.arange(bands, dtype=np.int32), len(pdf)),
+                    "band_hash": _band_keys(sig, bands).ravel(),
+                }
+            )
+
+    src = ensure_parallelism(df.select(id_col, text_col))
+    return src.mapInPandas(band, schema=schema)
+
+
+def _bucket_pairs(
     banded: DataFrame,
     band_keys: list,
     id_col: str,
     payload_cols: tuple = (),
     max_bucket_size: int = 512,
 ) -> DataFrame:
-    """Candidate pairs from band buckets, with a bucket-size cap.
+    """Candidate pairs (a_id < b_id, distinct) from band buckets, with a
+    bucket-size cap, in one shuffle of ``banded`` on its band keys.
 
-    Small buckets (≤ ``max_bucket_size``) produce all pairs via the
-    equi-join. Oversized buckets — the one structurally skewable join in
-    the dedup surface (a giant duplicate cluster lands its whole
-    membership in the same bucket in EVERY band, so a self-join is
-    quadratic in cluster size; SCALE.md §LSH) — switch to star topology:
-    every member pairs with the bucket's min-id representative. Pair
-    count is linear in bucket size, downstream exact verification still
-    sees every member, and connected-components recovers the full
-    cluster through the representative. The trade: within an oversized
+    Two window passes over each bucket give every member the bucket's
+    size, its min-id member, and, if the bucket is within
+    ``max_bucket_size``, the list of its members as
+    ``struct(id, *payload)``. A bucket within the cap emits every pair,
+    each from the row of its smaller id. A bucket over the cap — a giant
+    duplicate cluster lands its whole membership in the same bucket in
+    every band, so all pairs would be quadratic in its size — emits a
+    star instead: each member pairs with the min-id member, from its own
+    row. Pair count is then linear in bucket size, exact verification
+    still sees every member, and connected components recover the full
+    cluster through the star's centre. The trade: within an over-cap
     bucket, member↔member similarity is only observed transitively.
+
+    Memory: a row holds at most ``max_bucket_size`` members, so a bucket
+    within the cap costs O(cap²) while its pairs are made; an over-cap
+    bucket is only ever buffered by the window operator, which spills
+    to disk. On a 4-core local session with a 2 GB driver, one
+    identical cluster of 3M members (3M - 1 star pairs) finished in
+    144 s; an aggregate that collected each bucket as one list failed
+    there with a Java heap OOM already at 1M members.
     """
-    # Over-cap buckets are RARE by construction (they exist only when a
-    # giant duplicate cluster floods one bucket), so compute just their
-    # keys with a map-side-combined aggregation and broadcast-left-join
-    # them back — instead of a full window shuffle of every banded row.
-    overfull = F.broadcast(
-        banded.groupBy(*band_keys)
-        .agg(F.count(F.lit(1)).alias("_bsz"), F.min(id_col).alias("_rep"))
-        .where(F.col("_bsz") > max_bucket_size)
-    )
-    ann = banded.join(overfull, band_keys, "left")
-
-    def side(df, tag):
-        return df.select(
-            F.col(id_col).alias(f"{tag}_id"),
-            *[F.col(c).alias(f"{tag}_{c}") for c in payload_cols],
+    w = Window.partitionBy(*band_keys)
+    x = F.col("_x")
+    over = F.col("_n") > max_bucket_size
+    rows = (
+        banded.select(
             *band_keys,
+            F.struct(
+                F.col(id_col).alias("id"), *[F.col(c).alias(c) for c in payload_cols]
+            ).alias("_x"),
         )
-
-    small = ann.where(F.col("_bsz").isNull())
-    out_cols = (
-        ["a_id", "b_id"]
-        + [f"a_{c}" for c in payload_cols]
-        + [f"b_{c}" for c in payload_cols]
+        .withColumn("_n", F.count(F.lit(1)).over(w))
+        # min of the member struct orders by id first: the min-id member
+        .withColumn("_rep", F.min("_x").over(w))
+        .withColumn("_m", F.collect_list(F.when(~over, x)).over(w))
     )
-    pairs_small = (
-        side(small, "a")
-        .join(side(small, "b"), band_keys)
-        .where(F.col("a_id") < F.col("b_id"))
-        .select(*out_cols)
+    star = F.when(
+        x["id"] != F.col("_rep")["id"],
+        F.array(F.struct(F.col("_rep").alias("a"), x.alias("b"))),
     )
-    reps = side(
-        ann.where(F.col("_bsz").isNotNull() & (F.col(id_col) == F.col("_rep"))),
-        "a",
+    clique = F.transform(
+        F.filter("_m", lambda y: y["id"] > x["id"]),
+        lambda y: F.struct(x.alias("a"), y.alias("b")),
     )
-    members = side(
-        ann.where(F.col("_bsz").isNotNull() & (F.col(id_col) != F.col("_rep"))),
-        "b",
+    return (
+        rows.select(F.explode(F.when(over, star).otherwise(clique)).alias("_p"))
+        .select(
+            F.col("_p.a.id").alias("a_id"),
+            F.col("_p.b.id").alias("b_id"),
+            *[F.col(f"_p.a.{c}").alias(f"a_{c}") for c in payload_cols],
+            *[F.col(f"_p.b.{c}").alias(f"b_{c}") for c in payload_cols],
+        )
+        .distinct()
     )
-    # rep is the bucket min -> a_id < b_id by construction
-    pairs_large = reps.join(members, band_keys).select(*out_cols)
-    return pairs_small.union(pairs_large).distinct()
 
 
 def minhash_lsh_candidates(
@@ -498,48 +594,30 @@ def minhash_lsh_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    shingles: DataFrame | None = None,
-    arrow: bool = True,
     max_bucket_size: int = 512,
 ) -> DataFrame:
     """Banded-LSH candidate pairs (a_id < b_id, distinct).
 
     Signature split into ``bands`` rows of ``num_hashes/bands``; docs
-    sharing any band hash become candidates. Equi-join on
-    (band_id, band_hash) — the 100-TB-safe shape. Buckets larger than
-    ``max_bucket_size`` degrade to star-linking (see
-    ``_banded_pairs_capped``) so a planted giant duplicate cluster can't
-    go quadratic.
+    sharing any band key become candidates. One ``mapInPandas``
+    (``_band_rows``) shingles, signs (the ``minhash_signatures`` Arrow
+    rule) and bands each doc, and one shuffle on (band_id, band_hash)
+    turns each bucket into its pairs (``_bucket_pairs``): no join and
+    no broadcast. Buckets larger than ``max_bucket_size`` degrade to
+    star-linking, so a planted giant duplicate cluster can't go
+    quadratic.
     """
     assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n, shingles=shingles, arrow=arrow
-    )
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(band_hash_array("minhash", num_hashes, bands)).alias(
-            "band_id", "band_hash"
-        ),
-    )
-    # banded feeds FIVE downstream branches (overfull agg, small-pair a/b
-    # sides, over-cap reps/members) — without materialization each branch
-    # replays the per-doc signature UDF; 2 longs + id per row, tiny.
-    # localCheckpoint (not persist): blocks are ContextCleaner-owned and
-    # vanish when this DataFrame is garbage-collected, so repeated dedup
-    # passes in a long session can't accumulate storage (VERDICT r5 #5 —
-    # persist() pins CacheManager entries until an explicit unpersist).
-    # Trade-off: lineage is truncated, so an executor loss on a real
-    # cluster fails the job instead of recomputing — acceptable for a
-    # bounded candidate-generation stage; pass a precomputed ``shingles``
-    # frame and persist it yourself if you need fault-tolerant retries.
-    banded = banded.localCheckpoint()
-    return _banded_pairs_capped(
-        banded, ["band_id", "band_hash"], id_col, max_bucket_size=max_bucket_size
+    banded = _band_rows(df, text_col, id_col, num_hashes, bands, shingle_n)
+    return _bucket_pairs(
+        banded,
+        ["band_id", "band_hash"],
+        id_col,
+        max_bucket_size=max_bucket_size,
     )
 
 
-#: Measured star-cap presets (10M Zipf rung, SCALE.md r11): "audit"
+#: Star-cap presets, measured on a 10M-doc Zipf-skewed corpus: "audit"
 #: keeps the 512 cap (exhaustive within-cap pair lists — the parity /
 #: pair-consumer default); "cluster" drops it to 64 — at 10M that cut
 #: verified pairs 7.4x (86.8M -> 11.8M), disk spill 11x, and the
@@ -568,21 +646,20 @@ def minhash_near_dups(
     over shingle sets (joins shingles back onto the candidate pairs only).
     Returns (a_id, b_id, jaccard >= threshold).
 
-    ``consumer`` (r12, VERDICT r11 #4 — the 10M rung's recipe finding
-    as an API preset): picks the star-cap ``max_bucket_size`` for the
+    ``consumer`` picks the star-cap ``max_bucket_size`` for the
     downstream consumption shape. ``"audit"`` (default, cap 512) emits
     every within-cap pair — the exhaustive pair-list / oracle-parity
     setting. ``"cluster"`` (cap 64) is for callers that only need
     transitive clusters or survivors (``duplicate_clusters`` /
     ``dedup_corpus`` default to it): star topology keeps a cluster
     connected through its min-id representative at O(members) pairs —
-    measured at the 10M Zipf rung: 7.4x fewer verified pairs
+    measured on a 10M-doc Zipf-skewed corpus: 7.4x fewer verified pairs
     (86.8M -> 11.8M), 11x less disk spill, 6.7x faster CC at equal
     measured planted coverage and cluster recovery (0.9999 at BOTH
     caps on that corpus). That is an APPROXIMATE guarantee, not an
-    identity (ADVICE r12): a capped bucket emits only rep↔member
-    candidate edges, and an edge survives only if the exact Jaccard of
-    that specific pair clears ``threshold`` — a member below threshold
+    identity: a capped bucket emits only rep↔member candidate edges,
+    and an edge survives only if the exact Jaccard of that specific
+    pair clears ``threshold`` — a member below threshold
     against the min-id rep but above it against some capped-away OTHER
     member loses its connecting edge, fragmenting a cluster the audit
     cap would have recovered. Near-threshold corpora whose duplicate
@@ -590,18 +667,22 @@ def minhash_near_dups(
     ``consumer="audit"``. An explicit ``max_bucket_size`` overrides
     the preset.
 
-    ``max_bucket_size`` (r11, exposed after the 10M Zipf rung —
-    SCALE.md): the star-cap bound on per-bucket pair expansion. The
-    OBSERVED pair count scales with Σ min(bucket, cap)² across band
-    buckets — on a Zipf-skewed corpus the mid-size duplicate clusters
-    below the cap emit their full quadratic pair sets. That output is
-    CORRECT (those pairs are real); within an over-cap bucket,
+    ``max_bucket_size``: the star-cap bound on per-bucket pair
+    expansion. The OBSERVED pair count scales with Σ min(bucket, cap)²
+    across band buckets — on a Zipf-skewed corpus the mid-size duplicate
+    clusters below the cap emit their full quadratic pair sets. That
+    output is CORRECT (those pairs are real); within an over-cap bucket,
     member↔member similarity is only observed transitively through
     the representative.
 
+    ``arrow`` picks the shingler of the verify step (``shingle_sets``);
+    candidates always come from the Python pass of
+    ``minhash_lsh_candidates``.
+
     Eager: the call runs Spark jobs before it returns. It
-    ``localCheckpoint``s the banded signatures, the candidate pairs and
-    the candidate docs' shingle sets (one job each). A local checkpoint
+    ``localCheckpoint``s the candidate pairs (one pass over the corpus:
+    signatures and band keys in Python, one shuffle on the band keys,
+    the pair distinct) and the candidate docs' shingle sets. A local checkpoint
     truncates lineage and keeps its blocks only on the executors that
     wrote them, so losing one of those executors fails the job that
     reads them instead of recomputing."""
@@ -612,21 +693,17 @@ def minhash_near_dups(
         )
     if max_bucket_size is None:
         max_bucket_size = _MINHASH_CONSUMER_CAPS[consumer]
-    # r15 (VERDICT r14 #4): the candidate path used to materialize the
-    # FULL-corpus shingle stream (localCheckpoint of (id, array<string>)
-    # — at 100 TB a complete write+read of ~3x the text bytes) just so
-    # the signature pass and the verify joins could share it. Now the
-    # signatures come from the fused single-pass UDF (shingles never
+    # The signatures come from the fused single-pass UDF (shingles never
     # leave Python), and verification re-shingles ONLY the docs that
     # appear in a candidate pair: semi-join the corpus by candidate ids
-    # (guide §3.2 — reduce the big side before shuffling it), so the
-    # two verify-side shuffles carry candidate-doc shingles, not the
-    # whole corpus. The pair list is checkpointed (it feeds the output
-    # AND both id sides); it is narrow (two longs/row) and candidate-
-    # sized — the heavy barrier is gone, not moved.
+    # (reduce the big side before shuffling it), so the two verify-side
+    # shuffles carry candidate-doc shingles, not the whole corpus; a
+    # full-corpus shingle checkpoint would write ~3x the text bytes. The
+    # pair list is checkpointed because it feeds the output AND both id
+    # sides; it is narrow (two longs/row) and candidate-sized.
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_n,
-        arrow=arrow, max_bucket_size=max_bucket_size,
+        max_bucket_size=max_bucket_size,
     ).localCheckpoint()
     need = (
         cands.select(F.col("a_id").alias(id_col))
@@ -859,11 +936,13 @@ def simhash_near_dups(
     Blocking: ``bands`` equal-width bands of the 64-bit signature — any
     pair within Hamming ``bands - 1`` must agree on at least one band
     (pigeonhole), so ``max_hamming`` above that silently loses recall
-    (asserted). Candidates from band equi-joins, then exact popcount
-    verification. More bands widen the guaranteed radius but shrink the
-    band value space (8 bands → 8-bit values), so buckets grow — the
-    ``_banded_pairs_capped`` star-guard bounds the damage, but wide-radius
-    scans belong at modest corpus sizes; MinHash-LSH is the scale path.
+    (asserted). Candidates from one shuffle of the band buckets
+    (``_bucket_pairs``, with each member's signature as payload), then
+    exact popcount verification. More bands widen the guaranteed radius
+    but shrink the band value space (8 bands → 8-bit values), so buckets
+    grow — the bucket cap's star topology bounds the damage, but
+    wide-radius scans belong at modest corpus sizes; MinHash-LSH is the
+    scale path.
     """
     assert 64 % bands == 0, f"bands {bands} must divide 64"
     assert max_hamming <= bands - 1, (
@@ -887,14 +966,8 @@ def simhash_near_dups(
             )
         ).alias("band_id", "band_val"),
     )
-    # materialize: _banded_pairs_capped reads this five ways (see the
-    # MinHash analogue) — without it each branch replays the token
-    # explode + 64-column vote aggregation. localCheckpoint, not persist:
-    # GC-owned blocks, no leak across repeated passes (VERDICT r5 #5).
-    banded = banded.select(
-        id_col, F.col("simhash").alias("sig"), "band_id", "band_val"
-    ).localCheckpoint()
-    cand = _banded_pairs_capped(
+    banded = banded.select(id_col, F.col("simhash").alias("sig"), "band_id", "band_val")
+    cand = _bucket_pairs(
         banded,
         ["band_id", "band_val"],
         id_col,
@@ -1571,16 +1644,16 @@ def semantic_dedup(
             rest = keyed.where(~F.col("_ck").isin(big))
             over = keyed.where(F.col("_ck").isin(big))
 
-            def split_cluster(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            def split_cluster(key, pdf):
                 pdf = pdf.sort_values("vec_id").reset_index(drop=True)
                 Xo = np.stack(pdf["_u"].to_numpy())
                 ids_np = pdf["vec_id"].to_numpy()
                 if p_eff == 1:
                     lab = _split_oversized_labels(Xo, ids_np, cap)
                     return pdf.assign(_ck=[f"{key[0]}.{c}" for c in lab])
-                # sub-probe (r13, VERDICT r12 #3): under multi-probe the
-                # split children are probed top-2 as well, recovering
-                # pairs that straddle a SUB-cluster boundary. A replica
+                # sub-probe: under multi-probe the split children are
+                # probed top-2 as well, recovering pairs that straddle a
+                # SUB-cluster boundary. A replica
                 # is primary only if it was the primary top-level cell
                 # replica AND the primary child replica.
                 ridx, rlab, rpri = _split_labels_multiprobe(Xo, ids_np, cap)
@@ -1601,7 +1674,7 @@ def semantic_dedup(
     if policy not in ("min_id", "centroid_far"):
         raise ValueError(f"keep_policy must be min_id|centroid_far, got {policy!r}")
 
-    def dedup_cluster(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def dedup_cluster(key, pdf):
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         # per-row PRIMARY cluster (== the cell id at probes=1; under
@@ -1617,8 +1690,8 @@ def semantic_dedup(
             # same greedy scan: score rows far-to-near (ties: smaller
             # id first), so earlier == higher keep priority.
             if p_eff > 1:
-                # ADVICE r12 (high): per-cell centroid orderings are NOT
-                # mutually consistent — A can drop against B in one
+                # Per-cell centroid orderings are NOT mutually
+                # consistent — A can drop against B in one
                 # probed cell while B drops against A in another, and
                 # the dropped-anywhere merge would then erase the whole
                 # group. Under multi-probe the priority is therefore a
@@ -1635,12 +1708,12 @@ def semantic_dedup(
             ids, X, cids, pri = ids[order], X[order], cids[order], pri[order]
         dup_of = np.full(n, -1, dtype=np.int64)
         max_sim = np.full(n, np.nan)
-        # strip size adapts DOWN on giant groups (r13): sims is
+        # strip size adapts DOWN on giant groups: sims is
         # (blk, n) float64, so the docstring's O(block_rows·c) memory
         # carries a constant of blk·c·8 bytes — at the 2·cap=200k
         # groups sub-probing produces, blk=2048 means 3.3 GB per task
-        # and 32 concurrent workers OOMed the 10M rung's box (the r12
-        # 100k groups sat just under the line). Cap the strip footprint
+        # and 32 concurrent workers OOMed a 10M-doc run's box (100k
+        # groups sat just under the line). Cap the strip footprint
         # at ~256 MB; the greedy scan is strip-partition-invariant
         # (each row only scores against earlier rows), so outputs are
         # identical and only BLAS batch efficiency varies marginally.
@@ -1683,7 +1756,7 @@ def semantic_dedup(
         # backstop split this cluster. The STRUCTURAL split test is
         # subcluster_id containing '.' — comparing distinct counts to
         # num_clusters is unreliable because empty k-means cells never
-        # appear in the output (ADVICE r11). Default-off so the public
+        # appear in the output. Default-off so the public
         # schema (and the q_semantic_dedup oracle) is unchanged.
         schema += ", subcluster_id string"
     if p_eff > 1:
@@ -2547,11 +2620,10 @@ def incremental_near_dups(
       docs (broadcast semi-join of the candidate id set against the
       corpus scan — map-side), then joins shingle sets onto the pairs.
 
-    ``decision_only`` (r12, VERDICT r11 #4 — the 10M rung's recipe
-    finding as an API preset): for ingest gating, where the question is
-    "is this batch doc a near-dup of ANYTHING?" and one verified hit
-    suffices. The rung measured ~139 witnesses per duplicated batch doc
-    where 1 answers. Two changes, both measured: (a) the witness cap
+    ``decision_only`` (a preset from a measured 10M-doc run): for
+    ingest gating, where the question is "is this batch doc a near-dup
+    of ANYTHING?" and one verified hit suffices. That run measured ~139
+    witnesses per duplicated batch doc where 1 answers. Two changes, both measured: (a) the witness cap
     defaults to 8 instead of 512 (same justification as the cap itself:
     overfull-bucket mates are near-identical, any witness answers for
     the cluster); (b) verification runs STAGED — each batch doc's
@@ -2572,11 +2644,8 @@ def incremental_near_dups(
     sig_b = minhash_signatures(
         batch, text_col, id_col, num_hashes, shingle_n, shingles=sh_b, arrow=arrow
     )
-    banded_b = sig_b.select(
-        F.col(id_col).alias("batch_id"),
-        F.posexplode(band_hash_array("minhash", num_hashes, bands)).alias(
-            "band_id", "band_hash"
-        ),
+    banded_b = _explode_bands(
+        sig_b, num_hashes, bands, F.col(id_col).alias("batch_id")
     )
     if broadcast_batch:
         banded_b = F.broadcast(banded_b)
@@ -2600,16 +2669,12 @@ def incremental_near_dups(
         sig_s = minhash_signatures(
             seen, text_col, id_col, num_hashes, shingle_n, arrow=arrow
         )
-    banded_s = sig_s.select(
-        F.col(id_col).alias("seen_id"),
-        F.posexplode(band_hash_array("minhash", num_hashes, bands)).alias(
-            "band_id", "band_hash"
-        ),
+    banded_s = _explode_bands(
+        sig_s, num_hashes, bands, F.col(id_col).alias("seen_id")
     )
     # banded_s feeds the overfull agg AND the candidate join; without
-    # materialization each branch replays the corpus signature pass
-    # (same replay hazard minhash_lsh_candidates documents). 2 longs +
-    # id per row — bands×16B/doc, GC-owned via localCheckpoint.
+    # materialization each branch replays the corpus signature pass.
+    # 2 longs + id per row — bands×16B/doc, GC-owned via localCheckpoint.
     banded_s = banded_s.localCheckpoint()
     keys = ["band_id", "band_hash"]
     overfull = F.broadcast(

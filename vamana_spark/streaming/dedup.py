@@ -79,9 +79,9 @@ def streaming_minhash_dedup(
     Returns (doc_id, window_start, bands_won) for surviving docs.
     """
     from vamana_spark.operators.dedup import (
+        _explode_bands,
         _shingle_udf,
         _signature_udf,
-        band_hash_array,
     )
 
     sigs = docs.select(
@@ -91,13 +91,7 @@ def streaming_minhash_dedup(
             _shingle_udf(shingle_n)(F.col(text_col))
         ).alias("minhash"),
     )
-    banded = sigs.select(
-        id_col,
-        ts_col,
-        F.posexplode(band_hash_array("minhash", num_hashes, bands)).alias(
-            "band_id", "band_hash"
-        ),
-    )
+    banded = _explode_bands(sigs, num_hashes, bands, id_col, ts_col)
     winners = banded.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         ["band_id", "band_hash"]
     )
@@ -217,9 +211,9 @@ def streaming_incremental_near_dups(
     from pyspark.sql import Window
 
     from vamana_spark.operators.dedup import (
+        _explode_bands,
         _shingle_udf,
         _signature_udf,
-        band_hash_array,
         minhash_signatures,
         shingle_sets,
     )
@@ -244,12 +238,7 @@ def streaming_incremental_near_dups(
         F.col("seen_id").asc()
     )
     banded_s = (
-        sig_s.select(
-            F.col(id_col).alias("seen_id"),
-            F.posexplode(band_hash_array("minhash", num_hashes, bands)).alias(
-                "band_id", "band_hash"
-            ),
-        )
+        _explode_bands(sig_s, num_hashes, bands, F.col(id_col).alias("seen_id"))
         # static side, computed once at definition — a plain rank cap is
         # fine here (the batch path's overfull-only optimization matters
         # when banding runs per call; this table is built exactly once)
@@ -264,12 +253,7 @@ def streaming_incremental_near_dups(
         F.col(ts_col),
         _shingle_udf(shingle_n)(text_col).alias("_sh"),
     ).withColumn("minhash", _signature_udf(num_hashes)("_sh"))
-    banded_b = enriched.select(
-        "batch_id", ts_col, "_sh",
-        F.posexplode(band_hash_array("minhash", num_hashes, bands)).alias(
-            "band_id", "band_hash"
-        ),
-    )
+    banded_b = _explode_bands(enriched, num_hashes, bands, "batch_id", ts_col, "_sh")
     cand = banded_b.join(banded_s, ["band_id", "band_hash"]).select(
         "batch_id", ts_col, "_sh", "seen_id"
     )
