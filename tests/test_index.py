@@ -139,21 +139,6 @@ def test_cosine_metric_index_recall(spark, embeddings, queries):
     assert r >= 0.8, f"cosine recall@10 = {r}"
 
 
-def test_bsp_build_recall(spark, embeddings, queries):
-    """Bulk-synchronous distributed build (SURVEY §7 M3): recall parity
-    with the single-kernel build."""
-    from vamana_spark import quality
-    from vamana_spark.index.bsp import build_bsp
-
-    params = VamanaParams(dim=64, alpha=1.2, R=32, L=64, ef_search=96, seed=42)
-    idx = build_bsp(spark, embeddings, params)
-    hc = idx.health_check()
-    assert hc["ok"], hc
-    truth = exact.exact_knn(embeddings, queries, k=10)
-    r = quality.avg_recall(idx.search(queries, k=10), truth, k=10)
-    assert r >= 0.8, f"BSP build recall@10 = {r}"
-
-
 def test_graph_fully_reachable_from_medoid(spark, built):
     """Navigability invariant: every node reachable from the entry point
     (distributed BFS over the adjacency DataFrame)."""
@@ -588,7 +573,7 @@ def test_build_local_validations(spark):
 
 def test_build_local_takes_beam_build_past_dense_max(spark, monkeypatch):
     """build_local runs kernels.build_graph on the driver: past
-    DENSE_BUILD_MAX the index holds the per-node beam build's graph, at
+    DENSE_BUILD_MAX the index holds the batched build_vamana graph, at
     or below it the dense build's."""
     from vamana_spark.index import kernels
 

@@ -120,6 +120,10 @@ def test_beam_build_invariants(P, R):
     for i, g in enumerate(graph):
         assert len(g) <= R and i not in g
         assert len(set(g.tolist())) == len(g)
+    # deterministic: the same seed gives the same graph and medoid
+    again, medoid2 = kernels.build_vamana(P, R, L=16, alpha=1.2, seed=7)
+    assert medoid2 == medoid
+    assert [g.tolist() for g in again] == [g.tolist() for g in graph]
 
 
 def test_beam_build_recall_small():
@@ -140,16 +144,24 @@ def test_beam_build_recall_small():
     assert recall >= 0.8, recall
 
 
-def test_dense_build_recall_on_clustered_data():
-    """The dense build keeps long-range edges on clustered data. 5k
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda P: kernels.build_vamana_dense(P, 32, 1.2),
+        lambda P: kernels.build_vamana(P, 32, 64, 1.2, 42),
+    ],
+    ids=["build_vamana_dense", "build_vamana"],
+)
+def test_dense_build_recall_on_clustered_data(build):
+    """Both build kernels keep long-range edges on clustered data. 5k
     points in 8 Gaussian blobs whose centres have the same spread as the
-    points: with only exact nearest candidates every pruned edge stays
-    inside its blob and recall@10 at ef=32 was 0.74."""
+    points: with only exact nearest candidates every pruned edge of the
+    dense build stayed inside its blob and recall@10 at ef=32 was 0.74."""
     rng = np.random.default_rng(20_000)
     centers = rng.standard_normal((8, 64))
     P = (centers[rng.integers(0, 8, 5000)] + rng.standard_normal((5000, 64))).astype(np.float32)
     Q = (centers[rng.integers(0, 8, 200)] + rng.standard_normal((200, 64))).astype(np.float32)
-    graph, medoid = kernels.build_vamana_dense(P, 32, 1.2)
+    graph, medoid = build(P)
     nbr_mat = kernels.pad_adjacency(*kernels._to_csr(graph, len(graph)), len(graph))
     rq, rid, _, _, _ = kernels.search_topk_batch(P, nbr_mat, medoid, Q, 10, 32)
     Pd, Qd = P.astype(np.float64), Q.astype(np.float64)

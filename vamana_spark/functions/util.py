@@ -20,8 +20,8 @@ def assign_ordinals(
     """Dense 0-based ordinals by ascending ``order_col`` — distributed.
 
     The naive ``row_number() OVER (ORDER BY ...)`` (an empty-frame global
-    window) funnels EVERY row through one task — the r1 build-path scale
-    bottleneck (VERDICT r1 #3). This is the partition-offset scheme
+    window) funnels EVERY row through one task, which made it the build
+    path's scale bottleneck. This is the partition-offset scheme
     instead:
 
     1. ``repartitionByRange`` + ``sortWithinPartitions`` — a normal range
@@ -36,46 +36,17 @@ def assign_ordinals(
     assignment job see identical partition placement (range boundaries
     come from sampling; caching pins them). The cache is unpersisted by
     callers once the build materializes.
-
-    ``counts_out`` (r14): the counting job already knows the total row
-    count — when a dict is passed, it lands there under ``"n"`` so
-    callers that need n (every build tier does) skip their own count()
-    job over the result (guide §1.2: don't compute things twice).
     """
-    return _assign_ordinals_impl(df, order_col, out_col, num_partitions, None)
-
-
-def assign_ordinals_counted(
-    df: DataFrame,
-    order_col: str = "vec_id",
-    out_col: str = "ordinal",
-    num_partitions: int | None = None,
-) -> "tuple[DataFrame, int]":
-    """:func:`assign_ordinals` variant returning ``(df, n)`` — the row
-    count falls out of the partition-counting job for free, so callers
-    skip a separate count() action over the result (r14)."""
-    out: dict = {}
-    res = _assign_ordinals_impl(df, order_col, out_col, num_partitions, out)
-    return res, out["n"]
-
-
-def _assign_ordinals_impl(
-    df: DataFrame,
-    order_col: str,
-    out_col: str,
-    num_partitions: int | None,
-    counts_out: dict | None,
-) -> DataFrame:
     spark = df.sparkSession
-    # Contiguous-id fast path (r14): when order_col is unique and
+    # Contiguous-id fast path: when order_col is unique and
     # contiguous ([min..max] with no gaps — the common dense-id shape of
     # ML corpora and every test SF), the ordinal IS ``order_col - min``
     # and no shuffle of the rows is needed at all. The proof costs one
     # aggregate job over the key column alone (map-side partials + a
     # narrow distinct shuffle of 8-byte ids) — the range path below
     # costs a sampling job plus a full range SHUFFLE OF THE ROWS (the
-    # embedding payload, guide §8: decide with small rows, move heavy
-    # bytes zero times) plus the counting job. Output is identical:
+    # embedding payload: decide with the small key column, move the heavy
+    # rows zero times) plus the counting job. Output is identical:
     # dense 0-based ordinals by ascending order_col.
     probe = df.agg(
         F.min(order_col).alias("_mn"),
@@ -87,8 +58,6 @@ def _assign_ordinals_impl(
     if n and int(probe["_nd"]) == n and (
         int(probe["_mx"]) - int(probe["_mn"]) + 1 == n
     ):
-        if counts_out is not None:
-            counts_out["n"] = n
         lo = int(probe["_mn"])
         out = df.withColumn(
             out_col, (F.col(order_col) - F.lit(lo)).cast("long")
@@ -111,8 +80,6 @@ def _assign_ordinals_impl(
     for row in sorted(counts, key=lambda r: r["_pid"]):
         offsets[int(row["_pid"])] = acc
         acc += int(row["count"])
-    if counts_out is not None:
-        counts_out["n"] = acc
     bc = spark.sparkContext.broadcast(offsets)
     # StructType.add mutates in place — never call it on a live DataFrame's
     # cached schema; build a fresh copy

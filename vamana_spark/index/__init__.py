@@ -1,5 +1,4 @@
-from vamana_spark.index.bsp import build_bsp
 from vamana_spark.index.partitioned import PartitionedVamanaIndex
 from vamana_spark.index.vamana import VamanaIndex
 
-__all__ = ["VamanaIndex", "PartitionedVamanaIndex", "build_bsp"]
+__all__ = ["VamanaIndex", "PartitionedVamanaIndex"]

@@ -846,12 +846,12 @@ class VamanaIndex:
         vamana.h:98-111, which leaves new nodes unwired — SURVEY §1.4).
         Returns a NEW index; complements ``delete_points``.
 
-        Per new point p: beam-search the existing graph from the medoid
-        (candidate set = the L nearest visited nodes — the paper's
-        insert recipe), RobustPrune to wire N(p), then a reverse-edge
-        fix-up appends p to each admitted neighbor u and re-prunes u
-        only if it went over the degree cap (same append-or-prune rule
-        as the build's bidirectional fix-up, vamana.h:270-287).
+        The new points are wired in one ``kernels._wire_round``, the
+        insert rule the build runs: per new point p, beam-search the
+        existing graph from the medoid, RobustPrune the L nearest
+        visited nodes plus seeded random candidates to wire N(p), then
+        append p to each admitted neighbor u, re-pruning u only if it
+        went over the degree cap (vamana.h:270-287).
 
         Driver-local shape: the index's (points, graph) arrays from
         :meth:`_load_local` — so the broadcast-tier ceiling applies
@@ -901,43 +901,21 @@ class VamanaIndex:
                 )
         Tnew = _metric_transform(V, params.metric, params.mips_m)
         P_all = np.vstack([P, Tnew])
-        medoid = int(params.medoid if params.medoid is not None else 0)
-        L, R, alpha = int(params.L), int(params.R), float(params.alpha)
+        R = int(params.R)
 
-        # wire: one batched search of the OLD graph, then RobustPrune
-        kk = min(L, n_old)
-        rq, rid, _, _, _ = kernels.search_topk_batch(
-            P, kernels.pad_adjacency(indptr, nbrs, n_old), medoid, Tnew, kk,
-            max(L, kk),
+        # one wiring round over the new ordinals; their rows start empty,
+        # so the round's search walks only the old graph
+        M = kernels.pad_adjacency(indptr, nbrs, n_old)
+        adj = np.pad(M, ((0, m), (0, max(R - M.shape[1], 0))), constant_values=-1)
+        kernels._wire_round(
+            P_all, adj, np.arange(n_old, n_old + m),
+            int(params.medoid if params.medoid is not None else 0),
+            int(params.L), float(params.alpha), R,
+            np.random.default_rng(params.seed),
         )
-        order = np.argsort(rq, kind="stable")
-        bounds = np.searchsorted(rq[order], np.arange(m + 1))
-        rid = rid[order]
-        new_adj = [
-            kernels.robust_prune(
-                P_all, n_old + i, rid[bounds[i] : bounds[i + 1]], None, alpha, R
-            )
-            for i in range(m)
-        ]
-
-        # reverse fix-up: each admitted u gets the new points that chose
-        # it; over-cap rows re-prune over N(u) ∪ {new ps}
-        rows = np.split(nbrs, indptr[1:-1])
-        dst = np.concatenate(new_adj)
-        src = np.repeat(np.arange(n_old, n_old + m), [a.size for a in new_adj])
-        by_dst = np.argsort(dst, kind="stable")
-        touched, first = np.unique(dst[by_dst], return_index=True)
-        extra = np.split(src[by_dst], first[1:])
-        repaired = _pad_prune_rows(
-            P_all,
-            touched,
-            [np.concatenate([rows[u], e]) for u, e in zip(touched, extra)],
-            alpha,
-            R,
-        )
-        for u, row in zip(touched, repaired):
-            rows[u] = row
-        indptr2, nbrs2 = kernels._to_csr(rows + new_adj, n_old + m)
+        has = adj >= 0
+        indptr2 = np.concatenate([[0], np.cumsum(has.sum(axis=1))])
+        nbrs2 = adj[has]
 
         new_params = dataclasses.replace(params)
         new_params.n = n_old + m
@@ -1100,8 +1078,8 @@ class VamanaIndex:
 
 
 def _pad_prune_rows(Pv, srcs, lists, alpha: float, R: int):
-    """Shared pad-candidates-and-RobustPrune step used by the build's
-    fix-up, delete_points' consolidate, and add_points' reverse fix-up:
+    """Shared pad-candidates-and-RobustPrune step used by the sharded
+    build's degree-cap re-prune and delete_points' consolidate:
     ragged candidate lists -> (-1)-padded matrix -> robust_prune_gather
     -> stripped adjacency rows (a row with no candidates stays empty)."""
     C = max((len(x) for x in lists), default=0)
