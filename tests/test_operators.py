@@ -2338,10 +2338,12 @@ def test_incremental_dedup_matches_anti_join(spark):
 def test_incremental_dedup_exact_under_saturated_bloom(spark):
     """An undersized filter (expected_seen=2 for a 200-row corpus) makes
     nearly every probe a 'maybe' — the verify pass must still return the
-    exact survivor set (false positives re-checked, never dropped blindly)."""
+    exact survivor set (false positives re-checked, never dropped blindly),
+    at one range and at several."""
     new, seen = _inc_dedup_frames(spark)
-    out = dedup.incremental_dedup(new, seen, expected_seen=2, fpp=0.5)
-    assert sorted(r.doc_id for r in out.collect()) == [1000 + i for i in range(50)]
+    for nr in (1, 4):
+        out = dedup.incremental_dedup(new, seen, expected_seen=2, fpp=0.5, num_ranges=nr)
+        assert sorted(r.doc_id for r in out.collect()) == [1000 + i for i in range(50)], nr
 
 
 def test_incremental_dedup_lossy_mode_never_false_negative(spark):
@@ -2364,12 +2366,12 @@ def test_incremental_dedup_corpus_never_shuffles(spark):
 
 
 def test_incremental_dedup_ranged_corpus_never_shuffles(spark):
-    """Plan shape of the ranged tier: same corpus-at-rest property as
-    the broadcast tier — the per-range builds are narrow map passes
-    and the verify join broadcasts, so no Exchange is keyed by corpus
-    content anywhere in the final plan."""
+    """Plan shape at num_ranges=4: same corpus-at-rest property as one
+    range — the per-range builds are narrow map passes and the verify
+    join broadcasts, so no Exchange is keyed by corpus content anywhere
+    in the final plan."""
     new, seen = _inc_dedup_frames(spark)
-    plan = dedup.incremental_dedup_ranged(
+    plan = dedup.incremental_dedup(
         new, seen, num_ranges=4
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
@@ -2444,12 +2446,16 @@ def test_incremental_dedup_verify_gate_counts_bytes(spark):
 
 
 def test_incremental_dedup_empty_corpus(spark):
+    """An empty corpus drops nothing but batch-internal copies; at
+    num_ranges=4 every range's filter is empty, and batch rows routed
+    to those ranges must still flow through."""
     new, _ = _inc_dedup_frames(spark)
     seen = new.where(F.lit(False))
-    out = dedup.incremental_dedup(new, seen, expected_seen=0)
-    # batch-internal dedup still applies (3001 duplicates 3000 and 1007/3000 collide)
-    got = sorted(r.doc_id for r in out.collect())
-    assert 3001 not in got and len(got) == 60
+    for nr in (1, 4):
+        out = dedup.incremental_dedup(new, seen, expected_seen=0, num_ranges=nr)
+        # batch-internal dedup still applies (3001 duplicates 3000 and 1007/3000 collide)
+        got = sorted(r.doc_id for r in out.collect())
+        assert 3001 not in got and len(got) == 60, nr
 
 
 def test_incremental_near_dups_finds_cross_snapshot_copies(spark):
@@ -2735,10 +2741,10 @@ def test_decision_only_stage2_fallback_parity(spark):
 
 
 def test_incremental_dedup_ranged_matches_broadcast_tier(spark):
-    """The hash-range-sharded escape hatch (sequential range-scoped
-    filters, no full-key-space bitmap anywhere) must produce the exact
-    same survivor set as the monolithic broadcast tier — including at
-    num_ranges=1 (degenerate identity) and with intra-batch dups."""
+    """Digest ranges (sequential range-scoped filters, no
+    full-key-space bitmap anywhere) must produce the exact same
+    survivor set as one filter — including at num_ranges=1 (the
+    default, run again) and with intra-batch dups."""
     seen = spark.createDataFrame(
         [(i, f"corpus document number {i} with shared body") for i in range(200)],
         ["doc_id", "text"],
@@ -2757,9 +2763,7 @@ def test_incremental_dedup_ranged_matches_broadcast_tier(spark):
     for nr in (1, 4, 16):
         got = sorted(
             r.doc_id
-            for r in dedup.incremental_dedup_ranged(
-                batch, seen, num_ranges=nr
-            ).collect()
+            for r in dedup.incremental_dedup(batch, seen, num_ranges=nr).collect()
         )
         assert got == want, f"num_ranges={nr}"
 
@@ -2775,7 +2779,7 @@ def test_incremental_dedup_ranged_lossy_mode(spark):
         + [(900 + i, f"new doc {i}") for i in range(20)],
         ["doc_id", "text"],
     )
-    got = {r.doc_id for r in dedup.incremental_dedup_ranged(
+    got = {r.doc_id for r in dedup.incremental_dedup(
         batch, seen, num_ranges=4, verify=False).collect()}
     assert not any(d < 900 for d in got)          # all true dups dropped
     assert got <= {900 + i for i in range(20)}    # ~fpp over-drop allowed
@@ -2797,7 +2801,7 @@ def test_incremental_dedup_hot_duplicate_key_and_plan(spark):
     )
     out = dedup.incremental_dedup(new, seen)
     assert sorted(r.doc_id for r in out.collect()) == [0, 5000]
-    # r15: the output plan starts at the verify tail's checkpoint scan,
+    # the output plan starts at the verify tail's checkpoint scan,
     # so the first-occurrence aggregation is asserted on the stage that
     # actually runs it (same invariant: map-side partial min(struct),
     # never a window rank funneling every hot copy through one task)
@@ -2811,36 +2815,10 @@ def test_incremental_dedup_hot_duplicate_key_and_plan(spark):
     assert "Window" not in out_plan
 
 
-def test_incremental_dedup_sharded_matches_broadcast_tier(spark):
-    """The distributed-filter tier returns the same exact survivor set
-    as the broadcast tier, including under a saturated per-shard
-    geometry (verify re-checks candidates) and with empty shards."""
-    new, seen = _inc_dedup_frames(spark)
-    want = [1000 + i for i in range(50)]
-    got = sorted(r.doc_id for r in dedup.incremental_dedup_sharded(
-        new, seen, num_filters=8).collect())
-    assert got == want
-    got_sat = sorted(r.doc_id for r in dedup.incremental_dedup_sharded(
-        new, seen, num_filters=8, expected_seen=2, fpp=0.5).collect())
-    assert got_sat == want
-    # many more shards than distinct contents -> most shards empty;
-    # batch rows routed to corpus-empty shards must flow through
-    got_sparse = sorted(r.doc_id for r in dedup.incremental_dedup_sharded(
-        new, seen, num_filters=512).collect())
-    assert got_sparse == want
-
-
-def test_incremental_dedup_sharded_lossy_no_false_negatives(spark):
-    new, seen = _inc_dedup_frames(spark)
-    ids = {r.doc_id for r in dedup.incremental_dedup_sharded(
-        new, seen, num_filters=8, verify=False).collect()}
-    assert not any(2000 <= i < 3000 for i in ids)
-    assert ids <= {1000 + i for i in range(50)}
-
-
 def test_incremental_dedup_nested_map_column_falls_back_to_window(spark):
-    """A map nested inside a struct is not struct-orderable; both tiers
-    must detect it recursively and fall back to the window dedup."""
+    """A map nested inside a struct is not struct-orderable; one range
+    and several must detect it recursively and fall back to the window
+    dedup."""
     seen = spark.createDataFrame([(1, "known doc")], "doc_id long, text string")
     new = spark.sql("""
         SELECT * FROM VALUES
@@ -2849,18 +2827,16 @@ def test_incremental_dedup_nested_map_column_falls_back_to_window(spark):
           (12, 'fresh doc',  named_struct('tags', map('e','f')))
         AS t(doc_id, text, meta)
     """)
-    got = sorted(r.doc_id for r in dedup.incremental_dedup(new, seen).collect())
-    assert got == [11]
-    got_sh = sorted(
-        r.doc_id
-        for r in dedup.incremental_dedup_sharded(new, seen, num_filters=4).collect()
-    )
-    assert got_sh == [11]
+    for nr in (1, 4):
+        got = sorted(
+            r.doc_id for r in dedup.incremental_dedup(new, seen, num_ranges=nr).collect()
+        )
+        assert got == [11], nr
 
 
 def test_incremental_dedup_partition_layout_invariant(spark):
     """Survivors depend on content + ids only, never on how either side
-    happens to be partitioned (both tiers)."""
+    happens to be partitioned (one range or several)."""
     new, seen = _inc_dedup_frames(spark)
     want = [1000 + i for i in range(50)]
     for np_, sp_ in [(1, 7), (13, 1), (5, 3)]:
@@ -2871,18 +2847,19 @@ def test_incremental_dedup_partition_layout_invariant(spark):
             ).collect()
         )
         assert got == want, (np_, sp_)
-    got_sh = sorted(
+    got_ranged = sorted(
         r.doc_id
-        for r in dedup.incremental_dedup_sharded(
-            new.repartition(11), seen.repartition(3), num_filters=8
+        for r in dedup.incremental_dedup(
+            new.repartition(11), seen.repartition(3), num_ranges=4
         ).collect()
     )
-    assert got_sh == want
+    assert got_ranged == want
 
 
-def test_incremental_dedup_sharded_hot_corpus_content(spark):
-    """A corpus that is mostly copies of one document: the map-side
-    digest dedup keeps the build correct and survivors exact."""
+def test_incremental_dedup_hot_corpus_content(spark):
+    """A corpus that is mostly copies of one document: the per-batch
+    distinct before insertion keeps the build correct and survivors
+    exact, at one range and at several."""
     seen = spark.createDataFrame(
         [(i, "the single hot corpus document body") for i in range(2000)]
         + [(9000, "a rare distinct corpus doc")],
@@ -2894,9 +2871,10 @@ def test_incremental_dedup_sharded_hot_corpus_content(spark):
          (12, "a genuinely fresh document")],
         ["doc_id", "text"],
     )
-    got = sorted(r.doc_id for r in dedup.incremental_dedup_sharded(
-        new, seen, num_filters=4).collect())
-    assert got == [12]
+    for nr in (1, 4):
+        got = sorted(r.doc_id for r in dedup.incremental_dedup(
+            new, seen, num_ranges=nr).collect())
+        assert got == [12], nr
 
 
 def test_estimate_rows_uses_footers_and_overestimates_derived(spark, tmp_path):

@@ -109,23 +109,11 @@ def cmd_dedup(args) -> int:
         if not args.against:
             raise SystemExit("--mode incremental requires --against <corpus>")
         seen = spark.read.parquet(args.against)
-        if args.filters > 1:
-            out = dedup.incremental_dedup_sharded(
-                docs, seen, text_col=args.text_col, id_col=args.id_col,
-                fpp=args.bloom_fpp, num_filters=args.filters,
-                verify=not args.no_verify,
-            )
-        elif args.ranges > 1:
-            out = dedup.incremental_dedup_ranged(
-                docs, seen, text_col=args.text_col, id_col=args.id_col,
-                fpp=args.bloom_fpp, num_ranges=args.ranges,
-                verify=not args.no_verify,
-            )
-        else:
-            out = dedup.incremental_dedup(
-                docs, seen, text_col=args.text_col, id_col=args.id_col,
-                fpp=args.bloom_fpp, verify=not args.no_verify,
-            )
+        out = dedup.incremental_dedup(
+            docs, seen, text_col=args.text_col, id_col=args.id_col,
+            fpp=args.bloom_fpp, num_ranges=args.ranges,
+            verify=not args.no_verify,
+        )
     elif args.mode == "incremental-near":
         # cross-snapshot near-dup PAIRS (batch_id, seen_id, jaccard) —
         # anti-join your batch on batch_id to drop matched rows
@@ -680,15 +668,11 @@ def main(argv=None) -> int:
                         "the already-ingested corpus to dedup the input "
                         "batch against")
     d.add_argument("--bloom-fpp", dest="bloom_fpp", type=float, default=0.01)
-    d.add_argument("--filters", type=int, default=1,
-                   help="mode=incremental: >1 shards the Bloom filter by "
-                        "content hash and keeps it distributed (no driver "
-                        "bitmap/broadcast — the beyond-broadcast tier)")
     d.add_argument("--ranges", type=int, default=1,
-                   help="mode=incremental: >1 processes the digest space in "
-                        "that many sequential range-scoped Bloom passes — "
-                        "corpus never shuffles AND no broadcast exceeds "
-                        "m/ranges bits (the >1e9-key escape hatch)")
+                   help="mode=incremental: >1 builds and probes the Bloom "
+                        "filter in that many sequential digest-range passes, "
+                        "so no broadcast exceeds m/ranges bits at the price "
+                        "of one narrow corpus pass per range")
     d.add_argument("--signatures", default=None,
                    help="mode=incremental-near: directory of a persisted "
                         "corpus signature store (dedup.save_signatures) — "

@@ -9,13 +9,11 @@ Scale notes (the whole point of these):
   shuffle on (band_id, band_hash) that turns buckets into candidate
   pairs. At 100 TB that means one shuffle for candidate generation and
   one for Jaccard verification; the narrow, per-row signature stage
-  scales embarrassingly. ``minhash_signatures`` and ``shingle_sets``
-  keep a Catalyst fallback (shingle → explode → per-seed xxhash64 min
-  → groupBy(doc)) behind ``arrow=False`` (one extra shuffle); its
-  signatures follow a different hash rule, and banding them still
-  needs Python. Measured at sf0.1 the Arrow shingler is ~10x the
-  window-based Catalyst shingler per row besides dropping its shuffle.
-  Verification re-checks exact Jaccard only on candidate pairs.
+  scales embarrassingly. Every MinHash path shingles with one Python
+  rule (``_shingles_py``) and signs with one (``_signature_matrix``),
+  so a signature table written by one call bands and verifies the
+  same way in any other. Verification re-checks exact Jaccard only on
+  candidate pairs.
 - SimHash buckets by 16-bit bands of a 64-bit signature (Hamming-ball
   blocking), same bucket-pair shape.
 """
@@ -107,7 +105,7 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     """Word n-gram shingles (distinct), whitespace tokenization.
 
     Single-expression form for ad-hoc use; hot paths should go through
-    ``shingle_sets`` (tokens staged as a column first — see
+    ``shingle_sets`` (or stage the tokens as a column first — see
     ``word_shingles_from_tokens``).
     """
     toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != "")
@@ -194,9 +192,10 @@ def _hash_family(num_hashes: int):
 
 
 def _shingles_py(text: str, n: int) -> list:
-    """Distinct word n-gram shingles — same normalization as the Catalyst
-    shingler (lowercase, split on whitespace runs, short docs contribute
-    their full token join as one shingle)."""
+    """Distinct word n-gram shingles: lowercase, split on whitespace runs
+    (``str.split``, so Unicode spaces such as U+00A0 split too), and a
+    doc shorter than n tokens contributes its full token join as one
+    shingle. The one shingler of every MinHash signature and verify."""
     toks = (text or "").lower().split()
     if len(toks) < n:
         return [" ".join(toks)]
@@ -287,65 +286,17 @@ def shingle_sets(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
-    arrow: bool = True,
 ) -> DataFrame:
-    """(id, _sh: array<string>) distinct word shingles per doc.
-
-    Default path is a per-row Arrow UDF — narrow (no shuffle), ~10x the
-    Catalyst window shingler per row at sf0.1. ``arrow=False`` keeps the
-    pure-Catalyst form (posexplode + lead window → collect_set; one
-    shuffle). Callers that need shingles twice (signatures +
-    verification) persist THIS DataFrame, not the text.
+    """(id, _sh: array<string>) distinct word shingles per doc, from a
+    per-row Arrow UDF over ``_shingles_py`` — narrow, no shuffle.
+    Callers that need shingles twice (signatures + verification)
+    persist THIS DataFrame, not the text.
     """
     from vamana_spark.functions.util import ensure_parallelism
 
-    if arrow:
-        return ensure_parallelism(df.select(id_col, text_col)).select(
-            F.col(id_col), _shingle_udf(shingle_n)(text_col).alias("_sh")
-        )
-    rows = shingle_rows(df, text_col, id_col, shingle_n)
-    return rows.groupBy(id_col).agg(F.collect_set("_s").alias("_sh"))
-
-
-def shingle_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, _s) one row per word-shingle occurrence — the codegen-fast
-    shingler: posexplode tokens, stitch n-grams with window ``lead`` over
-    (doc, pos). The array-expression form (``word_shingles``) re-evaluates
-    its tokenizer per slice under interpreted HOF evaluation (and Catalyst
-    collapses any staging projection right back in), costing ~30x; this
-    form is flat projections + one partition-local window.
-
-    Docs with fewer than n tokens contribute their full token join as a
-    single shingle (same convention as ``word_shingles``).
-    """
-    from vamana_spark.functions.util import ensure_parallelism
-
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != "")
-    staged = ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col), toks.alias("_toks")
+    return ensure_parallelism(df.select(id_col, text_col)).select(
+        F.col(id_col), _shingle_udf(shingle_n)(text_col).alias("_sh")
     )
-    ex = staged.select(
-        id_col,
-        F.size("_toks").alias("_cnt"),
-        F.posexplode("_toks").alias("_pos", "_t"),
-    )
-    w = Window.partitionBy(id_col).orderBy("_pos")
-    grams = [F.col("_t")] + [F.lead("_t", i).over(w) for i in range(1, shingle_n)]
-    full = (
-        ex.withColumn("_s", F.concat_ws(" ", *grams))
-        .where((F.col("_cnt") >= shingle_n) & (F.col("_pos") <= F.col("_cnt") - shingle_n))
-        .select(id_col, "_s")
-    )
-    short = (
-        staged.where(F.size("_toks") < shingle_n)
-        .select(id_col, F.concat_ws(" ", "_toks").alias("_s"))
-    )
-    return full.unionByName(short)
 
 
 def minhash_signatures(
@@ -355,47 +306,26 @@ def minhash_signatures(
     num_hashes: int = 64,
     shingle_n: int = 3,
     shingles: DataFrame | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
-    """Per-doc MinHash signature as array<long>[num_hashes].
-
-    Default (``arrow=True``): per-row Arrow UDF — blake2b-8 base hash per
-    shingle, seeded multiply-add family, NumPy min — a narrow projection
-    with NO shuffle. Fallback (``arrow=False``): pure Catalyst —
-    h_i(x) = xxhash64(shingle, seed=i), explode shingles, project all
-    num_hashes hashes per shingle (whole-stage codegen'd), then one
-    hash-partitioned groupBy(doc) with map-side partial mins (the shuffle
-    carries only num_hashes longs per doc per partition).
+    """Per-doc MinHash signature as array<long>[num_hashes]: a per-row
+    Arrow UDF (``_signature_matrix``: blake2b-8 base hash per shingle,
+    seeded multiply-add family, NumPy min), a narrow projection with no
+    shuffle. ``shingles`` (a ``shingle_sets`` frame) signs precomputed
+    shingle sets instead of re-shingling the text.
     """
-    if arrow:
-        if shingles is not None:
-            return shingles.select(
-                F.col(id_col), _signature_udf(num_hashes)("_sh").alias("minhash")
-            )
-        # no precomputed shingle frame -> fused single-pass form (r15):
-        # shingle + hash + min in one Python crossing, nothing but the
-        # 64-long signature ever leaves the worker (guide §4.2)
-        from vamana_spark.functions.util import ensure_parallelism
-
-        return ensure_parallelism(df.select(id_col, text_col)).select(
-            F.col(id_col),
-            _text_signature_udf(num_hashes, shingle_n)(text_col).alias("minhash"),
-        )
     if shingles is not None:
-        ex = shingles.select(F.col(id_col), F.explode("_sh").alias("_s"))
-    else:
-        # distinct per doc (MinHash is set-semantics; dup shingles can't
-        # change a min but would inflate the shuffle)
-        ex = shingle_rows(df, text_col, id_col, shingle_n).distinct()
-        ex = ex.select(F.col(id_col), F.col("_s"))
-    hashed = ex.select(
-        id_col, *[F.xxhash64("_s", F.lit(i)).alias(f"_h{i}") for i in range(num_hashes)]
+        return shingles.select(
+            F.col(id_col), _signature_udf(num_hashes)("_sh").alias("minhash")
+        )
+    # no precomputed shingle frame -> the fused single-pass form:
+    # shingle + hash + min in one Python crossing, so nothing but the
+    # signature longs leaves the worker (no shingle strings over Arrow)
+    from vamana_spark.functions.util import ensure_parallelism
+
+    return ensure_parallelism(df.select(id_col, text_col)).select(
+        F.col(id_col),
+        _text_signature_udf(num_hashes, shingle_n)(text_col).alias("minhash"),
     )
-    mins = hashed.groupBy(id_col).agg(
-        *[F.min(f"_h{i}").alias(f"_m{i}") for i in range(num_hashes)]
-    )
-    sig = F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-    return mins.select(F.col(id_col), sig.alias("minhash"))
 
 
 _BAND_SEED = 0x9E3779B97F4A7C15  # splitmix64 increment: the fold's start value
@@ -638,7 +568,6 @@ def minhash_near_dups(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    arrow: bool = True,
     max_bucket_size: "int | None" = None,
     consumer: str = "audit",
 ) -> DataFrame:
@@ -675,10 +604,6 @@ def minhash_near_dups(
     member↔member similarity is only observed transitively through
     the representative.
 
-    ``arrow`` picks the shingler of the verify step (``shingle_sets``);
-    candidates always come from the Python pass of
-    ``minhash_lsh_candidates``.
-
     Eager: the call runs Spark jobs before it returns. It
     ``localCheckpoint``s the candidate pairs (one pass over the corpus:
     signatures and band keys in Python, one shuffle on the band keys,
@@ -711,8 +636,7 @@ def minhash_near_dups(
         .distinct()
     )
     sh = shingle_sets(
-        df.join(need, id_col, "left_semi"), text_col, id_col, shingle_n,
-        arrow=arrow,
+        df.join(need, id_col, "left_semi"), text_col, id_col, shingle_n
     ).localCheckpoint()  # candidate docs only; read by both join sides
     av = sh.select(F.col(id_col).alias("a_id"), F.col("_sh").alias("a_sh"))
     bv = sh.select(F.col(id_col).alias("b_id"), F.col("_sh").alias("b_sh"))
@@ -2012,9 +1936,9 @@ def build_bloom(
 
     ``range_filter=(r, num_ranges)`` builds a RANGE-SCOPED filter:
     only values whose digest falls in range ``r`` of ``num_ranges``
-    equal slices of the digest space are inserted (the
-    ``incremental_dedup_ranged`` escape hatch for >10^9-key corpora —
-    ``m_bits`` then only needs to cover the range's share of keys).
+    equal slices of the digest space (``_shard_of``) are inserted, so
+    ``m_bits`` only needs to cover that range's share of the keys — the
+    per-range build of ``incremental_dedup(num_ranges=...)``.
     """
     import numpy as np
 
@@ -2090,20 +2014,17 @@ def flag_bloom_membership(
     return df.mapInPandas(_maybe_seen, schema=out_schema)
 
 
-def _exact_verify_tail(
-    flagged: DataFrame, seen_norm: DataFrame, helpers: "tuple | list" = ("_n", "_maybe")
-) -> DataFrame:
-    """Exact confirmation of Bloom maybe-hits, shared by all three
-    incremental-dedup tiers.
+def _exact_verify_tail(flagged: DataFrame, seen_norm: DataFrame) -> DataFrame:
+    """Exact confirmation of ``incremental_dedup``'s Bloom maybe-hits,
+    for one range or many.
 
-    r15 shape (guide §8.4 / §3.2 — move decisions on digests, attach
-    the payload join back carefully): broadcast the candidate DIGESTS
-    (xxhash64, 8 B per distinct maybe-content), pull only the
-    hash-matched corpus rows in one map-side semi-join (with broadcasts
-    enabled the corpus never shuffles on content), then make the result
-    exact with
-    a candidate-sized text anti-join — digest collisions cannot cause
-    a false drop because the final anti-join compares the full
+    Decide on digests, then attach the payload with one careful join:
+    broadcast the candidate DIGESTS (xxhash64, 8 B per distinct
+    maybe-content), pull only the hash-matched corpus rows in one
+    map-side semi-join (with broadcasts enabled the corpus never
+    shuffles on content), then make the result exact with a
+    candidate-sized text anti-join — digest collisions cannot cause a
+    false drop because the final anti-join compares the full
     normalized text. The matched corpus rows are deduplicated on
     ``_n`` first, one Exchange hashpartitioning(_n) over candidate-
     bounded rows, so a corpus holding many copies of one content
@@ -2111,7 +2032,7 @@ def _exact_verify_tail(
 
     The previous tail broadcast the candidate and confirmed TEXTS
     (two `F.broadcast` of full normalized documents). With a dup-heavy
-    batch that is NOT tiny: at the 10M-doc rung (2.1M maybe-hits) the
+    batch that is NOT tiny: on a 10M-doc corpus (2.1M maybe-hits) the
     two string broadcasts were ~300 MB each and dominated the whole
     operator (measured: the verify tail was ~400 of ~500 s); at 100 TB
     it would be a driver OOM. Moved bytes now: 8 B × |candidates|
@@ -2159,7 +2080,7 @@ def _exact_verify_tail(
         kept_maybe = maybe.join(F.broadcast(seen_matched), "_n", "left_anti")
     else:  # user disabled broadcasts, or candidate set too big to hold
         kept_maybe = maybe.join(seen_matched, "_n", "left_anti")
-    return clear.unionByName(kept_maybe).drop(*helpers)
+    return clear.unionByName(kept_maybe).drop("_n", "_maybe")
 
 
 def incremental_dedup(
@@ -2170,6 +2091,7 @@ def incremental_dedup(
     normalize: bool = True,
     expected_seen: Optional[int] = None,
     fpp: float = 0.01,
+    num_ranges: int = 1,
     verify: bool = True,
     max_build_tasks: int = 256,
 ) -> DataFrame:
@@ -2206,6 +2128,24 @@ def incremental_dedup(
       map-side partials — hot duplicate keys combine before the
       exchange) — it is the small side by construction.
 
+    Memory envelope: one filter over the whole key space costs m bits
+    on the driver and on every executor (10^9 keys at fpp=0.01 is
+    ~1.2 GB). ``num_ranges`` = R > 1 cuts the digest space into R
+    equal slices (``_shard_of``: the digest's high bits, while probe
+    positions use the low-mod range, so each range's filter fills
+    evenly) and runs them one after another: each range builds a
+    filter over only its share of the corpus keys, probes only the
+    batch rows routed to it, checkpoints its flagged rows and destroys
+    its broadcast before the next range builds. The price is R narrow
+    corpus passes for the builds; the bound is at most m/R bits per
+    broadcast (150 MB per pass for the 10^9-key example at R = 8), and
+    the corpus still never shuffles. At that scale, persist or
+    ``localCheckpoint`` a ``select(<normalized text>)`` projection of
+    the corpus first so the repeated scans read one slim column, and
+    raise R only as far as the memory bound requires. The exact-verify
+    tail runs ONCE over the union of all ranges' maybe-hits, so R does
+    not change the result under ``verify=True``.
+
     ``expected_seen`` sizes the filter (~1.2 bytes/row at fpp=0.01).
     When None, the count is estimated from the corpus files' parquet
     FOOTERS (driver-side metadata, no Spark job) — an upper bound when
@@ -2218,128 +2158,61 @@ def incremental_dedup(
     modes.
 
     Eager: the call runs Spark jobs before it returns. The Bloom build
-    streams its chunks to the driver in both modes. With ``verify=True``
-    the verify tail also ``localCheckpoint``s the flagged batch and runs
-    one aggregate over it (the maybe-hit count and text bytes that
-    choose the anti-join's plan). A local checkpoint truncates lineage
-    and keeps its blocks only on the executors that wrote them, so
-    losing one of those executors fails the job that reads them instead
-    of recomputing.
+    streams its chunks to the driver in both modes. With R > 1 the call
+    also ``localCheckpoint``s the routed batch and each range's flagged
+    rows. With ``verify=True`` the verify tail ``localCheckpoint``s the
+    flagged batch and runs one aggregate over it (the maybe-hit count
+    and text bytes that choose the anti-join's plan). A local checkpoint
+    truncates lineage and keeps its blocks only on the executors that
+    wrote them, so losing one of those executors fails the job that
+    reads them instead of recomputing.
     """
-    norm = _content_norm if normalize else F.col
-    if expected_seen is None:
-        expected_seen = _estimate_rows(seen_df)
-    m_bits, k = _bloom_geometry(expected_seen, fpp)
-
-    seen_norm = seen_df.select(norm(text_col).alias("_n"))
-    b_bloom = build_bloom(seen_norm, m_bits, k, max_build_tasks)
-
-    batch = _first_occurrence(new_df, text_col, id_col, norm)
-    flagged = flag_bloom_membership(batch, b_bloom, m_bits, k)
-    if not verify:
-        return flagged.where(~F.col("_maybe")).drop("_n", "_maybe")
-
-    return _exact_verify_tail(flagged, seen_norm)
-
-
-def incremental_dedup_ranged(
-    new_df: DataFrame,
-    seen_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = True,
-    expected_seen: Optional[int] = None,
-    fpp: float = 0.01,
-    num_ranges: int = 8,
-    verify: bool = True,
-    max_build_tasks: int = 256,
-) -> DataFrame:
-    """``incremental_dedup``'s hash-RANGE-sharded escape hatch for
-    corpora past ~10^9 keys: the digest space is cut into
-    ``num_ranges`` equal slices processed SEQUENTIALLY — each pass
-    builds a Bloom filter over only the corpus keys in that range
-    (narrow map pass, chunk-OR merge, same as the monolithic build)
-    and probes only the batch rows routed to that range. Identical
-    exact semantics to the broadcast tier (equivalence-tested); the
-    difference is the memory envelope.
-
-    Why a third tier: the monolithic broadcast filter must hold the
-    WHOLE key space (10^9 keys at fpp=0.01 ≈ 1.2 GB on the driver and
-    every executor); the sharded tier removes the broadcast but pays a
-    corpus-wide digest shuffle. Here neither happens — the corpus
-    never shuffles (while broadcasts are enabled; see
-    ``_exact_verify_tail``) AND no driver/broadcast artifact ever exceeds
-    m/num_ranges bits (150 MB per pass for the 10^9-key example at
-    num_ranges=8). The price is ``num_ranges`` narrow passes over the
-    corpus for the build; at that scale, persist/localCheckpoint a
-    ``select(<normalized text>)`` projection of the corpus first so
-    the repeated scans read a slim cached column, or raise
-    ``num_ranges`` only as far as the memory bound requires.
-
-    Range routing draws on the digest's high bits (``_shard_of``) and
-    probe positions on the low-mod range — the same entropy split the
-    sharded tier uses, so filter occupancy stays uniform per range.
-    The exact-verify tail runs ONCE over the union of all ranges'
-    maybe-hits (one extra corpus pass total, not per range).
-
-    Eager: the call runs Spark jobs before it returns. It
-    ``localCheckpoint``s the routed batch, builds each range's Bloom
-    filter on the driver and checkpoints each range's flagged rows; with
-    ``verify=True`` the verify tail adds one more checkpoint and one
-    aggregate (see ``incremental_dedup``). A local checkpoint truncates
-    lineage and keeps its blocks only on the executors that wrote them,
-    so losing one of those executors fails the job that reads them
-    instead of recomputing.
-    """
-    import numpy as np
+    from functools import reduce
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     R = max(int(num_ranges), 1)
     norm = _content_norm if normalize else F.col
     if expected_seen is None:
-        # parquet-footer upper bound (see _estimate_rows) — no Spark job
         expected_seen = _estimate_rows(seen_df)
-    per_range = max(int(expected_seen // R) + 1, 1)
-    m_bits, k = _bloom_geometry(per_range, fpp)
+    # each range's filter holds its share of the keys: ceil(expected / R)
+    m_bits, k = _bloom_geometry(-(-int(expected_seen) // R), fpp)
 
     seen_norm = seen_df.select(norm(text_col).alias("_n"))
     batch = _first_occurrence(new_df, text_col, id_col, norm)
+    if R == 1:
+        b_bloom = build_bloom(seen_norm, m_bits, k, max_build_tasks)
+        flagged = flag_bloom_membership(batch, b_bloom, m_bits, k)
+    else:
+        def _route(batches):
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                h1, _h2 = _bloom_digests(pdf["_n"].tolist())
+                yield pdf.assign(_range=_shard_of(h1, R))
 
-    def _route(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            h1, _h2 = _bloom_digests(pdf["_n"].tolist())
-            yield pdf.assign(_range=_shard_of(h1, R))
-
-    routed_schema = StructType(
-        batch.schema.fields + [StructField("_range", IntegerType())]
-    )
-    # feeds R probe passes — recomputing would replay the batch's
-    # first-occurrence shuffle per range
-    routed = batch.mapInPandas(_route, schema=routed_schema).localCheckpoint()
-
-    flagged_parts = []
-    for r in range(R):
-        b_bloom = build_bloom(
-            seen_norm, m_bits, k, max_build_tasks, range_filter=(r, R)
+        routed_schema = StructType(
+            batch.schema.fields + [StructField("_range", IntegerType())]
         )
-        part = flag_bloom_membership(
-            routed.where(F.col("_range") == r), b_bloom, m_bits, k
-        ).localCheckpoint()  # materialize before the next pass replaces the broadcast
-        flagged_parts.append(part)
-        # destroy, not unpersist: the checkpoint above is eager, so the
-        # broadcast is never re-read, and destroy() releases the
-        # DRIVER-side copy too — unpersist leaves it to GC, which could
-        # transiently accumulate all num_ranges filters on the driver
-        # (exactly the memory envelope this tier exists to bound)
-        b_bloom.destroy()
-
-    flagged = flagged_parts[0]
-    for part in flagged_parts[1:]:
-        flagged = flagged.unionByName(part)
-    flagged = flagged.drop("_range")
+        # feeds R probe passes — recomputing would replay the batch's
+        # first-occurrence shuffle per range
+        routed = batch.mapInPandas(_route, schema=routed_schema).localCheckpoint()
+        parts = []
+        for r in range(R):
+            b_bloom = build_bloom(
+                seen_norm, m_bits, k, max_build_tasks, range_filter=(r, R)
+            )
+            parts.append(
+                flag_bloom_membership(
+                    routed.where(F.col("_range") == r), b_bloom, m_bits, k
+                ).localCheckpoint()  # materialize before the broadcast goes
+            )
+            # destroy, not unpersist: the checkpoint above is eager, so
+            # the broadcast is never re-read, and destroy() releases the
+            # driver-side copy too — unpersist leaves it to GC, which
+            # could hold all R filters on the driver at once
+            b_bloom.destroy()
+        flagged = reduce(DataFrame.unionByName, parts).drop("_range")
     if not verify:
         return flagged.where(~F.col("_maybe")).drop("_n", "_maybe")
 
@@ -2385,191 +2258,13 @@ def _first_occurrence(new_df: DataFrame, text_col: str, id_col: str, norm) -> Da
     )
 
 
-def _shard_of(h1, num_filters: int):
-    """Shard id from the digest's high bits (positions use the low-mod
-    range, so shard routing and probe bits draw on different entropy)."""
+def _shard_of(h1, num_ranges: int):
+    """Digest range id from the digest's high bits (positions use the
+    low-mod range, so range routing and probe bits draw on different
+    entropy)."""
     import numpy as np
 
-    return ((h1 >> np.uint64(33)) % np.uint64(num_filters)).astype(np.int32)
-
-
-def incremental_dedup_sharded(
-    new_df: DataFrame,
-    seen_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = True,
-    expected_seen: Optional[int] = None,
-    fpp: float = 0.01,
-    num_filters: int = 64,
-    verify: bool = True,
-) -> DataFrame:
-    """``incremental_dedup``'s beyond-broadcast tier: the same exact
-    batch-vs-corpus dedup, but the Bloom filter is SHARDED by content
-    hash and stays DISTRIBUTED — no single bitmap ever sits on the
-    driver or broadcasts. Use when the corpus key count pushes the
-    monolithic filter past comfortable broadcast size (~10^9 keys at
-    fpp=0.01 is ~1.2 GB); the two tiers mirror the ANN index's
-    broadcast vs partitioned split.
-
-    Shape: one narrow corpus pass emits (shard, h1, h2) digest triples
-    (16 B/row — the text itself never moves); one shuffle keyed by
-    shard groups each filter's digests into its build task
-    (per-task memory = m/num_filters — the knob that bounds it); the
-    per-shard filters live as rows of a DataFrame. The batch routes by
-    the same digest shard and probes via a shard-keyed COGROUP — so the
-    probe is a small-side shuffle plus a filter-row join, never a
-    broadcast. Maybe-seen candidates then verify exactly against the
-    corpus scan (same broadcast semi/anti tail as the monolithic tier);
-    Bloom false negatives don't exist, so true dups always drop.
-
-    Trade vs the broadcast tier: the corpus pays one digest-width
-    shuffle here (the monolithic build moves only bitmap chunks), in
-    exchange for O(m/num_filters) peak memory anywhere in the plan.
-
-    Eager: the call runs Spark jobs before it returns. It
-    ``localCheckpoint``s the per-shard filters (the corpus digest pass
-    and its shuffle); with ``verify=True`` the verify tail adds one more
-    checkpoint and one aggregate (see ``incremental_dedup``). A local
-    checkpoint truncates lineage and keeps its blocks only on the
-    executors that wrote them, so losing one of those executors fails
-    the job that reads them instead of recomputing.
-    """
-    import numpy as np
-
-    from pyspark.sql.types import (
-        BinaryType,
-        BooleanType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    norm = _content_norm if normalize else F.col
-    if expected_seen is None:
-        # parquet-footer upper bound (see _estimate_rows) — no Spark job
-        expected_seen = _estimate_rows(seen_df)
-    per_shard = max(int(expected_seen // max(num_filters, 1)) + 1, 1)
-    m_bits, k = _bloom_geometry(per_shard, fpp)
-    n_words = m_bits // 64
-
-    seen_norm = seen_df.select(norm(text_col).alias("_n"))
-
-    def _digests(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            h1, h2 = _bloom_digests(pdf["_n"].tolist())
-            # map-side dedup: Bloom insertion is idempotent, so only
-            # distinct digests need to travel — a corpus that is mostly
-            # copies of one document (hot-content skew) sends one row
-            # per distinct content per input partition to its build
-            # task, not one per copy. Distinctness is on the FULL
-            # (h1, h2) pair: two contents colliding on the h1 half
-            # alone must both reach the filter, or the no-false-
-            # negatives invariant becomes probabilistic.
-            order = np.lexsort((h2, h1))
-            h1, h2 = h1[order], h2[order]
-            keep = np.ones(len(h1), dtype=bool)
-            keep[1:] = (h1[1:] != h1[:-1]) | (h2[1:] != h2[:-1])
-            h1, h2 = h1[keep], h2[keep]
-            yield pd.DataFrame(
-                {
-                    "_shard": _shard_of(h1, num_filters),
-                    "_h1": h1.view(np.int64),
-                    "_h2": h2.view(np.int64),
-                }
-            )
-
-    dig_schema = StructType(
-        [
-            StructField("_shard", IntegerType()),
-            StructField("_h1", LongType()),
-            StructField("_h2", LongType()),
-        ]
-    )
-
-    def _build_shard(key, pdf):
-        bits = np.zeros(n_words, dtype=np.uint64)
-        h1 = pdf["_h1"].to_numpy().view(np.uint64)
-        h2 = pdf["_h2"].to_numpy().view(np.uint64)
-        # chunk the (rows, k) position expansion so peak memory is the
-        # bitmap + one chunk's positions, not a k-wide matrix over the
-        # whole shard (the group's digest rows are the irreducible term)
-        for c0 in range(0, len(h1), 1 << 16):
-            pos = _positions_from_h(
-                h1[c0 : c0 + (1 << 16)], h2[c0 : c0 + (1 << 16)], m_bits, k
-            ).ravel()
-            np.bitwise_or.at(
-                bits, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64)
-            )
-        return pd.DataFrame({"_shard": [int(key[0])], "bits": [bits.tobytes()]})
-
-    filt_schema = StructType(
-        [StructField("_shard", IntegerType()), StructField("bits", BinaryType())]
-    )
-    filters = (
-        seen_norm.mapInPandas(_digests, schema=dig_schema)
-        .groupBy("_shard")
-        .applyInPandas(_build_shard, schema=filt_schema)
-        .localCheckpoint()  # feeds every probe; rebuild would rescan the corpus
-    )
-
-    # batch-internal first-occurrence dedup (shared with the broadcast
-    # tier) + shard routing; _route keeps the digests as columns so
-    # _probe doesn't re-hash every row
-    batch = _first_occurrence(new_df, text_col, id_col, norm)
-
-    def _route(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            h1, h2 = _bloom_digests(pdf["_n"].tolist())
-            yield pdf.assign(
-                _shard=_shard_of(h1, num_filters),
-                _h1=h1.view(np.int64),
-                _h2=h2.view(np.int64),
-            )
-
-    routed_schema = StructType(
-        batch.schema.fields
-        + [
-            StructField("_shard", IntegerType()),
-            StructField("_h1", LongType()),
-            StructField("_h2", LongType()),
-        ]
-    )
-    routed = batch.mapInPandas(_route, schema=routed_schema)
-
-    def _probe(key, bpdf, fpdf):
-        if len(bpdf) == 0:
-            return pd.DataFrame(columns=list(bpdf.columns) + ["_maybe"])
-        if len(fpdf) == 0:  # no corpus rows hashed into this shard
-            return bpdf.assign(_maybe=False)
-        local = np.frombuffer(fpdf["bits"].iloc[0], dtype=np.uint64)
-        pos = _positions_from_h(
-            bpdf["_h1"].to_numpy().view(np.uint64),
-            bpdf["_h2"].to_numpy().view(np.uint64),
-            m_bits,
-            k,
-        )
-        hit = (
-            (local[pos >> 6] >> (pos & 63).astype(np.uint64)) & np.uint64(1)
-        ).astype(bool).all(axis=1)
-        return bpdf.assign(_maybe=hit)
-
-    flag_schema = StructType(routed.schema.fields + [StructField("_maybe", BooleanType())])
-    flagged = (
-        routed.groupBy("_shard")
-        .cogroup(filters.groupBy("_shard"))
-        .applyInPandas(_probe, schema=flag_schema)
-    )
-    helpers = ["_n", "_maybe", "_shard", "_h1", "_h2"]
-    if not verify:
-        return flagged.where(~F.col("_maybe")).drop(*helpers)
-
-    return _exact_verify_tail(flagged, seen_norm, helpers)
+    return ((h1 >> np.uint64(33)) % np.uint64(num_ranges)).astype(np.int32)
 
 
 def incremental_near_dups(
@@ -2581,7 +2276,6 @@ def incremental_near_dups(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    arrow: bool = True,
     max_bucket_witnesses: "int | None" = None,
     seen_signatures: Optional[DataFrame] = None,
     broadcast_batch: bool = True,
@@ -2640,9 +2334,9 @@ def incremental_near_dups(
     """
     if max_bucket_witnesses is None:
         max_bucket_witnesses = 8 if decision_only else 512
-    sh_b = shingle_sets(batch, text_col, id_col, shingle_n, arrow=arrow).localCheckpoint()
+    sh_b = shingle_sets(batch, text_col, id_col, shingle_n).localCheckpoint()
     sig_b = minhash_signatures(
-        batch, text_col, id_col, num_hashes, shingle_n, shingles=sh_b, arrow=arrow
+        batch, text_col, id_col, num_hashes, shingle_n, shingles=sh_b
     )
     banded_b = _explode_bands(
         sig_b, num_hashes, bands, F.col(id_col).alias("batch_id")
@@ -2666,9 +2360,7 @@ def incremental_near_dups(
             )
         sig_s = seen_signatures
     else:
-        sig_s = minhash_signatures(
-            seen, text_col, id_col, num_hashes, shingle_n, arrow=arrow
-        )
+        sig_s = minhash_signatures(seen, text_col, id_col, num_hashes, shingle_n)
     banded_s = _explode_bands(
         sig_s, num_hashes, bands, F.col(id_col).alias("seen_id")
     )
@@ -2703,7 +2395,7 @@ def incremental_near_dups(
         # (broadcast semi-join — map-side over the corpus scan)
         cand_seen = pairs_df.select(F.col("seen_id").alias(id_col)).distinct()
         seen_sub = seen.join(F.broadcast(cand_seen), id_col, "left_semi")
-        sh_s = shingle_sets(seen_sub, text_col, id_col, shingle_n, arrow=arrow)
+        sh_s = shingle_sets(seen_sub, text_col, id_col, shingle_n)
         bv = sh_s.select(
             F.col(id_col).alias("seen_id"), F.col("_sh").alias("b_sh")
         )
@@ -2779,7 +2471,6 @@ def save_signatures(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    arrow: bool = True,
 ) -> None:
     """Compute and persist the corpus MinHash signature table plus a
     ``_meta.json`` recording the parameters it was built with. One
@@ -2790,9 +2481,7 @@ def save_signatures(
     import json as _json
     import os as _os
 
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n, arrow=arrow
-    )
+    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
     sigs.write.mode("overwrite").parquet(_os.path.join(path, "signatures"))
     with open(_os.path.join(path, "_meta.json"), "w") as f:
         _json.dump(
@@ -2822,7 +2511,6 @@ def scan_against_store(
     store_path: str,
     text_col: str = "text",
     threshold: float = 0.7,
-    arrow: bool = True,
     max_bucket_witnesses: "int | None" = None,
     broadcast_batch: bool = True,
     id_col: Optional[str] = None,
@@ -2837,23 +2525,21 @@ def scan_against_store(
     the store's (the batch column is renamed to the store's id_col so
     one name flows through the scan; output stays batch_id/seen_id).
 
-    ``decision_only`` (r12): the ingest-gate preset — one row per
-    flagged batch doc (its best verified hit), witness cap 8, staged
-    first-hit verification; see ``incremental_near_dups``. The 10M rung
-    measured ~139 witnesses per duplicated batch doc where 1 answers —
-    a candidate-join cut measured at 173.9x on the 10M rung (r13,
-    SCALE.md — 34.87M audit candidates vs 200,547 decision verify rows;
-    stage-2 fallback fired on 0.01% of flagged docs) for the "drop it
-    or keep it" consumer. Worst case bounded by the r14 borderline
-    rung (SCALE.md): with paraphrase-grade mates just above the
-    threshold, stage-2 engages on 44% of flagged docs, the cut narrows
-    to 74.7x (wall gain small and noisy there - candidate generation
-    dominates both passes), and the preset loses ~2% of the audit
-    flag set to the witness cap (attribution measured exact: 91% of
+    ``decision_only``: the ingest-gate preset — one row per flagged
+    batch doc (its best verified hit), witness cap 8, staged first-hit
+    verification; see ``incremental_near_dups``. On a 10M-doc
+    Zipf-skewed corpus the audit scan found ~139 witnesses per
+    duplicated batch doc where 1 answers, and the preset cut the
+    candidate join 173.9x (34.87M audit candidates vs 200,547 decision
+    verify rows; the stage-2 fallback fired on 0.01% of flagged docs).
+    The worst case measured was a borderline corpus, with
+    paraphrase-grade mates just above the threshold: stage 2 engaged on
+    44% of flagged docs, the cut narrowed to 74.7x (wall gain small and
+    noisy there - candidate generation dominates both passes), and the
+    preset lost ~2% of the audit flag set to the witness cap (91% of
     even the audit pass's own borderline misses are cap misses, 9%
-    banding) — prefer audit mode (or a
-    raised ``max_bucket_witnesses``) when the flag set must be
-    exhaustive at the threshold edge."""
+    banding) — prefer audit mode (or a raised ``max_bucket_witnesses``)
+    when the flag set must be exhaustive at the threshold edge."""
     sigs, meta = load_signatures(batch.sparkSession, store_path)
     store_id = meta.get("id_col", "doc_id")
     if id_col is not None and id_col != store_id:
@@ -2867,7 +2553,6 @@ def scan_against_store(
         num_hashes=int(meta["num_hashes"]),
         bands=int(meta["bands"]),
         shingle_n=int(meta["shingle_n"]),
-        arrow=arrow,
         max_bucket_witnesses=max_bucket_witnesses,
         seen_signatures=sigs,
         broadcast_batch=broadcast_batch,

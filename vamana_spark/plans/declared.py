@@ -772,8 +772,9 @@ _JACCARD_PAIRS_SQL = """
 """
 
 
-# One oracle for BOTH incremental-dedup tiers — broadcast and sharded
-# filters must produce bit-identical survivor sets.
+# The plain anti-join that incremental_dedup's survivors must match bit
+# for bit, at one digest range (q_incremental_dedup) or several
+# (q_incremental_dedup_tiers).
 _INC_DEDUP_ORACLE = r"""
     WITH seen AS (
       SELECT lower(regexp_replace(text, '\s+', ' ', 'g')) AS n
@@ -797,9 +798,9 @@ _INC_DEDUP_ORACLE = r"""
     """
 
 
-# the twins' shared anti-join, emitted once per tier tag — wrapping
+# the same anti-join under the 'ranged' tier tag — wrapping
 # _INC_DEDUP_ORACLE (whose trailing ORDER BY forbids subquerying it
-# verbatim) as an explicit CTE keeps the consolidated oracle readable
+# verbatim) as an explicit CTE keeps the tagged oracle readable
 _INC_DEDUP_TIERS_ORACLE = r"""
     WITH seen AS (
       SELECT lower(regexp_replace(text, '\s+', ' ', 'g')) AS n
@@ -821,28 +822,19 @@ _INC_DEDUP_TIERS_ORACLE = r"""
       WHERE rn = 1 AND NOT EXISTS (SELECT 1 FROM seen s WHERE s.n = f.n)
     )
     SELECT 'ranged' AS tier, doc_id FROM surv
-    UNION ALL
-    SELECT 'sharded' AS tier, doc_id FROM surv
     ORDER BY tier, doc_id
     """
 
 
 @declare("q_incremental_dedup_tiers", _INC_DEDUP_TIERS_ORACLE)
 def q_incremental_dedup_tiers(spark, sf_dir):
-    """The beyond-broadcast tiers of incremental ingest dedup in one
-    op-tagged projection (consolidation of the former
-    q_incremental_dedup_sharded / q_incremental_dedup_ranged —
-    identical gates, one registry slot reclaimed for
-    q_semantic_corner_recovery; policy in COVERAGE.md: only
-    same-operator twins gated by the SAME oracle may consolidate).
-    'sharded' rows: Bloom filters SHARDED by content hash and kept
-    distributed (shard-keyed cogroup probe — no driver bitmap, no
-    broadcast), exact verify tail. 'ranged' rows: the >10^9-key escape
-    hatch — the batch split by digest range, each range building a
-    range-scoped filter over only that range's corpus keys, so no
-    single filter spans the key space. Both tiers run the same planted
-    batch against the SAME anti-join oracle as q_incremental_dedup:
-    all three tiers must agree bit-for-bit."""
+    """Incremental ingest dedup past one broadcast filter, tagged
+    'ranged': ``incremental_dedup(num_ranges=4)`` splits the batch by
+    digest range, and each range builds a range-scoped filter over only
+    that range's corpus keys, so no single filter spans the key space.
+    It runs the same planted batch as q_incremental_dedup against the
+    SAME anti-join oracle: the survivors must not depend on the number
+    of ranges."""
     docs = _docs(spark, sf_dir)
     seen = docs.where(F.col("doc_id") % 3 != 0)
     batch = (
@@ -853,15 +845,11 @@ def q_incremental_dedup_tiers(spark, sf_dir):
             .select((F.col("doc_id") + 2000000).alias("doc_id"), "text")
         )
     )
-    ranged = (
-        dedup.incremental_dedup_ranged(batch, seen, num_ranges=4)
+    return (
+        dedup.incremental_dedup(batch, seen, num_ranges=4)
         .select(F.lit("ranged").alias("tier"), "doc_id")
+        .orderBy("tier", "doc_id")
     )
-    sharded = (
-        dedup.incremental_dedup_sharded(batch, seen, num_filters=8)
-        .select(F.lit("sharded").alias("tier"), "doc_id")
-    )
-    return ranged.unionByName(sharded).orderBy("tier", "doc_id")
 
 
 @declare(

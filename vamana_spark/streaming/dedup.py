@@ -55,12 +55,13 @@ def streaming_minhash_dedup(
     window: str = "10 minutes",
 ) -> DataFrame:
     """NEAR-dup dedup on a document stream — banded MinHash with
-    first-writer-wins LSH buckets (r4 verdict #7).
+    first-writer-wins LSH buckets.
 
     Stages:
-    1. stateless — per-row MinHash signature (the same Arrow UDFs the
-       batch operator uses, operators/dedup.py) exploded into ``bands``
-       LSH bucket keys per doc;
+    1. stateless — per-row MinHash signature (the batch operator's
+       one-pass text-to-signature UDF, operators/dedup.py, so no
+       shingle strings cross Arrow) exploded into ``bands`` LSH bucket
+       keys per doc;
     2. stateful — ``dropDuplicatesWithinWatermark`` on (band_id,
        band_hash): the first doc to write an LSH bucket within the
        watermark horizon owns it; state is one entry per distinct
@@ -78,18 +79,12 @@ def streaming_minhash_dedup(
 
     Returns (doc_id, window_start, bands_won) for surviving docs.
     """
-    from vamana_spark.operators.dedup import (
-        _explode_bands,
-        _shingle_udf,
-        _signature_udf,
-    )
+    from vamana_spark.operators.dedup import _explode_bands, _text_signature_udf
 
     sigs = docs.select(
         F.col(id_col),
         F.col(ts_col),
-        _signature_udf(num_hashes)(
-            _shingle_udf(shingle_n)(F.col(text_col))
-        ).alias("minhash"),
+        _text_signature_udf(num_hashes, shingle_n)(F.col(text_col)).alias("minhash"),
     )
     banded = _explode_bands(sigs, num_hashes, bands, id_col, ts_col)
     winners = banded.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
