@@ -768,6 +768,79 @@ def test_lsh_candidates_match_band_equality_oracle(spark):
     assert len(oracle(512)) - len(oracle(8)) == 190 - 19
 
 
+def test_bucket_pairs_across_arrow_batches(spark):
+    """The bucket walk carries the bucket still open at an Arrow batch's
+    end into the next batch. With batches of 3 rows, identical clusters
+    of 7, 8, 9 and 20 members span several batches: within and over a
+    cap of 8, and one member either side of it. The candidates of
+    ``minhash_lsh_candidates`` at caps 512 and 8, and the pairs of
+    ``simhash_near_dups``, equal plain-Python bucket oracles over the
+    collected signatures."""
+    import itertools
+
+    rows = [(g * 10 + v, " ".join(f"g{g}w{j}" if j != v else f"m{g}x{v}" for j in range(12)))
+            for g in range(12) for v in range(3)]
+    for c, size in enumerate((7, 8, 9, 20)):
+        rows += [(1000 * (c + 1) + i, f"identical cluster {c} text " * 4) for i in range(size)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    mh = {r.doc_id: list(r.minhash) for r in dedup.minhash_signatures(df).collect()}
+    sh = {r.doc_id: r.simhash for r in dedup.simhash_signatures(df).collect()}
+
+    def oracle(keys, cap):
+        buckets = {}
+        for i, ks in keys.items():
+            for k in ks:
+                buckets.setdefault(k, []).append(i)
+        out = set()
+        for ids in buckets.values():
+            ids.sort()
+            out |= {(ids[0], j) for j in ids[1:]} if len(ids) > cap else set(itertools.combinations(ids, 2))
+        return out
+
+    mh_keys = {i: [(b, tuple(s[4 * b:4 * b + 4])) for b in range(16)] for i, s in mh.items()}
+    sh_keys = {i: [(b, (s >> 16 * b) & 0xFFFF) for b in range(4)] for i, s in sh.items()}
+    ham = {(a, b) for a, b in oracle(sh_keys, 512) if bin((sh[a] ^ sh[b]) & (2**64 - 1)).count("1") <= 3}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        for cap in (512, 8):
+            got = [(r.a_id, r.b_id) for r in dedup.minhash_lsh_candidates(df, max_bucket_size=cap).collect()]
+            assert len(got) == len(set(got)) and set(got) == oracle(mh_keys, cap), cap
+        got = [(r.a_id, r.b_id) for r in dedup.simhash_near_dups(df, max_hamming=3).collect()]
+        assert len(got) == len(set(got)) and set(got) == ham
+    finally:
+        spark.conf.set(key, old)
+    # cap 8 stars the 9- and 20-member clusters only
+    assert len(oracle(mh_keys, 512)) - len(oracle(mh_keys, 8)) == (36 - 8) + (190 - 19)
+
+
+def test_hash_set_jaccard_matches_string_sets(spark):
+    """The batch LSH verify (``_shingle_hash_sets`` and
+    ``_hash_set_jaccard``, behind ``minhash_near_dups`` and
+    ``simhash_verified_near_dups``) equals a Python Jaccard over the
+    ``_shingles_py`` string sets on edge texts: empty and null text,
+    fewer than n tokens, U+00A0 inside a text, repeated shingles."""
+    import itertools
+
+    texts = ["", None, "two words", "Two  WORDS", "a b c d e", "a\u00a0b c d e",
+             "a b c a b c a b c", "a b c a b c", "c a b"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    pairs = list(itertools.combinations(range(len(texts)), 2))
+    cands = spark.createDataFrame(pairs, "a_id long, b_id long")
+    hs = dedup._shingle_hash_sets(df)
+    got = {(r.a_id, r.b_id): r.jaccard
+           for r in dedup._hash_set_jaccard(cands, hs, "doc_id", 0.0).collect()}
+
+    def jaccard(s, t):
+        a, b = set(dedup._shingles_py(s, 3)), set(dedup._shingles_py(t, 3))
+        return round(len(a & b) / len(a | b), 4)
+
+    assert got == {(i, j): jaccard(texts[i], texts[j]) for i, j in pairs}
+    # the edge texts pair up as the string rule says
+    assert got[(0, 1)] == 1.0 and got[(2, 3)] == 1.0 and got[(4, 5)] == 1.0 and got[(6, 7)] == 1.0
+
+
 def test_band_keys_match_python_reference(spark):
     """``_band_keys`` is the splitmix64 fold of each band's exact values,
     computed here with Python integers, and ``band_hash_array`` (the

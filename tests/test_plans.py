@@ -63,33 +63,36 @@ def test_exact_knn_batch_no_cross_product(spark, sf_dir):
 
 
 def test_lsh_candidates_one_band_shuffle(spark, documents):
-    """LSH candidates come from one shuffle on the band key: no join, no
-    cross product, no broadcast. The windows that give each member its
-    bucket read that one exchange on (band_id, band_hash), and the
-    aggregate that makes the pairs distinct sits above them."""
+    """LSH candidates come from one shuffle on the band key: no window,
+    join, cross product or broadcast. A sort on (band_id, band_hash, id)
+    over that one exchange sits directly under the Python map that walks
+    each bucket, and one exchange and aggregate on (a_id, b_id) above it
+    make the pairs distinct."""
     p = plan(dedup.minhash_lsh_candidates(documents))
-    for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "BroadcastExchange", "Join"):
+    for node in ("Window", "CartesianProduct", "BroadcastNestedLoopJoin", "BroadcastExchange", "Join"):
         assert node not in p, p
     # formatted explain numbers its nodes bottom-up, one block per node
     nodes = re.findall(r"^\((\d+)\) (\w+)\n(.*?)(?=^\(\d+\)|\Z)", p, re.M | re.S)
+    bodies = {int(n): body for n, _, body in nodes}
     band = r"band_id#\d+, band_hash#\d+L?"
     exchanges = [(int(n), body) for n, name, body in nodes if name == "Exchange"]
     band_ex = [n for n, body in exchanges if re.search(rf"hashpartitioning\({band},", body)]
-    windows = [int(n) for n, name, body in nodes if name == "Window"]
+    pair_ex = [n for n, body in exchanges if re.search(r"hashpartitioning\(a_id#\d+L?, b_id#\d+L?,", body)]
     pair_aggs = [
         int(n) for n, name, body in nodes
         if name.endswith("Aggregate") and re.search(r"Keys \[2\]: \[a_id#\d+L?, b_id#\d+L?\]", body)
     ]
-    pair_ex = [n for n, body in exchanges if re.search(r"hashpartitioning\(a_id#\d+L?, b_id#\d+L?,", body)]
     # besides those two, only the input's spread over the cores
     rest = [body for n, body in exchanges if n not in band_ex + pair_ex]
-    assert len(band_ex) == 1 and len(pair_ex) == 1, p
+    assert len(band_ex) == 1 and len(pair_ex) == 1 and len(pair_aggs) == 2, p
     assert all("RoundRobinPartitioning" in body for body in rest), p
-    assert windows and all(
-        re.search(rf"\], \[{band}\]$", body.strip())
-        for n, name, body in nodes if name == "Window"
-    ), p
-    assert band_ex[0] < min(windows) and max(windows) < min(pair_aggs), p
+    # the tree prints a node's child on the next line, one level deeper
+    walk = re.findall(r"MapInPandas \((\d+)\)\n\s*\+- Sort \((\d+)\)", p)
+    assert len(walk) == 1, p
+    m, srt = map(int, walk[0])
+    asc = r"band_id#\d+ ASC NULLS FIRST, band_hash#\d+L? ASC NULLS FIRST, doc_id#\d+L? ASC NULLS FIRST"
+    assert re.search(rf"\[{asc}\]", bodies[srt]), p
+    assert band_ex[0] < srt < m < min(pair_aggs) < pair_ex[0] < max(pair_aggs), p
 
 
 def test_global_topk_uses_take_ordered(spark, sf_dir):

@@ -6,16 +6,18 @@ Scale notes (the whole point of these):
   hash, map-side combine-free but skew-safe (hashes are uniform).
 - MinHash-LSH: candidate generation shingles, signs and bands each
   row in one Arrow-batched Python pass — zero shuffles until the one
-  shuffle on (band_id, band_hash) that turns buckets into candidate
-  pairs. At 100 TB that means one shuffle for candidate generation and
-  one for Jaccard verification; the narrow, per-row signature stage
-  scales embarrassingly. Every MinHash path shingles with one Python
-  rule (``_shingles_py``) and signs with one (``_signature_matrix``),
-  so a signature table written by one call bands and verifies the
-  same way in any other. Verification re-checks exact Jaccard only on
-  candidate pairs.
+  shuffle on (band_id, band_hash). A sort within each partition then
+  lines every bucket up as a run, and one numpy walk over the sorted
+  Arrow batches turns the runs into pairs; only the pair distinct
+  shuffles again. Every MinHash path shingles with one Python rule
+  (``_shingles_py``) and signs with one (``_signature_matrix``), so a
+  signature table written by one call bands and verifies the same way
+  in any other. Verification re-checks Jaccard only on candidate pairs,
+  over each candidate doc's sorted 64-bit shingle hashes (the
+  signature's own base hashes), so the verify joins move longs, not
+  shingle strings.
 - SimHash buckets by 16-bit bands of a 64-bit signature (Hamming-ball
-  blocking), same bucket-pair shape.
+  blocking), same bucket walk, and verifies by the same hash sets.
 """
 
 from __future__ import annotations
@@ -451,6 +453,55 @@ def _band_rows(
     return src.mapInPandas(band, schema=schema)
 
 
+def _sorted_bucket_pairs(keys, ids, max_bucket_size: int, head_over: bool, closed: bool):
+    """The bucket rule over rows sorted by (band keys, id), as row
+    indexes. Each bucket is a run of equal ``keys`` with its min-id
+    member first. A bucket within ``max_bucket_size`` gives every pair,
+    and a bucket over it gives the star (first member, member).
+    ``head_over`` says that the first bucket passed the cap before these
+    rows and kept only its first member. Unless ``closed``, the last
+    bucket may go on past these rows, so it gives only star pairs.
+
+    Returns ``(a, b, tail, tail_over)``: the pairs, with ``ids[a] <
+    ids[b]``, and the rows to carry into the next batch with their over
+    flag. An open bucket within the cap is carried whole; one over it is
+    carried as its first member, its star pairs so far already given."""
+    import numpy as np
+
+    n = len(ids)
+    if n == 0:
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty, empty, False
+    brk = np.zeros(n - 1, dtype=bool)
+    for k in keys:
+        brk |= k[1:] != k[:-1]
+    head = np.concatenate([[True], brk])
+    starts = np.flatnonzero(head)
+    sizes = np.diff(np.append(starts, n))
+    over = sizes > max_bucket_size
+    over[0] |= head_over
+    clique = ~over & (sizes > 1)
+    clique[-1] &= closed
+    a, b = [], []
+    for s in np.unique(sizes[clique]):
+        st = starts[clique & (sizes == s)][:, None]
+        i, j = np.triu_indices(s, 1)
+        a.append((st + i).ravel())
+        b.append((st + j).ravel())
+    group = np.cumsum(head) - 1
+    b.append(np.flatnonzero(over[group] & ~head))
+    a.append(starts[group[b[-1]]])
+    a, b = np.concatenate(a), np.concatenate(b)
+    keep = ids[a] < ids[b]
+    if closed:
+        tail, tail_over = starts[:0], False
+    elif over[-1]:
+        tail, tail_over = starts[-1:], True
+    else:
+        tail, tail_over = np.arange(starts[-1], n), False
+    return a[keep], b[keep], tail, tail_over
+
+
 def _bucket_pairs(
     banded: DataFrame,
     band_keys: list,
@@ -461,58 +512,70 @@ def _bucket_pairs(
     """Candidate pairs (a_id < b_id, distinct) from band buckets, with a
     bucket-size cap, in one shuffle of ``banded`` on its band keys.
 
-    Two window passes over each bucket give every member the bucket's
-    size, its min-id member, and, if the bucket is within
-    ``max_bucket_size``, the list of its members as
-    ``struct(id, *payload)``. A bucket within the cap emits every pair,
-    each from the row of its smaller id. A bucket over the cap — a giant
-    duplicate cluster lands its whole membership in the same bucket in
-    every band, so all pairs would be quadratic in its size — emits a
-    star instead: each member pairs with the min-id member, from its own
-    row. Pair count is then linear in bucket size, exact verification
-    still sees every member, and connected components recover the full
-    cluster through the star's centre. The trade: within an over-cap
-    bucket, member↔member similarity is only observed transitively.
+    Each partition is sorted by (band keys, id), so a bucket is a run of
+    rows with its min-id member first, and one ``mapInPandas`` walks the
+    sorted Arrow batches in numpy (``_sorted_bucket_pairs``). A bucket
+    within ``max_bucket_size`` emits every pair. A bucket over the cap —
+    a giant duplicate cluster lands its whole membership in the same
+    bucket in every band, so all pairs would be quadratic in its size —
+    emits a star instead: each member pairs with the min-id member. Pair
+    count is then linear in bucket size, exact verification still sees
+    every member, and connected components recover the full cluster
+    through the star's centre. The trade: within an over-cap bucket,
+    member↔member similarity is only observed transitively. Payload
+    columns (SimHash's signature) ride along as ``a_<col>``/``b_<col>``.
+    A member with a null id pairs with nothing.
 
-    Memory: a row holds at most ``max_bucket_size`` members, so a bucket
-    within the cap costs O(cap²) while its pairs are made; an over-cap
-    bucket is only ever buffered by the window operator, which spills
-    to disk. On a 4-core local session with a 2 GB driver, one
-    identical cluster of 3M members (3M - 1 star pairs) finished in
-    144 s; an aggregate that collected each bucket as one list failed
-    there with a Java heap OOM already at 1M members.
+    Memory: the sort spills to disk, and Python holds one Arrow batch
+    plus the bucket still open at its end, carried into the next batch:
+    at most ``max_bucket_size`` members while the bucket is within the
+    cap, and only its min-id member once it passes the cap, while its
+    star pairs stream out. A bucket within the cap costs O(cap²) while
+    its pairs are made. On a 4-core local session with a 2 GB driver,
+    one identical cluster of 3M members (3M - 1 star pairs) finished in
+    96 s, with under 700 MB of Python worker RSS at its peak; an
+    aggregate that collected each bucket as one list failed with a
+    Java heap OOM already at 1M members.
     """
-    w = Window.partitionBy(*band_keys)
-    x = F.col("_x")
-    over = F.col("_n") > max_bucket_size
-    rows = (
-        banded.select(
-            *band_keys,
-            F.struct(
-                F.col(id_col).alias("id"), *[F.col(c).alias(c) for c in payload_cols]
-            ).alias("_x"),
-        )
-        .withColumn("_n", F.count(F.lit(1)).over(w))
-        # min of the member struct orders by id first: the min-id member
-        .withColumn("_rep", F.min("_x").over(w))
-        .withColumn("_m", F.collect_list(F.when(~over, x)).over(w))
+    import numpy as np
+    from pyspark.sql.types import StructField, StructType
+
+    cols = [*band_keys, id_col, *payload_cols]
+    nk = len(band_keys)
+    schema = StructType(
+        [StructField(f"{s}_id", banded.schema[id_col].dataType) for s in "ab"]
+        + [
+            StructField(f"{s}_{c}", banded.schema[c].dataType)
+            for s in "ab"
+            for c in payload_cols
+        ]
     )
-    star = F.when(
-        x["id"] != F.col("_rep")["id"],
-        F.array(F.struct(F.col("_rep").alias("a"), x.alias("b"))),
-    )
-    clique = F.transform(
-        F.filter("_m", lambda y: y["id"] > x["id"]),
-        lambda y: F.struct(x.alias("a"), y.alias("b")),
-    )
+
+    def walk(batches):
+        def frame(x, head_over, closed):
+            a, b, tail, over = _sorted_bucket_pairs(
+                x[:nk], x[nk], max_bucket_size, head_over, closed
+            )
+            col, side = dict(zip(["id", *payload_cols], x[nk:])), {"a": a, "b": b}
+            out = {f.name: col[f.name[2:]][side[f.name[0]]] for f in schema.fields}
+            return pd.DataFrame(out), [v[tail] for v in x], over
+
+        carry, over = None, False
+        for pdf in batches:
+            x = [pdf[c].to_numpy() for c in cols]
+            if carry is not None:
+                x = [np.concatenate(p) for p in zip(carry, x)]
+            out, carry, over = frame(x, over, False)
+            yield out
+        if carry is not None:
+            yield frame(carry, over, True)[0]
+
     return (
-        rows.select(F.explode(F.when(over, star).otherwise(clique)).alias("_p"))
-        .select(
-            F.col("_p.a.id").alias("a_id"),
-            F.col("_p.b.id").alias("b_id"),
-            *[F.col(f"_p.a.{c}").alias(f"a_{c}") for c in payload_cols],
-            *[F.col(f"_p.b.{c}").alias(f"b_{c}") for c in payload_cols],
-        )
+        banded.select(*cols)
+        .where(F.col(id_col).isNotNull())
+        .repartition(*band_keys)
+        .sortWithinPartitions(*band_keys, id_col)
+        .mapInPandas(walk, schema)
         .distinct()
     )
 
@@ -607,10 +670,20 @@ def minhash_near_dups(
     Eager: the call runs Spark jobs before it returns. It
     ``localCheckpoint``s the candidate pairs (one pass over the corpus:
     signatures and band keys in Python, one shuffle on the band keys,
-    the pair distinct) and the candidate docs' shingle sets. A local checkpoint
+    the sorted bucket walk in Python, the pair distinct) and the
+    candidate docs' shingle hash sets (a left-semi join by the candidate
+    ids, then one Python pass over their text). A local checkpoint
     truncates lineage and keeps its blocks only on the executors that
     wrote them, so losing one of those executors fails the job that
-    reads them instead of recomputing."""
+    reads them instead of recomputing.
+
+    ``jaccard`` is computed on the 64-bit blake2b base hashes of the
+    shingles (``_shingle_hash_sets``), not on their text, so it equals
+    the string-set Jaccard unless two distinct shingles of one pair
+    hash alike. For a pair with n distinct shingles the chance of that
+    is about n²/2⁶⁵, and one collision moves the value by about 1/n."""
+    from vamana_spark.functions.util import ensure_parallelism
+
     if consumer not in _MINHASH_CONSUMER_CAPS:
         raise ValueError(
             f"consumer must be one of {sorted(_MINHASH_CONSUMER_CAPS)}, "
@@ -618,37 +691,82 @@ def minhash_near_dups(
         )
     if max_bucket_size is None:
         max_bucket_size = _MINHASH_CONSUMER_CAPS[consumer]
-    # The signatures come from the fused single-pass UDF (shingles never
-    # leave Python), and verification re-shingles ONLY the docs that
-    # appear in a candidate pair: semi-join the corpus by candidate ids
-    # (reduce the big side before shuffling it), so the two verify-side
-    # shuffles carry candidate-doc shingles, not the whole corpus; a
-    # full-corpus shingle checkpoint would write ~3x the text bytes. The
-    # pair list is checkpointed because it feeds the output AND both id
-    # sides; it is narrow (two longs/row) and candidate-sized.
+    # Verification reads the text again for the candidate docs only: a
+    # left-semi join by the candidate ids (duplicate keys on its right
+    # side change nothing, so no distinct) reduces the corpus before
+    # its hash sets are built. The pair list is checkpointed because it
+    # feeds the output AND both id sides; it is narrow (two longs/row)
+    # and candidate-sized.
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_n,
         max_bucket_size=max_bucket_size,
     ).localCheckpoint()
-    need = (
-        cands.select(F.col("a_id").alias(id_col))
-        .union(cands.select(F.col("b_id").alias(id_col)))
-        .distinct()
+    # Spread the corpus over the cores before the join: a partition
+    # count read from the join's own plan would run its stages once
+    # more, only to look.
+    ids = cands.select(F.col("a_id").alias(id_col)).union(
+        cands.select(F.col("b_id").alias(id_col))
     )
-    sh = shingle_sets(
-        df.join(need, id_col, "left_semi"), text_col, id_col, shingle_n
-    ).localCheckpoint()  # candidate docs only; read by both join sides
-    av = sh.select(F.col(id_col).alias("a_id"), F.col("_sh").alias("a_sh"))
-    bv = sh.select(F.col(id_col).alias("b_id"), F.col("_sh").alias("b_sh"))
-    inter = F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
-    union = F.size(F.array_union("a_sh", "b_sh")).cast("double")
+    docs = ensure_parallelism(df.select(id_col, text_col)).join(ids, id_col, "left_semi")
+    # candidate docs only; read by both join sides
+    hs = _shingle_hash_sets(docs, text_col, id_col, shingle_n).localCheckpoint()
+    return _hash_set_jaccard(cands, hs, id_col, threshold)
+
+
+def _shingle_hash_sets(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_n: int = 3,
+) -> DataFrame:
+    """(id, _hs: array<long>): each doc's distinct word shingles
+    (``_shingles_py``) as the sorted, distinct blake2b-8 base hashes its
+    MinHash signature starts from (``_base_hashes``), from one
+    ``mapInPandas``. Set sizes and intersections equal those of the
+    string shingle sets (``shingle_sets``) up to a 64-bit collision,
+    and a hash set is ~8 bytes per shingle instead of the shingle's
+    text."""
+    import numpy as np
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    schema = StructType(
+        [df.schema[id_col], StructField("_hs", ArrayType(LongType(), False), False)]
+    )
+
+    def hash_sets(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "_hs": [
+                        np.unique(_base_hashes(_shingles_py(t, shingle_n)).view(np.int64))
+                        for t in pdf[text_col]
+                    ],
+                }
+            )
+
+    return df.select(id_col, text_col).mapInPandas(hash_sets, schema=schema)
+
+
+def _hash_set_jaccard(
+    cands: DataFrame, hs: DataFrame, id_col: str, threshold: float, *cols
+) -> DataFrame:
+    """(a_id, b_id, *cols, jaccard) for the ``cands`` pairs whose
+    ``_shingle_hash_sets`` Jaccard, |A∩B| / (|A|+|B|-|A∩B|) rounded to 4
+    places, is at least ``threshold``: the one exact verify of the
+    batch LSH paths."""
+    av = hs.select(F.col(id_col).alias("a_id"), F.col("_hs").alias("a_hs"))
+    bv = hs.select(F.col(id_col).alias("b_id"), F.col("_hs").alias("b_hs"))
+    inter = F.size(F.array_intersect("a_hs", "b_hs"))
+    union = F.size("a_hs") + F.size("b_hs") - inter
     return (
         cands.join(av, "a_id")
         .join(bv, "b_id")
         .select(
             "a_id",
             "b_id",
-            F.round(inter / F.greatest(union, F.lit(1.0)), 4).alias("jaccard"),
+            *cols,
+            F.round(inter.cast("double") / union, 4).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -860,13 +978,13 @@ def simhash_near_dups(
     Blocking: ``bands`` equal-width bands of the 64-bit signature — any
     pair within Hamming ``bands - 1`` must agree on at least one band
     (pigeonhole), so ``max_hamming`` above that silently loses recall
-    (asserted). Candidates from one shuffle of the band buckets
-    (``_bucket_pairs``, with each member's signature as payload), then
-    exact popcount verification. More bands widen the guaranteed radius
-    but shrink the band value space (8 bands → 8-bit values), so buckets
-    grow — the bucket cap's star topology bounds the damage, but
-    wide-radius scans belong at modest corpus sizes; MinHash-LSH is the
-    scale path.
+    (asserted). Candidates from one shuffle of the band buckets and the
+    sorted bucket walk (``_bucket_pairs``, with each member's signature
+    as payload, gathered with its id), then exact popcount
+    verification. More bands widen the guaranteed radius but shrink
+    the band value space (8 bands → 8-bit values), so buckets grow —
+    the bucket cap's star topology bounds the damage, but wide-radius
+    scans belong at modest corpus sizes; MinHash-LSH is the scale path.
     """
     assert 64 % bands == 0, f"bands {bands} must divide 64"
     assert max_hamming <= bands - 1, (
@@ -912,37 +1030,30 @@ def simhash_verified_near_dups(
     threshold: float = 0.5,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """SimHash-blocked pairs re-verified with exact word n-gram Jaccard:
+    """SimHash-blocked pairs re-verified with word n-gram Jaccard:
     (a_id, b_id, hamming, jaccard) for candidates with Hamming <=
-    ``max_hamming`` AND Jaccard >= ``threshold``.
+    ``max_hamming`` AND Jaccard >= ``threshold``. The Jaccard is
+    ``minhash_near_dups``' verify (``_hash_set_jaccard`` over
+    ``_shingle_hash_sets``), equal to the string-set value up to a
+    64-bit collision inside one pair.
 
-    This is the oracle-able projection of the SimHash pass (VERDICT r5
-    #9): the signature/hamming values are engine-internal (xxhash64),
-    but the surviving PAIRS and their exact Jaccard are reproducible by
-    any engine that can enumerate pairs — provided the blocking has
-    full recall at the operating point (defaults guarantee candidates
-    to Hamming 7; near-dups at Jaccard >= 0.5 sit well inside that on
+    This is the projection of the SimHash pass that an oracle can check:
+    the signature/hamming values are engine-internal (xxhash64), but
+    the surviving PAIRS and their Jaccard are reproducible by any
+    engine that can enumerate pairs — provided the blocking has full
+    recall at the operating point (defaults guarantee candidates to
+    Hamming 7; near-dups at Jaccard >= 0.5 sit well inside that on
     token-weighted SimHash).
     """
     cand = simhash_near_dups(
         df, text_col, id_col, max_hamming=max_hamming, bands=bands
     )
-    sh = shingle_sets(df, text_col, id_col, shingle_n)
-    av = sh.select(F.col(id_col).alias("a_id"), F.col("_sh").alias("a_sh"))
-    bv = sh.select(F.col(id_col).alias("b_id"), F.col("_sh").alias("b_sh"))
-    inter = F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
-    union = F.size(F.array_union("a_sh", "b_sh")).cast("double")
-    return (
-        cand.join(av, "a_id")
-        .join(bv, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            "hamming",
-            F.round(inter / F.greatest(union, F.lit(1.0)), 4).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    from vamana_spark.functions.util import ensure_parallelism
+
+    hs = _shingle_hash_sets(
+        ensure_parallelism(df.select(id_col, text_col)), text_col, id_col, shingle_n
     )
+    return _hash_set_jaccard(cand, hs, id_col, threshold, "hamming")
 
 
 # ------------------------------------------------- embedding cosine near-dup
