@@ -359,3 +359,115 @@ def test_adc_search_takes_the_float_walk():
         assert aq.tolist() == rq.tolist(), ef
         assert aid.tolist() == rid.tolist(), ef
         assert ad.tolist() == rd.tolist(), ef
+
+
+def _blob_graph(n=2000, dim=16, seed=3):
+    """A clustered corpus with its dense Vamana graph: (P, nbr_mat, medoid)."""
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((8, dim)) * 4.0
+    P = (centers[rng.integers(0, 8, n)] + rng.standard_normal((n, dim))).astype(np.float32)
+    graph, medoid = kernels.build_vamana_dense(P, 16, 1.2, seed)
+    return P, kernels.pad_adjacency(*kernels._to_csr(graph, n), n), medoid
+
+
+@pytest.mark.parametrize("with_starts", [False, True])
+def test_batched_search_rows_are_searched_alone(with_starts):
+    """Each row of a 250-query bitmap-path walk returns exactly what
+    that query returns searched on its own: ids, distances, hops and
+    dist_comps. The batch shares work buffers and one seen bitmap, so
+    any leak between rows shows here."""
+    P, nbr_mat, medoid = _blob_graph()
+    rng = np.random.default_rng(4)
+    Q = (P[rng.integers(0, len(P), 250)] + 0.5 * rng.standard_normal((250, P.shape[1]))).astype(np.float32)
+    starts = rng.integers(0, len(P), 250) if with_starts else None
+    assert len(Q) * len(P) <= kernels.BITMAP_MAX_CELLS
+    rq, rid, rd, hops, comps = kernels.search_topk_batch(
+        P, nbr_mat, medoid, Q, 10, 32, starts=starts
+    )
+    assert rd.dtype == np.float64
+    for r in range(len(Q)):
+        one = kernels.search_topk_batch(
+            P, nbr_mat, medoid, Q[r : r + 1], 10, 32,
+            starts=None if starts is None else starts[r : r + 1],
+        )
+        assert one[0].tolist() == [0] * int((rq == r).sum()), r
+        assert one[1].tolist() == rid[rq == r].tolist(), r
+        assert one[2].tolist() == rd[rq == r].tolist(), r
+        assert (one[3][0], one[4][0]) == (hops[r], comps[r]), r
+
+
+def test_adc_search_keeps_float64_distances():
+    """With a non-integer codebook the ADC walk's distances stay float64
+    from the LUT to the output: each equals the float64 LUT sum for its
+    id, recomputed in plain numpy and summed over the m subspaces in
+    order. A float32 beam would round them and fail the equality."""
+    P, nbr_mat, medoid = _blob_graph(n=600, dim=8, seed=5)
+    m, dsub = 4, 2
+    rng = np.random.default_rng(6)
+    cents = (rng.standard_normal((m, 16, dsub)) / 3.0).astype(np.float32)
+    codes = rng.integers(0, 16, size=(len(P), m)).astype(np.uint8)
+    Q = (rng.standard_normal((40, 8)) / 7.0).astype(np.float32)
+    rq, rid, rd = kernels.search_topk_batch_adc(codes, cents, nbr_mat, medoid, Q, 5, 24)
+    assert rd.dtype == np.float64 and rd.size == 40 * 5
+    Qd, Cd = Q.astype(np.float64), cents.astype(np.float64)
+    lut = np.empty((len(Q), m, 16))
+    for j in range(m):
+        sub = Qd[:, j * dsub : (j + 1) * dsub]
+        lut[:, j, :] = (
+            np.einsum("ij,ij->i", sub, sub)[:, None]
+            + np.einsum("ij,ij->i", Cd[j], Cd[j])[None, :]
+            - 2.0 * (sub @ Cd[j].T)
+        )
+    for r, i, d in zip(rq, rid, rd):
+        want = 0.0
+        for j in range(m):
+            want += lut[r, j, codes[i, j]]
+        assert d == want, (r, i, d, want)
+    assert not np.array_equal(rd, rd.astype(np.float32).astype(np.float64))
+
+
+def test_adc_search_budget_below_one_query(monkeypatch):
+    """A bitmap budget smaller than one query's row still searches: the
+    chunking stops at one query per chunk, and the results equal the
+    unchunked call's."""
+    P, nbr_mat, medoid = _blob_graph(n=300, dim=8, seed=7)
+    codes, cents = _toy_pq(P, 4)
+    Q = P[:5] + 0.1
+    want = kernels.search_topk_batch_adc(codes, cents, nbr_mat, medoid, Q, 3, 16)
+    monkeypatch.setattr(kernels, "BITMAP_MAX_CELLS", 100)
+    got = kernels.search_topk_batch_adc(codes, cents, nbr_mat, medoid, Q, 3, 16)
+    for a, b in zip(want, got):
+        assert a.dtype == b.dtype and a.tolist() == b.tolist()
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    seed=st.integers(0, 2**31 - 1),
+    nq=st.integers(1, 12),
+    ef=st.integers(1, 20),
+    k=st.integers(0, 24),
+    dtype=st.sampled_from([np.float32, np.float64]),
+)
+def test_topk_rows_matches_per_row_lexsort(seed, nq, ef, k, dtype):
+    """``_topk_rows`` equals the per-row loop it replaced: ascending
+    (dist, id), pads (-1 ids) and non-finite dists dropped, at most k
+    per row, float64 out — on beams with tied distances."""
+    rng = np.random.default_rng(seed)
+    ids = rng.integers(0, 50, size=(nq, ef))
+    d = rng.integers(0, 6, size=(nq, ef)).astype(dtype) / 3
+    pad = rng.random((nq, ef)) < 0.3
+    ids[pad] = -1
+    d[pad] = np.inf
+    rows, out_ids, out_d = kernels._topk_rows(ids, d, k)
+    want_r, want_i, want_d = [], [], []
+    order_d = np.where(ids < 0, np.inf, d)
+    for r in range(nq):
+        o = np.lexsort((ids[r], order_d[r]))
+        o = o[np.isfinite(order_d[r][o])][:k]
+        want_r += [r] * o.size
+        want_i += ids[r][o].tolist()
+        want_d += d[r][o].astype(np.float64).tolist()
+    assert rows.dtype == out_ids.dtype == np.int64 and out_d.dtype == np.float64
+    assert rows.tolist() == want_r
+    assert out_ids.tolist() == want_i
+    assert out_d.tolist() == want_d

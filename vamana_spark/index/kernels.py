@@ -14,7 +14,13 @@ is an original implementation of the published DiskANN/Vamana algorithm
 - ``search_topk_batch`` / ``search_topk_batch_adc`` — the serving
   searches. Both run one lockstep batched walk, ``_beam_walk``, and
   differ only in the distance function they hand it: float32 vectors,
-  or a PQ lookup table over codes.
+  or a PQ lookup table over codes. The walk keeps a flat per-query
+  "seen" bitmap of n + 1 columns whose column 0 is an always-set sink
+  for the adjacency's -1 pads, holds its beams in the dtype of the
+  distances (float32 for vectors, float64 for ADC; results are float64),
+  and merges each hop's candidates in one id / dist work buffer
+  allocated per call. ``_topk_rows`` cuts every beam to its top-k in
+  one lexsort.
 - ``robust_prune``   — the *paper-correct iterative* RobustPrune (the
   reference ships a simplified non-iterative variant, vamana.h:722-760;
   SURVEY.md §2 R7 records the deliberate semantics decision).
@@ -41,9 +47,10 @@ import numpy as np
 # exact nearest set, so the pruned graph keeps long edges on clustered data
 LONG_RANGE_CANDIDATES = 16
 
-# largest nq * n for which the batched searches keep an (nq, n) "seen"
-# bitmap (256 MB of bool); past it search_topk_batch falls back to the
-# single-expansion history path and the ADC search chunks queries
+# largest nq * n for which the batched searches keep a per-query "seen"
+# bitmap (n + 1 bools per query, 256 MB at the ceiling); past it
+# search_topk_batch falls back to the single-expansion history path and
+# the ADC search chunks queries
 BITMAP_MAX_CELLS = 256_000_000
 
 # beam entries each hop of the batched walk expands per query: the beam
@@ -622,38 +629,6 @@ def pad_adjacency(indptr: np.ndarray, nbrs: np.ndarray, n: int) -> np.ndarray:
     return M
 
 
-def _new_beam(starts: np.ndarray, d0: np.ndarray, ef: int):
-    """Per-query beams of width ef seeded with the start nodes: (ids,
-    dists, visited flags, hops, dist_comps); -1 / inf pad free slots."""
-    nq = starts.shape[0]
-    beam_ids = np.full((nq, ef), -1, dtype=np.int64)
-    beam_d = np.full((nq, ef), np.inf, dtype=np.float64)
-    beam_ids[:, 0] = starts
-    beam_d[:, 0] = d0
-    return (
-        beam_ids,
-        beam_d,
-        np.zeros((nq, ef), dtype=bool),
-        np.zeros(nq, dtype=np.int64),
-        np.ones(nq, dtype=np.int64),
-    )
-
-
-def _merge_beam(beam_ids, beam_d, beam_vis, rows, ids, d) -> None:
-    """Keep, for each of ``rows``, the ef nearest of its beam plus the
-    new (unvisited) candidates ``ids``/``d``; -1 / inf pad both."""
-    ef = beam_ids.shape[1]
-    all_ids = np.concatenate([beam_ids[rows], ids], axis=1)
-    all_d = np.concatenate([beam_d[rows], d], axis=1)
-    all_vis = np.concatenate(
-        [beam_vis[rows], np.zeros(ids.shape, dtype=bool)], axis=1
-    )
-    sel = np.argpartition(all_d, ef - 1, axis=1)[:, :ef]
-    beam_ids[rows] = np.take_along_axis(all_ids, sel, axis=1)
-    beam_d[rows] = np.take_along_axis(all_d, sel, axis=1)
-    beam_vis[rows] = np.take_along_axis(all_vis, sel, axis=1)
-
-
 def _beam_walk(
     nbr_mat: np.ndarray,
     n: int,
@@ -667,72 +642,110 @@ def _beam_walk(
     query. ``dist(pts, qrow)`` gives the distances from query rows
     ``qrow`` to nodes ``pts`` (two equal-length id arrays).
 
-    The "seen" set is an (nq, n) bitmap with EVALUATED-once semantics
-    (the standard HNSW visited set): a node is marked the moment its
-    distance is computed, and never re-evaluated. Sound because the beam
-    holds the ef best evaluated nodes and its threshold only tightens —
-    a node dropped (or never admitted) can never beat re-admission
-    later. So each hop computes distances ONLY for genuinely new nodes
-    (sparse gather), and beam membership is one bitmap lookup.
+    The "seen" set is a flat (nq, n + 1) bitmap with EVALUATED-once
+    semantics (the standard HNSW visited set): a node is marked the
+    moment its distance is computed, and never re-evaluated. Sound
+    because the beam holds the ef best evaluated nodes and its threshold
+    only tightens — a node dropped (or never admitted) can never beat
+    re-admission later. So each hop computes distances ONLY for
+    genuinely new nodes (sparse gather), and beam membership is one
+    bitmap lookup. Query row r's node j sits at flat ``r*(n+1) + 1 + j``;
+    column 0 of each row is a sink that is always set, so the
+    adjacency's -1 pads land on it and read as seen, with no clip and no
+    validity mask.
+
+    Beam and candidate distances keep the dtype ``dist`` returns
+    (float32 for the float search, whose einsum is float32, so storing
+    it is exact; float64 for ADC). One (rows, ef + B·Rmax) id / dist
+    work buffer, B = min(EXPAND, ef), is allocated per call: each hop
+    copies the beams into its first ef columns, writes each new
+    candidate straight to its flat position behind them (column
+    ``ef + c·Rmax + j`` for expansion c's j-th neighbour), and one
+    argpartition per row keeps the ef nearest. An expanded entry is marked visited in place as id
+    ``-2 - id`` (-1 stays the pad), so the merge moves two arrays. Rows
+    whose beam has no unvisited entry left are finished: their beam is
+    final, and the walk drops them from the work arrays.
 
     Returns the final beams (ids, dists) with per-query hops and
     dist_comps.
     """
     nq = starts.shape[0]
-    arange_nq = np.arange(nq)
-    beam_ids, beam_d, beam_vis, hops, comps = _new_beam(
-        starts, dist(starts, arange_nq), ef
-    )
-    seen_map = np.zeros((nq, n), dtype=bool)
-    seen_map[arange_nq, starts] = True
+    live = np.arange(nq)                     # query row of each work row
+    d0 = dist(starts, live)
+    beam_ids = np.full((nq, ef), -1, dtype=np.int64)
+    beam_d = np.full((nq, ef), np.inf, dtype=d0.dtype)
+    beam_ids[:, 0] = starts
+    beam_d[:, 0] = d0
+    out_ids = np.empty_like(beam_ids)
+    out_d = np.empty_like(beam_d)
+    hops = np.zeros(nq, dtype=np.int64)
+    comps = np.ones(nq, dtype=np.int64)
+    seen = np.zeros(nq * (n + 1), dtype=bool)
+    seen[live * (n + 1)] = True
+    seen[live * (n + 1) + 1 + starts] = True
     B = min(EXPAND, ef)
     Rmax = nbr_mat.shape[1]
-    width = B * Rmax
+    W = ef + B * Rmax
+    work_ids = np.empty((nq, W), dtype=np.int64)
+    work_d = np.empty((nq, W), dtype=d0.dtype)
     for _hop in range(4 * ef + 8):
-        bd = np.where(beam_vis | (beam_ids < 0), np.inf, beam_d)
-        psel = (
-            np.argpartition(bd, B - 1, axis=1)[:, :B]
-            if ef > B
-            else np.broadcast_to(np.arange(ef), (nq, ef))
-        )
-        pdist = np.take_along_axis(bd, psel, axis=1)          # (nq, B)
-        emask = np.isfinite(pdist)
-        rows = np.flatnonzero(emask.any(axis=1))
-        if rows.size == 0:
-            break
-        ra = rows.size
-        cdm = np.full((ra, width), np.inf)
-        idm = np.full((ra, width), -1, dtype=np.int64)
-        rmask = emask[rows]                                   # (ra, B)
-        rsel = psel[rows]
-        hops[rows] += rmask.sum(axis=1)
+        bd = np.where(beam_ids < 0, np.inf, beam_d)       # pads and visited
+        if ef > B:
+            psel = np.argpartition(bd, B - 1, axis=1)[:, :B]
+            emask = np.isfinite(np.take_along_axis(bd, psel, axis=1))
+        else:
+            psel = np.broadcast_to(np.arange(ef), (live.size, ef))
+            emask = np.isfinite(bd)                           # (ra, B)
+        act = emask.any(axis=1)
+        if not act.all():
+            out_ids[live[~act]] = beam_ids[~act]
+            out_d[live[~act]] = beam_d[~act]
+            keep = np.flatnonzero(act)
+            if keep.size == 0:
+                break
+            live, beam_ids, beam_d = live[keep], beam_ids[keep], beam_d[keep]
+            psel, emask = psel[keep], emask[keep]
+        ra = live.size
+        hops[live] += emask.sum(axis=1)
+        wid, wd = work_ids[:ra], work_d[:ra]
+        wid[:, :ef] = beam_ids
+        wid[:, ef:] = -1
+        wd[:, :ef] = beam_d
+        wd[:, ef:] = np.inf
+        fid, fd = wid.reshape(-1), wd.reshape(-1)
+        rowkey = live * (n + 1) + 1
+        emask_c, psel_c = emask.T.copy(), psel.T.copy()       # (B, ra)
         # evaluate the B expansion COLUMNS sequentially: each pass works
         # on ~ra rows (cache-resident temps — one big fused pass measured
         # 3x slower here purely from temp-array spill) and progressive
-        # seen_map marking makes a column's nodes invisible to the next
+        # seen marking makes a column's nodes invisible to the next
         # column, so intra-hop duplicates need no sort-based dedup. The
-        # select + merge + argpartition still run ONCE per B expansions.
+        # select + argpartition still run ONCE per B expansions.
         for c in range(B):
-            cm = rmask[:, c]
-            if not cm.any():
+            ri = np.flatnonzero(emask_c[c])                   # work rows
+            if ri.size == 0:
                 continue
-            ri = np.flatnonzero(cm)                           # idx into rows
-            erow = rows[ri]
-            eslot = rsel[ri, c]
-            cur = beam_ids[erow, eslot]
-            beam_vis[erow, eslot] = True
-            cand = nbr_mat[cur]                               # (mc, Rmax)
-            valid = cand >= 0
-            safe = np.clip(cand, 0, n - 1)
-            new = valid & ~seen_map[erow[:, None], safe]
-            fr, fc = np.nonzero(new)
-            pts, qrow = safe[fr, fc], erow[fr]
-            seen_map[qrow, pts] = True
-            cdm[ri[fr], c * Rmax + fc] = dist(pts, qrow)
-            idm[ri[fr], c * Rmax + fc] = pts
-            comps[erow] += np.bincount(fr, minlength=ri.size)
-        _merge_beam(beam_ids, beam_d, beam_vis, rows, idm, cdm)
-    return beam_ids, beam_d, hops, comps
+            slot = psel_c[c].take(ri) + ri * W
+            cur = fid[slot]
+            fid[slot] = -2 - cur                              # visited
+            cand = nbr_mat.take(cur, axis=0)                  # (mc, Rmax)
+            key = cand + rowkey.take(ri)[:, None]             # -1 -> sink
+            f = np.flatnonzero(~seen.take(key))               # new, flat
+            seen[key.reshape(-1).take(f)] = True
+            fr = f // Rmax                                    # expansion
+            crow = ri.take(fr)
+            pts = cand.reshape(-1).take(f)
+            pos = crow * W + (ef + c * Rmax) + (f - fr * Rmax)
+            fd[pos] = dist(pts, live.take(crow))
+            fid[pos] = pts
+            comps[live] += np.bincount(crow, minlength=ra)
+        sel = np.argpartition(wd, ef - 1, axis=1)[:, :ef]
+        sel += np.arange(0, ra * W, W)[:, None]
+        beam_ids, beam_d = fid.take(sel), fd.take(sel)
+    else:
+        out_ids[live] = beam_ids
+        out_d[live] = beam_d
+    return np.where(out_ids < -1, -2 - out_ids, out_ids), out_d, hops, comps
 
 
 def _history_walk(
@@ -751,9 +764,13 @@ def _history_walk(
     n = Pf.shape[0]
     max_hops = 4 * ef + 8
     diff0 = Pf[starts] - Qf
-    beam_ids, beam_d, beam_vis, hops, comps = _new_beam(
-        starts, np.einsum("ij,ij->i", diff0, diff0), ef
-    )
+    beam_ids = np.full((nq, ef), -1, dtype=np.int64)
+    beam_d = np.full((nq, ef), np.inf, dtype=np.float64)
+    beam_vis = np.zeros((nq, ef), dtype=bool)
+    beam_ids[:, 0] = starts
+    beam_d[:, 0] = np.einsum("ij,ij->i", diff0, diff0)
+    hops = np.zeros(nq, dtype=np.int64)
+    comps = np.ones(nq, dtype=np.int64)
     arange_nq = np.arange(nq)
     hist = np.full((nq, max_hops), -1, dtype=np.int64)
     for hop in range(max_hops):
@@ -779,7 +796,14 @@ def _history_walk(
         diff = Pf[safe] - Qf[rows][:, None, :]                # (ra, Rmax, dim)
         cd = np.einsum("ijk,ijk->ij", diff, diff).astype(np.float64)
         cd[~new] = np.inf
-        _merge_beam(beam_ids, beam_d, beam_vis, rows, np.where(new, cand, -1), cd)
+        # keep the ef nearest of each row's beam plus its new candidates
+        all_ids = np.concatenate([beam_ids[rows], np.where(new, cand, -1)], axis=1)
+        all_d = np.concatenate([beam_d[rows], cd], axis=1)
+        all_vis = np.concatenate([beam_vis[rows], np.zeros(new.shape, dtype=bool)], axis=1)
+        sel = np.argpartition(all_d, ef - 1, axis=1)[:, :ef]
+        beam_ids[rows] = np.take_along_axis(all_ids, sel, axis=1)
+        beam_d[rows] = np.take_along_axis(all_d, sel, axis=1)
+        beam_vis[rows] = np.take_along_axis(all_vis, sel, axis=1)
     return beam_ids, beam_d, hops, comps
 
 
@@ -787,16 +811,14 @@ def _topk_rows(
     beam_ids: np.ndarray, beam_d: np.ndarray, k: int
 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Flat per-row top-k of the final beams, ascending dist then id:
-    (row_idx, ids, dists)."""
-    out_rows, out_ids, out_d = [], [], []
+    (row_idx, ids, float64 dists)."""
     order_d = np.where(beam_ids < 0, np.inf, beam_d)
-    for r in range(beam_ids.shape[0]):
-        o = np.lexsort((beam_ids[r], order_d[r]))
-        o = o[np.isfinite(order_d[r][o])][:k]
-        out_rows.append(np.full(o.size, r, dtype=np.int64))
-        out_ids.append(beam_ids[r][o])
-        out_d.append(beam_d[r][o])
-    return np.concatenate(out_rows), np.concatenate(out_ids), np.concatenate(out_d)
+    o = np.lexsort((beam_ids, order_d), axis=1)[:, :k]
+    keep = np.isfinite(np.take_along_axis(order_d, o, axis=1))
+    rows = np.nonzero(keep)[0].astype(np.int64, copy=False)
+    ids = np.take_along_axis(beam_ids, o, axis=1)[keep]
+    d = np.take_along_axis(beam_d, o, axis=1)[keep]
+    return rows, ids, d.astype(np.float64, copy=False)
 
 
 def search_topk_batch(
@@ -833,7 +855,8 @@ def search_topk_batch(
     )
     if nq * n <= BITMAP_MAX_CELLS:
         def dist(pts: np.ndarray, qrow: np.ndarray) -> np.ndarray:
-            diff = Pf[pts] - Qf[qrow]                         # (m, dim)
+            diff = Pf.take(pts, axis=0)                       # (m, dim)
+            diff -= Qf.take(qrow, axis=0)
             return np.einsum("ij,ij->i", diff, diff)
 
         beam_ids, beam_d, hops, comps = _beam_walk(nbr_mat, n, start_nodes, ef, dist)
@@ -866,7 +889,8 @@ def search_topk_batch_adc(
 
     Same walk as ``search_topk_batch`` (``_beam_walk``); query batches
     larger than the bitmap budget are chunked (the dataset is never
-    chunked — shard size is the caller's memory unit).
+    chunked — shard size is the caller's memory unit), down to one
+    query per chunk, which always walks.
 
     Returns ``(row_idx, ids, adc_dists)`` flat top-k per query row
     (ranks ascend within a row); distances are APPROXIMATE (ADC).
@@ -876,7 +900,7 @@ def search_topk_batch_adc(
     if nq == 0 or n == 0:
         z = np.array([], dtype=np.int64)
         return z, z, np.array([], dtype=np.float64)
-    if nq * n > BITMAP_MAX_CELLS:
+    if nq > 1 and nq * n > BITMAP_MAX_CELLS:
         step = max(1, BITMAP_MAX_CELLS // n)
         rs, ids_, ds = [], [], []
         for lo in range(0, nq, step):

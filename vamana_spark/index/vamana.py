@@ -683,9 +683,9 @@ class VamanaIndex:
                 if pdf.empty:
                     continue
                 Q = np.stack(pdf["qv"].to_numpy()).astype(np.float32)
-                qn2 = np.einsum(
-                    "ij,ij->i", Q.astype(np.float64), Q.astype(np.float64)
-                )
+                if metric == "ip":
+                    Qd = Q.astype(np.float64)
+                    qn2 = np.einsum("ij,ij->i", Qd, Qd)
                 Q = _metric_transform(Q, metric, mips_m, query=True)
                 qids = pdf["query_id"].to_numpy(dtype=np.int64)
                 starts = None

@@ -2443,6 +2443,8 @@ def incremental_near_dups(
     exhaustive pair list. An explicit ``max_bucket_witnesses``
     overrides the preset default (512 audit / 8 decision).
     """
+    from vamana_spark.functions.util import ensure_parallelism
+
     if max_bucket_witnesses is None:
         max_bucket_witnesses = 8 if decision_only else 512
     sh_b = shingle_sets(batch, text_col, id_col, shingle_n).localCheckpoint()
@@ -2500,15 +2502,19 @@ def incremental_near_dups(
     witnesses = small.unionByName(capped)
     joined = witnesses.join(banded_b, keys)
     av = sh_b.select(F.col(id_col).alias("batch_id"), F.col("_sh").alias("a_sh"))
+    # the corpus is spread over the cores before the verify's join: a
+    # partition count read from the join's own plan would run its
+    # stages once more, only to look
+    seen_text = ensure_parallelism(seen.select(id_col, text_col))
 
     def _verify(pairs_df: DataFrame) -> DataFrame:
         # verification: shingle ONLY this pair set's corpus docs
         # (broadcast semi-join — map-side over the corpus scan)
         cand_seen = pairs_df.select(F.col("seen_id").alias(id_col)).distinct()
-        seen_sub = seen.join(F.broadcast(cand_seen), id_col, "left_semi")
-        sh_s = shingle_sets(seen_sub, text_col, id_col, shingle_n)
-        bv = sh_s.select(
-            F.col(id_col).alias("seen_id"), F.col("_sh").alias("b_sh")
+        seen_sub = seen_text.join(F.broadcast(cand_seen), id_col, "left_semi")
+        bv = seen_sub.select(
+            F.col(id_col).alias("seen_id"),
+            _shingle_udf(shingle_n)(text_col).alias("b_sh"),
         )
         inter = F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
         union = F.size(F.array_union("a_sh", "b_sh")).cast("double")
