@@ -174,15 +174,10 @@ def test_dense_build_recall_on_clustered_data(build):
 
 def _toy_pq(P, m, seed=0):
     """Shard-local PQ artifacts for a point matrix (ksub=min(16, n))."""
-    from vamana_spark.operators.quantization import _kmeans
-
     n, dim = P.shape
     dsub = dim // m
-    ksub = min(16, n)
     X = P.astype(np.float64)
-    cents = np.stack(
-        [_kmeans(X[:, j * dsub : (j + 1) * dsub], ksub, seed + j, 5) for j in range(m)]
-    ).astype(np.float32)
+    cents = kernels._pq_codebooks(X, m, min(16, n), seed, 5).astype(np.float32)
     codes = np.empty((n, m), dtype=np.uint8)
     for j in range(m):
         sub = X[:, j * dsub : (j + 1) * dsub]
@@ -194,6 +189,35 @@ def _toy_pq(P, m, seed=0):
         )
         codes[:, j] = d.argmin(axis=1)
     return codes, cents
+
+
+def test_opq_rotation_orthogonal_and_reconstruction_beats_pq():
+    """The OPQ fit behind ``search_pq(opq=True)``: on strongly
+    anisotropic vectors (a decaying spectrum under a random rotation,
+    the real-embedding shape) the learned rotation stays orthogonal and
+    its codebooks reconstruct the rotated data with clearly less error
+    than plain per-subspace PQ codebooks of the same size."""
+    rng = np.random.default_rng(7)
+    scales = np.exp(-np.arange(64) / 8.0)
+    Q, _ = np.linalg.qr(rng.standard_normal((64, 64)))
+    X = ((rng.standard_normal((600, 64)) * scales) @ Q).astype(np.float32)
+    X = X.astype(np.float64)  # stored as float32, trained in float64
+    R, opq_cents = kernels._opq_fit(X, 8, 16, 42, iters=6, opq_iters=4)
+    assert np.allclose(R @ R.T, np.eye(64), atol=1e-8)
+    pq_cents = kernels._pq_codebooks(X, 8, 16, 42, 6)
+
+    def mse(Xs, cents):
+        err = 0.0
+        for j in range(8):
+            sub = Xs[:, j * 8 : (j + 1) * 8]
+            d = ((sub * sub).sum(1)[:, None] + (cents[j] ** 2).sum(1)[None, :]
+                 - 2.0 * sub @ cents[j].T)
+            err += d.min(axis=1).sum()
+        return err / len(Xs)
+
+    mse_pq = mse(X, pq_cents)
+    mse_opq = mse(X @ R, opq_cents)
+    assert mse_opq < mse_pq * 0.9, (mse_opq, mse_pq)
 
 
 def _adc_brute(codes, cents, Q):

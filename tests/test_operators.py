@@ -463,18 +463,6 @@ def test_knn_self_join_excludes_self(embeddings):
     assert all(len(v) == 3 for v in per_q.values())
 
 
-def test_ivf_recall_vs_exact(spark, embeddings):
-    queries = embeddings.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    from vamana_spark import exact, quality
-
-    approx = similarity.ivf_topk(embeddings, queries, k=10, num_lists=8, nprobe=4)
-    truth = exact.exact_knn(embeddings, queries, k=10)
-    r = quality.avg_recall(approx, truth, k=10)
-    assert r >= 0.7, f"IVF recall {r}"
-
-
 def test_lsh_similarity_join_finds_dups(spark):
     rng = np.random.default_rng(0)
     base = rng.standard_normal((20, 16)).astype("float32")
@@ -523,41 +511,6 @@ def test_search_empty_queries(spark, embeddings):
     )
     q = spark.createDataFrame([], "query_id long, query_vec array<float>")
     assert idx.search(q, k=3).count() == 0
-
-
-# -------------------------------------------------------------- ml_bridge
-
-def test_mllib_minhash_agrees_with_handrolled(spark, documents):
-    from vamana_spark.operators import ml_bridge
-
-    ours = {
-        (r.a_id, r.b_id)
-        for r in dedup.minhash_near_dups(documents, threshold=0.5).collect()
-    }
-    theirs = {
-        (r.a_id, r.b_id)
-        for r in ml_bridge.mllib_minhash_pairs(documents, threshold=0.5).collect()
-    }
-    if ours or theirs:
-        # both are approximate; demand substantial overlap on real dups
-        inter = len(ours & theirs)
-        assert inter / max(len(ours | theirs), 1) >= 0.5, (len(ours), len(theirs), inter)
-
-
-def test_mllib_cosine_pairs_runs(spark, embeddings):
-    from vamana_spark.operators import ml_bridge
-
-    pairs = ml_bridge.mllib_cosine_pairs(
-        embeddings.limit(100), max_cosine_dist=0.5
-    ).collect()
-    assert all(p.a_id < p.b_id and p.cos_dist <= 0.5 + 1e-9 for p in pairs)
-
-
-def test_mllib_kmeans_centers_shape(spark, embeddings):
-    from vamana_spark.operators import ml_bridge
-
-    C = ml_bridge.mllib_kmeans_centers(embeddings, k=4)
-    assert C.shape == (4, 64)
 
 
 # --------------------------------------------------------------- temporal

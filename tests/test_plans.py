@@ -201,23 +201,6 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_o_bucketed")
 
 
-def test_ivfpq_candidate_cut_is_equijoin(spark, sf_dir):
-    """The IVFPQ probe→codes cut must be a broadcast equi-join on
-    list_id — at scale it reads ~n*nprobe/num_lists code rows; a cross
-    product would read |Q|x n."""
-    from vamana_spark.operators import quantization as qz
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-    codes, model = qz.ivfpq_build(emb, dim, num_lists=8, m=8, ksub=16, seed=42)
-    q = emb.limit(5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    p = plan(qz.ivfpq_search(codes, model, q, k=5, nprobe=2))
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p, p
-    assert "BroadcastHashJoin" in p, p
-
-
 def test_contamination_join_is_equijoin_on_shingle_hash(spark, sf_dir):
     """Decontamination must match on the shingle hash, never doc x doc."""
     from vamana_spark.operators import dedup, sampling
@@ -403,7 +386,7 @@ def test_search_pq_rerank_keeps_corpus_at_rest(spark, sf_dir):
     # keys [vec_id] alone; post-fix every dedupe aggregate keys on
     # (query_id, vec_id).
     assert not re.search(r"HashAggregate.*[Kk]eys=\[vec_id[#\d]*\]\s*$", p, re.M), p
-    # r10 (VERDICT r9 #6): the vectors-at-rest re-rank join must
+    # the vectors-at-rest re-rank join must
     # BROADCAST the bounded shortlist side. Relying on AQE held at
     # bench scale but broke at 10M (the 1M-row shortlist crossed the
     # threshold and the join fell back to sort-merge, re-shuffling the
@@ -415,8 +398,8 @@ def test_search_pq_rerank_keeps_corpus_at_rest(spark, sf_dir):
     # ...and OUTSIDE the band (small shortlist at default settings) the
     # static plan must NOT carry a forced broadcast exchange of the
     # shortlist subtree — AQE's runtime conversion handles it without
-    # the driver-collect round trip (the r10->r11 bench drift fix,
-    # tools/profile_pq_search.py: 2.9-3.5 s forced vs 2.0-2.4 s AQE)
+    # the driver-collect round trip (measured at sf0.1: 2.9-3.5 s
+    # forced vs 2.0-2.4 s AQE per bench rep)
     df2 = pidx.search_pq(q.select(F.col("query_id"), F.col("query_vec")), k=5)
     df2.count()  # runs green at defaults
 

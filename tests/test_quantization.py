@@ -1,13 +1,12 @@
-"""SQ8 / PQ quantization: reconstruction bounds, ranking recall,
-codebook determinism."""
+"""SQ8 quantization: reconstruction bounds, code range, ranking recall.
+PQ/OPQ are tested on the index that serves them (test_partitioned.py)
+and at array level (test_kernels_property.py)."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from vamana_spark import exact
 from vamana_spark.operators import quantization as qz
-from vamana_spark.operators import similarity
 
 
 @pytest.fixture(scope="module")
@@ -68,216 +67,3 @@ def test_sq_knn_high_recall(emb):
     truth = exact.exact_knn(emb, q, k=10)
     approx = qz.sq_knn(emb, q, k=10, dim=dim)
     assert _recall(approx, truth) >= 0.9
-
-
-def test_pq_train_deterministic(emb):
-    dim = _dim(emb)
-    c1 = qz.pq_train(emb, dim, m=8, ksub=32, seed=42)
-    c2 = qz.pq_train(emb, dim, m=8, ksub=32, seed=42)
-    assert np.array_equal(c1.centroids, c2.centroids)
-
-
-def test_pq_rerank_recall(emb):
-    dim = _dim(emb)
-    cb = qz.pq_train(emb, dim, m=8, ksub=64, seed=42)
-    codes = qz.pq_encode(emb, cb).cache()
-    q = _queries(emb)
-    truth = exact.exact_knn(emb, q, k=10)
-    approx = qz.pq_search(codes, cb, q, k=10, shortlist=100, points=emb)
-    assert _recall(approx, truth) >= 0.7
-    # search invariants: exactly k per query, ranks 1..k, ascending dist
-    per_q = approx.groupBy("query_id").agg(
-        F.count("*").alias("n"), F.max("rank").alias("mx")
-    )
-    bad = per_q.where((F.col("n") != 10) | (F.col("mx") != 10)).count()
-    assert bad == 0
-
-
-def test_pq_pinned_codebook_is_row_slices(emb):
-    """pq_pinned_codebook must equal the row slices the SQL oracle
-    re-derives: centroid c of subspace j == embedding of the c-th
-    smallest vec_id, dims j*dsub..(j+1)*dsub."""
-    dim = _dim(emb)
-    cb = qz.pq_pinned_codebook(emb, dim, m=8, ksub=16)
-    rows = emb.orderBy("vec_id").limit(16).toPandas()
-    X = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
-    dsub = dim // 8
-    for j in range(8):
-        assert np.array_equal(cb.centroids[j], X[:, j * dsub : (j + 1) * dsub])
-
-
-def test_ivf_pinned_centers_skip_training(emb):
-    """ivf_build(centers=...) must assign against the given matrix
-    verbatim (no Lloyd drift): every vector lands on its argmin list."""
-    rows = emb.orderBy("vec_id").limit(4).toPandas()
-    C = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
-    assigns = similarity.ivf_build(emb, num_lists=4, centers=C)
-    assert np.array_equal(assigns._ivf_centers, C)
-    got = {r.vec_id: r.list_id for r in assigns.collect()}
-    pts = emb.toPandas()
-    X = np.stack(pts["embedding"].to_numpy()).astype(np.float64)
-    want = (
-        (X * X).sum(1)[:, None]
-        + (C * C).sum(1)[None, :]
-        - 2.0 * X @ C.T
-    ).argmin(axis=1)
-    assert all(got[v] == w for v, w in zip(pts["vec_id"], want))
-
-
-def test_pq_adc_beats_random(emb):
-    """ADC without re-rank is approximate but far better than chance."""
-    dim = _dim(emb)
-    cb = qz.pq_train(emb, dim, m=8, ksub=64, seed=42)
-    codes = qz.pq_encode(emb, cb)
-    q = _queries(emb)
-    truth = exact.exact_knn(emb, q, k=10)
-    approx = qz.pq_search(codes, cb, q, k=10)
-    n = emb.count()
-    assert _recall(approx, truth) >= 0.2 > 10 / n
-
-
-def test_ivfpq_rerank_recall(emb):
-    """IVFPQ = coarse routing + residual codes + exact re-rank; residual
-    encoding should make the routed shortlist at least as good as flat
-    PQ's at the same code budget."""
-    dim = _dim(emb)
-    codes, model = qz.ivfpq_build(emb, dim, num_lists=16, m=8, ksub=64, seed=42)
-    codes = codes.cache()
-    # every vector encoded exactly once, into a valid list
-    assert codes.count() == emb.count()
-    assert codes.where(
-        (F.col("list_id") < 0) | (F.col("list_id") >= model.num_lists)
-    ).count() == 0
-    q = _queries(emb)
-    truth = exact.exact_knn(emb, q, k=10)
-    approx = qz.ivfpq_search(
-        codes, model, q, k=10, nprobe=6, shortlist=100, points=emb
-    )
-    assert _recall(approx, truth) >= 0.7
-    per_q = approx.groupBy("query_id").agg(
-        F.count("*").alias("n"), F.max("rank").alias("mx")
-    )
-    assert per_q.where((F.col("n") != 10) | (F.col("mx") != 10)).count() == 0
-
-
-def test_ivfpq_build_deterministic(emb):
-    dim = _dim(emb)
-    _, m1 = qz.ivfpq_build(emb, dim, num_lists=8, m=8, ksub=32, seed=7)
-    _, m2 = qz.ivfpq_build(emb, dim, num_lists=8, m=8, ksub=32, seed=7)
-    assert np.allclose(m1.centers, m2.centers)
-    assert np.allclose(m1.codebook.centroids, m2.codebook.centroids)
-
-
-def test_pq_save_load_roundtrip(tmp_path, spark, embeddings):
-    from vamana_spark.operators import quantization as qz
-
-    queries = embeddings.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    cb = qz.pq_train(embeddings, dim=64, m=8, ksub=16, sample=400, seed=9)
-    codes = qz.pq_encode(embeddings, cb)
-    path = str(tmp_path / "pq")
-    qz.save_pq(path, cb, codes)
-    cb2, codes2 = qz.load_pq(spark, path)
-    assert (cb2.centroids == cb.centroids).all()
-    a = qz.pq_search(codes, cb, queries, k=5).collect()
-    b = qz.pq_search(codes2, cb2, queries, k=5).collect()
-    key = lambda r: (r.query_id, r.rank)
-    assert sorted(a, key=key) == sorted(b, key=key)
-
-
-def test_ivfpq_save_load_roundtrip(tmp_path, spark, embeddings):
-    from vamana_spark.operators import quantization as qz
-
-    queries = embeddings.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    codes, model = qz.ivfpq_build(embeddings, dim=64, num_lists=8, m=8, ksub=16,
-                                  sample=400, seed=9)
-    path = str(tmp_path / "ivfpq")
-    qz.save_ivfpq(path, model, codes)
-    model2, codes2 = qz.load_ivfpq(spark, path)
-    assert (model2.centers == model.centers).all()
-    assert (model2.codebook.centroids == model.codebook.centroids).all()
-    a = qz.ivfpq_search(codes, model, queries, k=5, nprobe=4).collect()
-    b = qz.ivfpq_search(codes2, model2, queries, k=5, nprobe=4).collect()
-    key = lambda r: (r.query_id, r.rank)
-    assert sorted(a, key=key) == sorted(b, key=key)
-
-
-# ------------------------------------------------------------------- OPQ
-
-@pytest.fixture(scope="module")
-def correlated(spark):
-    """Strongly anisotropic vectors (decaying spectrum under a random
-    rotation — the real-embedding shape): the case where the dimension
-    split's alignment matters and OPQ's learned rotation pays."""
-    rng = np.random.default_rng(7)
-    scales = np.exp(-np.arange(64) / 8.0)
-    Q, _ = np.linalg.qr(rng.standard_normal((64, 64)))
-    X = ((rng.standard_normal((600, 64)) * scales) @ Q).astype(np.float32)
-    return spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
-        "vec_id long, embedding array<float>",
-    ).cache()
-
-
-def test_opq_rotation_orthogonal_and_reconstruction_beats_pq(correlated):
-    opq = qz.opq_train(correlated, dim=64, m=8, ksub=16, sample=600,
-                       iters=6, opq_iters=4)
-    assert np.allclose(opq.R @ opq.R.T, np.eye(64), atol=1e-8)
-    pq = qz.pq_train(correlated, dim=64, m=8, ksub=16, sample=600, iters=6)
-    rows = correlated.orderBy("vec_id").toPandas()
-    X = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
-
-    def mse(Xs, cents):
-        err = 0.0
-        for j in range(8):
-            sub = Xs[:, j * 8 : (j + 1) * 8]
-            d = ((sub * sub).sum(1)[:, None] + (cents[j] ** 2).sum(1)[None, :]
-                 - 2.0 * sub @ cents[j].T)
-            err += d.min(axis=1).sum()
-        return err / len(Xs)
-
-    mse_pq = mse(X, pq.centroids)
-    mse_opq = mse(X @ opq.R, opq.codebook.centroids)
-    assert mse_opq < mse_pq * 0.9, (mse_opq, mse_pq)
-
-
-def test_opq_search_recall_on_correlated_data(correlated):
-    """OPQ ADC + exact re-rank clears the recall gate on data where
-    plain PQ's axis-aligned split struggles; rotation preserves L2 so
-    the re-rank runs in the original space."""
-    from vamana_spark import quality
-
-    opq = qz.opq_train(correlated, dim=64, m=8, ksub=16, sample=600,
-                       iters=6, opq_iters=4)
-    codes = qz.opq_encode(correlated, opq)
-    queries = correlated.where(F.col("vec_id") % 30 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    truth = exact.exact_knn(correlated, queries, k=10)
-    got = qz.opq_search(codes, opq, queries, k=10, points=correlated)
-    r = quality.avg_recall(got, truth, k=10)
-    assert r >= 0.8, f"OPQ recall@10 = {r}"
-    # ADC-only mode returns approx dists but valid ids
-    assert qz.opq_search(codes, opq, queries, k=5).count() == queries.count() * 5
-
-
-def test_opq_save_load_roundtrip(tmp_path, spark, correlated):
-    opq = qz.opq_train(correlated, dim=64, m=8, ksub=16, sample=600,
-                       iters=4, opq_iters=2)
-    codes = qz.opq_encode(correlated, opq)
-    path = str(tmp_path / "opq")
-    qz.save_opq(path, opq, codes)
-    loaded, codes2 = qz.load_opq(spark, path)
-    assert np.allclose(loaded.R, opq.R)
-    queries = correlated.where(F.col("vec_id") % 60 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    key = lambda r: (r.query_id, r.rank)  # noqa: E731
-    a = sorted(((r.query_id, r.rank, r.vec_id) for r in
-                qz.opq_search(codes, opq, queries, k=5, points=correlated).collect()))
-    b = sorted(((r.query_id, r.rank, r.vec_id) for r in
-                qz.opq_search(codes2, loaded, queries, k=5, points=correlated).collect()))
-    assert a == b

@@ -13,8 +13,6 @@ search → recall, main.cpp:33-168) plus the pipeline operators:
   sample  --input docs.parquet --output out.parquet
           [--n N [--weight-col col | --strata-col col | (uniform top-n)]
            | --temperature T [--group-col col]]
-  ivfpq   --input emb.parquet --queries q.parquet --output out.parquet
-          [--k --num-lists --nprobe --m --ksub]
   range   --input emb.parquet --queries q.parquet --output out.parquet
           --radius R
   delete  --index idx_dir --ids ids.parquet --output new_idx_dir
@@ -354,30 +352,6 @@ def cmd_search_text_batch(args) -> int:
         "probes": probes.count(),
         "result_rows": res.count(),
         "probes_with_hits": res.select("probe_id").distinct().count(),
-    }))
-    return 0
-
-
-def cmd_ivfpq(args) -> int:
-    from vamana_spark.operators import quantization as qz
-
-    spark = _spark("vamana-ivfpq")
-    emb = spark.read.parquet(args.input)
-    dim = emb.selectExpr(f"size({args.vec_col}) d").first()["d"]
-    codes, model = qz.ivfpq_build(
-        emb, dim, num_lists=args.num_lists, m=args.m, ksub=args.ksub,
-        seed=args.seed, vec_col=args.vec_col, id_col=args.id_col,
-    )
-    q = spark.read.parquet(args.queries)
-    out = qz.ivfpq_search(
-        codes, model, q, k=args.k, nprobe=args.nprobe,
-        shortlist=4 * args.k, points=emb,
-        id_col=args.id_col, vec_col=args.vec_col,
-    )
-    out.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({
-        "queries": q.count(), "result_rows": out.count(), "k": args.k,
-        "num_lists": args.num_lists, "nprobe": args.nprobe,
     }))
     return 0
 
@@ -773,20 +747,6 @@ def main(argv=None) -> int:
     stb.add_argument("--probe-id-col", dest="probe_id_col", default="probe_id")
     stb.add_argument("--terms-col", dest="terms_col", default="terms")
     stb.set_defaults(fn=cmd_search_text_batch)
-
-    iq = sub.add_parser("ivfpq")
-    iq.add_argument("--input", required=True)
-    iq.add_argument("--queries", required=True)
-    iq.add_argument("--output", required=True)
-    iq.add_argument("--id-col", dest="id_col", default="vec_id")
-    iq.add_argument("--vec-col", dest="vec_col", default="embedding")
-    iq.add_argument("--k", type=int, default=10)
-    iq.add_argument("--num-lists", dest="num_lists", type=int, default=16)
-    iq.add_argument("--nprobe", type=int, default=4)
-    iq.add_argument("--m", type=int, default=8)
-    iq.add_argument("--ksub", type=int, default=64)
-    iq.add_argument("--seed", type=int, default=42)
-    iq.set_defaults(fn=cmd_ivfpq)
 
     rg = sub.add_parser("range")
     rg.add_argument("--input", required=True)

@@ -46,8 +46,9 @@ def _unrolled_fold(a: ColumnOrName, b, term, dim: int) -> Column:
     codegen per FRESH plan, won back at ~0.4 µs/row. Use it on serving
     paths where the plan (and its broadcasts) is stable across batches
     so codegen caches — the partitioned tier's exact re-rank; keep the
-    fold on one-shot pipelines that rebuild the plan per call over
-    |Q|·k'-row shortlists (pq_search / ivfpq_search / ivf_topk).
+    fold on one-shot pipelines that rebuild the plan per call over small
+    candidate sets (``similarity.centroid_outliers``' per-call centroid
+    join).
     """
     acc = None
     for i in range(dim):

@@ -31,6 +31,9 @@ is an original implementation of the published DiskANN/Vamana algorithm
   parallelism happens at the Spark layer.
 - ``_wire_round``    — the one insert rule over a batch of nodes, run by
   ``build_vamana`` and ``VamanaIndex.add_points``.
+- ``_kmeans`` / ``_pq_codebooks`` / ``_opq_fit`` — seeded Lloyd, the one
+  per-subspace PQ codebook trainer and the OPQ rotation fit behind the
+  partitioned tier's cell centers and ``search_pq``.
 
 Vectors are float32 at rest; all distance math is float32 matrix ops
 (BLAS) — recall tolerances dwarf fp error here, unlike the exact-oracle
@@ -1079,3 +1082,98 @@ def brute_topk_batch_adc(
         np.concatenate(ids_out),
         np.concatenate(d_out),
     )
+
+
+def _kmeans(X: np.ndarray, k: int, seed: int, iters: int = 15) -> np.ndarray:
+    """Seeded Lloyd with kmeans++-style init; deterministic."""
+    rng = np.random.default_rng(seed)
+    n = X.shape[0]
+    k = min(k, n)
+    # kmeans++ init, incremental: track the running min-distance-to-chosen
+    # so each new center costs O(n*d), not O(k*n*d)
+    centers = [X[rng.integers(n)]]
+    d2 = ((X - centers[0]) ** 2).sum(-1)
+    for _ in range(1, k):
+        tot = d2.sum()
+        if tot <= 0:
+            c = X[rng.integers(n)]
+        else:
+            c = X[np.searchsorted(np.cumsum(d2 / tot), rng.random())]
+        centers.append(c)
+        np.minimum(d2, ((X - c) ** 2).sum(-1), out=d2)
+    C = np.asarray(centers, dtype=np.float64)
+    xsq = (X * X).sum(-1)
+    for _ in range(iters):
+        # BLAS form, no (n, k, d) temp: ||x||^2 + ||c||^2 - 2 x.c
+        d = xsq[:, None] + (C * C).sum(-1)[None, :] - 2.0 * (X @ C.T)
+        assign = d.argmin(axis=1)
+        for j in range(k):
+            mask = assign == j
+            if mask.any():
+                C[j] = X[mask].mean(axis=0)
+            else:  # re-seed empty cluster at the worst-served point
+                C[j] = X[d.min(axis=1).argmax()]
+    return C
+
+
+def _pq_codebooks(
+    X: np.ndarray, m: int, ksub: int, seed: int, iters: int
+) -> np.ndarray:
+    """PQ codebooks: one ``_kmeans`` per subspace j of X's m equal column
+    slices, seeded ``seed + j``. Returns (m, min(ksub, n), dim // m)
+    float64."""
+    dsub = X.shape[1] // m
+    return np.stack(
+        [
+            _kmeans(X[:, j * dsub : (j + 1) * dsub], ksub, seed + j, iters)
+            for j in range(m)
+        ]
+    )
+
+
+def _opq_fit(
+    X: np.ndarray,
+    m: int,
+    ksub: int,
+    seed: int,
+    iters: int = 10,
+    opq_iters: int = 8,
+) -> tuple:
+    """OPQ alternating minimization (Ge et al., CVPR 2013,
+    non-parametric variant), the rotation behind the partitioned tier's
+    ``search_pq(opq=True)``: fix R, train per-subspace codebooks on
+    X@R; fix the codebooks' reconstruction Y, solve
+    ``min_R ||X R - Y||_F  s.t. R^T R = I`` in closed form via SVD of
+    X^T Y (orthogonal Procrustes). Returns ``(R, cents)`` with R
+    (dim, dim) float64 and cents (m, ksub_eff, dsub) float64."""
+    X = np.asarray(X, dtype=np.float64)
+    dim = X.shape[1]
+    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
+    dsub = dim // m
+    ksub_eff = min(ksub, X.shape[0])
+
+    # seeded random orthogonal init (QR of a gaussian) — breaks the
+    # axis-aligned symmetry identity init would preserve
+    rng = np.random.default_rng(seed)
+    Q0, _ = np.linalg.qr(rng.standard_normal((dim, dim)))
+    R = Q0
+
+    def reconstruct(Xr: np.ndarray, cents: np.ndarray) -> np.ndarray:
+        Y = np.empty_like(Xr)
+        for j in range(m):
+            sub = Xr[:, j * dsub : (j + 1) * dsub]
+            d = (
+                (sub * sub).sum(1)[:, None]
+                + (cents[j] * cents[j]).sum(1)[None, :]
+                - 2.0 * sub @ cents[j].T
+            )
+            Y[:, j * dsub : (j + 1) * dsub] = cents[j][d.argmin(axis=1)]
+        return Y
+
+    cents = _pq_codebooks(X @ R, m, ksub_eff, seed, iters)
+    for _ in range(opq_iters):
+        Y = reconstruct(X @ R, cents)
+        U, _s, Vt = np.linalg.svd(X.T @ Y)
+        R = U @ Vt
+        cents = _pq_codebooks(X @ R, m, ksub_eff, seed, max(iters // 2, 3))
+    return R, cents

@@ -67,10 +67,10 @@ def _pad_cols(X: np.ndarray, m: int) -> np.ndarray:
 
 
 def _dedupe_centers(C: np.ndarray) -> np.ndarray:
-    """Make cell centers pairwise-distinct BEFORE the split repeat
-    (ADVICE r9): ``_kmeans`` can legitimately emit identical rows for
+    """Make cell centers pairwise-distinct BEFORE the split repeat:
+    ``kernels._kmeans`` can legitimately emit identical rows for
     DISTINCT cells (two empty clusters re-seeded at the same
-    worst-served point in one Lloyd iteration, quantization.py) —
+    worst-served point in one Lloyd iteration) —
     ``_cell_layout`` infers the split layout from adjacent duplicate
     runs, so distinct-cell duplicates would be misread as one split
     cell by add_points/resplit/diagnostics. Later duplicates get a
@@ -120,20 +120,19 @@ _SHARDS_SCHEMA = (
 
 # search_pq re-rank: FORCE-broadcast the ADC shortlist side of the
 # vectors-at-rest join only in the window where the hint changes the
-# plan for the better (retuned r11 after a measured sf0.1 drift):
+# plan for the better (tuned on a measured sf0.1 drift):
 #
 # - BELOW spark.sql.autoBroadcastJoinThreshold, AQE's local-shuffle-
 #   reader broadcast conversion already picks the broadcast join — and
 #   measurably beats the explicit hint at small scale (the hint's
 #   driver-collect broadcast exchange serializes the ADC pipeline:
-#   2.9-3.5 s vs 2.0-2.4 s per bench rep at sf0.1,
-#   tools/profile_pq_search.py — the whole r10 bench drift).
+#   2.9-3.5 s vs 2.0-2.4 s per bench rep at sf0.1).
 # - ABOVE the threshold, AQE falls back to sort-merge and re-shuffles
-#   the full corpus per call (the 10M-rung scale-killer r10 fixed) —
+#   the full corpus per call (the scale-killer at the 10M rung) —
 #   this is where the explicit hint is mandatory.
 # - ABOVE the hard row cap, fall back to the shuffle join: a forced
 #   HashedRelation costs several times the raw 16 B/row in driver and
-#   executor memory (ADVICE r10), so the cap matches the largest
+#   executor memory, so the cap matches the largest
 #   shortlist actually measured to work well (the 10M rung's 1M rows),
 #   not a theoretical 4M.
 #
@@ -146,9 +145,8 @@ _RERANK_BCAST_ROWS = 1_000_000
 _RERANK_FORCE_BYTES_PER_ROW = 32
 
 
-# shared size-conf parser (moved to functions.util in r14 so the ADC
-# re-rank in operators.quantization can use it without importing this
-# module); the old private name stays bound for existing call sites
+# the shared size-conf parser lives in functions.util; the private
+# name stays bound for this module's call sites
 from vamana_spark.functions.util import bytes_conf as _bytes_conf  # noqa: E402
 
 
@@ -217,10 +215,10 @@ def _make_shard_packer(
     beyond-RAM form (~dim*4/m× smaller; full vectors stay at rest
     in the shard parquet and are only read back for exact re-rank).
 
-    ``global_cents`` (the r8 default, trained once on a driver-side
+    ``global_cents`` (the default, trained once on a driver-side
     sample of CENTER RESIDUALS — see ``_packed_df``): every shard
     encodes ``x - center[shard]`` against the same residual codebook
-    (the IVF-PQ recipe, quantization.py ``ivfpq_build``) and the
+    (the IVF-PQ recipe: coarse cells, PQ on the residuals) and the
     per-shard k-means disappears — at 10M/2560 shards the 2560×m
     per-shard fits were 842 s, 3.5× the entire flat build. A single
     NON-residual global codebook is NOT an adequate replacement: each
@@ -237,7 +235,7 @@ def _make_shard_packer(
     ``centers`` must be the index's center matrix (transformed space)
     when ``global_cents`` is given.
 
-    ``rot`` (r11, OPQ — Ge et al. 2013): an orthogonal rotation in the
+    ``rot`` (OPQ — Ge et al. 2013): an orthogonal rotation in the
     PADDED residual space, trained once driver-side on the shared
     ``_pq_sample`` (``_opq_rotation``). Residuals are rotated before
     the subspace split and ``global_cents`` is trained in the rotated
@@ -276,8 +274,6 @@ def _make_shard_packer(
         med = kernels.medoid_of(P)
         buf = io.BytesIO()
         if mode == "pq":
-            from vamana_spark.operators.quantization import _kmeans
-
             n = P.shape[0]
             center = None
             if global_cents is not None:
@@ -288,18 +284,8 @@ def _make_shard_packer(
                     X = X @ np.asarray(rot, dtype=np.float64)
             else:
                 X = _pad_cols(P.astype(np.float64), pq_m)
-                ksub = min(pq_ksub, n)
-                dsub_t = X.shape[1] // pq_m
-                cents = np.stack(
-                    [
-                        _kmeans(
-                            X[:, j * dsub_t : (j + 1) * dsub_t],
-                            ksub,
-                            seed + 31 * shard + j,
-                            10,
-                        )
-                        for j in range(pq_m)
-                    ]
+                cents = kernels._pq_codebooks(
+                    X, pq_m, min(pq_ksub, n), seed + 31 * shard, 10
                 ).astype(np.float32)
             dsub = X.shape[1] // pq_m
             codes = np.empty((n, pq_m), dtype=np.uint8)
@@ -538,8 +524,6 @@ class PartitionedVamanaIndex:
         # neighbors across shards, which wrecks nprobe<S recall; trained
         # centers co-locate them. Driver-side on a tiny sample
         # (~32 pts/shard), deterministic, single small collect.
-        from vamana_spark.operators.quantization import _kmeans
-
         sample_n = max(num_shards * 32, 256)
         centers_pdf = (
             pts.orderBy(F.xxhash64(F.col("vec_id") + F.lit(params.seed)))
@@ -552,7 +536,7 @@ class PartitionedVamanaIndex:
             mips_m,
         ).astype(np.float64)
         C = _dedupe_centers(
-            _kmeans(Xs, min(num_shards, Xs.shape[0]), params.seed, 10)
+            kernels._kmeans(Xs, min(num_shards, Xs.shape[0]), params.seed, 10)
         )
 
         # oversized-cell splitting (see docstring): estimate cell
@@ -694,8 +678,8 @@ class PartitionedVamanaIndex:
         return X
 
     def _pq_global_cents(self, pq_m: int, pq_ksub: int) -> "np.ndarray":
-        """ONE sample-trained RESIDUAL codebook shared by every shard
-        (r8), trained on ``x - center[shard]`` in the
+        """ONE sample-trained RESIDUAL codebook shared by every shard,
+        trained on ``x - center[shard]`` in the
         METRIC-TRANSFORMED space the packer stores — the IVF-PQ recipe.
         Residuals matter: each shard is a Voronoi cell whose marginals
         are far narrower than the corpus-wide spread, and a
@@ -705,27 +689,18 @@ class PartitionedVamanaIndex:
         m driver fits that cost seconds, once per (m, ksub) pack.
         Encode stays distributed per shard. Sample contract:
         ``_pq_sample`` (hash-threshold, unbiased, map-only)."""
-        from vamana_spark.operators.quantization import _kmeans
-
         X = _pad_cols(self._pq_sample(), pq_m)  # ip: dim+1 -> multiple of m
-        dsub = X.shape[1] // pq_m
-        ksub = min(pq_ksub, X.shape[0])
-        seed = int(self.params.seed)
-        return np.stack(
-            [
-                _kmeans(X[:, j * dsub : (j + 1) * dsub], ksub, seed + j, 15)
-                for j in range(pq_m)
-            ]
+        return kernels._pq_codebooks(
+            X, pq_m, min(pq_ksub, X.shape[0]), int(self.params.seed), 15
         ).astype(np.float32)
 
     def _opq_rotation(self, pq_m: int, pq_ksub: int) -> tuple:
-        """OPQ for the partitioned tier (r11; VERDICT r10 "missing" #3):
-        ONE learned orthogonal rotation + rotated-residual codebook
-        shared by every shard, trained driver-side on the same memoized
-        ``_pq_sample`` the plain codebook uses (Ge et al. 2013,
-        non-parametric alternating minimization — the standalone
-        operator's ``_opq_fit`` core). The rotation decorrelates and
-        variance-balances the residual subspaces before the split,
+        """OPQ for the partitioned tier: ONE learned orthogonal rotation
+        + rotated-residual codebook shared by every shard, trained
+        driver-side on the same memoized ``_pq_sample`` the plain
+        codebook uses (Ge et al. 2013, non-parametric alternating
+        minimization — ``kernels._opq_fit``). The rotation decorrelates
+        and variance-balances the residual subspaces before the split,
         buying back ADC shortlist recall on clustered/anisotropic
         corpora at IDENTICAL serving memory (same m, same uint8 codes;
         the dim² float32 rotation rides in each shard blob — 16 KB at
@@ -738,8 +713,6 @@ class PartitionedVamanaIndex:
             cache = self._opq_cache = {}
         if key in cache:
             return cache[key]
-        from vamana_spark.operators.quantization import _kmeans, _opq_fit
-
         X = _pad_cols(self._pq_sample(), pq_m)
         # the rotation has only dim² parameters — fit the alternating
         # minimization on a bounded sub-sample (measured: the full-50k
@@ -753,19 +726,13 @@ class PartitionedVamanaIndex:
             Xf = X[rng.choice(X.shape[0], size=cap, replace=False)]
         else:
             Xf = X
-        R, _ = _opq_fit(
+        R, _ = kernels._opq_fit(
             Xf, int(pq_m), min(int(pq_ksub), Xf.shape[0]),
             int(self.params.seed), iters=10, opq_iters=4,
         )
-        Xr = X @ R
-        dsub = Xr.shape[1] // int(pq_m)
-        ksub = min(int(pq_ksub), X.shape[0])
-        seed = int(self.params.seed)
-        cents = np.stack(
-            [
-                _kmeans(Xr[:, j * dsub : (j + 1) * dsub], ksub, seed + j, 15)
-                for j in range(int(pq_m))
-            ]
+        cents = kernels._pq_codebooks(
+            X @ R, int(pq_m), min(int(pq_ksub), X.shape[0]),
+            int(self.params.seed), 15,
         )
         out = (R.astype(np.float32), cents.astype(np.float32))
         cache[key] = out
@@ -849,8 +816,6 @@ class PartitionedVamanaIndex:
             cached.get(key) == val for key, val in settings.items()
         ):
             return cached
-        from vamana_spark.operators.quantization import _kmeans
-
         dim = int(self.params.dim)
         cands = [m for m in (8, 16, 32) if dim % m == 0 and m < dim]
         if not cands:
@@ -915,13 +880,7 @@ class PartitionedVamanaIndex:
             # ip: the sample is dim+1 wide (MIPS augmentation) — pad to
             # the candidate's alignment, exactly as the packer will
             Xm = _pad_cols(X, m)
-            dsub = Xm.shape[1] // m
-            cents = np.stack(
-                [
-                    _kmeans(Xm[:, j * dsub : (j + 1) * dsub], ksub, seed + j, 15)
-                    for j in range(m)
-                ]
-            )
+            cents = kernels._pq_codebooks(Xm, m, ksub, seed, 15)
             agree = _agreement(Xm, cents, m)
             # string keys: the profile roundtrips through _meta.json
             results[str(m)] = round(agree, 4)
@@ -1745,7 +1704,7 @@ class PartitionedVamanaIndex:
         )
         # one count() against the caller's (typically cached) query
         # batch prices the decision — measured 0.06 s/call at bench
-        # scale (tools/profile_pq_search.py), noise next to the join
+        # scale, noise next to the join
         nq = queries.count()
         rows = nq * kprime
         # force the hint ONLY where AQE won't broadcast by itself and
@@ -2253,7 +2212,6 @@ def resplit_oversized(
     changed_set = set(int(c) for c in changed)
 
     from vamana_spark.index.vamana import _metric_transform
-    from vamana_spark.operators.quantization import _kmeans
 
     metric, mips_m = params.metric, params.mips_m
     seed = int(params.seed)
@@ -2320,7 +2278,7 @@ def resplit_oversized(
             continue
         kc = max(1, min(k_by_cell[c], Xc.shape[0]))
         k_by_cell[c] = kc  # degenerate tiny cells can't exceed sample
-        sub_centers[c] = _kmeans(Xc, kc, seed + 7 * c + 1, 10).astype(
+        sub_centers[c] = kernels._kmeans(Xc, kc, seed + 7 * c + 1, 10).astype(
             np.float32
         )
         sub_offset[c] = off

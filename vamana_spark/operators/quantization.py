@@ -1,47 +1,25 @@
-"""Vector quantization — scalar (SQ8) and product quantization (PQ).
+"""Scalar vector quantization (SQ8) and exact kNN over its codes.
 
-The compressed representations that make 100-TB-scale similarity search
-feasible: a 128-dim float32 corpus at 10^9 vectors is ~512 GB raw; SQ8
-is 4x smaller, PQ with m=8 sub-codes is 64x smaller (8 bytes/vector →
-the whole corpus fits a broadcast or a single executor's memory, and
-brute-force ADC over codes is a few table lookups per vector).
+An 8-bit code per component makes a float32 corpus 4x smaller. The
+reference engine stores raw float32 only (vamana.h:26); this module
+answers "what does 4x compression cost in ranking" with an exact kNN
+over dequantized vectors, not with a second index. Product
+quantization (PQ/OPQ) lives in the index itself:
+``PartitionedVamanaIndex.search_pq``.
 
-The reference engine stores raw float32 only (vamana.h:26) — this is
-extension surface in the spirit of its own "TODO: add inner product"
-(readme.md:76): alternative representations under the same kNN contract.
-
-Scale shapes:
-- SQ8 is pure Catalyst: one aggregate pass for per-dimension bounds
-  (map-side partial min/max — no shuffle of vectors), then a zip_with
-  projection. Fully DuckDB-oracle-able, including kNN over dequantized
-  vectors (IEEE double ops in identical order on both engines).
-- PQ training samples to the driver (seeded Lloyd per subspace — the
-  codebook is tiny: m*ksub*dsub doubles); encode and ADC search are
-  mapInPandas over code partitions with a broadcast codebook, emitting
-  only per-partition top-k — the same two-stage partial-top-k shape as
-  ``exact.exact_knn_batch``, so the |Q|x|P| product never materializes.
-- ``pq_search(..., points=...)`` re-ranks the ADC shortlist with exact
-  distances (join shortlist → points on vec_id — an equi-join on the
-  candidate set only), the standard production recipe: PQ prunes, exact
-  re-rank restores recall.
-- OPQ (Ge et al., CVPR 2013) learns an orthogonal rotation before the
-  subspace split — driver-side alternating minimization on the same
-  sample contract as ``pq_train``; encode/search compose with the PQ
-  ops through one extra Arrow map pass (rotation), zero shuffles.
+Scale shape: SQ8 is pure Catalyst. One aggregate pass computes the
+per-dimension bounds (map-side partial min/max, no shuffle of vectors),
+then a zip_with projection encodes. The whole path is DuckDB-oracle-able,
+including kNN over dequantized vectors (IEEE double ops in identical
+order on both engines).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Iterator, Optional
+from typing import Optional
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from vamana_spark.functions.util import ensure_parallelism
-from vamana_spark.functions.vector import pairwise_distance
 
 
 # ------------------------------------------------------------ scalar (SQ8)
@@ -143,838 +121,3 @@ def sq_knn(
     return exact.exact_knn(
         deq, q_deq, k, round_digits=round_digits, exclude_self=exclude_self
     )
-
-
-# ------------------------------------------------------- product quantization
-
-@dataclass(frozen=True)
-class PQCodebook:
-    """m subspace codebooks of ksub centroids each; centroids has shape
-    (m, ksub, dsub) float64, dim = m * dsub."""
-
-    centroids: np.ndarray
-    dim: int
-    m: int
-    ksub: int
-
-    @property
-    def dsub(self) -> int:
-        return self.dim // self.m
-
-
-def _kmeans(X: np.ndarray, k: int, seed: int, iters: int = 15) -> np.ndarray:
-    """Seeded Lloyd with kmeans++-style init; deterministic."""
-    rng = np.random.default_rng(seed)
-    n = X.shape[0]
-    k = min(k, n)
-    # kmeans++ init, incremental: track the running min-distance-to-chosen
-    # so each new center costs O(n*d), not O(k*n*d)
-    centers = [X[rng.integers(n)]]
-    d2 = ((X - centers[0]) ** 2).sum(-1)
-    for _ in range(1, k):
-        tot = d2.sum()
-        if tot <= 0:
-            c = X[rng.integers(n)]
-        else:
-            c = X[np.searchsorted(np.cumsum(d2 / tot), rng.random())]
-        centers.append(c)
-        np.minimum(d2, ((X - c) ** 2).sum(-1), out=d2)
-    C = np.asarray(centers, dtype=np.float64)
-    xsq = (X * X).sum(-1)
-    for _ in range(iters):
-        # BLAS form, no (n, k, d) temp: ||x||^2 + ||c||^2 - 2 x.c
-        d = xsq[:, None] + (C * C).sum(-1)[None, :] - 2.0 * (X @ C.T)
-        assign = d.argmin(axis=1)
-        for j in range(k):
-            mask = assign == j
-            if mask.any():
-                C[j] = X[mask].mean(axis=0)
-            else:  # re-seed empty cluster at the worst-served point
-                C[j] = X[d.min(axis=1).argmax()]
-    return C
-
-
-def pq_train(
-    df: DataFrame,
-    dim: int,
-    m: int = 8,
-    ksub: int = 256,
-    sample: int = 20000,
-    seed: int = 42,
-    iters: int = 15,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> PQCodebook:
-    """Train per-subspace codebooks on a deterministic sample (ordered by
-    id — seeded and reproducible). The codebook is m*ksub*dsub doubles
-    (for m=8, ksub=256, dim=128: 256 KB) — driver-side k-means is the
-    right tool; the DATA never leaves the cluster except this sample."""
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    rows = (
-        df.select(id_col, vec_col).orderBy(id_col).limit(sample).toPandas()
-    )
-    X = np.stack(rows[vec_col].to_numpy()).astype(np.float64)
-    dsub = dim // m
-    ksub = min(ksub, X.shape[0])
-    cents = np.stack(
-        [
-            _kmeans(X[:, j * dsub : (j + 1) * dsub], ksub, seed + j, iters)
-            for j in range(m)
-        ]
-    )
-    return PQCodebook(centroids=cents, dim=dim, m=m, ksub=ksub)
-
-
-def pq_pinned_codebook(
-    df: DataFrame,
-    dim: int,
-    m: int = 8,
-    ksub: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> PQCodebook:
-    """Deterministic, SQL-expressible codebook — no k-means: centroid c
-    of subspace j is the j-th sub-vector of the row with the c-th
-    smallest id. Exists for the bit-strict correctness gate (the
-    q_pq_knn oracle re-derives the identical codebook in DuckDB via
-    list slices), so encode + ADC + re-rank are dual-checked end to
-    end; production training stays ``pq_train``."""
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    rows = df.select(id_col, vec_col).orderBy(id_col).limit(ksub).toPandas()
-    X = np.stack(rows[vec_col].to_numpy()).astype(np.float64)
-    dsub = dim // m
-    cents = np.stack([X[:, j * dsub : (j + 1) * dsub] for j in range(m)])
-    return PQCodebook(centroids=cents, dim=dim, m=m, ksub=X.shape[0])
-
-
-def pq_encode(
-    df: DataFrame,
-    codebook: PQCodebook,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(vec_id, codes: array<int>[m]) — nearest centroid per subspace.
-    mapInPandas with a broadcast codebook; zero shuffles."""
-    spark = df.sparkSession
-    bcb = spark.sparkContext.broadcast(codebook.centroids)
-    m, dsub = codebook.m, codebook.dsub
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C = bcb.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                sub = X[:, j * dsub : (j + 1) * dsub]
-                d = (
-                    (sub * sub).sum(1)[:, None]
-                    + (C[j] * C[j]).sum(1)[None, :]
-                    - 2.0 * (sub @ C[j].T)
-                )
-                codes[:, j] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
-
-    return ensure_parallelism(df.select(id_col, vec_col)).mapInPandas(
-        encode, schema=f"{id_col} long, codes array<int>"
-    )
-
-
-def pq_search(
-    codes_df: DataFrame,
-    codebook: PQCodebook,
-    queries: DataFrame,
-    k: int,
-    shortlist: int = 0,
-    points: Optional[DataFrame] = None,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: Optional[int] = None,
-) -> DataFrame:
-    """ADC top-k over PQ codes: per partition, one (m, ksub) lookup table
-    per query, approx distance = sum of m table lookups; emit local
-    top-k', window-merge globally. With ``points`` given, the merged
-    shortlist (default 4k) is re-ranked by exact distance — an equi-join
-    on candidates only — returning (query_id, vec_id, dist, rank).
-    Without ``points``, returns ADC distances (approx) in 'dist'.
-    """
-    spark = codes_df.sparkSession
-    kprime = shortlist or (4 * k if points is not None else k)
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv")
-    ).toPandas()
-    qids = np.asarray(qrows["query_id"], dtype=np.int64)
-    Q = np.stack(qrows["qv"].to_numpy()).astype(np.float64)
-    bq = spark.sparkContext.broadcast((qids, Q, codebook.centroids))
-    m, dsub = codebook.m, codebook.dsub
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, Qm, C = bq.value
-        # LUT[q, j, c] = ||Q[q, sub_j] - C[j, c]||^2
-        lut = np.stack(
-            [
-                (
-                    (Qm[:, j * dsub : (j + 1) * dsub] ** 2).sum(1)[:, None]
-                    + (C[j] ** 2).sum(1)[None, :]
-                    - 2.0 * Qm[:, j * dsub : (j + 1) * dsub] @ C[j].T
-                )
-                for j in range(m)
-            ],
-            axis=1,
-        )
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            vids = pdf[id_col].to_numpy()
-            # dists[q, p] = sum_j lut[q, j, codes[p, j]]
-            dists = np.zeros((len(ids_q), len(pdf)), dtype=np.float64)
-            for j in range(m):
-                dists += lut[:, j, :][:, codes[:, j]]
-            kk = min(kprime, dists.shape[1])
-            part = np.argpartition(dists, kk - 1, axis=1)[:, :kk]
-            rows_q = np.repeat(ids_q, kk)
-            rows_v = vids[part.ravel()]
-            rows_d = np.take_along_axis(dists, part, axis=1).ravel()
-            yield pd.DataFrame(
-                {"query_id": rows_q, "vec_id": rows_v, "dist": rows_d}
-            )
-
-    local = codes_df.mapInPandas(adc, schema="query_id long, vec_id long, dist double")
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    merged = (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= kprime)
-        .drop("rank")
-    )
-    if points is None:
-        out = merged.withColumn(
-            "rank",
-            F.row_number().over(w),
-        ).where(F.col("rank") <= k)
-        if round_digits is not None:
-            out = out.withColumn("dist", F.round("dist", round_digits))
-        return out
-    return _exact_rerank(
-        merged, points, queries, k,
-        query_id_col, query_vec_col, id_col, vec_col, round_digits,
-    )
-
-
-def _exact_rerank(
-    merged: DataFrame,
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    query_id_col: str,
-    query_vec_col: str,
-    id_col: str,
-    vec_col: str,
-    round_digits: Optional[int],
-) -> DataFrame:
-    """Shared exact-re-rank tail for the ADC searchers (pq_search,
-    opq_search): join the merged shortlist (query_id, vec_id) back to
-    the points on vec_id — an equi-join on candidates only — compute
-    exact distances against ``queries``, and cut to top-k."""
-    p = points.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_pv"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("_qv")
-    )
-    # r14: steer the broadcast side. Left alone, Catalyst broadcasts the
-    # MERGED shortlist (the side it estimates smaller), streaming the
-    # points scan — which throws away merged's query_id window
-    # partitioning, so the final rank window pays its own Exchange.
-    # When the points side itself fits a broadcast (Catalyst's free
-    # plan estimate, no job), hint IT instead: merged stays the
-    # streamed side, its partitioning flows through both broadcast
-    # joins, and the rank window needs NO exchange (guide §2.4; plan:
-    # 2 Exchanges -> 1, output row-identical — A/B checked at sf0.1).
-    # Past the threshold (corpus-scale points) the hint is withheld
-    # and the bounded shortlist broadcasts as before — the only
-    # possible choice at scale.
-    try:
-        est = int(p._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = None
-    from vamana_spark.functions.util import bytes_conf
-
-    thresh = bytes_conf(
-        points.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 << 20
-    )
-    p_side = F.broadcast(p) if est is not None and 0 < est <= thresh else p
-    exactd = (
-        merged.drop("dist")
-        .join(p_side, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            # fold, not unroll: the codebook (and so the broadcast) is fresh per
-            # call, so the unrolled tree's ~0.5s codegen cost would recur on
-            # every pipeline invocation while the shortlist is only |Q|*k' rows
-            pairwise_distance("_qv", "_pv").alias("dist"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    out = exactd.withColumn("rank", F.row_number().over(w2)).where(F.col("rank") <= k)
-    if round_digits is not None:
-        out = out.withColumn("dist", F.round("dist", round_digits))
-    return out.select("query_id", "vec_id", "dist", "rank")
-
-
-# ------------------------------------------------------------------- IVFPQ
-
-@dataclass(frozen=True)
-class IVFPQModel:
-    """Coarse centers (nlist, dim) + a PQ codebook trained on RESIDUALS
-    (x - center[list]). Residual encoding is what makes IVFPQ beat flat
-    PQ: within a list the residual energy is a fraction of the raw
-    vector's, so the same code budget quantizes much more finely."""
-
-    centers: np.ndarray
-    codebook: PQCodebook
-
-    @property
-    def num_lists(self) -> int:
-        return self.centers.shape[0]
-
-
-def ivfpq_build(
-    emb: DataFrame,
-    dim: int,
-    num_lists: int = 16,
-    m: int = 8,
-    ksub: int = 64,
-    sample: int = 20000,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[DataFrame, IVFPQModel]:
-    """(codes_df, model): the standard billion-scale ANN layout.
-
-    codes_df is (vec_id, list_id, codes[m]) — at m=8 that is ~12 bytes
-    a vector, so 10^9 vectors fit one executor and the scan for a query
-    touches only nprobe/num_lists of them.
-
-    One distributed pass total: coarse k-means runs via
-    ``similarity.ivf_build`` (broadcast-centers assign + groupBy update);
-    PQ training happens driver-side on a deterministic residual sample;
-    assignment + residual encoding fuse into ONE mapInPandas — no join
-    between an assignment table and the vectors, zero shuffles.
-    """
-    from vamana_spark.operators.similarity import ivf_build
-
-    assignments = ivf_build(emb, num_lists, id_col, vec_col, seed)
-    C = assignments._ivf_centers  # (num_lists, dim) float64
-
-    # driver-side residual sample → per-subspace codebooks
-    rows = (
-        emb.select(id_col, vec_col).orderBy(id_col).limit(sample).toPandas()
-    )
-    X = np.stack(rows[vec_col].to_numpy()).astype(np.float64)
-    lids = (
-        (X * X).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * (X @ C.T)
-    ).argmin(axis=1)
-    R = X - C[lids]
-    dsub = dim // m
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    ksub = min(ksub, R.shape[0])
-    cents = np.stack(
-        [
-            _kmeans(R[:, j * dsub : (j + 1) * dsub], ksub, seed + j)
-            for j in range(m)
-        ]
-    )
-    model = IVFPQModel(centers=C, codebook=PQCodebook(cents, dim, m, ksub))
-
-    spark = emb.sparkSession
-    bm = spark.sparkContext.broadcast((C, cents))
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cv, CB = bm.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Xb = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d = (
-                (Xb * Xb).sum(1)[:, None]
-                + (Cv * Cv).sum(1)[None, :]
-                - 2.0 * (Xb @ Cv.T)
-            )
-            lid = d.argmin(axis=1)
-            Rb = Xb - Cv[lid]
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                sub = Rb[:, j * dsub : (j + 1) * dsub]
-                dj = (
-                    (sub * sub).sum(1)[:, None]
-                    + (CB[j] * CB[j]).sum(1)[None, :]
-                    - 2.0 * (sub @ CB[j].T)
-                )
-                codes[:, j] = dj.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "list_id": lid.astype(np.int32),
-                    "codes": list(codes),
-                }
-            )
-
-    codes_df = ensure_parallelism(emb.select(id_col, vec_col)).mapInPandas(
-        encode, schema=f"{id_col} long, list_id int, codes array<int>"
-    )
-    return codes_df, model
-
-
-def ivfpq_search(
-    codes_df: DataFrame,
-    model: IVFPQModel,
-    queries: DataFrame,
-    k: int,
-    nprobe: int = 4,
-    shortlist: int = 0,
-    points: Optional[DataFrame] = None,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: Optional[int] = None,
-) -> DataFrame:
-    """Probe the ``nprobe`` nearest lists per query, ADC over residual
-    codes, partial-top-k merge, optional exact re-rank.
-
-    Scale shape: the probes table (|Q| x nprobe rows) broadcasts; the
-    candidate cut is an equi-join on list_id, so the scan reads only
-    ~n*nprobe/num_lists code rows and the shuffle carries local top-k'
-    rows per (partition, query) — never the full candidate set. The LUT
-    is per (query, probed list) because the code quantizes the residual
-    against THAT list's center: dist ~ ||(q - c_l) - decode(codes)||^2.
-    """
-    spark = codes_df.sparkSession
-    kprime = shortlist or (4 * k if points is not None else k)
-    m, dsub = model.codebook.m, model.codebook.dsub
-    C, cents = model.centers, model.codebook.centroids
-
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv")
-    ).toPandas()
-    qids = np.asarray(qrows["query_id"], dtype=np.int64)
-    Q = np.stack(qrows["qv"].to_numpy()).astype(np.float64)
-    qd = (Q * Q).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * (Q @ C.T)
-    nprobe = min(nprobe, model.num_lists)
-    probe = np.argsort(qd, axis=1)[:, :nprobe]
-    probes = spark.createDataFrame(
-        [
-            (int(qid), int(lid))
-            for qid, lids in zip(qids, probe)
-            for lid in lids
-        ],
-        "query_id long, list_id int",
-    )
-    bq = spark.sparkContext.broadcast((qids, Q, C, cents))
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, Qm, Cv, CB = bq.value
-        qpos = {int(q): i for i, q in enumerate(ids_q)}
-        # batched LUT construction (VERDICT r5 #6): the old per-
-        # (query, list) path built each LUT with an m-step Python loop
-        # of tiny matvecs; here every LUT a batch needs is one batched
-        # GEMM over the m axis (the brute_topk_batch_adc recipe)
-        CBm = np.asarray(CB)  # (m, ksub, dsub)
-        CBt = np.ascontiguousarray(CBm.transpose(0, 2, 1))  # (m, dsub, ksub)
-        cb2 = np.einsum("mkd,mkd->mk", CBm, CBm)  # (m, ksub)
-        luts: dict[tuple[int, int], np.ndarray] = {}
-
-        def build_luts(keys: list) -> None:
-            fresh = [kk for kk in keys if kk not in luts]
-            if not fresh:
-                return
-            qi = np.fromiter((kk[0] for kk in fresh), dtype=np.int64)
-            li = np.fromiter((kk[1] for kk in fresh), dtype=np.int64)
-            R = (Qm[qi] - Cv[li]).reshape(len(fresh), m, dsub)
-            r2 = np.einsum("umd,umd->um", R, R)  # (u, m)
-            lut = np.matmul(R.transpose(1, 0, 2), CBt)  # (m, u, ksub)
-            lut *= -2.0
-            lut += cb2[:, None, :]
-            lut += r2.T[:, :, None]
-            for t, kk in enumerate(fresh):
-                luts[kk] = np.ascontiguousarray(lut[:, t, :])
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            vids = pdf[id_col].to_numpy()
-            qs = pdf["query_id"].to_numpy(dtype=np.int64)
-            lids = pdf["list_id"].to_numpy()
-            dist = np.empty(len(pdf), dtype=np.float64)
-            # vectorize per (query, list) group — one LUT gather each
-            order = np.lexsort((lids, qs))
-            sq, sl, sc = qs[order], lids[order], codes[order]
-            starts = [0] + [
-                t
-                for t in range(1, len(order))
-                if sq[t] != sq[t - 1] or sl[t] != sl[t - 1]
-            ]
-            build_luts([(qpos[int(sq[s])], int(sl[s])) for s in starts])
-            sd = np.empty(len(pdf), dtype=np.float64)
-            for gi, start in enumerate(starts):
-                end = starts[gi + 1] if gi + 1 < len(starts) else len(order)
-                lut = luts[(qpos[int(sq[start])], int(sl[start]))]
-                blk = sc[start:end]
-                acc = lut[0, blk[:, 0]]
-                for j in range(1, m):
-                    acc = acc + lut[j, blk[:, j]]
-                sd[start:end] = acc
-            dist[order] = sd
-            out = pd.DataFrame(
-                {"query_id": qs, "vec_id": vids, "dist": dist}
-            )
-            # local top-k' per query before the shuffle
-            out = (
-                out.sort_values(["query_id", "dist", "vec_id"])
-                .groupby("query_id", sort=False)
-                .head(kprime)
-            )
-            yield out
-
-    cands = codes_df.join(F.broadcast(probes), "list_id")
-    local = cands.mapInPandas(
-        adc, schema="query_id long, vec_id long, dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    merged = (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= kprime)
-        .drop("rank")
-    )
-    if points is None:
-        out = merged.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= k
-        )
-        if round_digits is not None:
-            out = out.withColumn("dist", F.round("dist", round_digits))
-        return out
-    # same exact-re-rank tail as pq_search (folded distance, candidate
-    # equi-joins only) — shared helper since r14
-    return _exact_rerank(
-        merged, points, queries, k,
-        query_id_col, query_vec_col, id_col, vec_col, round_digits,
-    )
-
-
-# ------------------------------------------------------------- persistence
-
-def save_pq(path: str, codebook: PQCodebook, codes_df: DataFrame) -> None:
-    """Directory format for a flat-PQ layout: codes/ (Parquet, splittable)
-    + _codebook.json. Same shape as VamanaIndex.save — Parquet data,
-    JSON sidecar for the driver-sized model."""
-    import json
-    import os
-
-    codes_df.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    with open(os.path.join(path, "_codebook.json"), "w") as f:
-        json.dump(
-            {
-                "dim": codebook.dim,
-                "m": codebook.m,
-                "ksub": codebook.ksub,
-                "centroids": codebook.centroids.tolist(),
-            },
-            f,
-        )
-
-
-def load_pq(spark, path: str) -> tuple[PQCodebook, DataFrame]:
-    import json
-    import os
-
-    with open(os.path.join(path, "_codebook.json")) as f:
-        meta = json.load(f)
-    cb = PQCodebook(
-        centroids=np.asarray(meta["centroids"], dtype=np.float64),
-        dim=int(meta["dim"]),
-        m=int(meta["m"]),
-        ksub=int(meta["ksub"]),
-    )
-    return cb, spark.read.parquet(os.path.join(path, "codes"))
-
-
-def save_ivfpq(path: str, model: IVFPQModel, codes_df: DataFrame) -> None:
-    """Directory format for an IVFPQ layout: codes/ + _model.json
-    (coarse centers + residual codebooks)."""
-    import json
-    import os
-
-    codes_df.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    with open(os.path.join(path, "_model.json"), "w") as f:
-        json.dump(
-            {
-                "centers": model.centers.tolist(),
-                "dim": model.codebook.dim,
-                "m": model.codebook.m,
-                "ksub": model.codebook.ksub,
-                "centroids": model.codebook.centroids.tolist(),
-            },
-            f,
-        )
-
-
-def load_ivfpq(spark, path: str) -> tuple[IVFPQModel, DataFrame]:
-    import json
-    import os
-
-    with open(os.path.join(path, "_model.json")) as f:
-        meta = json.load(f)
-    model = IVFPQModel(
-        centers=np.asarray(meta["centers"], dtype=np.float64),
-        codebook=PQCodebook(
-            centroids=np.asarray(meta["centroids"], dtype=np.float64),
-            dim=int(meta["dim"]),
-            m=int(meta["m"]),
-            ksub=int(meta["ksub"]),
-        ),
-    )
-    return model, spark.read.parquet(os.path.join(path, "codes"))
-
-
-# ------------------------------------------------------------------- OPQ
-
-@dataclass(frozen=True)
-class OPQModel:
-    """Orthogonal rotation R (dim, dim) + a PQ codebook trained in the
-    ROTATED space (Optimized Product Quantization, Ge et al., CVPR
-    2013, non-parametric variant). PQ's quantization error depends on
-    how the dimension split aligns with the data's correlation
-    structure; OPQ learns an orthogonal R that decorrelates and
-    balances variance across the m subspaces before splitting, by
-    alternating PQ training with an orthogonal-Procrustes solve.
-    Rotation preserves L2 exactly, so search semantics are unchanged —
-    only the ADC shortlist quality improves on correlated data. On
-    already-isotropic data (the uniform scale-ladder sets) OPQ ~=
-    PQ by construction; its payoff is real-world embedding matrices,
-    which are strongly anisotropic."""
-
-    R: np.ndarray
-    codebook: PQCodebook
-
-
-def _opq_fit(
-    X: np.ndarray,
-    m: int,
-    ksub: int,
-    seed: int,
-    iters: int = 10,
-    opq_iters: int = 8,
-) -> tuple:
-    """Array-based OPQ alternating-minimization core shared by
-    ``opq_train`` (standalone operator) and the partitioned tier's
-    ``_opq_rotation`` (r11): fix R, train per-subspace codebooks on
-    X@R; fix the codebooks' reconstruction Y, solve
-    ``min_R ||X R - Y||_F  s.t. R^T R = I`` in closed form via SVD of
-    X^T Y (orthogonal Procrustes). Returns ``(R, cents)`` with R
-    (dim, dim) float64 and cents (m, ksub_eff, dsub) float64."""
-    X = np.asarray(X, dtype=np.float64)
-    dim = X.shape[1]
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    dsub = dim // m
-    ksub_eff = min(ksub, X.shape[0])
-
-    # seeded random orthogonal init (QR of a gaussian) — breaks the
-    # axis-aligned symmetry identity init would preserve
-    rng = np.random.default_rng(seed)
-    Q0, _ = np.linalg.qr(rng.standard_normal((dim, dim)))
-    R = Q0
-
-    def train_cents(Xr: np.ndarray, kmeans_iters: int) -> np.ndarray:
-        return np.stack(
-            [
-                _kmeans(
-                    Xr[:, j * dsub : (j + 1) * dsub], ksub_eff, seed + j,
-                    kmeans_iters,
-                )
-                for j in range(m)
-            ]
-        )
-
-    def reconstruct(Xr: np.ndarray, cents: np.ndarray) -> np.ndarray:
-        Y = np.empty_like(Xr)
-        for j in range(m):
-            sub = Xr[:, j * dsub : (j + 1) * dsub]
-            d = (
-                (sub * sub).sum(1)[:, None]
-                + (cents[j] * cents[j]).sum(1)[None, :]
-                - 2.0 * sub @ cents[j].T
-            )
-            Y[:, j * dsub : (j + 1) * dsub] = cents[j][d.argmin(axis=1)]
-        return Y
-
-    cents = train_cents(X @ R, iters)
-    for _ in range(opq_iters):
-        Y = reconstruct(X @ R, cents)
-        U, _s, Vt = np.linalg.svd(X.T @ Y)
-        R = U @ Vt
-        cents = train_cents(X @ R, max(iters // 2, 3))
-    return R, cents
-
-
-def opq_train(
-    df: DataFrame,
-    dim: int,
-    m: int = 8,
-    ksub: int = 256,
-    sample: int = 20000,
-    seed: int = 42,
-    iters: int = 10,
-    opq_iters: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> OPQModel:
-    """Alternating minimization on a deterministic driver-side sample
-    (same sampling contract as ``pq_train``) — see ``_opq_fit`` for
-    the math. The model is driver-sized: R is dim^2 doubles, the
-    codebook m*ksub*dsub."""
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    rows = df.select(id_col, vec_col).orderBy(id_col).limit(sample).toPandas()
-    X = np.stack(rows[vec_col].to_numpy()).astype(np.float64)
-    R, cents = _opq_fit(X, m, ksub, seed, iters, opq_iters)
-    return OPQModel(
-        R=R,
-        codebook=PQCodebook(
-            centroids=cents, dim=dim, m=m, ksub=int(cents.shape[1])
-        ),
-    )
-
-
-def rotate_vectors(
-    df: DataFrame,
-    R: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id_col, vec_col) with ``vec_col`` mapped through the orthogonal
-    rotation — one Arrow map pass, zero shuffles, broadcast R."""
-    spark = df.sparkSession
-    bR = spark.sparkContext.broadcast(np.ascontiguousarray(R))
-
-    def rot(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Rm = bR.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Xr = (X @ Rm).astype(np.float32)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), vec_col: list(Xr)}
-            )
-
-    return ensure_parallelism(df.select(id_col, vec_col)).mapInPandas(
-        rot, schema=f"{id_col} long, {vec_col} array<float>"
-    )
-
-
-def opq_encode(
-    df: DataFrame,
-    model: OPQModel,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Rotate then PQ-encode: (vec_id, codes[m]); zero shuffles."""
-    return pq_encode(
-        rotate_vectors(df, model.R, vec_col, id_col),
-        model.codebook,
-        vec_col=vec_col,
-        id_col=id_col,
-    )
-
-
-def opq_search(
-    codes_df: DataFrame,
-    model: OPQModel,
-    queries: DataFrame,
-    k: int,
-    shortlist: int = 0,
-    points: Optional[DataFrame] = None,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: Optional[int] = None,
-) -> DataFrame:
-    """ADC search over OPQ codes: queries are rotated into the code
-    space for the LUT walk; the exact re-rank runs in the ORIGINAL
-    space (rotation is orthogonal, so exact distances are identical —
-    no need to rotate the corpus)."""
-    kprime = shortlist or (4 * k if points is not None else k)
-    q_rot = rotate_vectors(
-        queries, model.R, vec_col=query_vec_col, id_col=query_id_col
-    )
-    merged = pq_search(
-        codes_df, model.codebook, q_rot, k=kprime,
-        shortlist=kprime, points=None,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-        id_col=id_col,
-    ).drop("rank")
-    if points is None:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist").asc(), F.col("vec_id").asc()
-        )
-        out = merged.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= k
-        )
-        if round_digits is not None:
-            out = out.withColumn("dist", F.round("dist", round_digits))
-        return out
-    # shared tail, with the UN-rotated queries: rotation is orthogonal,
-    # so exact distances in the original space are identical
-    return _exact_rerank(
-        merged, points, queries, k,
-        query_id_col, query_vec_col, id_col, vec_col, round_digits,
-    )
-
-
-def save_opq(path: str, model: OPQModel, codes_df: DataFrame) -> None:
-    """Directory format mirroring save_pq: codes/ + _model.json (R and
-    codebook are both driver-sized)."""
-    import json
-    import os
-
-    codes_df.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    with open(os.path.join(path, "_model.json"), "w") as f:
-        json.dump(
-            {
-                "dim": model.codebook.dim,
-                "m": model.codebook.m,
-                "ksub": model.codebook.ksub,
-                "R": model.R.tolist(),
-                "centroids": model.codebook.centroids.tolist(),
-            },
-            f,
-        )
-
-
-def load_opq(spark, path: str) -> tuple[OPQModel, DataFrame]:
-    import json
-    import os
-
-    with open(os.path.join(path, "_model.json")) as f:
-        meta = json.load(f)
-    model = OPQModel(
-        R=np.asarray(meta["R"], dtype=np.float64),
-        codebook=PQCodebook(
-            centroids=np.asarray(meta["centroids"], dtype=np.float64),
-            dim=int(meta["dim"]),
-            m=int(meta["m"]),
-            ksub=int(meta["ksub"]),
-        ),
-    )
-    return model, spark.read.parquet(os.path.join(path, "codes"))

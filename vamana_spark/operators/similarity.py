@@ -1,14 +1,14 @@
 """Similarity-search operators over embedding columns (SURVEY.md §2b X3/X4).
 
-Three tiers, trading exactness for scale:
-  1. ``knn_self_join``      — exact top-k per point (brute force, the
-     baseline and oracle).
-  2. ``ivf_topk``           — IVF: k-means-style coarse quantizer, search
-     only the ``nprobe`` nearest inverted lists. The equi-join on
-     cluster id replaces the cross product: this is the 100-TB shape.
-  3. ``lsh_similarity_join``— random-hyperplane LSH bucketing for
-     radius-style cosine joins.
+- ``knn_self_join``       — exact top-k per point (brute force, the
+  baseline and oracle).
+- ``ivf_build``           — the k-means coarse quantizer that blocks
+  ``dedup.semantic_dedup``'s per-cluster scan.
+- ``lsh_similarity_join`` — random-hyperplane LSH bucketing for
+  radius-style cosine joins.
 Plus ``normalize_embeddings`` (X4) as a plain column expression.
+Approximate kNN search is ``VamanaIndex`` / ``PartitionedVamanaIndex``
+(``build(graph=False)`` is their IVF-flat form).
 """
 
 from __future__ import annotations
@@ -70,45 +70,30 @@ def ivf_build(
     vec_col: str = "embedding",
     seed: int = 42,
     iters: int = 5,
-    centers: Optional[np.ndarray] = None,
 ) -> DataFrame:
     """IVF coarse quantizer: Lloyd's k-means (seeded, few iters) run as
     repeated mapInPandas passes; returns the assignment DataFrame
     (vec_id, list_id) and stashes centers in ``.attrs``-style return
     (centers as a local ndarray on the driver).
 
-    Centroid update shape (r4 verdict #5): each Lloyd pass fuses assign
+    Centroid update shape: each Lloyd pass fuses assign
     + per-list (sum-vector, count) partials INSIDE the one mapInPandas
     over the data — what reaches the driver is ``num_lists`` rows per
     partition (a few KB), reduced in numpy. No join-back, no
     ``posexplode`` of the full dataset, zero shuffles per iteration —
     vs the old plan's full-data join + dim×n-row shuffle, ×iters.
 
-    The assignment join key (list_id) is what kills the cross product at
-    scale: probing c of C lists scans ~n*c/C vectors.
-
-    ``centers``: optional (num_lists, dim) float64 matrix of PINNED
-    coarse centers — skips sampling AND Lloyd's iterations entirely and
-    assigns against the given matrix as-is. This makes the whole IVF
-    pipeline a deterministic, SQL-expressible function of its inputs
-    (the oracle for q_ivf_topk replicates it in DuckDB); production
-    callers leave it None and get the trained quantizer.
+    The assignment key (list_id) is what kills the cross product at
+    scale: a scan blocked on it compares only vectors of the same list.
     """
     spark = emb.sparkSession
-    if centers is not None:
-        C = np.asarray(centers, dtype=np.float64)
-        assert C.shape[0] == num_lists, (
-            f"pinned centers rows {C.shape[0]} != num_lists {num_lists}"
-        )
-        iters = 0
-    else:
-        sample = (
-            emb.select(vec_col)
-            .orderBy(F.xxhash64(F.col(id_col) + F.lit(seed)))
-            .limit(num_lists)
-            .toPandas()
-        )
-        C = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
+    sample = (
+        emb.select(vec_col)
+        .orderBy(F.xxhash64(F.col(id_col) + F.lit(seed)))
+        .limit(num_lists)
+        .toPandas()
+    )
+    C = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
 
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(C)
@@ -170,83 +155,6 @@ def ivf_build(
     )
     assignments._ivf_centers = C  # driver-side attachment for probing
     return assignments
-
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    num_lists: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    centers: Optional[np.ndarray] = None,
-) -> DataFrame:
-    """Approximate top-k: probe the ``nprobe`` nearest IVF lists per query.
-
-    Plan: queries×lists probe assignment is a ``mapInPandas`` against
-    the broadcast (tiny) center matrix — executor-side, so the query
-    stream never collects to the driver (same fix class as the
-    partitioned index's ``_route``, r4 verdict #2); the candidate scan
-    is an equi-join on list_id followed by the same partial-top-k merge
-    as exact_knn_batch — no cross product, shuffle carries only
-    candidate rows.
-    """
-    spark = emb.sparkSession
-    assignments = ivf_build(emb, num_lists, id_col, vec_col, seed, centers=centers)
-    C = assignments._ivf_centers
-
-    bcC = spark.sparkContext.broadcast(C)
-    take = int(min(nprobe, C.shape[0]))
-
-    def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cv = bcC.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.stack(pdf["query_vec"].to_numpy()).astype(np.float64)
-            qd = exact._dist_matrix(Q, Cv, "l2sq")
-            if take >= Cv.shape[0]:
-                pr = np.broadcast_to(np.arange(Cv.shape[0]), qd.shape)
-            else:
-                # stable sort, not argpartition: boundary ties resolve to
-                # the smaller list_id, the same rule the SQL oracle uses
-                pr = np.argsort(qd, axis=1, kind="stable")[:, :take]
-            rep = np.repeat(pdf["query_id"].to_numpy(dtype=np.int64), take)
-            yield pd.DataFrame(
-                {"query_id": rep, "list_id": np.asarray(pr).ravel().astype(np.int32)}
-            )
-
-    probes = queries.select("query_id", "query_vec").mapInPandas(
-        route, schema="query_id long, list_id int"
-    )
-
-    cands = (
-        assignments.join(F.broadcast(probes), "list_id")
-        .join(emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_pv")), "vec_id")
-        .join(
-            F.broadcast(
-                queries.select("query_id", F.col("query_vec").alias("_qv"))
-            ),
-            "query_id",
-        )
-    )
-    from vamana_spark.functions.vector import pairwise_distance
-
-    d = cands.select(
-        "query_id",
-        "vec_id",
-        # fold, not unroll: ivf_topk builds fresh centers per call, so the
-        # unrolled tree's per-plan codegen cost would recur every invocation
-        pairwise_distance("_qv", "_pv", "l2sq").alias("dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        d.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("dist", 4).alias("dist"), F.col("rank").cast("long").alias("rank"))
-    )
 
 
 def lsh_similarity_join(

@@ -631,86 +631,6 @@ def q_opq_serving(spark, sf_dir):
     )
 
 
-@declare(
-    "q_ivf_topk",
-    f"""
-    WITH cent AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS list_id,
-             embedding
-      FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)
-    ),
-    assign AS (
-      SELECT vec_id, embedding, list_id FROM (
-        SELECT v.vec_id, v.embedding, c.list_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY {_sq_l2_sql('v.embedding', 'c.embedding')}, c.list_id
-               ) AS rn
-        FROM embeddings v, cent c
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
-    probe AS (
-      SELECT query_id, list_id FROM (
-        SELECT q.query_id, c.list_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY {_sq_l2_sql('q.embedding', 'c.embedding')}, c.list_id
-               ) AS rn
-        FROM q, cent c
-      ) WHERE rn <= 4
-    ),
-    d AS (
-      SELECT q.query_id, a.vec_id,
-             {_sq_l2_sql('q.embedding', 'a.embedding')} AS dist
-      FROM q
-      JOIN probe p ON p.query_id = q.query_id
-      JOIN assign a ON a.list_id = p.list_id
-    ),
-    r AS (
-      SELECT query_id, vec_id, dist,
-             row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rank
-      FROM d
-    )
-    SELECT query_id, vec_id, round(dist, 4) AS dist, rank
-    FROM r WHERE rank <= 10
-    """,
-)
-def q_ivf_topk(spark, sf_dir):
-    """X3 approx variant: IVF probe search, bit-strict via
-    PINNED coarse centers (the embeddings of the 8 smallest vec_ids) —
-    list assignment, nprobe routing, candidate equi-join, and top-k
-    merge are all re-derived independently in the DuckDB oracle. The
-    k-means-trained quantizer stays covered by q_ivf_exact (exhaustive
-    probe == exact kNN, hash-green) and the recall tests."""
-    import numpy as np
-
-    e = _emb(spark, sf_dir)
-    cent = (
-        e.orderBy("vec_id").limit(8).select("embedding").toPandas()
-    )
-    C = np.stack(cent["embedding"].to_numpy()).astype(np.float64)
-    return similarity.ivf_topk(
-        e, _fixed_queries(e, 50), k=10, num_lists=8, nprobe=4, centers=C
-    )
-
-
-@declare("q_ivf_exact", _KNN_ORACLE)
-def q_ivf_exact(spark, sf_dir):
-    """IVF exhaustive-probe mode is bit-exact: ``nprobe == num_lists``
-    scans every list, so the probe routing + list equi-join + partial
-    top-k merge must reproduce the exact-kNN DuckDB oracle — the
-    correctness anchor under X3's approximate (nprobe < num_lists)
-    path, same pattern as q_partitioned_exact."""
-    e = _emb(spark, sf_dir)
-    out = similarity.ivf_topk(
-        e, _fixed_queries(e, 25), k=10, num_lists=8, nprobe=8
-    )
-    return out.select(
-        "query_id", "vec_id", "dist", F.col("rank").cast("int").alias("rank")
-    )
-
-
 _COS_AB_SQL = (
     "1.0 - list_sum(list_transform(list_zip(a.embedding, b.embedding),"
     " x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
@@ -1925,249 +1845,6 @@ def q_ranking_metrics(spark, sf_dir):
     return quality.ranking_metrics(approx, truth, k=10, round_digits=6).orderBy(
         "query_id"
     )
-
-
-@declare(
-    "q_pq_knn",
-    f"""
-    WITH js AS (SELECT CAST(j AS INT) AS j FROM range(8) AS t(j)),
-    base AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code,
-             embedding
-      FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 64)
-    ),
-    cb AS (
-      SELECT js.j, base.code,
-             list_slice(base.embedding, js.j * 8 + 1, js.j * 8 + 8) AS cvec
-      FROM base, js
-    ),
-    vsub AS (
-      SELECT v.vec_id, js.j,
-             list_slice(v.embedding, js.j * 8 + 1, js.j * 8 + 8) AS sv
-      FROM embeddings v, js
-    ),
-    enc AS (
-      SELECT vec_id, j, code FROM (
-        SELECT s.vec_id, s.j, c.code,
-               row_number() OVER (
-                 PARTITION BY s.vec_id, s.j
-                 ORDER BY {_sq_l2_sql('s.sv', 'c.cvec')}, c.code
-               ) AS rn
-        FROM vsub s JOIN cb c ON c.j = s.j
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
-    qsub AS (
-      SELECT q.query_id, js.j,
-             list_slice(q.embedding, js.j * 8 + 1, js.j * 8 + 8) AS sv
-      FROM q, js
-    ),
-    adc AS (
-      SELECT qs.query_id, en.vec_id,
-             sum({_sq_l2_sql('qs.sv', 'c.cvec')}) AS adist
-      FROM qsub qs
-      JOIN enc en ON en.j = qs.j
-      JOIN cb c ON c.j = en.j AND c.code = en.code
-      GROUP BY qs.query_id, en.vec_id
-    ),
-    short AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS rn
-        FROM adc
-      ) WHERE rn <= 100
-    ),
-    d AS (
-      SELECT s.query_id, s.vec_id,
-             {_sq_l2_sql('q.embedding', 'p.embedding')} AS dist
-      FROM short s
-      JOIN q ON q.query_id = s.query_id
-      JOIN embeddings p ON p.vec_id = s.vec_id
-    ),
-    r AS (
-      SELECT query_id, vec_id, dist,
-             row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rank
-      FROM d
-    )
-    SELECT query_id, vec_id, round(dist, 4) AS dist, CAST(rank AS INT) AS rank
-    FROM r WHERE rank <= 10
-    """,
-)
-def q_pq_knn(spark, sf_dir):
-    """PQ ADC shortlist + exact re-rank, bit-strict via a
-    PINNED codebook (``pq_pinned_codebook``: centroid c of subspace j =
-    the j-th 8-dim slice of the row with the c-th smallest vec_id). The
-    DuckDB oracle re-derives the identical codebook with list slices and
-    replays encode (per-subspace argmin, ties to the smaller code), ADC
-    (sum of per-subspace table distances), the top-100 shortlist, and
-    the exact re-rank — the whole PQ serving pipeline dual-checked end
-    to end. K-means-trained codebooks stay covered by the recall gates
-    (q_opq_knn, q_ivfpq_knn)."""
-    e = _emb(spark, sf_dir)
-    dim = len(e.select("embedding").first()[0])
-    cb = quantization.pq_pinned_codebook(e, dim, m=8, ksub=64)
-    codes = quantization.pq_encode(e, cb)
-    return quantization.pq_search(
-        codes, cb, _fixed_queries(e, 50), k=10, shortlist=100, points=e,
-        round_digits=4,
-    ).orderBy("query_id", "rank")
-
-
-@declare(
-    "q_opq_exact",
-    f"""
-    WITH js AS (SELECT CAST(j AS INT) AS j FROM range(8) AS t(j)),
-    rot AS (
-      SELECT vec_id,
-             [embedding[(37 * (i - 1)) % 64 + 1] for i in range(1, 65)] AS embedding
-      FROM embeddings
-    ),
-    base AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code,
-             embedding
-      FROM (SELECT vec_id, embedding FROM rot ORDER BY vec_id LIMIT 64)
-    ),
-    cb AS (
-      SELECT js.j, base.code,
-             list_slice(base.embedding, js.j * 8 + 1, js.j * 8 + 8) AS cvec
-      FROM base, js
-    ),
-    vsub AS (
-      SELECT v.vec_id, js.j,
-             list_slice(v.embedding, js.j * 8 + 1, js.j * 8 + 8) AS sv
-      FROM rot v, js
-    ),
-    enc AS (
-      SELECT vec_id, j, code FROM (
-        SELECT s.vec_id, s.j, c.code,
-               row_number() OVER (
-                 PARTITION BY s.vec_id, s.j
-                 ORDER BY {_sq_l2_sql('s.sv', 'c.cvec')}, c.code
-               ) AS rn
-        FROM vsub s JOIN cb c ON c.j = s.j
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
-    qrot AS (
-      SELECT query_id,
-             [embedding[(37 * (i - 1)) % 64 + 1] for i in range(1, 65)] AS embedding
-      FROM q
-    ),
-    qsub AS (
-      SELECT qr.query_id, js.j,
-             list_slice(qr.embedding, js.j * 8 + 1, js.j * 8 + 8) AS sv
-      FROM qrot qr, js
-    ),
-    adc AS (
-      SELECT qs.query_id, en.vec_id,
-             sum({_sq_l2_sql('qs.sv', 'c.cvec')}) AS adist
-      FROM qsub qs
-      JOIN enc en ON en.j = qs.j
-      JOIN cb c ON c.j = en.j AND c.code = en.code
-      GROUP BY qs.query_id, en.vec_id
-    ),
-    short AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS rn
-        FROM adc
-      ) WHERE rn <= 100
-    ),
-    d AS (
-      SELECT s.query_id, s.vec_id,
-             {_sq_l2_sql('q.embedding', 'p.embedding')} AS dist
-      FROM short s
-      JOIN q ON q.query_id = s.query_id
-      JOIN embeddings p ON p.vec_id = s.vec_id
-    ),
-    r AS (
-      SELECT query_id, vec_id, dist,
-             row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rank
-      FROM d
-    )
-    SELECT query_id, vec_id, round(dist, 4) AS dist, CAST(rank AS INT) AS rank
-    FROM r WHERE rank <= 10
-    """,
-)
-def q_opq_exact(spark, sf_dir):
-    """The OPQ serving pipeline hash-matched end to end: a PINNED
-    orthogonal rotation — the permutation matrix R[(37*i) % 64, i] = 1,
-    exactly representable so the SQL
-    oracle rotates by list element permutation with zero float
-    arithmetic — composed with the pinned codebook trick of q_pq_knn,
-    TRAINED IN THE ROTATED SPACE like any OPQ model. rotate -> encode ->
-    ADC -> shortlist -> exact re-rank in the ORIGINAL space (rotation
-    preserves L2) all run on the hash path; the LEARNED rotation stays
-    covered by q_opq_knn's recall + orthogonality gate."""
-    import numpy as np
-
-    e = _emb(spark, sf_dir)
-    dim = len(e.select("embedding").first()[0])
-    R = np.zeros((dim, dim), dtype=np.float64)
-    for i in range(dim):
-        R[(37 * i) % dim, i] = 1.0  # (X @ R)[:, i] = X[:, 37i mod dim]
-    rotated = quantization.rotate_vectors(e, R)
-    model = quantization.OPQModel(
-        R=R, codebook=quantization.pq_pinned_codebook(rotated, dim, m=8, ksub=64)
-    )
-    codes = quantization.opq_encode(e, model)
-    return quantization.opq_search(
-        codes, model, _fixed_queries(e, 50), k=10, shortlist=100, points=e,
-        round_digits=4,
-    ).orderBy("query_id", "rank")
-
-
-@declare("q_opq_knn")
-def q_opq_knn(spark, sf_dir):
-    """OPQ (Ge et al. 2013): learned-orthogonal-rotation PQ — ADC in
-    the rotated space, exact re-rank in the original (rotation
-    preserves L2). Rows-only: the rotation/codebook are alternating
-    k-means outputs; ``ok`` embeds recall@10 >= 0.8 vs exact kNN plus
-    the R^T R = I orthogonality invariant."""
-    from vamana_spark import quality
-
-    e = _emb(spark, sf_dir)
-    dim = len(e.select("embedding").first()[0])
-    model = quantization.opq_train(
-        e, dim, m=8, ksub=64, seed=42, iters=6, opq_iters=4
-    )
-    import numpy as np
-
-    orth = bool(np.allclose(model.R @ model.R.T, np.eye(dim), atol=1e-8))
-    codes = quantization.opq_encode(e, model)
-    q = _fixed_queries(e, 50)
-    got = quantization.opq_search(
-        codes, model, q, k=10, shortlist=100, points=e, round_digits=4
-    )
-    return (
-        quality.recall_with_ok(got, exact.exact_knn(e, q, k=10), k=10)
-        .withColumn("ok", F.col("ok") & F.lit(orth))
-    )
-
-
-@declare("q_ivfpq_knn")
-def q_ivfpq_knn(spark, sf_dir):
-    """IVF routing + residual-PQ ADC + exact re-rank — the standard
-    billion-scale ANN architecture. Rows-only (k-means outputs);
-    ``ok`` embeds avg recall@10 >= 0.8 vs exact kNN. nprobe=12/16:
-    the sf0.01 table is UNIFORM random 64-d — the routing-hostile
-    geometry where IVF must probe wide (measured here: 6→0.69,
-    10→0.84, 12→0.91); clustered corpora calibrate far lower
-    (q_calibrated_serving; 0.27% of shards on a clustered 10M corpus)."""
-    from vamana_spark import quality
-
-    e = _emb(spark, sf_dir)
-    dim = len(e.select("embedding").first()[0])
-    codes, model = quantization.ivfpq_build(
-        e, dim, num_lists=16, m=8, ksub=64, seed=42
-    )
-    q = _fixed_queries(e, 50)
-    got = quantization.ivfpq_search(
-        codes, model, q, k=10, nprobe=12, shortlist=100,
-        points=e, round_digits=4,
-    )
-    rec = quality.avg_recall(got, exact.exact_knn(e, q, k=10), k=10)
-    return got.withColumn("ok", F.lit(rec >= 0.8)).orderBy("query_id", "rank")
 
 
 # ======================================================================
