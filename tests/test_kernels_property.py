@@ -361,6 +361,29 @@ def test_cell_layout_and_subshard_properties(nsplit_list, seed):
     assert np.all(_subshard_of(vids, np.ones(200, dtype=np.int64)) == 0)
 
 
+
+def test_dedupe_centers_keeps_a_distinct_prefix():
+    """``_dedupe_centers(vstack(P, N))`` returns a pairwise-distinct
+    prefix ``P`` byte-identical and bumps only the ``N`` rows that
+    collide with an earlier row, by one ULP on component 0 — so de-duping
+    new sub-centers after the centers they must not collide with leaves
+    those centers where they are."""
+    from vamana_spark.index.cells import _dedupe_centers
+
+    rng = np.random.default_rng(11)
+    P = rng.standard_normal((5, 4)).astype(np.float32)
+    N = np.vstack([P[2], rng.standard_normal(4), P[2]]).astype(np.float32)
+    D = _dedupe_centers(np.vstack([P, N]))
+    assert D.dtype == np.float32
+    assert D[:5].tobytes() == P.tobytes()
+    up = np.nextafter(P[2, 0], np.float32(np.inf), dtype=np.float32)
+    assert D[5, 0] == up and D[5, 1:].tobytes() == P[2, 1:].tobytes()
+    assert D[6].tobytes() == N[1].tobytes()
+    # the third row collides with P[2] and then with the bumped N[0]
+    assert D[7, 0] == np.nextafter(up, np.float32(np.inf), dtype=np.float32)
+    assert len({r.tobytes() for r in D}) == len(D)
+
+
 def test_adc_search_takes_the_float_walk():
     """With an exact codebook (one subspace, one centroid per point) a
     node's ADC distance equals its float distance, so below exhaustive

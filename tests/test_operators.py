@@ -2336,6 +2336,30 @@ def test_semantic_dedup_rejects_non_integral_ids(spark):
         dedup.semantic_dedup(df, id_col="vec_id")
 
 
+
+def test_semantic_dedup_corpus_smaller_than_num_clusters(spark):
+    """A corpus with fewer rows than ``num_clusters`` trains one cell
+    per row, ``probes`` clamps to the cells trained, and an empty frame
+    returns no rows with the documented schema."""
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((3, 8))
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
+    rows += [(10 + i, [float(3.0 * x) for x in v]) for i, v in enumerate(base)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for probes in (1, 8):
+        out = {r.vec_id: r for r in dedup.semantic_dedup(
+            df, threshold=0.95, num_clusters=16, seed=1, probes=probes
+        ).collect()}
+        assert sorted(out) == [0, 1, 2, 10, 11, 12]
+        for i in range(3):
+            assert out[i].keep
+            assert not out[10 + i].keep and out[10 + i].dup_of == i
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    got = dedup.semantic_dedup(empty)
+    assert got.columns == ["vec_id", "cluster_id", "keep", "dup_of", "max_sim"]
+    assert got.count() == 0
+
+
 # ---------------------------------------------------- incremental dedup
 
 def _inc_dedup_frames(spark):

@@ -1,0 +1,211 @@
+"""Cell rules shared by the partitioned index and semantic dedup.
+
+Both cut the corpus into k-means cells, put each point in its ℓ nearest
+cells (DiskANN's ℓ-closest-center recipe) and bound cells that outgrow
+their share — one partitioning with local structures per cell and
+global routing, as in REPOSE. Center de-dup, the split layout, the
+sub-shard hash, the split-count fixed point, the ℓ-nearest-cell assign
+and semantic dedup's distributed Lloyd trainer each live here once.
+"""
+
+from __future__ import annotations
+
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from vamana_spark import exact
+from vamana_spark.index.vamana import _metric_transform
+
+# Fibonacci-hash multiplier for the deterministic vec_id -> sub-shard
+# map. One definition so build-time assignment, add_points routing, and
+# diagnostics agree bit-for-bit on which sub-shard a vector lands in.
+_SPLIT_HASH_MULT = np.uint64(0x9E3779B97F4A7C15)
+
+
+def _subshard_of(vec_ids: np.ndarray, nsplit: np.ndarray) -> np.ndarray:
+    """Deterministic sub-shard level for each vec_id within its cell's
+    split count (elementwise; ``nsplit`` broadcast-compatible with
+    ``vec_ids``). 1-split cells always map to level 0."""
+    h = (vec_ids.astype(np.uint64) * _SPLIT_HASH_MULT) >> np.uint64(33)
+    return h.astype(np.int64) % nsplit
+
+
+def _dedupe_centers(C: np.ndarray) -> np.ndarray:
+    """Make cell centers pairwise-distinct BEFORE the split repeat:
+    ``kernels._kmeans`` can legitimately emit identical rows for
+    DISTINCT cells (two empty clusters re-seeded at the same
+    worst-served point in one Lloyd iteration) —
+    ``_cell_layout`` infers the split layout from adjacent duplicate
+    runs, so distinct-cell duplicates would be misread as one split
+    cell by add_points/resplit/diagnostics. Later duplicates get a
+    deterministic epsilon bump on component 0 (stacked until unique):
+    routing distances shift O(1e-5) — far below any cell separation
+    that matters — and the layout inference becomes unambiguous.
+    Intentional split-cell duplicates are introduced AFTER this, by
+    ``np.repeat``, and stay bit-identical. The bump is ULP-sized
+    (``np.nextafter``) so it registers at ANY magnitude; _cell_layout
+    compares exact values, so one ULP fully disambiguates. Rows are
+    visited in order and only a row equal to an EARLIER row moves, so
+    a pairwise-distinct prefix comes back unchanged."""
+    C = np.asarray(C, dtype=np.float32).copy()
+    seen = set()
+    for i in range(C.shape[0]):
+        guard = 0
+        while C[i].tobytes() in seen and guard < 4096:
+            C[i, 0] = np.nextafter(C[i, 0], np.float32(np.inf), dtype=np.float32)
+            guard += 1
+        seen.add(C[i].tobytes())
+    return C
+
+
+def _cell_layout(centers: np.ndarray):
+    """Recover the (base, nsplit, cell_of_shard) split layout from the
+    center matrix itself: oversized-cell splitting repeats a parent
+    cell's center once per sub-shard, so runs of consecutive duplicate
+    rows ARE the layout — no extra persisted state, and a pre-split
+    index (all rows distinct) degrades to the identity layout. Returns
+    int64 arrays: ``base[cell]`` = first shard row of the cell,
+    ``nsplit[cell]`` = its sub-shard count, ``cell_of_shard[shard]`` =
+    owning cell."""
+    C = np.asarray(centers)
+    if C.shape[0] == 0:
+        z = np.zeros(0, dtype=np.int64)
+        return z, z, z
+    new = np.ones(C.shape[0], dtype=bool)
+    new[1:] = np.any(C[1:] != C[:-1], axis=1)
+    cell_of_shard = (np.cumsum(new) - 1).astype(np.int64)
+    base = np.flatnonzero(new).astype(np.int64)
+    nsplit = np.diff(np.append(base, C.shape[0])).astype(np.int64)
+    return base, nsplit, cell_of_shard
+
+
+def _split_counts(
+    sizes: np.ndarray, start: np.ndarray, total: int, factor: float, fixed: int = 0
+) -> np.ndarray:
+    """Split counts, per cell, that keep every sub-shard within
+    ``factor`` × the fair share of the RESULTING layout (``total`` rows
+    over ``fixed`` + sum(counts) shards), iterated to the fixed point.
+    Normalizing by the pre-split shard count alone is not a fixed point
+    of itself: populations [940, 20, 20, 20] at factor 2 would split
+    1→2 on one maintenance call and 2→3 on the next with no data change.
+    Counts start at ``start`` and never shrink; the iteration is
+    monotone and converges for any factor > 1, so a second call on
+    unchanged populations lands on the same counts."""
+    want = start.copy()
+    for _ in range(100):
+        cap = float(factor) * total / max(fixed + int(want.sum()), 1)
+        nxt = np.maximum(want, np.ceil(sizes / cap).astype(np.int64))
+        if np.array_equal(nxt, want):
+            break
+        want = nxt
+    return want
+
+
+def assign_cells(
+    pts: DataFrame, C: np.ndarray, overlap: int, metric: str, mips_m
+) -> DataFrame:
+    """``pts`` (vec_id, embedding) -> (vec_id, embedding, shard): one row
+    per point and cell for the point's ``overlap`` nearest cells.
+
+    Routing runs on ONE center row per cell (``_cell_layout``), in the
+    metric-transformed space: overlap must insure across distinct
+    cells, not across a split cell's sub-shards, and routing on the
+    repeated rows would tie every point to a split cell's first
+    sub-shard. Inside a split cell the sub-shard is the deterministic
+    vec_id hash ``_subshard_of``."""
+    base, nsplit, _ = _cell_layout(C)
+    bc = pts.sparkSession.sparkContext.broadcast(
+        (np.asarray(C)[base].astype(np.float64), base, nsplit)
+    )
+
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        Cc, base_v, nsplit_v = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            X = _metric_transform(
+                np.stack(pdf["embedding"].to_numpy()).astype(np.float32),
+                metric,
+                mips_m,
+            ).astype(np.float64)
+            d = exact._dist_matrix(X, Cc, "l2sq")
+            if overlap == 1:
+                sh = d.argmin(axis=1)[:, None]
+            elif overlap >= d.shape[1]:
+                sh = np.broadcast_to(np.arange(d.shape[1]), d.shape)
+            else:
+                sh = np.argpartition(d, overlap - 1, axis=1)[:, :overlap]
+            sh = np.asarray(sh)
+            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
+            final = base_v[sh] + _subshard_of(vid[:, None], nsplit_v[sh])
+            out = pdf[["vec_id", "embedding"]].iloc[
+                np.repeat(np.arange(len(pdf)), sh.shape[1])
+            ].copy()
+            out["shard"] = final.ravel().astype(np.int32)
+            yield out
+
+    return pts.mapInPandas(
+        assign, schema="vec_id long, embedding array<float>, shard int"
+    )
+
+
+def lloyd_centers(
+    df: DataFrame, k: int, id_col: str, vec_col: str, seed: int, iters: int = 5
+) -> np.ndarray:
+    """Lloyd's k-means over a distributed vector column: ``min(k, rows)``
+    float64 centers, seeded from the ``k`` rows with the smallest
+    ``xxhash64(id + seed)``. An empty frame gives a (0, 0) matrix.
+
+    Each pass fuses assign + per-cell (sum-vector, count) partials
+    INSIDE one mapInPandas over the data: what reaches the driver is at
+    most k rows per partition (a few KB), reduced in numpy — no
+    join-back and no shuffle per pass. A cell that draws no rows in a
+    pass keeps its old center."""
+    spark = df.sparkSession
+    sample = (
+        df.select(vec_col)
+        .orderBy(F.xxhash64(F.col(id_col) + F.lit(seed)))
+        .limit(k)
+        .toPandas()
+    )
+    if sample.empty:
+        return np.zeros((0, 0))
+    C = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
+
+    for _ in range(iters):
+        bc = spark.sparkContext.broadcast(C)
+
+        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            Cv = bc.value
+            k_, d_ = Cv.shape
+            S = np.zeros((k_, d_))
+            cnt = np.zeros(k_, dtype=np.int64)
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                a = exact._dist_matrix(X, Cv, "l2sq").argmin(axis=1)
+                for j in np.unique(a):
+                    S[j] += X[a == j].sum(axis=0)
+                cnt += np.bincount(a, minlength=k_)
+            nz = np.flatnonzero(cnt)
+            if nz.size:
+                yield pd.DataFrame({"list_id": nz.astype(np.int32), "cnt": cnt[nz], "vsum": list(S[nz])})
+
+        upd = (
+            df.select(vec_col)
+            .mapInPandas(partials, schema="list_id int, cnt long, vsum array<double>")
+            .toPandas()
+        )
+        S = np.zeros_like(C)
+        cnt = np.zeros(C.shape[0], dtype=np.int64)
+        for lid, c_, vs in zip(upd["list_id"], upd["cnt"], upd["vsum"]):
+            S[int(lid)] += np.asarray(vs, dtype=np.float64)
+            cnt[int(lid)] += int(c_)
+        nz = cnt > 0
+        C[nz] = S[nz] / cnt[nz, None]
+    return C

@@ -105,7 +105,7 @@ def routing_concentration(index, truth: DataFrame) -> DataFrame:
     import pandas as pd
 
     from vamana_spark import exact
-    from vamana_spark.index.partitioned import _cell_layout
+    from vamana_spark.index.cells import _cell_layout
     from vamana_spark.index.vamana import _metric_transform
 
     spark = index.spark

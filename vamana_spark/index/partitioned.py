@@ -30,24 +30,13 @@ from pyspark.sql import functions as F
 
 from vamana_spark import exact
 from vamana_spark.index import kernels
+from vamana_spark.index.cells import (
+    _cell_layout, _dedupe_centers, _split_counts, _subshard_of, assign_cells,
+)
 from vamana_spark.params import VamanaParams
 
 
 _PACK_SCHEMA = "shard int, n long, medoid int, blob binary"
-
-# Fibonacci-hash multiplier for the deterministic vec_id -> sub-shard
-# map (see build(): oversized-cell splitting). One definition so
-# build-time assignment, add_points routing, and diagnostics agree
-# bit-for-bit on which sub-shard a vector lands in.
-_SPLIT_HASH_MULT = np.uint64(0x9E3779B97F4A7C15)
-
-
-def _subshard_of(vec_ids: np.ndarray, nsplit: np.ndarray) -> np.ndarray:
-    """Deterministic sub-shard level for each vec_id within its cell's
-    split count (elementwise; ``nsplit`` broadcast-compatible with
-    ``vec_ids``). 1-split cells always map to level 0."""
-    h = (vec_ids.astype(np.uint64) * _SPLIT_HASH_MULT) >> np.uint64(33)
-    return h.astype(np.int64) % nsplit
 
 
 def _pad_cols(X: np.ndarray, m: int) -> np.ndarray:
@@ -64,53 +53,6 @@ def _pad_cols(X: np.ndarray, m: int) -> np.ndarray:
     if pad == 0:
         return X
     return np.hstack([X, np.zeros((X.shape[0], pad), dtype=X.dtype)])
-
-
-def _dedupe_centers(C: np.ndarray) -> np.ndarray:
-    """Make cell centers pairwise-distinct BEFORE the split repeat:
-    ``kernels._kmeans`` can legitimately emit identical rows for
-    DISTINCT cells (two empty clusters re-seeded at the same
-    worst-served point in one Lloyd iteration) —
-    ``_cell_layout`` infers the split layout from adjacent duplicate
-    runs, so distinct-cell duplicates would be misread as one split
-    cell by add_points/resplit/diagnostics. Later duplicates get a
-    deterministic epsilon bump on component 0 (stacked until unique):
-    routing distances shift O(1e-5) — far below any cell separation
-    that matters — and the layout inference becomes unambiguous.
-    Intentional split-cell duplicates are introduced AFTER this, by
-    ``np.repeat``, and stay bit-identical. The bump is ULP-sized
-    (``np.nextafter``) so it registers at ANY magnitude; _cell_layout
-    compares exact bytes, so one ULP fully disambiguates."""
-    C = np.asarray(C, dtype=np.float32).copy()
-    seen = set()
-    for i in range(C.shape[0]):
-        guard = 0
-        while C[i].tobytes() in seen and guard < 4096:
-            C[i, 0] = np.nextafter(C[i, 0], np.float32(np.inf), dtype=np.float32)
-            guard += 1
-        seen.add(C[i].tobytes())
-    return C
-
-
-def _cell_layout(centers: np.ndarray):
-    """Recover the (base, nsplit, cell_of_shard) split layout from the
-    center matrix itself: oversized-cell splitting repeats a parent
-    cell's center once per sub-shard (``build``), so runs of
-    consecutive duplicate rows ARE the layout — no extra persisted
-    state, and a pre-split index (all rows distinct) degrades to the
-    identity layout. Returns int64 arrays: ``base[cell]`` = first shard
-    row of the cell, ``nsplit[cell]`` = its sub-shard count,
-    ``cell_of_shard[shard]`` = owning cell."""
-    C = np.asarray(centers)
-    if C.shape[0] == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, z
-    new = np.ones(C.shape[0], dtype=bool)
-    new[1:] = np.any(C[1:] != C[:-1], axis=1)
-    cell_of_shard = (np.cumsum(new) - 1).astype(np.int64)
-    base = np.flatnonzero(new).astype(np.int64)
-    nsplit = np.diff(np.append(base, C.shape[0])).astype(np.int64)
-    return base, nsplit, cell_of_shard
 
 
 _SHARDS_SCHEMA = (
@@ -552,49 +494,9 @@ class PartitionedVamanaIndex:
             nsplit = np.maximum(1, np.ceil(est / cap)).astype(np.int64)
         else:
             nsplit = np.ones(n_cells, dtype=np.int64)
-        base = np.concatenate(([0], np.cumsum(nsplit)[:-1])).astype(np.int64)
         C = np.repeat(C, nsplit, axis=0)
         num_shards = int(nsplit.sum())
-        bc = spark.sparkContext.broadcast(C)
-        bsplit = spark.sparkContext.broadcast((base, nsplit))
-
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from vamana_spark.index.vamana import _metric_transform as _mt
-
-            Cv = bc.value
-            base_v, nsplit_v = bsplit.value
-            # one center row per ORIGINAL cell for assignment: overlap
-            # must insure across distinct cells, not a cell's sub-shards
-            Corig = Cv[base_v]
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = _mt(
-                    np.stack(pdf["embedding"].to_numpy()).astype(np.float32),
-                    metric,
-                    mips_m,
-                ).astype(np.float64)
-                d = exact._dist_matrix(X, Corig.astype(np.float64), "l2sq")
-                if overlap == 1:
-                    sh = d.argmin(axis=1)[:, None]
-                elif overlap >= d.shape[1]:
-                    sh = np.broadcast_to(np.arange(d.shape[1]), d.shape)
-                else:
-                    sh = np.argpartition(d, overlap - 1, axis=1)[:, :overlap]
-                sh = np.asarray(sh)
-                # cell -> sub-shard: deterministic vec_id hash, level
-                # within the cell's split count (1 for unsplit cells)
-                vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-                sub = _subshard_of(vid[:, None], nsplit_v[sh])
-                final = base_v[sh] + sub
-                rep = np.repeat(np.arange(len(pdf)), sh.shape[1])
-                out = pdf[["vec_id", "embedding"]].iloc[rep].copy()
-                out["shard"] = final.ravel().astype(np.int32)
-                yield out
-
-        assigned = pts.mapInPandas(
-            assign, schema="vec_id long, embedding array<float>, shard int"
-        )
+        assigned = assign_cells(pts, C, overlap, metric, mips_m)
 
         # Collision-free task spread: applyInPandas hash-partitions the
         # group key, and Murmur3 over a handful of small shard ids
@@ -2008,23 +1910,9 @@ def add_points(
     calibrated nprobe drifts toward S (routing has stopped earning
     its cost).
     """
-    import pandas as pd
-
-    from vamana_spark import exact as _exact
-
     spark = index.spark
     params = index.params
     C = index.centers
-    # mirror build()'s assign on a SPLIT index: route on the unique
-    # cell centers, then hash into the cell's sub-shards. Routing on
-    # the raw (duplicated) center matrix would tie every appended
-    # point's argmin/argpartition to a split cell's lowest-index
-    # sub-shard — a large append re-concentrates exactly the skew the
-    # split guard removed, and overlap insurance collapses onto copies
-    # of one cell instead of distinct cells.
-    base_a, nsplit_a, _ = _cell_layout(C)
-    bc = spark.sparkContext.broadcast((C, base_a, nsplit_a))
-
     pts = new_df.select(
         F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("embedding")
     ).where(F.size(vec_col) == params.dim)
@@ -2044,38 +1932,8 @@ def add_points(
                 "mips_m — rebuild the index"
             )
 
-    def assign(batches):
-        from vamana_spark.index.vamana import _metric_transform as _mt
-
-        Cv, base_v, nsplit_v = bc.value
-        Corig = Cv[base_v]  # one row per ORIGINAL cell
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = _mt(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float32),
-                metric,
-                mips_m,
-            ).astype(np.float64)
-            d = _exact._dist_matrix(X, Corig.astype(np.float64), "l2sq")
-            if overlap == 1:
-                sh = d.argmin(axis=1)[:, None]
-            elif overlap >= d.shape[1]:
-                sh = np.broadcast_to(np.arange(d.shape[1]), d.shape)
-            else:
-                sh = np.argpartition(d, overlap - 1, axis=1)[:, :overlap]
-            sh = np.asarray(sh)
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            sub = _subshard_of(vid[:, None], nsplit_v[sh])
-            final = base_v[sh] + sub
-            rep = np.repeat(np.arange(len(pdf)), sh.shape[1])
-            out = pdf[["vec_id", "embedding"]].iloc[rep].copy()
-            out["shard"] = final.ravel().astype(np.int32)
-            yield out
-
-    assigned = pts.mapInPandas(
-        assign, schema="vec_id long, embedding array<float>, shard int"
-    )
+    # appended points route exactly as build() routed the corpus
+    assigned = assign_cells(pts, C, overlap, metric, mips_m)
     # touched-shard set as a broadcast semi/anti join, not a collected
     # literal list: at production shard counts a wide delta
     # touches 10^5+ shards and an isin() literal list bloats the plan;
@@ -2121,7 +1979,7 @@ def resplit_oversized(
     recalibrate: Optional[bool] = None,
     target_recall: Optional[float] = None,
 ) -> PartitionedVamanaIndex:
-    """Maintenance-time skew consolidation (r9): re-fire the build's
+    """Maintenance-time skew consolidation: re-fire the build's
     oversized-cell split on MEASURED shard populations — the
     FreshDiskANN-style consolidate step the reference's AddPoint
     lacks entirely (vamana.h:101-111 appends without rewiring,
@@ -2143,28 +2001,26 @@ def resplit_oversized(
     counts only grow (never shrink) so repeated calls converge and
     undersized cells aren't churned.
 
-    r10 routing geometry: re-split cells get DISTINCT k-means
-    sub-centers trained on their own members (the full membership is
-    on hand here, unlike at build where only a thin sample exists).
-    The r9 recipe — repeat the parent center per sub-shard — collapsed
-    at the 10M hot-append rung: a 1M-point cell split ~270 ways left a
-    blob query with no geometry inside the former cell (every sub-shard
-    ties exactly), forcing calibration to nprobe=29 for 0.89 recall.
-    With trained sub-centers the hot region routes like any other part
-    of the index. An even vec_id-hash split remains as the OVER-CAP
-    backstop on the measured sub-cell populations, so the straggler
-    bound stays exact and unchanged data stays a no-op.
+    Routing geometry: re-split cells get DISTINCT k-means sub-centers
+    trained on their own members (the full membership is on hand here,
+    unlike at build where only a thin sample exists). Repeating the
+    parent center per sub-shard instead collapsed at a 10M hot-append
+    run: a 1M-point cell split ~270 ways left a blob query with no
+    geometry inside the former cell (every sub-shard ties exactly),
+    forcing calibration to nprobe=29 for 0.89 recall. With trained
+    sub-centers the hot region routes like any other part of the
+    index. An even vec_id-hash split remains as the OVER-CAP backstop
+    on the measured sub-cell populations, so the straggler bound stays
+    exact and unchanged data stays a no-op.
 
     Returns a new index (packs invalidated; when the input index was
     calibrated the result auto-recalibrates — see
     ``_carry_calibration``). No-op (same object) when nothing is
     oversized.
     """
-    # ADVICE r10: the fixed-point iteration's convergence argument only
-    # holds for factor > 1 — at factor <= 1 the cap shrinks every round
-    # and `want` grows unboundedly (~×1/factor per iteration for up to
-    # 100 iterations: int64 overflow in ceil(pop/cap) and an enormous
-    # center matrix). Fail loud instead.
+    # the split fixed point converges only for factor > 1: at or below
+    # it the cap shrinks every round and the counts grow without bound
+    # (int64 overflow in ceil(pop/cap) and an enormous center matrix)
     if not float(max_shard_factor) > 1.0:
         raise ValueError(
             f"max_shard_factor must be > 1 (got {max_shard_factor}); the "
@@ -2189,22 +2045,7 @@ def resplit_oversized(
     total = int(pop.sum())
     if total == 0:
         return index
-    # fair share is per-SHARD of the RESULTING layout, iterated to the
-    # fixed point (ADVICE r9): normalizing by the pre-split count alone
-    # is not a fixed point of itself — pops [940,20,20,20] at factor 2
-    # would split 1→2 on the first call and 2→3 on the second with no
-    # data change, so periodic maintenance kept rewriting the hot cell.
-    # The iteration is monotone non-decreasing and converges for any
-    # factor > 1 (want[c] is bounded by the continuous fixed point);
-    # a second resplit on unchanged data now measures the same cell
-    # populations and lands on the same want — a true no-op.
-    want = nsplit.copy()
-    for _ in range(100):
-        cap = float(max_shard_factor) * total / max(int(want.sum()), 1)
-        nxt = np.maximum(want, np.ceil(pop / cap).astype(np.int64))
-        if np.array_equal(nxt, want):
-            break
-        want = nxt
+    want = _split_counts(pop, nsplit, total, max_shard_factor)
     if np.array_equal(want, nsplit):
         return index
 
@@ -2216,22 +2057,9 @@ def resplit_oversized(
     metric, mips_m = params.metric, params.mips_m
     seed = int(params.seed)
 
-    # ---- r10: GEOMETRIC sub-centers for the re-split cells -----------
-    # The r9 resplit repeated the parent center per sub-shard (the
-    # build guard's recipe) — fine for 2-3-way build-time splits, but
-    # measured at the 10M hot-append rung a 1M-point cell re-split into
-    # ~270 IDENTICAL-center sub-shards: a blob query then has no
-    # routing geometry inside the former cell (all sub-shards tie
-    # exactly) and must scan the whole tie run — calibration was forced
-    # to nprobe=29 and still served 0.89 recall. At resplit time the
-    # cell's full membership is on hand (unlike at build, where only a
-    # ~32-rows/shard sample exists), so train want[c] DISTINCT k-means
-    # sub-centers on a member sample instead: routing regains geometry
-    # inside the hot region and blob queries go back to single-digit
-    # probes. An even vec_id-hash split remains as the OVER-CAP
-    # BACKSTOP on the measured sub-cell populations (k-means does not
-    # guarantee balance), so the straggler bound stays exact and a
-    # second call on unchanged data is still a no-op.
+    # ---- geometric sub-centers for the re-split cells (see docstring):
+    # want[c] DISTINCT k-means sub-centers per changed cell, trained on
+    # a sample of its members
     changed_shards = np.array(
         [s for s in range(S_old) if int(cell_of_shard[s]) in changed_set],
         dtype=np.int32,
@@ -2265,7 +2093,7 @@ def resplit_oversized(
     for c in sorted(changed_set):
         Xc = Xs[smp_cells == c]
         if Xc.shape[0] == 0:
-            # ADVICE r10: under extreme skew at very large shard counts
+            # under extreme skew at very large shard counts
             # a changed cell can draw zero rows from the hash-ordered,
             # capped sample; _kmeans on an empty matrix raises and would
             # abort the whole resplit. Fall back to the parent center as
@@ -2319,51 +2147,35 @@ def resplit_oversized(
     for r in assigned.groupBy("subcell").count().collect():
         sub_sizes[int(r["subcell"])] = int(r["count"])
 
-    # over-cap hash backstop, iterated jointly with the resulting S
-    # (same fixed-point argument as `want` above)
+    # over-cap hash backstop: the same fixed point over the sub-cells,
+    # next to the unchanged cells' shards
     S_unchanged = S_old - int(changed_shards.shape[0])
-    nsplit_sub = np.ones(k_total, dtype=np.int64)
-    for _ in range(100):
-        cap = float(max_shard_factor) * total / max(
-            S_unchanged + int(nsplit_sub.sum()), 1
-        )
-        nxt = np.maximum(nsplit_sub, np.ceil(sub_sizes / cap).astype(np.int64))
-        if np.array_equal(nxt, nsplit_sub):
-            break
-        nsplit_sub = nxt
+    nsplit_sub = _split_counts(
+        sub_sizes, np.ones(k_total, dtype=np.int64), total, max_shard_factor,
+        fixed=S_unchanged,
+    )
 
     # ---- final layout: cells in original order ------------------------
     # unchanged cells keep their rows byte-for-byte; changed cell c
     # contributes its kc sub-centers, each repeated nsplit_sub times
-    # (the backstop's duplicated-center runs, same as the build guard)
+    # (the backstop's duplicated-center runs, same as the build guard).
+    # Sub-centers must not collide byte-wise with any OTHER cell's
+    # center (the _cell_layout contract): de-dup them after the
+    # unchanged cells' centers, which are pairwise distinct already and
+    # so come back unchanged
+    unchanged = [c for c in range(n_cells) if c not in changed_set]
+    fresh = _dedupe_centers(
+        np.vstack([C[base[unchanged]]] + [sub_centers[c] for c in sorted(changed_set)])
+    )[len(unchanged):]
     dimT = C.shape[1]
     cell_rows: list = []
     final_count = np.zeros(n_cells, dtype=np.int64)
-    # sub-center rows must not collide byte-wise with any OTHER final
-    # cell's representative (the _cell_layout contract); unchanged rows
-    # stay untouched, new reps get the ULP bump on collision
-    seen = set()
-    for c in range(n_cells):
-        if c not in changed_set:
-            for s in range(int(base[c]), int(base[c]) + int(nsplit[c])):
-                seen.add(C[s].tobytes())
-    for c in sorted(changed_set):
-        Cc = sub_centers[c].copy()
-        for i in range(Cc.shape[0]):
-            guard = 0
-            while Cc[i].tobytes() in seen and guard < 4096:
-                Cc[i, 0] = np.nextafter(
-                    Cc[i, 0], np.float32(np.inf), dtype=np.float32
-                )
-                guard += 1
-            seen.add(Cc[i].tobytes())
-        sub_centers[c] = Cc
     for c in range(n_cells):
         if c in changed_set:
             o = sub_offset[c]
             kc = k_by_cell[c]
             reps = nsplit_sub[o : o + kc]
-            cell_rows.append(np.repeat(sub_centers[c], reps, axis=0))
+            cell_rows.append(np.repeat(fresh[o : o + kc], reps, axis=0))
             final_count[c] = int(reps.sum())
         else:
             cell_rows.append(C[base[c] : base[c] + nsplit[c]])
@@ -2443,8 +2255,8 @@ def resplit_oversized(
         recalibrate,
         target_recall=target_recall,
     )
-    # ADVICE r10: `assigned` fed the population backstop and finalize();
-    # leaving it persisted leaks cached embedding partitions across
+    # `assigned` fed the population backstop and finalize(); leaving
+    # it persisted leaks cached embedding partitions across
     # repeated maintenance cycles. When _carry_calibration ran it cached
     # AND materialized the rebuilt shards, so the release is free; when
     # it didn't, a later first action recomputes one deterministic

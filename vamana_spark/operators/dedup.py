@@ -1335,10 +1335,10 @@ def _split_kmeans_enforced(X: "object", ids: "object", cap: int) -> tuple:
     ``chunk_bounds``, is a list of (prev_chunk_last_row, chunk_label)
     pairs — one per stage-2 chunk boundary — so the multi-probe path
     can stitch the id-order chunks back together with a one-row
-    witness replica per boundary (ADVICE r13: chunked rows are outside
-    the stage-1 sub-probe's reach, so without the stitch a pair split
-    across a chunk boundary in the degenerate all-identical fallback
-    stays missed)."""
+    witness replica per boundary (chunked rows are outside the stage-1
+    sub-probe's reach, so without the stitch a pair split across a
+    chunk boundary in the degenerate all-identical fallback stays
+    missed)."""
     import numpy as np
 
     n = len(ids)
@@ -1385,10 +1385,10 @@ def _split_oversized_labels(X: "object", ids: "object", cap: int) -> "object":
 
 def _boundary_stitch_replicas(chunk_bounds: "list") -> tuple:
     """(row_indices, labels) of the one-row-per-boundary witness
-    replicas that stitch stage-2 id-order chunks together (ADVICE
-    r13): each chunk receives the PREVIOUS chunk's last row as a
-    non-primary replica, restoring the lower-id witness chain that
-    id-order chunking cut. Memory bound: +1 row per chunk."""
+    replicas that stitch stage-2 id-order chunks together: each chunk
+    receives the PREVIOUS chunk's last row as a non-primary replica,
+    restoring the lower-id witness chain that id-order chunking cut.
+    Memory bound: +1 row per chunk."""
     import numpy as np
 
     if not chunk_bounds:
@@ -1403,19 +1403,19 @@ def _boundary_stitch_replicas(chunk_bounds: "list") -> tuple:
 
 
 def _split_labels_multiprobe(X: "object", ids: "object", cap: int) -> tuple:
-    """Sub-probe split labels (r13, VERDICT r12 #3): replica layout for
-    one oversized cluster under multi-probe — each row keeps its
-    enforced primary child label AND gains one replica in its
-    second-nearest stage-1 SUB-center's child, the same top-2 recipe
-    top-level multi-probe uses: a pair split across two children is
-    scored in whichever child both replicas share. SCALE.md r12 had
-    guessed this class was a chunk of the residual planted miss; the
-    r13 measurement sized it at +154 drops on the 10M Zipf rung.
+    """Sub-probe split labels: replica layout for one oversized cluster
+    under multi-probe — each row keeps its enforced primary child label
+    AND gains one replica in its second-nearest stage-1 SUB-center's
+    child, the same top-2 recipe top-level multi-probe uses: a pair
+    split across two children is scored in whichever child both
+    replicas share. Measured on a 10M-row Zipf corpus, this
+    sub-cluster-straddle class was +154 drops of the residual planted
+    miss.
 
     Stage-2 id-order chunks (labels >= the k-means child count — the
     degenerate all-identical fallback, where Lloyd can't separate
     anything) are outside the stage-1 sub-probe's reach, so they are
-    stitched separately (r14, ADVICE r13): each chunk receives the
+    stitched separately: each chunk receives the
     PREVIOUS chunk's last row as a one-row witness replica, restoring
     the lower-id witness chain the chunking cut — the chunk's members
     are near-identical by construction (k-means failed to separate
@@ -1495,45 +1495,44 @@ def semantic_dedup(
     STRUCTURAL split test is ``subcluster_id`` containing ``'.'`` —
     count-based tests (distinct(subcluster_id) vs num_clusters) are
     unreliable: k-means cells with zero assigned rows never appear in
-    the output, so an empty cell can mask a fired split (ADVICE r11).
+    the output, so an empty cell can mask a fired split.
 
-    ``probes`` (r12, VERDICT r11 #3 — the boundary-straddle recovery):
-    assign each point to its ``probes`` nearest centers and run the
-    scan in every probed cell, then merge to one row per point (dropped
-    anywhere ⇒ dropped; ``dup_of``/``max_sim`` come from the
-    highest-similarity witness). Single-probe SemDeDup misses pairs
-    whose members fall on opposite sides of a Voronoi boundary — the
-    dominant planted-miss class at the 10M Zipf rung (8.4% of planted
-    dups at probes=1). Every multi-probe drop is exact-cosine-verified
-    in some probed cell, so no pair below ``threshold`` is ever
+    ``probes`` (the boundary-straddle recovery): assign each point to
+    its ``probes`` nearest centers and run the scan in every probed
+    cell, then merge to one row per point (dropped anywhere ⇒ dropped;
+    ``dup_of``/``max_sim`` come from the highest-similarity witness).
+    Single-probe SemDeDup misses pairs whose members fall on opposite
+    sides of a Voronoi boundary — the dominant planted-miss class on a
+    10M-row Zipf corpus (8.4% of planted dups at probes=1). Every
+    multi-probe drop is exact-cosine-verified in some probed cell, so
+    no pair below ``threshold`` is ever
     emitted; whole-group safety (some member of every duplicate group
     survives) additionally needs the drop relation to be acyclic
     across cells, which both policies guarantee — min_id because drops
     always point to a strictly smaller id, centroid_far because under
-    multi-probe the keep priority is a GLOBAL scalar (see below; r13,
-    ADVICE r12). When the giant-cluster backstop splits an oversized
-    cell, ``probes>1`` also probes the split CHILDREN top-2
-    (:func:`_split_labels_multiprobe` — r13, VERDICT r12 #3),
-    converting the k-means sub-cluster-straddle miss class, and
-    stitches the id-order enforcement chunks with a one-row witness
-    replica per boundary (r14, ADVICE r13 — the degenerate
-    all-identical fallback is outside the sub-probe's reach);
-    secondary sub-replicas are capped at ``cap`` boundary rows per
-    child, so every scan task stays O((2·cap)²). Measured size of the
-    sub-straddle class at the 10M Zipf rung: +154 recovered drops
-    (SCALE.md r13); the rung's residual
-    1.4% is instead TOP-LEVEL ≥3-cell straddle, for which the lever is
-    raising ``probes`` itself. Cost: each point
-    resides in ``probes`` cells, so cell populations grow ~probes× and
-    the per-cell quadratic scan up to probes²× (4× FLOPs at probes=2;
-    measured 649 s → 3,224 s (~5×, splits + stragglers included) for
-    planted-miss recall 0.9156 → 0.9859 at the 10M Zipf rung; probes=3
+    multi-probe the keep priority is a GLOBAL scalar (see below). When
+    the giant-cluster backstop splits an oversized cell, ``probes>1``
+    also probes the split CHILDREN top-2
+    (:func:`_split_labels_multiprobe`), converting the k-means
+    sub-cluster-straddle miss class, and stitches the id-order
+    enforcement chunks with a one-row witness replica per boundary
+    (the degenerate all-identical fallback is outside the sub-probe's
+    reach); secondary sub-replicas are capped at ``cap`` boundary rows
+    per child, so every scan task stays O((2·cap)²). On the 10M-row
+    Zipf corpus the sub-straddle class was +154 recovered drops; the
+    residual 1.4% is instead TOP-LEVEL ≥3-cell straddle, for which the
+    lever is raising ``probes`` itself. Cost: each point resides in
+    ``probes`` cells, so cell populations grow ~probes× and the
+    per-cell quadratic scan up to probes²× (4× FLOPs at probes=2;
+    measured on that corpus 649 s → 3,224 s (~5×, splits + stragglers
+    included) for planted-miss recall 0.9156 → 0.9859; probes=3
     measured 2,299 s → 5,429 s (2.36×, on the ~(3/2)² prediction) for
-    0.9859 → 0.9979 — the r14 rung's recommendation is default 2,
-    reach for 3 only at recall targets ≥ 0.995, stop there: probes=4+
-    prices out by extrapolation for a ≤0.2% residual) — still
-    bounded per task by the same ``max_cluster_rows`` backstop.
-    Default 1 = the published recipe, output unchanged.
+    0.9859 → 0.9979 — so use 2, reach for 3 only at recall targets
+    ≥ 0.995, and stop there: probes=4+ prices out by extrapolation for
+    a ≤0.2% residual) — still bounded per task by the same
+    ``max_cluster_rows`` backstop. ``probes`` above the number of
+    trained cells clamps to it. Default 1 = the published recipe,
+    output unchanged.
 
     ``keep_policy``: "min_id" (default — deterministic, id-stable
     across runs) or "centroid_far" (the paper's policy: within a
@@ -1547,23 +1546,25 @@ def semantic_dedup(
     CENTER under ``probes>1``: per-cell means give each probed cell a
     different priority order, and mutually-inconsistent orders let A
     drop against B in one cell while B drops against A in another —
-    the dropped-anywhere merge would then erase the entire group
-    (ADVICE r12, high). The global scalar restores one total order,
-    at the cost of a slightly different (still
-    farthest-from-center-first) keep choice within groups.
+    the dropped-anywhere merge would then erase the entire group.
+    The global scalar restores one total order, at the cost of a
+    slightly different (still farthest-from-center-first) keep choice
+    within groups.
 
     Normalization happens INSIDE the operator (zero vectors become
     their own singletons: trivially kept), so clustering runs on the
     unit sphere — parallel vectors land in the same cluster by
     construction, which is what makes exact-duplicate capture exact.
 
-    100 TB shape: clustering reuses ``ivf_build`` (map-only Lloyd
-    passes, driver reduces num_clusters partial sums); the pair scan is
+    100 TB shape: clustering is ``index.cells.lloyd_centers`` (map-only
+    Lloyd passes, driver reduces num_clusters partial sums; a corpus
+    smaller than num_clusters trains one cell per row, and an empty
+    one returns no rows); the pair scan is
     one ``applyInPandas`` per cluster, computing X_block @ X.T in
     ``block_rows`` strips — O(c^2) multiplies but O(block_rows * c)
     memory for a size-c cluster. num_clusters is the primary scale knob
     (size clusters to ~10^4-10^5 rows); ``max_cluster_rows`` is the
-    skew backstop (VERDICT r5 #3): any cluster above it is split by a
+    skew backstop: any cluster above it is split by a
     per-cluster mini k-means with id-order chunk enforcement
     (:func:`_split_oversized_labels`), bounding every scan task to
     O(cap^2) time — a planted all-points-in-one-cluster corpus can no
@@ -1575,11 +1576,10 @@ def semantic_dedup(
     sub-probes the children top-2 and recovers the capped boundary
     band of that miss. ``max_cluster_rows=0`` disables the backstop.
     """
-    from vamana_spark.operators.similarity import ivf_build
-
     import numpy as np
-
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    from vamana_spark.index.cells import lloyd_centers
 
     id_type = emb.schema[id_col].dataType
     if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
@@ -1588,6 +1588,8 @@ def semantic_dedup(
             f"id order); {id_col!r} is {id_type.simpleString()} — a silent "
             f"cast would null non-numeric ids. Map ids to longs first."
         )
+    if int(probes) < 1:
+        raise ValueError(f"probes must be >= 1, got {probes!r}")
     spark = emb.sparkSession
     src = emb.select(F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("_v"))
 
@@ -1603,21 +1605,11 @@ def semantic_dedup(
             )
 
     unit = src.mapInPandas(normalize, schema="vec_id long, _u array<double>")
-    # ivf_build's Lloyd passes run eagerly and hand back the trained
-    # centers; its final per-row assignment DataFrame stays LAZY and is
-    # deliberately never executed — the fused pass below re-derives the
-    # assignment while carrying the unit vector, which replaces a
-    # full-data (unit ⋈ assignments) vec_id shuffle pair with zero
-    # shuffles: the only data shuffle left is the cluster-keyed one.
-    centers = ivf_build(
-        unit, num_clusters, id_col="vec_id", vec_col="_u", seed=seed
-    )._ivf_centers
+    # the assignment runs fused with the carry of the unit vector, so
+    # the only data shuffle is the cluster-keyed one
+    centers = lloyd_centers(unit, num_clusters, "vec_id", "_u", seed)
     bc = spark.sparkContext.broadcast(centers)
-
-    p_eff = int(probes)
-    if p_eff < 1:
-        raise ValueError(f"probes must be >= 1, got {probes!r}")
-    p_eff = min(p_eff, int(num_clusters))
+    p_eff = min(int(probes), max(len(centers), 1))
 
     def assign_carry(batches):
         from vamana_spark import exact as _exact
@@ -1812,7 +1804,7 @@ def semantic_dedup(
     )
     merged = scan.withColumn("_rk", F.row_number().over(w))
     if expose_subcluster:
-        # ADVICE r12 (low): the winning row can come from a SECONDARY
+        # the winning row can come from a SECONDARY
         # probed cell, whose scan key would break the
         # "<cluster_id>[.<sub>]" prefix invariant split diagnostics
         # rely on. Overwrite from the point's primary-cell row — same

@@ -1,14 +1,19 @@
-"""Similarity-search operators over embedding columns (SURVEY.md §2b X3/X4).
+"""Similarity operators over embedding columns (SURVEY.md §2b X3/X4).
 
 - ``knn_self_join``       — exact top-k per point (brute force, the
   baseline and oracle).
-- ``ivf_build``           — the k-means coarse quantizer that blocks
-  ``dedup.semantic_dedup``'s per-cluster scan.
 - ``lsh_similarity_join`` — random-hyperplane LSH bucketing for
   radius-style cosine joins.
-Plus ``normalize_embeddings`` (X4) as a plain column expression.
+- ``normalize_embeddings`` (X4) — L2 normalization as a plain column
+  expression.
+- ``hash_embed``          — feature-hashing text embedder.
+- ``random_projection``   — Johnson-Lindenstrauss dimension reduction.
+- ``group_centroids``, ``nearest_centroid_classify``,
+  ``centroid_outliers`` — per-label centroid helpers.
+
 Approximate kNN search is ``VamanaIndex`` / ``PartitionedVamanaIndex``
-(``build(graph=False)`` is their IVF-flat form).
+(``build(graph=False)`` is their IVF-flat form). The k-means cells that
+block ``dedup.semantic_dedup`` are trained by ``index.cells``.
 """
 
 from __future__ import annotations
@@ -61,100 +66,6 @@ def knn_self_join(
         pts, q, k=k, metric=metric, id_col=id_col, vec_col=vec_col,
         round_digits=round_digits, exclude_self=True,
     )
-
-
-def ivf_build(
-    emb: DataFrame,
-    num_lists: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    iters: int = 5,
-) -> DataFrame:
-    """IVF coarse quantizer: Lloyd's k-means (seeded, few iters) run as
-    repeated mapInPandas passes; returns the assignment DataFrame
-    (vec_id, list_id) and stashes centers in ``.attrs``-style return
-    (centers as a local ndarray on the driver).
-
-    Centroid update shape: each Lloyd pass fuses assign
-    + per-list (sum-vector, count) partials INSIDE the one mapInPandas
-    over the data — what reaches the driver is ``num_lists`` rows per
-    partition (a few KB), reduced in numpy. No join-back, no
-    ``posexplode`` of the full dataset, zero shuffles per iteration —
-    vs the old plan's full-data join + dim×n-row shuffle, ×iters.
-
-    The assignment key (list_id) is what kills the cross product at
-    scale: a scan blocked on it compares only vectors of the same list.
-    """
-    spark = emb.sparkSession
-    sample = (
-        emb.select(vec_col)
-        .orderBy(F.xxhash64(F.col(id_col) + F.lit(seed)))
-        .limit(num_lists)
-        .toPandas()
-    )
-    C = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
-
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(C)
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Cv = bc.value
-            k_, d_ = Cv.shape
-            S = np.zeros((k_, d_))
-            cnt = np.zeros(k_, dtype=np.int64)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                a = exact._dist_matrix(X, Cv, "l2sq").argmin(axis=1)
-                for j in np.unique(a):
-                    S[j] += X[a == j].sum(axis=0)
-                cnt += np.bincount(a, minlength=k_)
-            nz = np.flatnonzero(cnt)
-            if nz.size:
-                yield pd.DataFrame(
-                    {
-                        "list_id": nz.astype(np.int32),
-                        "cnt": cnt[nz],
-                        "vsum": list(S[nz]),
-                    }
-                )
-
-        upd = (
-            emb.select(vec_col)
-            .mapInPandas(partials, schema="list_id int, cnt long, vsum array<double>")
-            .toPandas()
-        )
-        S = np.zeros_like(C)
-        cnt = np.zeros(num_lists, dtype=np.int64)
-        for lid, c_, vs in zip(upd["list_id"], upd["cnt"], upd["vsum"]):
-            S[int(lid)] += np.asarray(vs, dtype=np.float64)
-            cnt[int(lid)] += int(c_)
-        nz = cnt > 0
-        C[nz] = S[nz] / cnt[nz, None]  # empty lists keep their old center
-
-    bc = spark.sparkContext.broadcast(C)
-
-    def assign_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cv = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d = exact._dist_matrix(X, Cv, "l2sq")
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "list_id": d.argmin(axis=1).astype(np.int32),
-                }
-            )
-
-    assignments = emb.select(id_col, vec_col).mapInPandas(
-        assign_final, schema="vec_id long, list_id int"
-    )
-    assignments._ivf_centers = C  # driver-side attachment for probing
-    return assignments
 
 
 def lsh_similarity_join(
