@@ -384,6 +384,24 @@ def test_dedupe_centers_keeps_a_distinct_prefix():
     assert len({r.tobytes() for r in D}) == len(D)
 
 
+def test_cell_layout_reads_rows_by_bytes():
+    """Centers that ``_dedupe_centers`` keeps distinct only by the sign
+    of a zero are distinct cells to ``_cell_layout`` too; a split run
+    from ``np.repeat`` still reads as one cell split in two."""
+    from vamana_spark.index.cells import _cell_layout, _dedupe_centers
+
+    C = _dedupe_centers(np.array([[0.0, 1], [-0.0, 1], [2, 2]]))
+    assert C.tobytes() == np.array([[0.0, 1], [-0.0, 1], [2, 2]], np.float32).tobytes()
+    base, nsplit, cell = _cell_layout(C)
+    assert base.tolist() == [0, 1, 2]
+    assert nsplit.tolist() == [1, 1, 1]
+    assert cell.tolist() == [0, 1, 2]
+    base, nsplit, cell = _cell_layout(np.repeat(C, [1, 2, 1], axis=0))
+    assert base.tolist() == [0, 1, 3]
+    assert nsplit.tolist() == [1, 2, 1]
+    assert cell.tolist() == [0, 1, 1, 2]
+
+
 def test_adc_search_takes_the_float_walk():
     """With an exact codebook (one subspace, one centroid per point) a
     node's ADC distance equals its float distance, so below exhaustive

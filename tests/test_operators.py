@@ -1,4 +1,4 @@
-"""Pipeline operators: dedup / text / events / relational / similarity."""
+"""Pipeline operators: dedup / text / relational / similarity."""
 
 import re
 
@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vamana_spark.operators import dedup, events, relational, sampling, similarity, text
+from vamana_spark.operators import dedup, relational, sampling, similarity, text
 
 
 # ----------------------------------------------------------------- dedup
@@ -360,60 +360,6 @@ def test_unigram_logprob_orders_typical_above_rare(spark):
     assert all(r.avg_logprob < 0 for r in got.values())
 
 
-# ----------------------------------------------------------------- events
-
-def test_sessionize_gap(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "2024-01-01 00:00:00", 7, "a", 1.0, "{}"),
-            (2, "2024-01-01 00:10:00", 7, "a", 1.0, "{}"),
-            (3, "2024-01-01 02:00:00", 7, "a", 1.0, "{}"),
-        ],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    out = {r.event_id: r.session_seq for r in events.sessionize(df, 30).collect()}
-    assert out == {1: 1, 2: 1, 3: 2}
-
-
-def test_hourly_rollup(events):
-    from vamana_spark.operators.events import hourly_rollup
-
-    roll = hourly_rollup(events)
-    total = roll.agg(F.sum("n_events")).first()[0]
-    assert total == events.count()
-
-
-def test_session_stats_counts(events):
-    from vamana_spark.operators.events import session_stats
-
-    s = session_stats(events, 30)
-    assert s.agg(F.sum("n_events")).first()[0] == events.count()
-
-
-def test_sessionize_ntz_ltz_parity(events):
-    """Schema-drift guard: the driver's events.parquet has shipped ts as
-    TIMESTAMP(NANOS), TIMESTAMP_NTZ, and TIMESTAMP across regenerations.
-    Sessionization must produce bit-identical output whether the column
-    arrives as NTZ or session-tz timestamp (session tz = UTC)."""
-    from vamana_spark.operators.events import session_stats, sessionize
-
-    ltz = events  # loader-normalized: regular TIMESTAMP
-    ntz = events.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    assert str(ntz.schema["ts"].dataType) != str(ltz.schema["ts"].dataType)
-
-    key = lambda df: sorted(
-        (r.event_id, r.session_seq)
-        for r in sessionize(df, 30).select("event_id", "session_seq").collect()
-    )
-    assert key(ntz) == key(ltz)
-
-    stats = lambda df: sorted(
-        (r.user_id, r.session_seq, r.n_events, r.duration_sec, r.sum_value)
-        for r in session_stats(df, 30).collect()
-    )
-    assert stats(ntz) == stats(ltz)
-
-
 # -------------------------------------------------------------- relational
 
 def test_pricing_summary(spark, sf_dir):
@@ -511,133 +457,6 @@ def test_search_empty_queries(spark, embeddings):
     )
     q = spark.createDataFrame([], "query_id long, query_vec array<float>")
     assert idx.search(q, k=3).count() == 0
-
-
-# --------------------------------------------------------------- temporal
-
-def test_asof_join_basic(spark):
-    from vamana_spark.operators.temporal import asof_join
-
-    left = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 100), (1, "2024-01-01 12:00:00", 101),
-         (2, "2024-01-01 11:00:00", 200)],
-        "user_id long, ts string, event_id long",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    right = spark.createDataFrame(
-        [(1, "2024-01-01 09:30:00", 7.0), (1, "2024-01-01 11:30:00", 8.0),
-         (2, "2024-01-01 11:30:00", 9.0)],
-        "user_id long, ts string, price double",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    out = {
-        r.event_id: r.asof_price
-        for r in asof_join(
-            left, right, ["user_id"], "ts", "ts", ["price"]
-        ).collect()
-    }
-    assert out == {100: 7.0, 101: 8.0, 200: None}
-
-
-def test_asof_join_tolerance(spark):
-    from vamana_spark.operators.temporal import asof_join
-
-    left = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 100)], "user_id long, ts string, event_id long"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    right = spark.createDataFrame(
-        [(1, "2024-01-01 08:00:00", 7.0)], "user_id long, ts string, price double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    within = asof_join(left, right, ["user_id"], "ts", "ts", ["price"],
-                       tolerance_seconds=3 * 3600).first()
-    beyond = asof_join(left, right, ["user_id"], "ts", "ts", ["price"],
-                       tolerance_seconds=3600).first()
-    assert within.asof_price == 7.0 and beyond.asof_price is None
-
-
-def test_interval_join(spark):
-    from vamana_spark.operators.temporal import interval_join
-
-    points = spark.createDataFrame(
-        [(1, "2024-01-01 10:15:00", 100), (1, "2024-01-01 13:00:00", 101)],
-        "user_id long, ts string, event_id long",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    intervals = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", "2024-01-01 11:00:00", "w1")],
-        "user_id long, start_ts string, end_ts string, name string",
-    ).withColumn("start_ts", F.to_timestamp("start_ts")).withColumn(
-        "end_ts", F.to_timestamp("end_ts")
-    )
-    out = interval_join(
-        points, intervals, ["user_id"], "ts", "start_ts", "end_ts"
-    ).collect()
-    assert [(r.event_id, r.name) for r in out] == [(100, "w1")]
-    # non-hour widths must stay aligned across the two sides (the old
-    # date_trunc('hour') form dropped matches for any other bucket)
-    for bucket in ("30 minutes", "2 hours", "45 minutes"):
-        got = interval_join(
-            points, intervals, ["user_id"], "ts", "start_ts", "end_ts",
-            bucket=bucket,
-        ).collect()
-        assert [(r.event_id, r.name) for r in got] == [(100, "w1")], bucket
-    with pytest.raises(ValueError):
-        interval_join(
-            points, intervals, ["user_id"], "ts", "start_ts", "end_ts",
-            bucket="0 seconds",
-        )
-
-
-def test_interval_join_matches_naive_oracle_random(spark):
-    """Property check: the bucketized equi-join form must equal the
-    naive crossJoin + range filter on random data — random widths,
-    sub-second timestamps, intervals spanning many buckets."""
-    import random
-    from datetime import datetime, timedelta
-
-    from vamana_spark.operators.temporal import interval_join
-
-    rng = random.Random(7)
-    base = datetime(2024, 3, 1)
-    pts = [
-        (rng.randrange(4), base + timedelta(seconds=rng.uniform(0, 86400)), i)
-        for i in range(120)
-    ]
-    ivs = []
-    for j in range(40):
-        s0 = rng.uniform(0, 86400)
-        ivs.append(
-            (
-                rng.randrange(4),
-                base + timedelta(seconds=s0),
-                base + timedelta(seconds=s0 + rng.uniform(0, 4 * 3600)),
-                j,
-            )
-        )
-    points = spark.createDataFrame(
-        pts, "user_id long, ts timestamp, event_id long"
-    )
-    intervals = spark.createDataFrame(
-        ivs, "user_id long, start_ts timestamp, end_ts timestamp, iv_id long"
-    )
-    naive = {
-        (r.event_id, r.iv_id)
-        for r in points.crossJoin(
-            intervals.withColumnRenamed("user_id", "u2")
-        )
-        .where(
-            (F.col("user_id") == F.col("u2"))
-            & (F.col("ts") >= F.col("start_ts"))
-            & (F.col("ts") <= F.col("end_ts"))
-        )
-        .collect()
-    }
-    for bucket in ("1 hour", "25 minutes", "3 hours"):
-        got = {
-            (r.event_id, r.iv_id)
-            for r in interval_join(
-                points, intervals, ["user_id"], "ts", "start_ts", "end_ts",
-                bucket=bucket,
-            ).collect()
-        }
-        assert got == naive, bucket
 
 
 def test_lsh_bucket_cap_no_quadratic_blowup(spark):
@@ -1308,130 +1127,6 @@ def test_hash_embed_deterministic_normalized(documents):
     # seed changes the embedding space
     out3 = {r.doc_id: list(r.embedding) for r in similarity.hash_embed(documents, dim=16, seed=7).collect()}
     assert out3 != out1
-
-
-def test_funnel_strict_ordering(spark):
-    import datetime as dt
-
-    from vamana_spark.operators.events import funnel
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def ts(m):
-        return t0 + dt.timedelta(minutes=m)
-
-    rows = [
-        # user 1 completes the funnel in order
-        (1, 1, "view", ts(0)), (2, 1, "signup", ts(5)), (3, 1, "purchase", ts(9)),
-        # user 2: purchase BEFORE signup — step 3 must not count
-        (4, 2, "view", ts(0)), (5, 2, "purchase", ts(1)), (6, 2, "signup", ts(2)),
-        # user 3: signup only, never viewed — not in the funnel at all
-        (7, 3, "signup", ts(0)),
-        # user 4: view only
-        (8, 4, "view", ts(3)),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, event_type string, ts timestamp"
-    )
-    got = {r.user_id: r for r in funnel(df, ["view", "signup", "purchase"]).collect()}
-    assert got[1].steps_completed == 3
-    assert got[2].steps_completed == 2  # purchase-before-signup ignored
-    assert 3 not in got  # never entered the funnel
-    assert got[4].steps_completed == 1 and got[4].t_step_2 is None
-    import pytest as _p
-
-    with _p.raises(ValueError):
-        funnel(df, [])
-
-
-def test_cohort_retention_offsets(spark):
-    import datetime as dt
-
-    from vamana_spark.operators.events import cohort_retention
-
-    def ts(day):
-        return dt.datetime(2024, 1, 1) + dt.timedelta(days=day)  # Mon start
-
-    rows = [
-        (1, 1, "view", ts(0)),   # user 1: cohort week 0
-        (2, 1, "view", ts(8)),   # active again week 1
-        (3, 2, "view", ts(1)),   # user 2: cohort week 0, never returns
-        (4, 3, "view", ts(7)),   # user 3: cohort week 1
-        (5, 3, "view", ts(21)),  # active week 3 -> offset 2
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, event_type string, ts timestamp"
-    )
-    got = {
-        (r.cohort_week, r.week_offset): r.n_users
-        for r in cohort_retention(df).collect()
-    }
-    assert got[("2024-01-01", 0)] == 2   # users 1 and 2 in week-0 cohort
-    assert got[("2024-01-01", 1)] == 1   # only user 1 returned
-    assert got[("2024-01-08", 0)] == 1   # user 3's cohort
-    assert got[("2024-01-08", 2)] == 1   # user 3, two weeks later
-
-
-def test_funnel_matches_bruteforce_property(spark):
-    """Random event streams: the distributed funnel must equal a greedy
-    single-pass reference walk per user."""
-    import datetime as dt
-
-    from hypothesis import given, settings, strategies as st
-
-    from vamana_spark.operators.events import funnel
-
-    STEPS = ["a", "b", "c"]
-
-    @settings(max_examples=5, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=1, max_value=4),      # user
-                st.sampled_from(["a", "b", "c", "x"]),      # type
-                st.integers(min_value=0, max_value=50),     # minute
-            ),
-            min_size=1,
-            max_size=40,
-        )
-    )
-    def prop(evts):
-        t0 = dt.datetime(2024, 1, 1)
-        rows = [
-            (i, u, t, t0 + dt.timedelta(minutes=m))
-            for i, (u, t, m) in enumerate(evts)
-        ]
-        df = spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string, ts timestamp"
-        )
-        got = {
-            r.user_id: (r.steps_completed, r.t_step_1, r.t_step_2, r.t_step_3)
-            for r in funnel(df, STEPS).collect()
-        }
-        # greedy reference: earliest step-1; then earliest strictly-later
-        # occurrence of each next step
-        want = {}
-        by_user = {}
-        for _, u, t, ts in rows:
-            by_user.setdefault(u, []).append((ts, t))
-        for u, seq in by_user.items():
-            seq.sort()
-            times, prev = [], None
-            for step in STEPS:
-                cand = [
-                    ts for ts, t in seq
-                    if t == step and (prev is None or ts > prev)
-                ]
-                if not cand:
-                    break
-                prev = min(cand)
-                times.append(prev)
-            if times:
-                padded = times + [None] * (3 - len(times))
-                want[u] = (len(times), padded[0], padded[1], padded[2])
-        assert got == want
-
-    prop()
 
 
 def test_duplicate_spans_planted(spark):
@@ -2358,6 +2053,32 @@ def test_semantic_dedup_corpus_smaller_than_num_clusters(spark):
     got = dedup.semantic_dedup(empty)
     assert got.columns == ["vec_id", "cluster_id", "keep", "dup_of", "max_sim"]
     assert got.count() == 0
+
+
+def test_lloyd_centers_releases_its_broadcasts(spark, monkeypatch):
+    """Every broadcast one ``lloyd_centers`` call creates (one per
+    Lloyd pass) is destroyed by the time the call returns."""
+    from vamana_spark.index.cells import lloyd_centers
+
+    sc = spark.sparkContext
+    made = []
+    stock = sc.broadcast
+
+    def recording(value):
+        b = stock(value)
+        made.append(b)
+        return b
+
+    monkeypatch.setattr(sc, "broadcast", recording)
+    rng = np.random.default_rng(5)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(rng.standard_normal((40, 4)))],
+        "vec_id long, embedding array<double>",
+    )
+    C = lloyd_centers(df, 4, "vec_id", "embedding", seed=1, iters=3)
+    assert C.shape == (4, 4)
+    assert len(made) == 3
+    assert not any(b._jbroadcast.isValid() for b in made)
 
 
 # ---------------------------------------------------- incremental dedup

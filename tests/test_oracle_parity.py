@@ -83,7 +83,7 @@ def _frame(spark_frames, name) -> pd.DataFrame:
 def ddb():
     con = duckdb.connect()
     for name in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
+        "region nation customer supplier part orders lineitem documents embeddings"
     ).split():
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'"
@@ -144,8 +144,8 @@ def test_oracle_match(name, spark_frames, ddb):
 )
 def test_rows_only_runs(name, spark_frames):
     # the driver canonicalizes (sorts) even no-oracle outputs before
-    # recording the row count — an array/map column crashes its pandas
-    # sort (r1: q_media_features aborted the whole gate). Mimic that.
+    # recording the row count, and an array/map column crashes its
+    # pandas sort, aborting the whole gate. Mimic that.
     pdf = _frame(spark_frames, name)
     assert len(_canon(pdf)) > 0, f"{name}: rows-only query returned 0 rows"
     # Rows-only queries exist precisely because the DuckDB oracle can't

@@ -1,16 +1,13 @@
 """End-to-end training-data pipeline composition: the operators chained
 the way a real 100-TB curation job would chain them.
 
-Pipeline A (text): dedup → quality filter → language ID → fingerprint.
-Pipeline B (multimodal→vector): fake media → feature extraction → Vamana
-index → near-duplicate media pairs by embedding similarity.
+The text pipeline: dedup → quality filter → language ID → fingerprint.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from vamana_spark import VamanaIndex, VamanaParams
-from vamana_spark.operators import dedup, multimodal, text
+from vamana_spark.operators import dedup, text
 
 
 def test_text_curation_pipeline(spark, documents):
@@ -29,28 +26,6 @@ def test_text_curation_pipeline(spark, documents):
     rows = out.collect()
     assert len(rows) == n_kept
     assert all(r.pred_lang and len(r.fingerprint) == 32 for r in rows)
-
-
-def test_media_to_ann_pipeline(spark, documents):
-    media = multimodal.attach_fake_media(documents)
-    feats = multimodal.extract_image_features(media, dim=16, kinds=None)
-    n = feats.count()
-    assert n == documents.count()
-
-    params = VamanaParams(dim=16, alpha=1.2, R=16, L=32, ef_search=48, seed=42)
-    idx = VamanaIndex.build(
-        spark, feats, params, id_col="media_id", vec_col="feature"
-    )
-    assert idx.health_check()["ok"]
-
-    # self-search: each media item must find itself at distance 0
-    q = feats.limit(10).select(
-        F.col("media_id").alias("query_id"), F.col("feature").alias("query_vec")
-    )
-    res = idx.search(q, k=3).collect()
-    top1 = [r for r in res if r.rank == 1]
-    assert len(top1) == 10
-    assert all(r.vec_id == r.query_id and r.dist == 0.0 for r in top1)
 
 
 def test_cli_clean_ppl_band_keeps_short_docs(spark, tmp_path, capsys):

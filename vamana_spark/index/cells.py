@@ -48,9 +48,10 @@ def _dedupe_centers(C: np.ndarray) -> np.ndarray:
     Intentional split-cell duplicates are introduced AFTER this, by
     ``np.repeat``, and stay bit-identical. The bump is ULP-sized
     (``np.nextafter``) so it registers at ANY magnitude; _cell_layout
-    compares exact values, so one ULP fully disambiguates. Rows are
-    visited in order and only a row equal to an EARLIER row moves, so
-    a pairwise-distinct prefix comes back unchanged."""
+    compares row bytes, as this de-dup does, so one ULP fully
+    disambiguates. Rows are visited in order and only a row equal to an
+    EARLIER row moves, so a pairwise-distinct prefix comes back
+    unchanged."""
     C = np.asarray(C, dtype=np.float32).copy()
     seen = set()
     for i in range(C.shape[0]):
@@ -67,7 +68,10 @@ def _cell_layout(centers: np.ndarray):
     center matrix itself: oversized-cell splitting repeats a parent
     cell's center once per sub-shard, so runs of consecutive duplicate
     rows ARE the layout — no extra persisted state, and a pre-split
-    index (all rows distinct) degrades to the identity layout. Returns
+    index (all rows distinct) degrades to the identity layout. Rows
+    compare by bytes, the rule ``_dedupe_centers`` makes distinct by:
+    a ``np.repeat`` run is byte-identical, while ``0.0`` and ``-0.0``
+    stay two cells and a repeated NaN row stays one split. Returns
     int64 arrays: ``base[cell]`` = first shard row of the cell,
     ``nsplit[cell]`` = its sub-shard count, ``cell_of_shard[shard]`` =
     owning cell."""
@@ -75,8 +79,9 @@ def _cell_layout(centers: np.ndarray):
     if C.shape[0] == 0:
         z = np.zeros(0, dtype=np.int64)
         return z, z, z
+    B = np.ascontiguousarray(C).view(np.uint8)
     new = np.ones(C.shape[0], dtype=bool)
-    new[1:] = np.any(C[1:] != C[:-1], axis=1)
+    new[1:] = np.any(B[1:] != B[:-1], axis=1)
     cell_of_shard = (np.cumsum(new) - 1).astype(np.int64)
     base = np.flatnonzero(new).astype(np.int64)
     nsplit = np.diff(np.append(base, C.shape[0])).astype(np.int64)
@@ -164,7 +169,8 @@ def lloyd_centers(
     INSIDE one mapInPandas over the data: what reaches the driver is at
     most k rows per partition (a few KB), reduced in numpy — no
     join-back and no shuffle per pass. A cell that draws no rows in a
-    pass keeps its old center."""
+    pass keeps its old center. Each pass's centers broadcast is
+    destroyed once its partials are on the driver."""
     spark = df.sparkSession
     sample = (
         df.select(vec_col)
@@ -196,11 +202,14 @@ def lloyd_centers(
             if nz.size:
                 yield pd.DataFrame({"list_id": nz.astype(np.int32), "cnt": cnt[nz], "vsum": list(S[nz])})
 
-        upd = (
-            df.select(vec_col)
-            .mapInPandas(partials, schema="list_id int, cnt long, vsum array<double>")
-            .toPandas()
-        )
+        try:
+            upd = (
+                df.select(vec_col)
+                .mapInPandas(partials, schema="list_id int, cnt long, vsum array<double>")
+                .toPandas()
+            )
+        finally:
+            bc.destroy()
         S = np.zeros_like(C)
         cnt = np.zeros(C.shape[0], dtype=np.int64)
         for lid, c_, vs in zip(upd["list_id"], upd["cnt"], upd["vsum"]):

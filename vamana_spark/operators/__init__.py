@@ -1,23 +1,17 @@
 from vamana_spark.operators import (
     dedup,
-    events,
-    multimodal,
     quantization,
     relational,
     sampling,
     similarity,
-    temporal,
     text,
 )
 
 __all__ = [
     "dedup",
-    "events",
-    "multimodal",
     "quantization",
     "relational",
     "sampling",
     "similarity",
-    "temporal",
     "text",
 ]

@@ -26,7 +26,6 @@ from vamana_spark import exact
 from vamana_spark.functions.vector import l2_norm, squared_l2
 from vamana_spark.operators import (
     dedup,
-    events as ev,
     quantization,
     relational,
     similarity,
@@ -55,10 +54,6 @@ def _emb(spark, sf_dir):
 
 def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
-
-
-def _events(spark, sf_dir):
-    return load_table(spark, sf_dir, "events")
 
 
 # SQL fragment: squared L2 between two DOUBLE-cast float lists (DuckDB).
@@ -1848,140 +1843,6 @@ def q_ranking_metrics(spark, sf_dir):
 
 
 # ======================================================================
-# Events (X7)
-# ======================================================================
-
-@declare(
-    "q_events_hourly",
-    """
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-           event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS sum_value,
-           round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS avg_value,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-    FROM events GROUP BY 1, 2
-    """,
-)
-def q_events_hourly(spark, sf_dir):
-    """X7 hourly rollup (decimal-exact sums → deterministic rounding)."""
-    e = _events(spark, sf_dir)
-    hour = F.date_trunc("hour", F.col("ts"))
-    dec = F.col("value").cast("decimal(18,6)")
-    return (
-        e.groupBy(hour.alias("_h"), "event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(dec).alias("_sv"),
-            F.countDistinct("user_id").cast("long").alias("n_users"),
-        )
-        .select(
-            F.date_format("_h", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-            "n_events",
-            F.round(F.col("_sv").cast("double"), 4).alias("sum_value"),
-            F.round(F.col("_sv").cast("double") / F.col("n_events"), 4).alias("avg_value"),
-            "n_users",
-        )
-    )
-
-
-@declare(
-    "q_sessionize",
-    """
-    WITH s AS (
-      SELECT event_id, user_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT event_id, user_id,
-           CAST(sum(is_new) OVER (PARTITION BY user_id
-                ORDER BY event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-    FROM s
-    """,
-)
-def q_sessionize(spark, sf_dir):
-    """X7 gap-based sessionization (30-min gap)."""
-    out = ev.sessionize(_events(spark, sf_dir), 30)
-    return out.select("event_id", "user_id", "session_seq")
-
-
-@declare(
-    "q_session_stats",
-    """
-    WITH s AS (
-      SELECT user_id, ts, value,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    g AS (
-      SELECT user_id, ts, value,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS session_seq
-      FROM s
-    )
-    SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-           CAST(count(*) AS BIGINT) AS n_events,
-           round(max(epoch(ts)) - min(epoch(ts)), 3) AS duration_sec,
-           round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS sum_value
-    FROM g GROUP BY user_id, session_seq
-    """,
-)
-def q_session_stats(spark, sf_dir):
-    """X7 per-session aggregates."""
-    e = _events(spark, sf_dir)
-    s = ev.sessionize(e, 30)
-    return (
-        s.groupBy("user_id", "session_seq")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.round(
-                F.max(F.col("ts").cast("timestamp").cast("double"))
-                - F.min(F.col("ts").cast("timestamp").cast("double")),
-                3,
-            ).alias("duration_sec"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4).alias(
-                "sum_value"
-            ),
-        )
-    )
-
-
-@declare(
-    "q_top_users",
-    """
-    WITH t AS (
-      SELECT user_id,
-             round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS total_value,
-             CAST(count(*) AS BIGINT) AS n_events
-      FROM events GROUP BY user_id
-    )
-    SELECT user_id, total_value, n_events,
-           CAST(row_number() OVER (ORDER BY total_value DESC, user_id) AS BIGINT) AS rank
-    FROM t ORDER BY rank LIMIT 10
-    """,
-)
-def q_top_users(spark, sf_dir):
-    """X7 top-k users by total value."""
-    e = _events(spark, sf_dir)
-    totals = e.groupBy("user_id").agg(
-        F.round(F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4).alias(
-            "total_value"
-        ),
-        F.count("*").cast("long").alias("n_events"),
-    )
-    top = totals.orderBy(F.col("total_value").desc(), F.col("user_id").asc()).limit(10)
-    w = Window.orderBy(F.col("total_value").desc(), F.col("user_id").asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("long"))
-
-
-# ======================================================================
 # Relational (X8)
 # ======================================================================
 
@@ -2187,144 +2048,6 @@ def q_regional_revenue(spark, sf_dir):
         .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name")
         .agg(F.round(F.sum(rev).cast("double"), 2).alias("revenue"))
-    )
-
-
-# ======================================================================
-# Multimodal (extension surface; fake-decode is md5-derived → oracle-able)
-# ======================================================================
-
-def _hex4_sql(s: str, off: int) -> str:
-    """SQL for int(hexstr[off:off+4], 16), 1-based offset."""
-    return " + ".join(
-        f"(strpos('0123456789abcdef', substring({s}, {off + i}, 1)) - 1) * {16 ** (3 - i)}"
-        for i in range(4)
-    )
-
-
-def _fake_media(spark, sf_dir):
-    from vamana_spark.operators import multimodal
-
-    return multimodal.attach_fake_media(_docs(spark, sf_dir))
-
-
-@declare(
-    "q_media_meta",
-    """
-    SELECT doc_id AS media_id,
-           ['image', 'audio', 'video'][(doc_id % 3) + 1] AS kind,
-           CAST(length('media-' || doc_id) AS BIGINT) AS n_bytes,
-           md5('media-' || doc_id) AS content_md5
-    FROM documents
-    """,
-)
-def q_media_meta(spark, sf_dir):
-    """Multimodal: binary payload fingerprint + typed metadata."""
-    from vamana_spark.operators import multimodal
-
-    return multimodal.media_fingerprint(_fake_media(spark, sf_dir))
-
-
-@declare(
-    "q_media_decode",
-    f"""
-    WITH m AS (
-      SELECT doc_id AS media_id, md5('media-' || doc_id) AS h
-      FROM documents WHERE doc_id % 3 = 0
-    )
-    SELECT media_id,
-           CAST(16 + ({_hex4_sql('h', 1)}) % 2048 AS INTEGER) AS width,
-           CAST(16 + ({_hex4_sql('h', 5)}) % 2048 AS INTEGER) AS height,
-           round(({_hex4_sql('h', 9)}) / 65535.0, 6) AS mean_luma
-    FROM m
-    """,
-)
-def q_media_decode(spark, sf_dir):
-    """Multimodal: image 'decode' through the mapInPandas batch plumbing
-    (deterministic fake codec — oracle replicates it from md5)."""
-    from vamana_spark.operators import multimodal
-
-    return multimodal.decode_image_meta(_fake_media(spark, sf_dir)).select(
-        "media_id", "width", "height", "mean_luma"
-    )
-
-
-@declare(
-    "q_media_frames",
-    f"""
-    WITH m AS (
-      SELECT doc_id AS media_id, 'media-' || doc_id AS payload,
-             md5('media-' || doc_id) AS h
-      FROM documents WHERE doc_id % 3 = 2
-    ),
-    n AS (SELECT media_id, payload, 30 + ({_hex4_sql('h', 1)}) % 300 AS n_frames FROM m)
-    SELECT media_id, CAST(unnest(range(0, n_frames, 30)) AS INTEGER) AS frame_idx,
-           md5(payload || '-' || CAST(unnest(range(0, n_frames, 30)) AS VARCHAR)) AS frame_md5
-    FROM n
-    """,
-)
-def q_media_frames(spark, sf_dir):
-    """Multimodal: video frame sampling (1→N mapInPandas expansion)."""
-    from vamana_spark.operators import multimodal
-
-    return multimodal.sample_video_frames(_fake_media(spark, sf_dir), every_n=30)
-
-
-@declare(
-    "q_media_features",
-    f"""
-    WITH m AS (
-      SELECT doc_id AS media_id, 'media-' || doc_id AS payload FROM documents
-    ),
-    comp AS (
-      SELECT media_id, i,
-             ({_hex4_sql("md5(payload || '-f' || i)", 1)}) / 65535.0 * 2 - 1 AS u
-      FROM m, (SELECT unnest(range(0, 16)) AS i)
-    ),
-    nrm AS (
-      -- list_reduce is a left fold by definition: the squared terms
-      -- accumulate strictly in i order, matching the Python kernel's
-      -- sequential loop to the ulp (a window-frame SUM would leave the
-      -- aggregation order engine-defined — tree/segment aggregation is
-      -- permitted — and lean on round-6 to absorb the difference)
-      SELECT media_id,
-             list_reduce(list(u * u ORDER BY i), (acc, x) -> acc + x) AS s
-      FROM comp GROUP BY media_id
-    ),
-    normed AS (
-      SELECT comp.media_id, i, u / greatest(sqrt(nrm.s), 1e-12) AS f
-      FROM comp JOIN nrm ON comp.media_id = nrm.media_id
-    )
-    SELECT media_id, CAST(i AS INTEGER) AS i,
-           round(CAST(CAST(f AS REAL) AS DOUBLE), 6) AS feat
-    FROM normed
-    """,
-)
-def q_media_features(spark, sf_dir):
-    """Multimodal: fake feature extraction, hash-matched (r8 — was the
-    one rows-only-by-implementation-choice query; features are now
-    md5-derived like the decode path, so DuckDB replicates every
-    component). Gate projection: one (media_id, i, feat) row per
-    component — the array column itself is unhashable in the driver's
-    canonicalizer (r1 aborted on it), and per-row scalars beat a
-    string-formatted fingerprint (engine float→string rules differ).
-    The double pipeline is pinned on both sides (the Python kernel's
-    sequential norm sum replayed as an explicitly ordered list_reduce
-    left fold — not a window SUM, whose aggregation order is
-    engine-defined; float32 storage cast replicated via CAST(REAL)),
-    so round-6 agrees to the ulp.
-    """
-    from vamana_spark.operators import multimodal
-
-    # kinds=None: the gate row exercises the multimodal (every-kind)
-    # embedding path; the image-only default is covered by unit tests
-    feats = multimodal.extract_image_features(_fake_media(spark, sf_dir), kinds=None)
-    return feats.select(
-        "media_id", F.posexplode("feature").alias("i", "_f")
-    ).select(
-        "media_id",
-        F.col("i").cast("int").alias("i"),
-        F.round(F.col("_f").cast("double"), 6).alias("feat"),
     )
 
 
@@ -2951,39 +2674,6 @@ def q_knn_join_topk(spark, sf_dir):
     return out.select("query_id", "vec_id", "dist", "rank")
 
 
-@declare(
-    "q_events_window",
-    """
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS sum_value
-    FROM events GROUP BY 1, 2
-    """,
-)
-def q_events_window(spark, sf_dir):
-    """X7 (SURVEY §2c name): hourly rollup via F.window — the tumbling
-    form that transfers 1:1 to Structured Streaming."""
-    e = _events(spark, sf_dir)
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("sum_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 _IP_SQL = (
     "-list_sum(list_transform(list_zip(q.embedding, p.embedding),"
     " x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
@@ -3255,69 +2945,6 @@ def q_pack_documents(spark, sf_dir):
     return text.pack_documents(
         _docs(spark, sf_dir), budget=128, n_buckets=8
     ).withColumn("straddles", F.col("straddles").cast("long"))
-
-
-@declare(
-    "q_cohort_retention",
-    """
-    WITH ev AS (
-      SELECT DISTINCT user_id, date_trunc('week', ts) AS week FROM events
-    ), first AS (
-      SELECT user_id, min(week) AS cohort FROM ev GROUP BY user_id
-    )
-    SELECT CAST(CAST(cohort AS DATE) AS VARCHAR) AS cohort_week,
-           CAST((epoch(week) - epoch(cohort)) // 604800 AS BIGINT) AS week_offset,
-           CAST(count(DISTINCT ev.user_id) AS BIGINT) AS n_users
-    FROM ev JOIN first USING (user_id)
-    GROUP BY cohort, week
-    """,
-)
-def q_cohort_retention(spark, sf_dir):
-    """Weekly cohort retention over the events table — users bucketed by
-    first-activity week, counted per week offset (tz-invariant: weeks
-    truncate the naive timestamp)."""
-    from vamana_spark.operators.events import cohort_retention
-
-    return cohort_retention(_events(spark, sf_dir))
-
-
-@declare(
-    "q_funnel",
-    """
-    WITH ev AS (SELECT user_id, event_type, ts FROM events),
-    s1 AS (SELECT user_id, min(ts) AS t1 FROM ev
-           WHERE event_type = 'view' GROUP BY user_id),
-    s2 AS (SELECT e.user_id, min(ts) AS t2 FROM ev e JOIN s1 USING (user_id)
-           WHERE event_type = 'signup' AND ts > t1 GROUP BY e.user_id),
-    s3 AS (SELECT e.user_id, min(ts) AS t3 FROM ev e JOIN s2 USING (user_id)
-           WHERE event_type = 'purchase' AND ts > t2 GROUP BY e.user_id)
-    SELECT s1.user_id,
-           CAST(1 + (CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END)
-                  + (CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS steps_completed,
-           round(CAST(epoch(t2) - epoch(t1) AS DOUBLE), 3) AS secs_view_to_signup,
-           round(CAST(epoch(t3) - epoch(t2) AS DOUBLE), 3) AS secs_signup_to_purchase
-    FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-    """,
-)
-def q_funnel(spark, sf_dir):
-    """Ordered conversion funnel (view -> signup -> purchase): earliest
-    strictly-later completion per step, per user. Emits step counts and
-    inter-step durations (timezone-invariant derivations of the
-    operator's timestamps)."""
-    from vamana_spark.operators.events import _epoch_sec, funnel
-
-    out = funnel(_events(spark, sf_dir), ["view", "signup", "purchase"])
-    return out.select(
-        "user_id",
-        "steps_completed",
-        F.round(
-            _epoch_sec(F.col("t_step_2")) - _epoch_sec(F.col("t_step_1")), 3
-        ).alias("secs_view_to_signup"),
-        F.round(
-            _epoch_sec(F.col("t_step_3")) - _epoch_sec(F.col("t_step_2")), 3
-        ).alias("secs_signup_to_purchase"),
-    )
 
 
 @declare("q_chunk_embed_search")
