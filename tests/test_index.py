@@ -214,8 +214,8 @@ def test_ip_metric_index_recall(spark, embeddings, queries):
         dim=64, alpha=1.2, R=32, L=64, ef_search=96, seed=42, metric="ip"
     )
     idx = VamanaIndex.build(spark, embeddings, params)
-    # build never mutates the caller's params (ADVICE r4); the filled
-    # copy rides on the index
+    # build never mutates the caller's params, so one params object can
+    # serve several builds; the filled copy rides on the index
     assert params.mips_m is None
     assert idx.params.mips_m is not None and idx.params.mips_m > 0
     truth = exact.exact_knn(embeddings, queries, k=10, metric="ip")
@@ -522,12 +522,12 @@ def test_committed_index_fixtures_present_and_loadable(spark):
 
 
 def test_build_local_matches_dataframe_build(spark, embeddings):
-    """r14 (VERDICT r13 #1c): build_local is the reference-parity
-    ingest tier — points staged on the driver before the call, the
-    same region the reference's bench times (AddPoint untimed,
-    ref_bench.cpp). It must be SEMANTICALLY IDENTICAL to build() on a
-    DataFrame of the same rows: same graph relation, same medoid, same
-    search results, same persisted form."""
+    """build_local is the reference-parity ingest tier — points
+    staged on the driver before the call, the same region the
+    reference's bench times (AddPoint untimed, ref_bench.cpp). It must
+    be SEMANTICALLY IDENTICAL to build() on a DataFrame of the same
+    rows: same graph relation, same medoid, same search results, same
+    persisted form."""
     params = VamanaParams(dim=64, alpha=1.2, R=16, L=32, ef_search=32, seed=42)
     pdf = embeddings.toPandas()
     ids = pdf["vec_id"].to_numpy()
@@ -614,9 +614,9 @@ def test_build_local_caps_before_tier_ceiling(spark, monkeypatch):
 
 
 def test_deferred_rel_respects_setter_assignment(spark, embeddings):
-    """Code-review r14: forcing the deferred relation must not clobber
-    a relation a caller assigned through the setter while the thunk
-    was pending (maintenance code patches graph_df in place)."""
+    """Forcing the deferred relation must not clobber a relation a
+    caller assigned through the setter while the thunk was pending
+    (maintenance code patches graph_df in place)."""
     params = VamanaParams(dim=64, alpha=1.2, R=16, L=32, ef_search=32, seed=42)
     idx = VamanaIndex.build(spark, embeddings.limit(50), params)
     assert idx._rel_thunk is not None  # dense tier defers
@@ -647,7 +647,8 @@ def _search_tasks(spark, idx, queries, group):
 def test_search_fanout_sized_to_batch(spark, tmp_path):
     """A batch whose row count Catalyst knows runs in
     ceil(rows / MIN_QUERIES_PER_TASK) tasks (at most one per core) with
-    the kernel's exact rows; a parquet-read batch keeps its partitions."""
+    the kernel's exact rows from the routed starts (dist_comps counting
+    the seed distances); a parquet-read batch keeps its partitions."""
     import math
 
     import pandas as pd
@@ -669,9 +670,12 @@ def test_search_fanout_sized_to_batch(spark, tmp_path):
     assert tasks == min(sc.defaultParallelism, math.ceil(300 / MIN_QUERIES_PER_TASK))
 
     P, ids, indptr, nbrs = idx._load_local()
+    seeds = idx._entry_seeds()
     rq, rid, rd, hops, comps = kernels.search_topk_batch(
-        P, kernels.pad_adjacency(indptr, nbrs, len(P)), idx.params.medoid, Q, 10, 32
+        P, kernels.pad_adjacency(indptr, nbrs, len(P)), idx.params.medoid, Q, 10, 32,
+        starts=kernels.route_to_seeds(P, seeds, Q),
     )
+    comps = comps + seeds.size
     got = got.sort_values(["query_id", "rank"]).reset_index(drop=True)
     assert got["query_id"].tolist() == rq.tolist()
     assert got["vec_id"].tolist() == ids[rid].tolist()
@@ -684,3 +688,174 @@ def test_search_fanout_sized_to_batch(spark, tmp_path):
     fdf = spark.read.parquet(path)
     _, tasks = _search_tasks(spark, idx, fdf, "fanout-parquet")
     assert tasks == fdf.rdd.getNumPartitions()
+
+
+def _blob_corpus(n, seed=20_000, blobs=8, dim=64):
+    """``n`` points in ``blobs`` Gaussian blobs whose centres have the
+    spread of the points around them (the benchmark's clustered shape)."""
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((blobs, dim))
+    return (centers[rng.integers(0, blobs, n)] + rng.standard_normal((n, dim))).astype(
+        np.float32
+    )
+
+
+@pytest.fixture(scope="module")
+def blob_index(spark):
+    V = _blob_corpus(4000)
+    params = VamanaParams(dim=64, alpha=1.2, R=32, L=64, ef_search=32, seed=42)
+    idx = VamanaIndex.build_local(spark, np.arange(len(V)), V, params)
+    yield idx
+    idx.release()
+
+
+def _reached(idx, start):
+    """Node count a BFS over the index's driver-local graph reaches from
+    ``start``."""
+    from vamana_spark.index import kernels
+
+    P, _, indptr, nbrs = idx._load_local()
+    M = kernels.pad_adjacency(indptr, nbrs, len(P))
+    seen = np.zeros(len(P), dtype=bool)
+    seen[start] = True
+    frontier = np.array([start])
+    while frontier.size:
+        nxt = M[frontier].ravel()
+        nxt = np.unique(nxt[nxt >= 0])
+        frontier = nxt[~seen[nxt]]
+        seen[frontier] = True
+    return int(seen.sum())
+
+
+def test_every_entry_seed_reaches_what_the_medoid_reaches(spark, blob_index):
+    """A walk routed to any seed can visit every node the medoid walk can:
+    q_ann_filtered's exactness at ef = n rests on it. Checked on the
+    declared queries' sf0.01 index and on a 4k blob corpus."""
+    import os
+
+    from vamana_spark.plans.declared import _built_index
+
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
+    for idx in (_built_index(spark, sf), blob_index):
+        want = _reached(idx, idx.params.medoid)
+        seeds = idx._entry_seeds()
+        assert seeds.size > 1
+        assert [_reached(idx, s) for s in seeds] == [want] * seeds.size
+
+
+def test_health_check_self_recall(blob_index):
+    """health_check reports the entry seeds and a sampled self-recall@10
+    through the routed walk; it is deterministic and high on a clustered
+    corpus."""
+    a, b = blob_index.health_check(), blob_index.health_check()
+    assert a == b
+    assert a["ok"] and a["entry_points"] == blob_index._entry_seeds().size
+    assert a["self_recall_at_10"] >= 0.95, a
+
+
+def test_fixture_without_seeds_searches_routed(spark, embeddings):
+    """An index saved before entry seeds existed (its _meta.json holds
+    none) loads unchanged, derives its seeds, and searches from the
+    routed starts: the kernel's rows from those starts, with the seed
+    distances in dist_comps. Two loads return equal rows."""
+    import json
+    import os
+
+    from vamana_spark.index import kernels
+    from vamana_spark.plans.declared import _FIXTURE_ROOT
+
+    path = os.path.join(_FIXTURE_ROOT, "sf0.001", "base")
+    meta = json.load(open(os.path.join(path, "_meta.json")))
+    q = embeddings.where(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    rows = []
+    for _ in range(2):
+        idx = VamanaIndex.load(spark, path)
+        assert idx.describe() == meta  # nothing but the params is saved
+        rows.append(
+            idx.search(q, k=10).toPandas().sort_values(["query_id", "rank"])
+            .reset_index(drop=True)
+        )
+    assert rows[0].equals(rows[1])
+    qp = q.toPandas().sort_values("query_id")
+    Q = np.stack(qp["query_vec"].to_numpy()).astype(np.float32)
+    P, ids, indptr, nbrs = idx._load_local()
+    seeds = idx._entry_seeds()
+    rq, rid, _, hops, comps = kernels.search_topk_batch(
+        P, kernels.pad_adjacency(indptr, nbrs, len(P)), idx.params.medoid, Q,
+        10, idx.params.ef_search, starts=kernels.route_to_seeds(P, seeds, Q),
+    )
+    qids = qp["query_id"].to_numpy()
+    got = rows[0]
+    assert got["query_id"].tolist() == qids[rq].tolist()
+    assert got["vec_id"].tolist() == ids[rid].tolist()
+    assert got["hops"].tolist() == hops[rq].tolist()
+    assert got["dist_comps"].tolist() == (comps[rq] + seeds.size).tolist()
+    idx.release()
+
+
+def test_null_starts_are_routed(spark, blob_index):
+    """A starts frame whose start_ordinal is null gives the rows of a
+    search without starts: a null start is routed to its nearest seed."""
+    import pandas as pd
+
+    Q = _blob_corpus(300, seed=7)
+    qdf = spark.createDataFrame(
+        pd.DataFrame({"query_id": np.arange(300, dtype=np.int64), "query_vec": list(Q)}),
+        "query_id long, query_vec array<float>",
+    )
+    starts = qdf.select("query_id", F.lit(None).cast("long").alias("start_ordinal"))
+    key = ["query_id", "rank"]
+    plain = blob_index.search(qdf, k=10).toPandas().sort_values(key).reset_index(drop=True)
+    nulls = (
+        blob_index.search(qdf, k=10, starts=starts).toPandas()
+        .sort_values(key).reset_index(drop=True)
+    )
+    assert len(plain) == 3000
+    pd.testing.assert_frame_equal(plain, nulls)
+
+
+def _broadcast_subtrees(plan: str):
+    """The text of every BroadcastExchange subtree in a plan string."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        col = line.find("BroadcastExchange")
+        if col < 0:
+            continue
+        sub = [line]
+        for nxt in lines[i + 1 :]:
+            if len(nxt) - len(nxt.lstrip(" :+-")) <= col:
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
+def test_search_filtered_leaves_labels_unhinted(spark, embeddings):
+    """With auto-broadcast off, the label table of search_filtered is
+    shuffle-joined, not broadcast: the post-filter hints only the
+    per-query wants."""
+    import os
+
+    from vamana_spark.plans.declared import _FIXTURE_ROOT
+
+    idx = VamanaIndex.load(spark, os.path.join(_FIXTURE_ROOT, "sf0.001", "base"))
+    q = embeddings.where(F.col("vec_id") % 10 == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+        (F.col("vec_id") % 7).alias("want_label"),
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = idx.search_filtered(q, k=5, labels=embeddings.select("vec_id", "label"))
+        subtrees = _broadcast_subtrees(out._jdf.queryExecution().executedPlan().toString())
+        assert len(out.collect()) > 0
+    finally:
+        spark.conf.set(key, old)
+    assert subtrees, "the per-query wants stay broadcast"
+    assert not [t for t in subtrees if "label#" in t], subtrees
+    idx.release()

@@ -333,7 +333,7 @@ def test_bloom_positions_no_false_negatives_property():
     st.integers(min_value=0, max_value=2**31),
 )
 def test_cell_layout_and_subshard_properties(nsplit_list, seed):
-    """r9 split-layout invariants: _cell_layout recovers exactly the
+    """Split-layout invariants: _cell_layout recovers exactly the
     (base, nsplit, cell_of_shard) that np.repeat over distinct cell
     centers produces, and _subshard_of always lands inside the cell's
     split range for any vec_id (including negatives after casts)."""
@@ -536,3 +536,41 @@ def test_topk_rows_matches_per_row_lexsort(seed, nq, ef, k, dtype):
     assert rows.tolist() == want_r
     assert out_ids.tolist() == want_i
     assert out_d.tolist() == want_d
+
+
+@pytest.mark.parametrize(
+    "n, dim", [(1, 4), (2, 4), (17, 8), (500, 16), (5000, 8), (1_100_000, 2)]
+)
+def test_entry_seeds_rule(n, dim, monkeypatch):
+    """The seed rule: the same P and seed give the same seeds; the seeds
+    are distinct, sorted, in range and at most min(256, ceil(sqrt(n) / 4));
+    k-means trains on at most 64 sample points per seed (1.1M points
+    passes the 256 cap)."""
+    P = np.random.default_rng(n).standard_normal((n, dim)).astype(np.float32)
+    cap = min(256, int(np.ceil(np.sqrt(n) / 4)))
+    trained = []
+    kmeans = kernels._kmeans
+
+    def spy(X, k, seed, iters=15):
+        trained.append((X.shape[0], k))
+        return kmeans(X, k, seed, iters)
+
+    monkeypatch.setattr(kernels, "_kmeans", spy)
+    seeds = kernels.entry_seeds(P, 7)
+    assert trained == [(min(n, 64 * cap), cap)]
+    assert seeds.dtype == np.int64
+    assert 1 <= seeds.size <= cap
+    assert (np.diff(seeds) > 0).all()
+    assert 0 <= seeds[0] and seeds[-1] < n
+    assert np.array_equal(kernels.entry_seeds(P, 7), seeds)
+
+
+def test_route_to_seeds_picks_the_nearest_seed():
+    """Each query row starts at its nearest seed by exact squared L2."""
+    rng = np.random.default_rng(3)
+    P = rng.standard_normal((300, 8)).astype(np.float32)
+    Q = rng.standard_normal((40, 8)).astype(np.float32)
+    seeds = kernels.entry_seeds(P, 1)
+    got = kernels.route_to_seeds(P, seeds, Q)
+    d = ((Q[:, None, :].astype(np.float64) - P[seeds][None].astype(np.float64)) ** 2).sum(-1)
+    assert got.tolist() == seeds[d.argmin(axis=1)].tolist()

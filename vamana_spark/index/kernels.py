@@ -11,6 +11,13 @@ is an original implementation of the published DiskANN/Vamana algorithm
   reference Go API stubs these, go_api/vamana_go_api.go:163-171).
   ``search_topk`` runs it as the scalar reference the batched search is
   tested against.
+- ``entry_seeds`` / ``route_to_seeds`` — the one entry rule of
+  ``VamanaIndex.search``: S k-means centers of a seeded sample, each
+  snapped to its nearest sampled point, and each query's nearest seed
+  by one (nq × S) matrix product. A walk from the query's own cluster
+  skips the hops a medoid start spends crossing to it (REPOSE's global
+  routing before the local search): ~40% fewer distance computations
+  at equal recall on 8-blob corpora, about the same on uniform data.
 - ``search_topk_batch`` / ``search_topk_batch_adc`` — the serving
   searches. Both run one lockstep batched walk, ``_beam_walk``, and
   differ only in the distance function they hand it: float32 vectors,
@@ -77,6 +84,14 @@ DENSE_BUILD_MAX = 20_000
 # against the graph the earlier rounds left
 BUILD_ROUNDS = 16
 
+# most entry seeds entry_seeds picks (the cap binds past ~1M points), and
+# the sample points its k-means trains on per seed. A routed query pays
+# one distance per seed: 256 is small next to a walk's ~400-1,200
+# distance computations, and on uniform data, where routing saves few
+# hops, those distances are the whole cost of the seeds.
+MAX_ENTRY_SEEDS = 256
+SEED_SAMPLE_PER_CENTER = 64
+
 
 def dists_to(P: np.ndarray, ids: np.ndarray, q: np.ndarray) -> np.ndarray:
     """Squared L2 from query q to P[ids] — one vectorized BLAS-ish op."""
@@ -89,6 +104,34 @@ def medoid_of(P: np.ndarray) -> int:
     c = P.mean(axis=0)
     diff = P - c
     return int(np.argmin(np.einsum("ij,ij->i", diff, diff)))
+
+
+def entry_seeds(P: np.ndarray, seed: int) -> np.ndarray:
+    """The entry seeds of a searched graph over P: sorted distinct
+    ordinals, each the sampled point nearest one k-means center.
+
+    S = min(MAX_ENTRY_SEEDS, ceil(sqrt(n) / 4)) centers (18 at 5k, 250
+    at 1M) come from ``_kmeans(sample, S, seed, 10)`` over a seeded
+    sample of min(n, 64·S) points, so the cost does not grow with n.
+    Snapping can map two centers to one point, so fewer than S seeds
+    may come back."""
+    n = P.shape[0]
+    S = min(MAX_ENTRY_SEEDS, int(np.ceil(np.sqrt(n) / 4)))
+    rng = np.random.default_rng(seed)
+    m = min(n, SEED_SAMPLE_PER_CENTER * S)
+    sample = np.arange(n) if m == n else np.sort(rng.choice(n, m, replace=False))
+    X = P[sample].astype(np.float64)
+    C = _kmeans(X, S, seed, 10)
+    d = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T)     # + ||c||^2, per column
+    return np.unique(sample[d.argmin(axis=0)])
+
+
+def route_to_seeds(P: np.ndarray, seeds: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """Each query row's nearest seed (``entry_seeds``) in one (nq × S)
+    matrix product: the walk's start node per query."""
+    Ps = P[seeds].astype(np.float64)
+    d = (Ps * Ps).sum(1)[None, :] - 2.0 * (Q.astype(np.float64) @ Ps.T)
+    return seeds[d.argmin(axis=1)]
 
 
 def greedy_search(

@@ -1387,8 +1387,7 @@ class PartitionedVamanaIndex:
         same post-filter-with-over-retrieval semantics as
         ``VamanaIndex.search_filtered``: retrieve ``k * overfetch``
         candidates per query across the probed shards, then keep each
-        query's k nearest label-matching hits via a broadcast (or, at
-        dataset-sized labels, shuffle) equi-join. Sound for predicates
+        query's k nearest label-matching hits. Sound for predicates
         with selectivity ≳ 1/overfetch of the beam; needle-in-haystack
         labels belong on :func:`exact.exact_knn_filtered`.
         """
@@ -1401,23 +1400,10 @@ class PartitionedVamanaIndex:
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
         )
-        wants = queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(want_col).alias("_want")
-        )
-        lab = labels.select("vec_id", F.col(label_col).alias("_lbl"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist").asc(), F.col("vec_id").asc()
-        )
-        # no broadcast hint on labels: this tier exists for dataset sizes
-        # where the base table (and so its label column) may not fit an
-        # executor — Catalyst broadcasts small label tables on its own
-        return (
-            hits.join(F.broadcast(wants), "query_id")
-            .join(lab, "vec_id")
-            .where(F.col("_lbl") == F.col("_want"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", "dist", "rank")
+        from vamana_spark.index.vamana import _label_post_filter
+
+        return _label_post_filter(
+            hits, queries, labels, k, query_id_col, label_col, want_col
         )
 
     def search_pq(

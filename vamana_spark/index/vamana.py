@@ -19,11 +19,14 @@ Physical design
   parallel via ``applyInPandas`` (one Arrow group per shard), edge union,
   then a distributed degree-capped re-prune. No stage ever materializes
   an O(n^2) structure.
-* **Search**: broadcast (points matrix, CSR graph, medoid) to executors
-  once; ``mapInPandas`` over the *queries* DataFrame runs the beam-search
-  kernel per query — queries scale out, the index is read-only shared
-  state. Per-query hop/distance counters are emitted as columns (the
-  reference's Go API left these as TODO stubs,
+* **Search**: broadcast (points matrix, padded graph, entry seeds) to
+  executors once; ``mapInPandas`` over the *queries* DataFrame starts
+  each query's beam walk at its nearest entry seed (``kernels.entry_seeds``:
+  k-means centers snapped to points, derived per index instance, not
+  saved) instead of the medoid — the global routing step of REPOSE
+  (ICDE 2021) before the local walk. Queries scale out, the index is
+  read-only shared state. Per-query hop/distance counters are emitted as
+  columns (the reference's Go API left these as TODO stubs,
   go_api/vamana_go_api.go:163-171).
 """
 
@@ -52,9 +55,14 @@ POINTS_SCHEMA = "vec_id long, ordinal long, embedding array<float>"
 
 # fewest queries a search task gets when the batch's row count is known.
 # Each Python task pays ~0.07 s of fixed worker CPU (see
-# ensure_parallelism), the kernel time of ~250 queries at ef=32 on a
-# 5k-point index (~0.29 ms per query).
+# ensure_parallelism). Routed entry seeds cut the kernel time of a
+# 5k-point index at ef=32 to ~0.08 ms per query (one BLAS thread), so
+# 256 queries no longer cost what the fixed share does; the constant is
+# kept on purpose, since a larger one trades wall time for CPU.
 MIN_QUERIES_PER_TASK = 256
+
+# most indexed points health_check searches for its self-recall
+HEALTH_SAMPLE = 256
 
 
 class VamanaIndex:
@@ -78,7 +86,10 @@ class VamanaIndex:
         # first access instead of a cost every call pays up front
         self._rel_thunk = None
         self._local: Optional[Tuple[np.ndarray, ...]] = None
-        self._bcast = None  # broadcast (P, ids, padded adjacency), reused across searches
+        # broadcast (P, ids, padded adjacency, entry seeds), reused across
+        # searches; the seeds are derived once per instance, never saved
+        self._bcast = None
+        self._seeds: Optional[np.ndarray] = None
 
     def _force_rel(self) -> None:
         thunk = self._rel_thunk
@@ -139,6 +150,7 @@ class VamanaIndex:
                 pass
             self._bcast = None
         self._local = None
+        self._seeds = None
 
     # ------------------------------------------------------------------ build
 
@@ -620,6 +632,13 @@ class VamanaIndex:
             self._local = (P, ids, indptr, nbrs)
         return self._local
 
+    def _entry_seeds(self) -> np.ndarray:
+        """The ordinals each search routes its queries to
+        (``kernels.entry_seeds`` over the metric-transformed points)."""
+        if self._seeds is None:
+            self._seeds = kernels.entry_seeds(self._load_local()[0], self.params.seed)
+        return self._seeds
+
     def search(
         self,
         queries: DataFrame,
@@ -633,6 +652,15 @@ class VamanaIndex:
 
         Returns (query_id, vec_id, dist, rank, hops, dist_comps). The
         index is broadcast once; queries are partition-parallel.
+
+        Entry: each query's walk starts at its nearest entry seed
+        (``kernels.route_to_seeds``, one (nq × S) product per Arrow
+        batch), and its ``dist_comps`` counts those S seed distances. A
+        row of ``starts`` (``query_id``, ``start_ordinal``) overrides
+        that start; a null ``start_ordinal`` is routed like a row with no
+        start. On the perfbench 5k blob corpus at ef=32 routing cuts the
+        distance computations per query from ~760 to ~430 at equal
+        recall.
 
         Query fan-out: when Catalyst knows the batch's row count (as for
         ``createDataFrame(pandas)``), the queries run in
@@ -650,13 +678,17 @@ class VamanaIndex:
         ef = int(ef_search or self.params.ef_search)
         metric = self.params.metric
         mips_m = self.params.mips_m
-        medoid = int(self.params.medoid if self.params.medoid is not None else 0)
         # pad ONCE driver-side and broadcast the search-ready form, cached
         # on the instance — re-broadcasting per call re-ships the index
         if self._bcast is None:
             P, ids, indptr, nbrs = self._load_local()
             self._bcast = self.spark.sparkContext.broadcast(
-                (P, ids, kernels.pad_adjacency(indptr, nbrs, P.shape[0]))
+                (
+                    P,
+                    ids,
+                    kernels.pad_adjacency(indptr, nbrs, P.shape[0]),
+                    self._entry_seeds(),
+                )
             )
         bidx = self._bcast
 
@@ -678,7 +710,7 @@ class VamanaIndex:
             has_start = False
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            P, ids, nbr_mat = bidx.value
+            P, ids, nbr_mat, seeds = bidx.value
             for pdf in batches:
                 if pdf.empty:
                     continue
@@ -688,15 +720,18 @@ class VamanaIndex:
                     qn2 = np.einsum("ij,ij->i", Qd, Qd)
                 Q = _metric_transform(Q, metric, mips_m, query=True)
                 qids = pdf["query_id"].to_numpy(dtype=np.int64)
-                starts = None
+                routed = np.ones(len(qids), dtype=bool)
+                starts = np.zeros(len(qids), dtype=np.int64)
                 if has_start and "start_ordinal" in pdf.columns:
                     so = pdf["start_ordinal"].to_numpy()
-                    starts = np.where(
-                        pd.isna(so), medoid, np.nan_to_num(so, nan=medoid)
-                    ).astype(np.int64)
+                    routed = pd.isna(so)
+                    starts[~routed] = so[~routed].astype(np.int64)
+                starts[routed] = kernels.route_to_seeds(P, seeds, Q[routed])
+                # every row has a start, so the kernel's medoid default is unused
                 rq, rid, rd, hops, comps = kernels.search_topk_batch(
-                    P, nbr_mat, medoid, Q, k, ef, starts=starts
+                    P, nbr_mat, None, Q, k, ef, starts=starts
                 )
+                comps[routed] += seeds.size
                 if metric == "ip":
                     # augmented-L2 back to -<q,x>: rd = ||q||^2 + M^2 - 2<q,x>
                     rd = (rd - qn2[rq] - float(mips_m) ** 2) / 2.0
@@ -803,10 +838,10 @@ class VamanaIndex:
 
         Post-filter with over-retrieval: the beam retrieves
         ``k * overfetch`` candidates (ef widened to match), then each
-        query keeps its k nearest label-matching hits — expressed as a
-        declarative join+window so Catalyst owns the physical strategy
-        (labels broadcast here; at dataset-sized labels it degrades to a
-        plain shuffle equi-join on vec_id, never a cross product).
+        query keeps its k nearest label-matching hits
+        (:func:`_label_post_filter`, a declarative join + window, so
+        Catalyst broadcasts small label tables and shuffle-joins
+        dataset-sized ones on vec_id, never a cross product).
         Sound for moderately selective predicates (selectivity ≳
         1/overfetch of the beam); for needle-in-haystack labels use
         :func:`exact.exact_knn_filtered`, whose scan cost is unchanged
@@ -820,20 +855,8 @@ class VamanaIndex:
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
         )
-        wants = queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(want_col).alias("_want")
-        )
-        lab = labels.select("vec_id", F.col(label_col).alias("_lbl"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist").asc(), F.col("vec_id").asc()
-        )
-        return (
-            hits.join(F.broadcast(wants), "query_id")
-            .join(F.broadcast(lab), "vec_id")
-            .where(F.col("_lbl") == F.col("_want"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", "dist", "rank")
+        return _label_post_filter(
+            hits, queries, labels, k, query_id_col, label_col, want_col
         )
 
     # ------------------------------------------------------------ maintenance
@@ -1038,6 +1061,16 @@ class VamanaIndex:
         )
 
     def health_check(self) -> dict:
+        """Graph health: ``ok`` when every out-degree is at most R, the
+        degree figures, ``entry_points`` (the number of entry seeds
+        searches route to) and ``self_recall_at_10``: recall@10 of a
+        seeded sample of at most ``HEALTH_SAMPLE`` indexed points,
+        searched from their routed seeds at ``params.ef_search``,
+        against ``kernels.brute_topk_batch`` over the driver-local
+        arrays. Degree checks alone miss a graph whose entry strands
+        queries in one cluster; the self-recall does not. Like search,
+        it needs the driver-local arrays (``MemoryError`` past
+        ``BROADCAST_TIER_MAX_BYTES``)."""
         row = (
             self.degree_stats()
             .agg(
@@ -1048,12 +1081,24 @@ class VamanaIndex:
             .first()
         )
         ok = row["max_deg"] is None or row["max_deg"] <= self.params.R
+        P, _, indptr, nbrs = self._load_local()
+        seeds = self._entry_seeds()
+        n = P.shape[0]
+        rng = np.random.default_rng(self.params.seed)
+        Q = P[np.sort(rng.choice(n, min(n, HEALTH_SAMPLE), replace=False))]
+        rq, rid, *_ = kernels.search_topk_batch(
+            P, kernels.pad_adjacency(indptr, nbrs, n), None, Q, 10,
+            int(self.params.ef_search), starts=kernels.route_to_seeds(P, seeds, Q),
+        )
+        tq, tid, _ = kernels.brute_topk_batch(P, Q, 10)
         return {
             "ok": bool(ok),
             "max_degree": row["max_deg"],
             "avg_degree": row["avg_deg"],
             "n": row["n"],
             "R": self.params.R,
+            "entry_points": int(seeds.size),
+            "self_recall_at_10": np.intersect1d(rq * n + rid, tq * n + tid).size / tq.size,
         }
 
     # ------------------------------------------------------------- persist
@@ -1088,6 +1133,38 @@ def _pad_prune_rows(Pv, srcs, lists, alpha: float, R: int):
         cand[i, : len(x)] = x
     pruned = kernels.robust_prune_gather(Pv, srcs, cand, alpha, R)
     return [row[row >= 0] for row in pruned]
+
+
+def _label_post_filter(
+    hits: DataFrame,
+    queries: DataFrame,
+    labels: DataFrame,
+    k: int,
+    query_id_col: str,
+    label_col: str,
+    want_col: str,
+) -> DataFrame:
+    """The post-filter of both tiers' ``search_filtered``: each query's
+    k nearest ``hits`` whose label (``labels.label_col`` by vec_id)
+    equals the query's ``want_col``, ranked by (dist, vec_id). The
+    per-query wants are broadcast; the labels carry no hint, because
+    they can be as large as the indexed set — Catalyst broadcasts a
+    small label table on its own and shuffle-joins a large one."""
+    wants = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(want_col).alias("_want")
+    )
+    lab = labels.select("vec_id", F.col(label_col).alias("_lbl"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("dist").asc(), F.col("vec_id").asc()
+    )
+    return (
+        hits.join(F.broadcast(wants), "query_id")
+        .join(lab, "vec_id")
+        .where(F.col("_lbl") == F.col("_want"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", "dist", "rank")
+    )
 
 
 def _rows_df(spark: SparkSession, schema: str, **cols) -> DataFrame:

@@ -471,14 +471,15 @@ def q_filtered_knn(spark, sf_dir):
 )
 def q_ann_filtered(spark, sf_dir):
     """Graph-side filtered ANN: over-retrieve on the beam, post-filter
-    by label via a broadcast join + window.
+    by label via a join + window.
 
     HASH-STRICT by the q_partitioned_pq_exact recipe: with
-    ``ef_search = n`` the beam holds
-    every evaluated node (nothing is ever evicted) and walks until no
-    beam entry is unexpanded — on a medoid-reachable graph
-    (q_graph_reachability gates exactly that) the visited set is the
-    whole corpus and the ranked output IS exact kNN, making beam
+    ``ef_search = n`` the beam holds every evaluated node (nothing is
+    ever evicted) and walks until no beam entry is unexpanded — on a
+    graph fully reachable from the query's entry seed
+    (q_graph_reachability gates reach from the medoid; test_index.py
+    checks that every seed reaches as many nodes) the visited set is
+    the whole corpus and the ranked output IS exact kNN, making beam
     ORDER irrelevant and the post-filter join/window logic — the part
     unique to search_filtered — bit-checkable against the same SQL
     truth q_filtered_knn uses. The approximate operating point
