@@ -1,12 +1,13 @@
-"""Pipeline operators: dedup / text / relational / similarity."""
+"""Pipeline operators: dedup / text / similarity."""
 
+import os
 import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vamana_spark.operators import dedup, relational, sampling, similarity, text
+from vamana_spark.operators import dedup, sampling, similarity, text
 
 
 # ----------------------------------------------------------------- dedup
@@ -360,35 +361,6 @@ def test_unigram_logprob_orders_typical_above_rare(spark):
     assert all(r.avg_logprob < 0 for r in got.values())
 
 
-# -------------------------------------------------------------- relational
-
-def test_pricing_summary(spark, sf_dir):
-    t = relational.load_tables(spark, sf_dir)
-    rows = relational.pricing_summary(t["lineitem"]).collect()
-    assert len(rows) >= 1
-    li = t["lineitem"].where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-    assert sum(r.count_order for r in rows) == li.count()
-
-
-def test_revenue_by_nation_consistency(spark, sf_dir):
-    t = relational.load_tables(spark, sf_dir)
-    out = relational.revenue_by_nation(
-        t["customer"], t["orders"], t["lineitem"], t["nation"]
-    )
-    rows = out.collect()
-    assert len(rows) > 0
-    total = sum(r.n_items for r in rows)
-    assert total == t["lineitem"].count()  # every lineitem maps to one nation
-
-
-def test_top_customers_rank(spark, sf_dir):
-    t = relational.load_tables(spark, sf_dir)
-    rows = relational.top_customers(t["customer"], t["orders"], t["lineitem"], k=5).collect()
-    rows.sort(key=lambda r: r.rank)
-    revs = [r.revenue for r in rows]
-    assert revs == sorted(revs, reverse=True) and len(rows) == 5
-
-
 # -------------------------------------------------------------- similarity
 
 def test_normalize_embeddings(embeddings):
@@ -588,11 +560,11 @@ def test_bucket_pairs_across_arrow_batches(spark):
 
 
 def test_hash_set_jaccard_matches_string_sets(spark):
-    """The batch LSH verify (``_shingle_hash_sets`` and
-    ``_hash_set_jaccard``, behind ``minhash_near_dups`` and
-    ``simhash_verified_near_dups``) equals a Python Jaccard over the
-    ``_shingles_py`` string sets on edge texts: empty and null text,
-    fewer than n tokens, U+00A0 inside a text, repeated shingles."""
+    """The one verify (``_shingle_hash_sets`` and ``_hash_set_jaccard``)
+    equals a Python Jaccard over the ``_shingles_py`` string sets on
+    edge texts: empty and null text, fewer than n tokens, U+00A0 inside
+    a text, repeated shingles. The exact n-gram join and the
+    cross-snapshot scan emit the same values on the same texts."""
     import itertools
 
     texts = ["", None, "two words", "Two  WORDS", "a b c d e", "a\u00a0b c d e",
@@ -602,15 +574,56 @@ def test_hash_set_jaccard_matches_string_sets(spark):
     cands = spark.createDataFrame(pairs, "a_id long, b_id long")
     hs = dedup._shingle_hash_sets(df)
     got = {(r.a_id, r.b_id): r.jaccard
-           for r in dedup._hash_set_jaccard(cands, hs, "doc_id", 0.0).collect()}
+           for r in dedup._hash_set_jaccard(
+               dedup._pair_hash_sets(cands, hs, "doc_id"), 0.0, "a_id", "b_id").collect()}
 
     def jaccard(s, t):
         a, b = set(dedup._shingles_py(s, 3)), set(dedup._shingles_py(t, 3))
         return round(len(a & b) / len(a | b), 4)
 
-    assert got == {(i, j): jaccard(texts[i], texts[j]) for i, j in pairs}
+    want = {(i, j): jaccard(texts[i], texts[j]) for i, j in pairs}
+    assert got == want
     # the edge texts pair up as the string rule says
     assert got[(0, 1)] == 1.0 and got[(2, 3)] == 1.0 and got[(4, 5)] == 1.0 and got[(6, 7)] == 1.0
+    # the exact join scores every pair
+    ngram = {(r.a_id, r.b_id): r.jaccard
+             for r in dedup.ngram_jaccard_join(df, threshold=0.0).collect()}
+    assert ngram == want
+    # the cross-snapshot scan: batch doc 100 + i against corpus doc j;
+    # it emits LSH candidates only, and identical texts always collide
+    batch = df.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    inc = {(r.batch_id - 100, r.seen_id): r.jaccard
+           for r in dedup.incremental_near_dups(batch, df, threshold=0.0).collect()}
+    assert all(j == jaccard(texts[i], texts[k]) for (i, k), j in inc.items())
+    same = [(i, i) for i in range(len(texts))] + [p for p, j in want.items() if j == 1.0]
+    assert all(inc[(i, k)] == 1.0 and inc[(k, i)] == 1.0 for i, k in same)
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda df, d: dedup.band_hash_array("minhash", 64, 7),
+        lambda df, d: dedup.minhash_lsh_candidates(df, bands=7),
+        lambda df, d: dedup.minhash_lsh_candidates(df, bands=0),
+        lambda df, d: dedup.minhash_near_dups(df, bands=7),
+        lambda df, d: dedup.incremental_near_dups(df, df, bands=7),
+        lambda df, d: dedup.save_signatures(df, d, bands=7),
+        lambda df, d: dedup.simhash_near_dups(df, bands=5),
+        lambda df, d: dedup.simhash_near_dups(df, max_hamming=4, bands=4),
+    ],
+    ids=["band_hash_array", "lsh_candidates", "lsh_candidates_zero", "near_dups",
+         "incremental", "save_signatures", "simhash_bands", "simhash_radius"],
+)
+def test_banding_parameters_raise_value_error(spark, tmp_path, call):
+    """Banding that cannot cut the signature evenly (or, for SimHash, a
+    radius the bands cannot guarantee) fails at the call with a
+    ValueError naming the values, not later inside a Python worker; a
+    signature store is not written with such parameters."""
+    df = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+    d = str(tmp_path / "store")
+    with pytest.raises(ValueError, match=r"bands=\d+"):
+        call(df, d)
+    assert not os.path.exists(d)
 
 
 def test_band_keys_match_python_reference(spark):

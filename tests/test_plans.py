@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vamana_spark import exact
-from vamana_spark.operators import dedup, relational
+from vamana_spark.operators import dedup
 from vamana_spark.plans import declared as D
 
 
@@ -35,16 +35,6 @@ def test_filter_pushdown_to_parquet(spark, sf_dir):
     df = D._emb(spark, sf_dir).where(F.col("vec_id") == 7).select("vec_id")
     p = plan(df)
     assert "PushedFilters: [IsNotNull(vec_id), EqualTo(vec_id,7)]" in p, p
-
-
-def test_tpch_pricing_filter_pushed(spark, sf_dir):
-    p = plan(D.q_tpch_pricing(spark, sf_dir))
-    assert "PushedFilters" in p and "l_shipdate" in p.split("PushedFilters", 1)[1][:200], p
-
-
-def test_revenue_by_nation_broadcasts_dim(spark, sf_dir):
-    p = plan(D.q_tpch_join_agg(spark, sf_dir))
-    assert "BroadcastHashJoin" in p, p
 
 
 def test_exact_knn_broadcasts_queries(spark, sf_dir):
@@ -93,12 +83,6 @@ def test_lsh_candidates_one_band_shuffle(spark, documents):
     asc = r"band_id#\d+ ASC NULLS FIRST, band_hash#\d+L? ASC NULLS FIRST, doc_id#\d+L? ASC NULLS FIRST"
     assert re.search(rf"\[{asc}\]", bodies[srt]), p
     assert band_ex[0] < srt < m < min(pair_aggs) < pair_ex[0] < max(pair_aggs), p
-
-
-def test_global_topk_uses_take_ordered(spark, sf_dir):
-    t = relational.load_tables(spark, sf_dir, "customer", "orders", "lineitem")
-    p = plan(relational.top_customers(t["customer"], t["orders"], t["lineitem"], k=5))
-    assert "TakeOrderedAndProject" in p, p
 
 
 def test_bm25_shape_takeordered_broadcast_no_cross(spark, sf_dir):
@@ -152,24 +136,6 @@ def test_groupby_has_partial_aggregation(spark, sf_dir):
     p = plan(D.q_grouped_text_stats(spark, sf_dir))
     # two HashAggregate nodes (partial + final) around the shuffle
     assert len(re.findall(r"HashAggregate", p)) >= 2, p
-
-
-def test_whole_stage_codegen_on_relational(spark, sf_dir):
-    import contextlib
-    import io
-
-    # AQE defers codegen planning until execution; disable it to inspect
-    # the static plan's codegen stages
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            D.q_tpch_pricing(spark, sf_dir).explain("codegen")
-        p = buf.getvalue()
-        m = re.search(r"Found (\d+) WholeStageCodegen subtrees", p)
-        assert m and int(m.group(1)) >= 1, p[:500]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):

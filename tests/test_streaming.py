@@ -81,11 +81,7 @@ def test_streaming_minhash_dedup_matches_batch(spark, documents, tmp_path):
     result deterministic and batch-comparable."""
     from pyspark.sql import Window
 
-    from vamana_spark.operators.dedup import (
-        _shingle_udf,
-        _signature_udf,
-        band_hash_array,
-    )
+    from vamana_spark.operators.dedup import _text_signature_udf, band_hash_array
     from vamana_spark.streaming.dedup import streaming_minhash_dedup
 
     base = (
@@ -143,7 +139,7 @@ def test_streaming_minhash_dedup_matches_batch(spark, documents, tmp_path):
     sigs = allrows.select(
         "doc_id",
         "ts",
-        _signature_udf(64)(_shingle_udf(3)(F.col("text"))).alias("minhash"),
+        _text_signature_udf(64, 3)(F.col("text")).alias("minhash"),
     )
     banded = sigs.select(
         "doc_id",

@@ -6,7 +6,7 @@ Public surface:
   - ``exact``    — exact kNN, medoid, distance ops (the brute-force oracle path)
   - ``functions``— vector column expressions (squared L2, cosine, dot, norm)
   - ``operators``— LLM-data-pipeline operators (dedup, text stats, similarity
-                   joins, relational checks)
+                   joins)
 
 Design notes: DataFrame/SQL first; Catalyst does pushdown/pruning/join
 selection; NumPy kernels enter only through Arrow-batched pandas UDFs

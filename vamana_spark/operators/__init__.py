@@ -1,7 +1,6 @@
 from vamana_spark.operators import (
     dedup,
     quantization,
-    relational,
     sampling,
     similarity,
     text,
@@ -10,7 +9,6 @@ from vamana_spark.operators import (
 __all__ = [
     "dedup",
     "quantization",
-    "relational",
     "sampling",
     "similarity",
     "text",

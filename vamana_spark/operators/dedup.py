@@ -9,13 +9,16 @@ Scale notes (the whole point of these):
   shuffle on (band_id, band_hash). A sort within each partition then
   lines every bucket up as a run, and one numpy walk over the sorted
   Arrow batches turns the runs into pairs; only the pair distinct
-  shuffles again. Every MinHash path shingles with one Python rule
-  (``_shingles_py``) and signs with one (``_signature_matrix``), so a
+  shuffles again.
+- One shingler, one signer, one verify. Every MinHash and word n-gram
+  Jaccard path shingles with ``_shingles_py``, signs with
+  ``_text_signature_matrix`` and scores a pair with
+  ``_hash_set_jaccard`` over each doc's sorted 64-bit shingle hashes
+  (``_shingle_hash_sets``: the signature's own base hashes), so a
   signature table written by one call bands and verifies the same way
-  in any other. Verification re-checks Jaccard only on candidate pairs,
-  over each candidate doc's sorted 64-bit shingle hashes (the
-  signature's own base hashes), so the verify joins move longs, not
-  shingle strings.
+  in any other, and the verify joins move longs, not shingle strings.
+  This holds for the batch LSH pairs, the exact n-gram join, the
+  cross-snapshot scans and their streaming mirror.
 - SimHash buckets by 16-bit bands of a 64-bit signature (Hamming-ball
   blocking), same bucket walk, and verifies by the same hash sets.
 """
@@ -74,17 +77,6 @@ def duplicate_groups(
 
 # ------------------------------------------------------------------ shingles
 
-def char_shingles(text_col: str, n: int = 5, lowercase: bool = True) -> Column:
-    """Character n-gram shingles as an array<string> (distinct).
-
-    Built with sequence+transform+substring — pure Catalyst, no UDF.
-    """
-    t = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    t = F.regexp_replace(t, r"\s+", " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: t.substr(i, F.lit(n))))
-
-
 def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     """Word n-gram shingles (distinct) over a MATERIALIZED token array.
 
@@ -103,17 +95,6 @@ def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Word n-gram shingles (distinct), whitespace tokenization.
-
-    Single-expression form for ad-hoc use; hot paths should go through
-    ``shingle_sets`` (or stage the tokens as a column first — see
-    ``word_shingles_from_tokens``).
-    """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != "")
-    return word_shingles_from_tokens(toks, n)
-
-
 # -------------------------------------------------------------- exact Jaccard
 
 def ngram_jaccard_join(
@@ -128,48 +109,36 @@ def ngram_jaccard_join(
     """Exact n-gram Jaccard similarity join: pairs (a, b), a < b, with
     jaccard >= threshold. ``block_col`` restricts comparisons to equal
     blocking keys (turning the cross join into an equi-join); without it
-    the exact path is quadratic, so it is auto-tiered (the
-    ``embedding_near_dups`` pattern, VERDICT r5 #4): at or below
-    ``max_exact_rows`` the all-pairs join runs (every true pair emitted,
-    oracle parity); above it the plan routes to MinHash-LSH candidate
-    generation with exact-Jaccard verification on candidates only
-    (``minhash_near_dups`` — same output columns, same shingling, at the
-    standard LSH recall trade). Set ``max_exact_rows=0`` to force the
-    LSH path, or pass ``block_col`` to keep exact semantics at scale.
+    the exact path is quadratic, so it is auto-tiered, as
+    ``embedding_near_dups`` is, so that a large unblocked input never
+    plans a cross product: at or below ``max_exact_rows`` the all-pairs
+    join runs (every true pair emitted, oracle parity); above it the
+    plan routes to MinHash-LSH candidate generation with exact-Jaccard
+    verification on candidates only (``minhash_near_dups`` — same
+    output columns, same shingling, same verify, at the standard LSH
+    recall trade). Set ``max_exact_rows=0`` to force the LSH path, or
+    pass ``block_col`` to keep exact semantics at scale. Pairs are
+    scored by ``_hash_set_jaccard`` either way.
     """
+    from vamana_spark.functions.util import ensure_parallelism
+
     if block_col is None and df.count() > max_exact_rows:
         return minhash_near_dups(
             df, text_col, id_col, threshold=threshold, shingle_n=n
         )
-    sets = shingle_sets(df, text_col, id_col, n)
-    sh = sets.select(F.col(id_col).alias("_id"), F.col("_sh"))
-    if block_col:
-        sh = sh.join(
-            df.select(F.col(id_col).alias("_id"), F.col(block_col).alias("_blk")),
-            "_id",
-        )
-    a = sh.select(
-        F.col("_id").alias("a_id"), F.col("_sh").alias("a_sh"),
-        *([F.col("_blk").alias("_blk")] if block_col else []),
+    blk = [block_col] if block_col else []
+    hs = _shingle_hash_sets(
+        ensure_parallelism(df.select(id_col, text_col, *blk)), text_col, id_col, n, *blk
     )
-    b = sh.select(
-        F.col("_id").alias("b_id"), F.col("_sh").alias("b_sh"),
-        *([F.col("_blk").alias("_blk2")] if block_col else []),
-    )
+    a = hs.select(F.col(id_col).alias("a_id"), F.col("_hs").alias("a_hs"),
+                  *[F.col(c).alias("_blk") for c in blk])
+    b = hs.select(F.col(id_col).alias("b_id"), F.col("_hs").alias("b_hs"),
+                  *[F.col(c).alias("_blk2") for c in blk])
     if block_col:
         pairs = a.join(b, (F.col("_blk") == F.col("_blk2")) & (F.col("a_id") < F.col("b_id")))
     else:
         pairs = a.crossJoin(b).where(F.col("a_id") < F.col("b_id"))
-    inter = F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
-    union = F.size(F.array_union("a_sh", "b_sh")).cast("double")
-    return (
-        pairs.select(
-            "a_id",
-            "b_id",
-            F.round(inter / F.greatest(union, F.lit(1.0)), 4).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _hash_set_jaccard(pairs, threshold, "a_id", "b_id")
 
 
 # ------------------------------------------------------------- MinHash + LSH
@@ -217,45 +186,26 @@ def _base_hashes(shingles) -> "object":
     )
 
 
-@lru_cache(maxsize=None)
-def _shingle_udf(n: int):
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def shingle(texts: pd.Series) -> pd.Series:
-        return pd.Series([_shingles_py(t, n) for t in texts])
-
-    return shingle
-
-
-def _signature_matrix(shingle_lists, num_hashes: int):
-    """uint64 (n, num_hashes) MinHash signatures of n shingle lists:
-    blake2b-8 base hash per shingle, seeded affine family, uint64
-    wraparound min. An empty or missing list gets an all-zero row."""
+def _text_signature_matrix(texts, num_hashes: int, shingle_n: int):
+    """uint64 (n, num_hashes) MinHash signatures of n texts: each text's
+    ``_shingles_py`` shingles, a blake2b-8 base hash per shingle, the
+    seeded affine family and a uint64 wraparound min, in one pass, so
+    the per-doc shingle strings never cross the Arrow boundary."""
     import numpy as np
 
     a, b = _hash_family(num_hashes)
-    shingle_lists = list(shingle_lists)
-    out = np.zeros((len(shingle_lists), num_hashes), dtype=np.uint64)
-    for i, sh in enumerate(shingle_lists):
-        if sh is not None and len(sh):
-            base = _base_hashes(sh)
-            out[i] = (a[:, None] * base[None, :] + b[:, None]).min(axis=1)
+    texts = list(texts)
+    out = np.empty((len(texts), num_hashes), dtype=np.uint64)
+    for i, t in enumerate(texts):
+        base = _base_hashes(_shingles_py(t, shingle_n))
+        out[i] = (a[:, None] * base[None, :] + b[:, None]).min(axis=1)
     return out
-
-
-def _text_signature_matrix(texts, num_hashes: int, shingle_n: int):
-    """Shingle each text and sign it (``_signature_matrix``) in one pass,
-    so the per-doc shingle strings never cross the Arrow boundary."""
-    return _signature_matrix((_shingles_py(t, shingle_n) for t in texts), num_hashes)
 
 
 @lru_cache(maxsize=None)
 def _text_signature_udf(num_hashes: int, shingle_n: int):
     """text → array<long> MinHash signature in ONE Python pass
-    (``_text_signature_matrix``): bit-identical to
-    ``_signature_udf`` ∘ ``_shingle_udf``."""
+    (``_text_signature_matrix``), per row — no shuffle anywhere."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
@@ -268,60 +218,20 @@ def _text_signature_udf(num_hashes: int, shingle_n: int):
     return signature
 
 
-@lru_cache(maxsize=None)
-def _signature_udf(num_hashes: int):
-    """array<string> shingles → array<long> MinHash signature, per row
-    (``_signature_matrix``) — no shuffle anywhere."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    @pandas_udf(ArrayType(LongType()))
-    def signature(shs: pd.Series) -> pd.Series:
-        return pd.Series(list(_signature_matrix(shs, num_hashes).view(np.int64)))
-
-    return signature
-
-
-def shingle_sets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, _sh: array<string>) distinct word shingles per doc, from a
-    per-row Arrow UDF over ``_shingles_py`` — narrow, no shuffle.
-    Callers that need shingles twice (signatures + verification)
-    persist THIS DataFrame, not the text.
-    """
-    from vamana_spark.functions.util import ensure_parallelism
-
-    return ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col), _shingle_udf(shingle_n)(text_col).alias("_sh")
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 64,
     shingle_n: int = 3,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc MinHash signature as array<long>[num_hashes]: a per-row
-    Arrow UDF (``_signature_matrix``: blake2b-8 base hash per shingle,
-    seeded multiply-add family, NumPy min), a narrow projection with no
-    shuffle. ``shingles`` (a ``shingle_sets`` frame) signs precomputed
-    shingle sets instead of re-shingling the text.
+    Arrow UDF (``_text_signature_matrix``: ``_shingles_py`` shingles,
+    blake2b-8 base hash per shingle, seeded multiply-add family, NumPy
+    min), a narrow projection with no shuffle. Shingling, hashing and
+    the min run in one Python crossing, so nothing but the signature
+    longs leaves the worker.
     """
-    if shingles is not None:
-        return shingles.select(
-            F.col(id_col), _signature_udf(num_hashes)("_sh").alias("minhash")
-        )
-    # no precomputed shingle frame -> the fused single-pass form:
-    # shingle + hash + min in one Python crossing, so nothing but the
-    # signature longs leaves the worker (no shingle strings over Arrow)
     from vamana_spark.functions.util import ensure_parallelism
 
     return ensure_parallelism(df.select(id_col, text_col)).select(
@@ -369,6 +279,18 @@ def _sig_matrix(minhash: pd.Series, num_hashes: int):
     return np.stack(minhash.to_numpy()).astype(np.int64).view(np.uint64)
 
 
+def _check_banding(num_hashes: int, bands: int) -> None:
+    """Raise ``ValueError`` unless ``bands`` cuts a ``num_hashes``-wide
+    signature into equal bands: the banding check of every MinHash
+    entry point. It is a real check, not an assert, because under
+    ``python -O`` an assert vanishes and ``_band_keys``' reshape then
+    fails inside a Python worker."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be a positive divisor of num_hashes={num_hashes}"
+        )
+
+
 @lru_cache(maxsize=None)
 def _band_hash_udf(num_hashes: int, bands: int):
     from pyspark.sql.functions import pandas_udf
@@ -397,7 +319,7 @@ def band_hash_array(minhash, num_hashes: int, bands: int):
     but a streaming checkpoint written by an earlier version keys its
     ``dropDuplicatesWithinWatermark`` state differently: restart such a
     stream from a fresh checkpoint."""
-    assert num_hashes % bands == 0
+    _check_banding(num_hashes, bands)
     return _band_hash_udf(num_hashes, bands)(minhash)
 
 
@@ -600,7 +522,7 @@ def minhash_lsh_candidates(
     star-linking, so a planted giant duplicate cluster can't go
     quadratic.
     """
-    assert num_hashes % bands == 0
+    _check_banding(num_hashes, bands)
     banded = _band_rows(df, text_col, id_col, num_hashes, bands, shingle_n)
     return _bucket_pairs(
         banded,
@@ -710,7 +632,7 @@ def minhash_near_dups(
     docs = ensure_parallelism(df.select(id_col, text_col)).join(ids, id_col, "left_semi")
     # candidate docs only; read by both join sides
     hs = _shingle_hash_sets(docs, text_col, id_col, shingle_n).localCheckpoint()
-    return _hash_set_jaccard(cands, hs, id_col, threshold)
+    return _hash_set_jaccard(_pair_hash_sets(cands, hs, id_col), threshold, "a_id", "b_id")
 
 
 def _shingle_hash_sets(
@@ -718,26 +640,28 @@ def _shingle_hash_sets(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
+    *carry,
 ) -> DataFrame:
-    """(id, _hs: array<long>): each doc's distinct word shingles
+    """(id, *carry, _hs: array<long>): each doc's distinct word shingles
     (``_shingles_py``) as the sorted, distinct blake2b-8 base hashes its
     MinHash signature starts from (``_base_hashes``), from one
-    ``mapInPandas``. Set sizes and intersections equal those of the
-    string shingle sets (``shingle_sets``) up to a 64-bit collision,
-    and a hash set is ~8 bytes per shingle instead of the shingle's
-    text."""
+    ``mapInPandas``; the ``carry`` columns of ``df`` pass through
+    unchanged. Set sizes and intersections equal those of the string
+    shingle sets up to a 64-bit collision, and a hash set is ~8 bytes
+    per shingle instead of the shingle's text."""
     import numpy as np
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     schema = StructType(
-        [df.schema[id_col], StructField("_hs", ArrayType(LongType(), False), False)]
+        [df.schema[c] for c in (id_col, *carry)]
+        + [StructField("_hs", ArrayType(LongType(), False), False)]
     )
 
     def hash_sets(batches):
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    **{c: pdf[c] for c in (id_col, *carry)},
                     "_hs": [
                         np.unique(_base_hashes(_shingles_py(t, shingle_n)).view(np.int64))
                         for t in pdf[text_col]
@@ -745,31 +669,29 @@ def _shingle_hash_sets(
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(hash_sets, schema=schema)
+    return df.select(id_col, text_col, *carry).mapInPandas(hash_sets, schema=schema)
 
 
-def _hash_set_jaccard(
-    cands: DataFrame, hs: DataFrame, id_col: str, threshold: float, *cols
-) -> DataFrame:
-    """(a_id, b_id, *cols, jaccard) for the ``cands`` pairs whose
-    ``_shingle_hash_sets`` Jaccard, |A∩B| / (|A|+|B|-|A∩B|) rounded to 4
-    places, is at least ``threshold``: the one exact verify of the
-    batch LSH paths."""
+def _pair_hash_sets(pairs: DataFrame, hs: DataFrame, id_col: str) -> DataFrame:
+    """``pairs`` (a_id, b_id, ...) with each side's ``_shingle_hash_sets``
+    row joined on as ``a_hs`` / ``b_hs``."""
     av = hs.select(F.col(id_col).alias("a_id"), F.col("_hs").alias("a_hs"))
     bv = hs.select(F.col(id_col).alias("b_id"), F.col("_hs").alias("b_hs"))
+    return pairs.join(av, "a_id").join(bv, "b_id")
+
+
+def _hash_set_jaccard(pairs: DataFrame, threshold: float, *cols) -> DataFrame:
+    """(*cols, jaccard) for the rows of ``pairs`` whose shingle hash sets
+    ``a_hs`` and ``b_hs`` (``_shingle_hash_sets``) have a Jaccard,
+    |A∩B| / (|A|+|B|-|A∩B|) rounded to 4 places, of at least
+    ``threshold``: the one exact verify of every shingle-based pair
+    path. A set is never empty (``_shingles_py`` gives an empty text one
+    empty shingle), so the union is never zero."""
     inter = F.size(F.array_intersect("a_hs", "b_hs"))
     union = F.size("a_hs") + F.size("b_hs") - inter
-    return (
-        cands.join(av, "a_id")
-        .join(bv, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            *cols,
-            F.round(inter.cast("double") / union, 4).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return pairs.select(
+        *cols, F.round(inter.cast("double") / union, 4).alias("jaccard")
+    ).where(F.col("jaccard") >= threshold)
 
 
 # ----------------------------------------------- duplicate clusters (CC)
@@ -797,7 +719,7 @@ def connected_components(
     Near-dup graphs are LSH near-cliques with tiny diameter, so
     convergence is typically 2-3 rounds.
 
-    ``check_every`` (r15, VERDICT r14 #7): the barrier cadence —
+    ``check_every``: the barrier cadence —
     convergence count + localCheckpoint every N rounds, intermediate
     rounds lazy. Semantically exact at every cadence (labels are
     monotone non-increasing, so span-level no-change detection is
@@ -810,8 +732,8 @@ def connected_components(
     side, union side, pointer-jump hop side), and under AQE those
     duplicated subtrees re-execute instead of reusing exchanges — the
     replays cost far more than the saved barrier. Kept as a parameter
-    with the measured warning rather than deleted, per guide §1.1
-    (negative results are results).
+    with the measured warning rather than deleted, so the negative
+    result stays on record next to the knob it measured.
     """
     check_every = max(1, int(check_every))
     sym = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
@@ -977,8 +899,8 @@ def simhash_near_dups(
 
     Blocking: ``bands`` equal-width bands of the 64-bit signature — any
     pair within Hamming ``bands - 1`` must agree on at least one band
-    (pigeonhole), so ``max_hamming`` above that silently loses recall
-    (asserted). Candidates from one shuffle of the band buckets and the
+    (pigeonhole), so ``max_hamming`` above that would silently lose
+    recall and raises ``ValueError`` instead. Candidates from one shuffle of the band buckets and the
     sorted bucket walk (``_bucket_pairs``, with each member's signature
     as payload, gathered with its id), then exact popcount
     verification. More bands widen the guaranteed radius but shrink
@@ -986,11 +908,13 @@ def simhash_near_dups(
     the bucket cap's star topology bounds the damage, but wide-radius
     scans belong at modest corpus sizes; MinHash-LSH is the scale path.
     """
-    assert 64 % bands == 0, f"bands {bands} must divide 64"
-    assert max_hamming <= bands - 1, (
-        f"banding with {bands} bands only guarantees candidates up to "
-        f"hamming {bands - 1}; got max_hamming={max_hamming}"
-    )
+    if bands < 1 or 64 % bands:
+        raise ValueError(f"bands={bands} must be a positive divisor of 64")
+    if max_hamming > bands - 1:
+        raise ValueError(
+            f"banding with bands={bands} only guarantees candidates up to "
+            f"hamming {bands - 1}; got max_hamming={max_hamming}"
+        )
     width = 64 // bands
     mask = (1 << width) - 1
     sigs = simhash_signatures(df, text_col, id_col)
@@ -1053,7 +977,9 @@ def simhash_verified_near_dups(
     hs = _shingle_hash_sets(
         ensure_parallelism(df.select(id_col, text_col)), text_col, id_col, shingle_n
     )
-    return _hash_set_jaccard(cand, hs, id_col, threshold, "hamming")
+    return _hash_set_jaccard(
+        _pair_hash_sets(cand, hs, id_col), threshold, "a_id", "b_id", "hamming"
+    )
 
 
 # ------------------------------------------------- embedding cosine near-dup
@@ -1069,8 +995,8 @@ def embedding_near_dups(
 ) -> DataFrame:
     """Pairs of vectors with cosine similarity >= threshold.
 
-    Auto-tiered (r4 verdict #3, same pattern as the index build guard,
-    vamana.py auto-tier): at or below ``max_exact_rows`` the exact
+    Auto-tiered, as the index build is (vamana.py auto-tier), so that
+    a large input never plans an all-pairs product: at or below ``max_exact_rows`` the exact
     all-pairs broadcast self-join runs (oracle parity — every true pair
     emitted); above it the plan switches to random-hyperplane LSH
     blocking (equi-join on band value, ``similarity.lsh_similarity_join``)
@@ -2370,6 +2296,68 @@ def _shard_of(h1, num_ranges: int):
     return ((h1 >> np.uint64(33)) % np.uint64(num_ranges)).astype(np.int32)
 
 
+def _witness_bands(
+    seen: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    max_bucket_witnesses: int,
+    seen_signatures: Optional[DataFrame] = None,
+) -> DataFrame:
+    """(seen_id, band_id, band_hash): the corpus band table of the
+    cross-snapshot scans (``incremental_near_dups`` and
+    ``streaming.dedup.streaming_incremental_near_dups``), each band
+    bucket cut to its ``max_bucket_witnesses`` lowest-id members.
+
+    ``seen_signatures`` (a ``minhash_signatures`` table) replaces the
+    corpus signature pass. Its width is checked against ``num_hashes``
+    first: banding a wrong-width minhash silently produces wrong band
+    hashes, and the exact verify masks the false positives but NOT the
+    resulting misses. One limit-1 row is a cheap scan; the width is
+    uniform by construction.
+
+    Only overfull buckets are ranked (a giant duplicate cluster flooding
+    one bucket per band): their keys come from a map-side-combined count
+    and a broadcast, and the rank window shuffles only their rows."""
+    if seen_signatures is not None:
+        probe = seen_signatures.select(
+            F.size("minhash").alias("_w")
+        ).limit(1).collect()
+        if probe and probe[0]["_w"] != num_hashes:
+            raise ValueError(
+                f"seen_signatures has minhash width {probe[0]['_w']} but "
+                f"num_hashes={num_hashes}; recompute the signature table "
+                "with matching (num_hashes, bands, shingle_n) parameters"
+            )
+        sig_s = seen_signatures
+    else:
+        sig_s = minhash_signatures(seen, text_col, id_col, num_hashes, shingle_n)
+    # banded_s feeds the overfull count AND the kept rows; without
+    # materialization each branch replays the corpus signature pass.
+    # 2 longs + id per row — bands×16B/doc, GC-owned via localCheckpoint.
+    banded_s = _explode_bands(
+        sig_s, num_hashes, bands, F.col(id_col).alias("seen_id")
+    ).localCheckpoint()
+    keys = ["band_id", "band_hash"]
+    overfull = F.broadcast(
+        banded_s.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_bsz"))
+        .where(F.col("_bsz") > max_bucket_witnesses)
+    )
+    ann = banded_s.join(overfull, keys, "left")
+    small = ann.where(F.col("_bsz").isNull()).select("seen_id", *keys)
+    wover = Window.partitionBy(*keys).orderBy(F.col("seen_id").asc())
+    capped = (
+        ann.where(F.col("_bsz").isNotNull())
+        .withColumn("_wrn", F.row_number().over(wover))
+        .where(F.col("_wrn") <= max_bucket_witnesses)
+        .select("seen_id", *keys)
+    )
+    return small.unionByName(capped)
+
+
 def incremental_near_dups(
     batch: DataFrame,
     seen: DataFrame,
@@ -2410,12 +2398,16 @@ def incremental_near_dups(
       answer for the cluster. NOTE the emitted pair list is then not
       exhaustive per cluster (capped members don't appear as
       ``seen_id``) — the survivors/anti-join use is unaffected, but
-      exhaustive-pair consumers must raise the cap. Overfull keys come
-      from a map-side-combined aggregation + broadcast; the capping
-      rank window shuffles only the overfull buckets' rows.
-    - Exact-Jaccard verification re-shingles ONLY the candidate corpus
-      docs (broadcast semi-join of the candidate id set against the
-      corpus scan — map-side), then joins shingle sets onto the pairs.
+      exhaustive-pair consumers must raise the cap. The corpus band
+      table and its cap are ``_witness_bands``, shared with the
+      streaming mirror.
+    - Exact-Jaccard verification hashes the shingles of ONLY the
+      candidate corpus docs (broadcast semi-join of the candidate id
+      set against the corpus scan — map-side, then
+      ``_shingle_hash_sets``), joins the hash sets onto the pairs and
+      scores them with ``_hash_set_jaccard``, the verify of
+      ``minhash_near_dups``. The batch's hash sets are built once,
+      next to its signatures.
 
     ``decision_only`` (a preset from a measured 10M-doc run): for
     ingest gating, where the question is "is this batch doc a near-dup
@@ -2439,90 +2431,39 @@ def incremental_near_dups(
 
     if max_bucket_witnesses is None:
         max_bucket_witnesses = 8 if decision_only else 512
-    sh_b = shingle_sets(batch, text_col, id_col, shingle_n).localCheckpoint()
-    sig_b = minhash_signatures(
-        batch, text_col, id_col, num_hashes, shingle_n, shingles=sh_b
-    )
+    # the batch's signatures and hash sets in one checkpointed frame:
+    # the band join reads the one, the verify the other
+    src = ensure_parallelism(batch.select(id_col, text_col))
+    hs_b = _shingle_hash_sets(
+        src.withColumn("minhash", _text_signature_udf(num_hashes, shingle_n)(text_col)),
+        text_col, id_col, shingle_n, "minhash",
+    ).localCheckpoint()
     banded_b = _explode_bands(
-        sig_b, num_hashes, bands, F.col(id_col).alias("batch_id")
+        hs_b, num_hashes, bands, F.col(id_col).alias("batch_id")
     )
     if broadcast_batch:
         banded_b = F.broadcast(banded_b)
-    if seen_signatures is not None:
-        # Guard against a signature table persisted with different
-        # parameters: banding a wrong-width minhash silently produces
-        # wrong band hashes, and exact-Jaccard verify masks the false
-        # positives but NOT the resulting misses. One limit-1 row is a
-        # cheap scan; the width is uniform by construction.
-        probe = seen_signatures.select(
-            F.size("minhash").alias("_w")
-        ).limit(1).collect()
-        if probe and probe[0]["_w"] != num_hashes:
-            raise ValueError(
-                f"seen_signatures has minhash width {probe[0]['_w']} but "
-                f"num_hashes={num_hashes}; recompute the signature table "
-                "with matching (num_hashes, bands, shingle_n) parameters"
-            )
-        sig_s = seen_signatures
-    else:
-        sig_s = minhash_signatures(seen, text_col, id_col, num_hashes, shingle_n)
-    banded_s = _explode_bands(
-        sig_s, num_hashes, bands, F.col(id_col).alias("seen_id")
+    witnesses = _witness_bands(
+        seen, text_col, id_col, num_hashes, bands, shingle_n,
+        max_bucket_witnesses, seen_signatures,
     )
-    # banded_s feeds the overfull agg AND the candidate join; without
-    # materialization each branch replays the corpus signature pass.
-    # 2 longs + id per row — bands×16B/doc, GC-owned via localCheckpoint.
-    banded_s = banded_s.localCheckpoint()
-    keys = ["band_id", "band_hash"]
-    overfull = F.broadcast(
-        banded_s.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_bsz"))
-        .where(F.col("_bsz") > max_bucket_witnesses)
-    )
-    ann = banded_s.join(overfull, keys, "left")
-    small = ann.where(F.col("_bsz").isNull()).select("seen_id", *keys)
-    # rows in overfull buckets (rare: a giant duplicate cluster flooding
-    # one bucket per band) keep their max_bucket_witnesses min-id
-    # members — the rank window shuffles ONLY these rows
-    wover = Window.partitionBy(*keys).orderBy(F.col("seen_id").asc())
-    capped = (
-        ann.where(F.col("_bsz").isNotNull())
-        .withColumn("_wrn", F.row_number().over(wover))
-        .where(F.col("_wrn") <= max_bucket_witnesses)
-        .select("seen_id", *keys)
-    )
-    witnesses = small.unionByName(capped)
-    joined = witnesses.join(banded_b, keys)
-    av = sh_b.select(F.col(id_col).alias("batch_id"), F.col("_sh").alias("a_sh"))
+    joined = witnesses.join(banded_b, ["band_id", "band_hash"])
+    av = hs_b.select(F.col(id_col).alias("batch_id"), F.col("_hs").alias("a_hs"))
     # the corpus is spread over the cores before the verify's join: a
     # partition count read from the join's own plan would run its
     # stages once more, only to look
     seen_text = ensure_parallelism(seen.select(id_col, text_col))
 
     def _verify(pairs_df: DataFrame) -> DataFrame:
-        # verification: shingle ONLY this pair set's corpus docs
-        # (broadcast semi-join — map-side over the corpus scan)
+        # verification: hash the shingles of ONLY this pair set's corpus
+        # docs (broadcast semi-join — map-side over the corpus scan)
         cand_seen = pairs_df.select(F.col("seen_id").alias(id_col)).distinct()
         seen_sub = seen_text.join(F.broadcast(cand_seen), id_col, "left_semi")
-        bv = seen_sub.select(
-            F.col(id_col).alias("seen_id"),
-            _shingle_udf(shingle_n)(text_col).alias("b_sh"),
+        bv = _shingle_hash_sets(seen_sub, text_col, id_col, shingle_n).select(
+            F.col(id_col).alias("seen_id"), F.col("_hs").alias("b_hs")
         )
-        inter = F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
-        union = F.size(F.array_union("a_sh", "b_sh")).cast("double")
-        return (
-            pairs_df.select("batch_id", "seen_id")
-            .join(av, "batch_id")
-            .join(bv, "seen_id")
-            .select(
-                "batch_id",
-                "seen_id",
-                F.round(inter / F.greatest(union, F.lit(1.0)), 4).alias(
-                    "jaccard"
-                ),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
+        pairs = pairs_df.select("batch_id", "seen_id").join(av, "batch_id").join(bv, "seen_id")
+        return _hash_set_jaccard(pairs, threshold, "batch_id", "seen_id")
 
     if not decision_only:
         # cands feeds the candidate-id semi-join AND the final pair join
@@ -2568,8 +2509,8 @@ def incremental_near_dups(
 # incremental_near_dups. The store carries its OWN parameters, so a
 # table written with one (num_hashes, bands, shingle_n) configuration
 # can never be silently banded with another (the failure mode the
-# width guard in incremental_near_dups catches at the last line of
-# defense; the store prevents it at the API level).
+# width guard in _witness_bands catches at the last line of defense;
+# the store prevents it at the API level).
 # ---------------------------------------------------------------------
 
 def save_signatures(
@@ -2586,10 +2527,13 @@ def save_signatures(
     narrow pass over the corpus (no shuffle); the table is
     ``(id_col, minhash: array<long>[num_hashes])`` parquet, readable by
     any engine. Re-ingests then call ``scan_against_store`` and never
-    re-shingle the corpus."""
+    re-shingle the corpus. The banding parameters are checked before
+    anything is written, so a store that no scan could band is never
+    made."""
     import json as _json
     import os as _os
 
+    _check_banding(num_hashes, bands)
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
     sigs.write.mode("overwrite").parquet(_os.path.join(path, "signatures"))
     with open(_os.path.join(path, "_meta.json"), "w") as f:

@@ -27,7 +27,6 @@ from vamana_spark.functions.vector import l2_norm, squared_l2
 from vamana_spark.operators import (
     dedup,
     quantization,
-    relational,
     similarity,
     text,
 )
@@ -1840,215 +1839,6 @@ def q_ranking_metrics(spark, sf_dir):
     truth = exact.exact_knn(e, q, k=10, exclude_self=True)
     return quality.ranking_metrics(approx, truth, k=10, round_digits=6).orderBy(
         "query_id"
-    )
-
-
-# ======================================================================
-# Relational (X8)
-# ======================================================================
-
-_DEC = "CAST({c} AS DECIMAL(18,6))"
-
-
-@declare(
-    "q_tpch_pricing",
-    f"""
-    SELECT l_returnflag, l_linestatus,
-           round(CAST(sum({_DEC.format(c='l_quantity')}) AS DOUBLE), 2) AS sum_qty,
-           round(CAST(sum({_DEC.format(c='l_extendedprice')}) AS DOUBLE), 2) AS sum_base_price,
-           round(CAST(sum({_DEC.format(c='l_extendedprice')} * (1 - {_DEC.format(c='l_discount')})) AS DOUBLE), 2) AS sum_disc_price,
-           round(CAST(sum({_DEC.format(c='l_extendedprice')} * (1 - {_DEC.format(c='l_discount')}) * (1 + {_DEC.format(c='l_tax')})) AS DOUBLE), 2) AS sum_charge,
-           round(CAST(sum({_DEC.format(c='l_quantity')}) AS DOUBLE) / count(*), 4) AS avg_qty,
-           round(CAST(sum({_DEC.format(c='l_extendedprice')}) AS DOUBLE) / count(*), 4) AS avg_price,
-           round(CAST(sum({_DEC.format(c='l_discount')}) AS DOUBLE) / count(*), 4) AS avg_disc,
-           CAST(count(*) AS BIGINT) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q_tpch_pricing(spark, sf_dir):
-    """X8 / TPC-H Q1 pricing summary. Money sums in DECIMAL(18,6) on both
-    engines — bit-exact before the presentation round."""
-    li = load_table(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast("decimal(18,6)")
-    price = F.col("l_extendedprice").cast("decimal(18,6)")
-    disc = F.col("l_discount").cast("decimal(18,6)")
-    tax = F.col("l_tax").cast("decimal(18,6)")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).alias("_sq"),
-            F.sum(price).alias("_sp"),
-            F.sum(price * (F.lit(1).cast("decimal(18,6)") - disc)).alias("_sdp"),
-            F.sum(
-                price
-                * (F.lit(1).cast("decimal(18,6)") - disc)
-                * (F.lit(1).cast("decimal(18,6)") + tax)
-            ).alias("_sc"),
-            F.sum(disc).alias("_sd"),
-            F.count("*").cast("long").alias("count_order"),
-        )
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            F.round(F.col("_sq").cast("double"), 2).alias("sum_qty"),
-            F.round(F.col("_sp").cast("double"), 2).alias("sum_base_price"),
-            F.round(F.col("_sdp").cast("double"), 2).alias("sum_disc_price"),
-            F.round(F.col("_sc").cast("double"), 2).alias("sum_charge"),
-            F.round(F.col("_sq").cast("double") / F.col("count_order"), 4).alias("avg_qty"),
-            F.round(F.col("_sp").cast("double") / F.col("count_order"), 4).alias("avg_price"),
-            F.round(F.col("_sd").cast("double") / F.col("count_order"), 4).alias("avg_disc"),
-            "count_order",
-        )
-    )
-
-
-_REV_DEC = (
-    f"{_DEC.format(c='l_extendedprice')} * (1 - {_DEC.format(c='l_discount')})"
-)
-
-
-@declare(
-    "q_tpch_join_agg",
-    f"""
-    SELECT n_name,
-           round(CAST(sum({_REV_DEC}) AS DOUBLE), 2) AS revenue,
-           CAST(count(*) AS BIGINT) AS n_items
-    FROM lineitem
-    JOIN orders   ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    GROUP BY n_name
-    """,
-)
-def q_tpch_join_agg(spark, sf_dir):
-    """X8 revenue by nation — 4-way join, broadcast dims."""
-    t = relational.load_tables(spark, sf_dir, "customer", "orders", "lineitem", "nation")
-    rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
-    return (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(rev).cast("double"), 2).alias("revenue"),
-            F.count("*").cast("long").alias("n_items"),
-        )
-    )
-
-
-@declare(
-    "q_top_customers",
-    f"""
-    WITH t AS (
-      SELECT c_custkey, c_name,
-             round(CAST(sum({_REV_DEC}) AS DOUBLE), 2) AS revenue
-      FROM lineitem
-      JOIN orders   ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_custkey, c_name
-    )
-    SELECT c_custkey, c_name, revenue,
-           CAST(row_number() OVER (ORDER BY revenue DESC, c_custkey) AS BIGINT) AS rank
-    FROM t ORDER BY rank LIMIT 10
-    """,
-)
-def q_top_customers(spark, sf_dir):
-    """X8 top-10 customers by revenue (join + agg + window rank)."""
-    t = relational.load_tables(spark, sf_dir, "customer", "orders", "lineitem")
-    rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
-    totals = (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_custkey", "c_name")
-        .agg(F.round(F.sum(rev).cast("double"), 2).alias("revenue"))
-    )
-    top = totals.orderBy(F.col("revenue").desc(), F.col("c_custkey").asc()).limit(10)
-    w = Window.orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("long"))
-
-
-@declare(
-    "q_order_priority",
-    """
-    SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-    FROM orders
-    WHERE EXISTS (
-      SELECT 1 FROM lineitem
-      WHERE l_orderkey = o_orderkey AND l_shipdate > TIMESTAMP '1995-06-01 00:00:00'
-    )
-    GROUP BY o_orderpriority
-    """,
-)
-def q_order_priority(spark, sf_dir):
-    """X8 / TPC-H Q4-flavored semi-join priority counts."""
-    t = relational.load_tables(spark, sf_dir, "orders", "lineitem")
-    return relational.order_priority_counts(t["orders"], t["lineitem"])
-
-
-@declare(
-    "q_part_supplier_volume",
-    f"""
-    SELECT p_brand, s_name,
-           round(CAST(sum({_DEC.format(c='l_quantity')}) AS DOUBLE), 2) AS total_qty,
-           round(CAST(sum({_DEC.format(c='l_extendedprice')}) AS DOUBLE), 2) AS total_price
-    FROM lineitem
-    JOIN part     ON l_partkey = p_partkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    GROUP BY p_brand, s_name
-    """,
-)
-def q_part_supplier_volume(spark, sf_dir):
-    """X8 volume by brand x supplier — double-broadcast dim joins."""
-    t = relational.load_tables(spark, sf_dir, "lineitem", "part", "supplier")
-    return (
-        t["lineitem"]
-        .join(t["part"], F.col("l_partkey") == F.col("p_partkey"))
-        .join(t["supplier"], F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("p_brand", "s_name")
-        .agg(
-            F.round(F.sum(F.col("l_quantity").cast("decimal(18,6)")).cast("double"), 2).alias("total_qty"),
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).cast("double"), 2).alias("total_price"),
-        )
-    )
-
-
-@declare(
-    "q_regional_revenue",
-    f"""
-    SELECT r_name, round(CAST(sum({_REV_DEC}) AS DOUBLE), 2) AS revenue
-    FROM lineitem
-    JOIN orders   ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    JOIN region   ON n_regionkey = r_regionkey
-    GROUP BY r_name
-    """,
-)
-def q_regional_revenue(spark, sf_dir):
-    """X8 / TPC-H Q5-flavored regional revenue through the dim chain."""
-    t = relational.load_tables(
-        spark, sf_dir, "region", "nation", "customer", "orders", "lineitem"
-    )
-    rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
-    return (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("r_name")
-        .agg(F.round(F.sum(rev).cast("double"), 2).alias("revenue"))
     )
 
 

@@ -1,3 +1,3 @@
-from vamana_spark.sources.tables import TABLE_NAMES, load_table, load_tables
+from vamana_spark.sources.tables import load_table
 
-__all__ = ["TABLE_NAMES", "load_table", "load_tables"]
+__all__ = ["load_table"]

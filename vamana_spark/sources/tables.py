@@ -16,20 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
@@ -57,7 +43,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("vec_id", F.col("vec_id").cast("long"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
-    names = names or TABLE_NAMES
-    return {n: load_table(spark, sf_dir, n) for n in names}

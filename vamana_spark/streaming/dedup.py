@@ -182,84 +182,57 @@ def streaming_incremental_near_dups(
     streamed document against a STATIC already-ingested corpus.
 
     Stateless-by-construction pipeline — no stream-stream join, no
-    aggregation: one projection computes shingles + MinHash per
-    streamed row (pandas-UDF column expressions), the banded keys
-    equi-join the corpus band table (stream-static), the exact-Jaccard
-    verify joins the corpus SHINGLE table (stream-static) and filters
-    on array_intersect/array_union sizes — identical set semantics to
-    the batch verify. The only state is the within-watermark pair
-    dedup (a band match can fire in several bands).
+    aggregation: each streamed row is signed (a pandas-UDF column) and
+    its shingle hash set built next to it (``_shingle_hash_sets``, which
+    carries the signature and ``ts`` through), so the stream is never
+    joined with itself. Its band keys equi-join the corpus band table
+    (stream-static), the verify joins the corpus hash-set table
+    (stream-static) and scores the pair with ``_hash_set_jaccard`` —
+    the same verify as the batch scan. The only state is the
+    within-watermark pair dedup (a band match can fire in several
+    bands).
 
-    The corpus band and shingle tables are computed ONCE at stream
-    definition; pass ``seen_signatures`` (a persisted
-    ``minhash_signatures`` table — see ``operators.dedup
-    .save_signatures``) to skip the corpus signature pass (its
-    minhash width is validated against ``num_hashes`` — a mismatched
-    store would band wrongly and silently MISS pairs). A corpus band
-    bucket holding more than ``max_bucket_witnesses`` docs (a giant
-    duplicate cluster) keeps only its min-id witnesses, the same cap
-    and semantics as the batch scan — without it one hot cluster
-    would explode the candidate join on EVERY micro-batch. For
-    long-running streams persist both static frames: the static side
-    of a stream-static join is re-scanned every micro-batch.
+    The corpus band and hash-set tables are computed ONCE at stream
+    definition. The band table is the batch scan's ``_witness_bands``:
+    pass ``seen_signatures`` (a persisted ``minhash_signatures`` table —
+    see ``operators.dedup.save_signatures``) to skip the corpus
+    signature pass (its minhash width is validated against
+    ``num_hashes`` — a mismatched store would band wrongly and silently
+    MISS pairs), and a corpus band bucket holding more than
+    ``max_bucket_witnesses`` docs (a giant duplicate cluster) keeps only
+    its min-id witnesses — without the cap one hot cluster would
+    explode the candidate join on EVERY micro-batch. Both static tables
+    are local checkpoints, since the static side of a stream-static
+    join is re-scanned every micro-batch.
     """
-    from pyspark.sql import Window
-
+    from vamana_spark.functions.util import ensure_parallelism
     from vamana_spark.operators.dedup import (
         _explode_bands,
-        _shingle_udf,
-        _signature_udf,
-        minhash_signatures,
-        shingle_sets,
+        _hash_set_jaccard,
+        _shingle_hash_sets,
+        _text_signature_udf,
+        _witness_bands,
     )
 
-    sh_s = shingle_sets(seen, text_col, id_col, shingle_n).select(
-        F.col(id_col).alias("seen_id"), F.col("_sh").alias("_sh_seen")
+    hs_s = _shingle_hash_sets(
+        ensure_parallelism(seen.select(id_col, text_col)), text_col, id_col, shingle_n
+    ).select(F.col(id_col).alias("seen_id"), F.col("_hs").alias("b_hs")).localCheckpoint()
+    banded_s = _witness_bands(
+        seen, text_col, id_col, num_hashes, bands, shingle_n,
+        int(max_bucket_witnesses), seen_signatures,
     ).localCheckpoint()
-    if seen_signatures is not None:
-        probe = seen_signatures.select(
-            F.size("minhash").alias("_w")
-        ).limit(1).collect()
-        if probe and probe[0]["_w"] != num_hashes:
-            raise ValueError(
-                f"seen_signatures has minhash width {probe[0]['_w']} but "
-                f"num_hashes={num_hashes}; recompute the signature table "
-                "with matching (num_hashes, bands, shingle_n) parameters"
-            )
-        sig_s = seen_signatures
-    else:
-        sig_s = minhash_signatures(seen, text_col, id_col, num_hashes, shingle_n)
-    wb = Window.partitionBy("band_id", "band_hash").orderBy(
-        F.col("seen_id").asc()
-    )
-    banded_s = (
-        _explode_bands(sig_s, num_hashes, bands, F.col(id_col).alias("seen_id"))
-        # static side, computed once at definition — a plain rank cap is
-        # fine here (the batch path's overfull-only optimization matters
-        # when banding runs per call; this table is built exactly once)
-        .withColumn("_r", F.row_number().over(wb))
-        .where(F.col("_r") <= int(max_bucket_witnesses))
-        .drop("_r")
-        .localCheckpoint()
-    )
-
-    enriched = docs.select(
+    signed = docs.select(
         F.col(id_col).alias("batch_id"),
         F.col(ts_col),
-        _shingle_udf(shingle_n)(text_col).alias("_sh"),
-    ).withColumn("minhash", _signature_udf(num_hashes)("_sh"))
-    banded_b = _explode_bands(enriched, num_hashes, bands, "batch_id", ts_col, "_sh")
-    cand = banded_b.join(banded_s, ["band_id", "band_hash"]).select(
-        "batch_id", ts_col, "_sh", "seen_id"
+        F.col(text_col),
+        _text_signature_udf(num_hashes, shingle_n)(F.col(text_col)).alias("minhash"),
     )
-    inter = F.size(F.array_intersect("_sh", "_sh_seen")).cast("double")
-    union = F.size(F.array_union("_sh", "_sh_seen")).cast("double")
-    pairs = (
-        cand.join(sh_s, "seen_id")
-        .withColumn("jaccard", F.round(inter / F.greatest(union, F.lit(1.0)), 4))
-        .where(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("batch_id", "seen_id", "jaccard", ts_col)
+    hs_b = _shingle_hash_sets(signed, text_col, "batch_id", shingle_n, ts_col, "minhash")
+    banded_b = _explode_bands(
+        hs_b, num_hashes, bands, "batch_id", ts_col, F.col("_hs").alias("a_hs")
     )
+    cand = banded_b.join(banded_s, ["band_id", "band_hash"]).join(hs_s, "seen_id")
+    pairs = _hash_set_jaccard(cand, threshold, "batch_id", "seen_id", ts_col)
     return (
         pairs.withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["batch_id", "seen_id"])
