@@ -295,38 +295,6 @@ def test_adc_search_chunks_large_query_batches():
     np.testing.assert_allclose(merged[2], a[2], rtol=1e-12)
 
 
-def test_bloom_positions_no_false_negatives_property():
-    """Pure-NumPy Bloom invariant on arbitrary unicode content: any set
-    of inserted strings is always reported present (no false negatives,
-    the property the exactness of incremental_dedup's lossy mode rests
-    on), across filter geometries including saturated ones."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from vamana_spark.operators.dedup import _bloom_geometry, _bloom_positions
-
-    @settings(max_examples=50, deadline=None)
-    @given(
-        st.lists(st.text(max_size=40), min_size=1, max_size=60),
-        st.integers(min_value=1, max_value=1000),
-        st.sampled_from([0.5, 0.1, 0.01, 0.001]),
-    )
-    def run(values, expected, fpp):
-        m_bits, k = _bloom_geometry(expected, fpp)
-        n_words = m_bits // 64
-        bits = np.zeros(n_words, dtype=np.uint64)
-        pos = _bloom_positions(values, m_bits, k).ravel()
-        np.bitwise_or.at(bits, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64))
-        probe = _bloom_positions(values, m_bits, k)
-        hit = (
-            (bits[probe >> 6] >> (probe & 63).astype(np.uint64)) & np.uint64(1)
-        ).astype(bool).all(axis=1)
-        assert hit.all()
-
-    run()
-
-
 @settings(max_examples=100, deadline=None)
 @given(
     st.lists(st.integers(min_value=1, max_value=7), min_size=1, max_size=40),

@@ -287,6 +287,21 @@ def test_ngram_jaccard_join(spark):
     assert [(p.a_id, p.b_id) for p in pairs] == [(1, 2)]
 
 
+def test_ngram_jaccard_join_shingles_once(spark):
+    """The unblocked exact path joins one checkpointed hash-set frame
+    with itself: the Python shingle pass ran before the call returned,
+    and the join's plan runs it on neither side."""
+    df = spark.createDataFrame(
+        [(i, f"doc {i % 7} shares words with its twins") for i in range(30)],
+        "doc_id long, text string",
+    )
+    out = dedup.ngram_jaccard_join(df, threshold=0.5)
+    assert "MapInPandas" not in out._jdf.queryExecution().executedPlan().toString()
+    # the 7 texts repeat 5, 5, 4, 4, 4, 4, 4 times; distinct texts share
+    # 3 of 7 shingles (J = 0.43), so only the copies pair
+    assert out.count() == 2 * 10 + 5 * 6
+
+
 def test_embedding_near_dups(spark):
     df = spark.createDataFrame(
         [
@@ -2112,52 +2127,45 @@ def _inc_dedup_frames(spark):
 
 def test_incremental_dedup_matches_anti_join(spark):
     """Survivors == (batch-internal first occurrence) anti-joined against
-    the corpus on normalized text — the exact semantics, Bloom-accelerated."""
+    the corpus on normalized text — the exact semantics. A NULL text
+    matches nothing, not even a NULL in the corpus, and the batch keeps
+    the first of its NULL rows."""
     new, seen = _inc_dedup_frames(spark)
     out = dedup.incremental_dedup(new, seen)
     assert sorted(r.doc_id for r in out.collect()) == [1000 + i for i in range(50)]
     assert out.columns == new.columns
+    seen = spark.createDataFrame([(1, "known doc"), (2, None)], "doc_id long, text string")
+    new = spark.createDataFrame(
+        [(10, "known  DOC"), (11, None), (12, None), (13, "fresh doc")],
+        "doc_id long, text string",
+    )
+    assert sorted(r.doc_id for r in dedup.incremental_dedup(new, seen).collect()) == [11, 13]
 
 
-def test_incremental_dedup_exact_under_saturated_bloom(spark):
-    """An undersized filter (expected_seen=2 for a 200-row corpus) makes
-    nearly every probe a 'maybe' — the verify pass must still return the
-    exact survivor set (false positives re-checked, never dropped blindly),
-    at one range and at several."""
+def test_incremental_dedup_runs_no_python_pass(spark, monkeypatch):
+    """The corpus pass is a JVM digest semi-join: one incremental_dedup
+    call, collect included, never calls DataFrame.mapInPandas."""
     new, seen = _inc_dedup_frames(spark)
-    for nr in (1, 4):
-        out = dedup.incremental_dedup(new, seen, expected_seen=2, fpp=0.5, num_ranges=nr)
-        assert sorted(r.doc_id for r in out.collect()) == [1000 + i for i in range(50)], nr
+    frame_cls = type(new)  # the session's concrete DataFrame class
+    calls = []
+    stock = frame_cls.mapInPandas
 
+    def recording(self, *a, **kw):
+        calls.append(a)
+        return stock(self, *a, **kw)
 
-def test_incremental_dedup_lossy_mode_never_false_negative(spark):
-    """verify=False may over-drop (~fpp of unique rows) but every true
-    duplicate of the corpus must be gone — Bloom has no false negatives."""
-    new, seen = _inc_dedup_frames(spark)
-    ids = {r.doc_id for r in dedup.incremental_dedup(new, seen, verify=False).collect()}
-    assert not any(2000 <= i < 3000 for i in ids)  # corpus dups gone
-    assert ids <= {1000 + i for i in range(50)}  # only unique rows survive
+    monkeypatch.setattr(frame_cls, "mapInPandas", recording)
+    out = dedup.incremental_dedup(new, seen).collect()
+    assert len(out) == 50
+    assert calls == []
 
 
 def test_incremental_dedup_corpus_never_shuffles(spark):
-    """Plan shape: both corpus passes are map-side — the verify join
-    broadcasts the candidate/confirmed hashes, so no Exchange is keyed by
-    corpus content and the final join is a BroadcastHashJoin (LeftAnti)."""
+    """Plan shape: the one corpus pass is map-side — the semi-join
+    broadcasts the batch's digests, so no Exchange is keyed by corpus
+    content and the final join is a BroadcastHashJoin (LeftAnti)."""
     new, seen = _inc_dedup_frames(spark)
     plan = dedup.incremental_dedup(new, seen)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_incremental_dedup_ranged_corpus_never_shuffles(spark):
-    """Plan shape at num_ranges=4: same corpus-at-rest property as one
-    range — the per-range builds are narrow map passes and the verify
-    join broadcasts, so no Exchange is keyed by corpus content anywhere
-    in the final plan."""
-    new, seen = _inc_dedup_frames(spark)
-    plan = dedup.incremental_dedup(
-        new, seen, num_ranges=4
-    )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
 
@@ -2168,7 +2176,7 @@ def test_incremental_dedup_dup_heavy_corpus(spark):
     not copies: the anti-join's text broadcast sits on an aggregate."""
     new, seen = _inc_dedup_frames(spark)
     heavy = seen.crossJoin(spark.range(20).withColumnRenamed("id", "_copy")).drop("_copy")
-    out = dedup.incremental_dedup(new, heavy, expected_seen=2, fpp=0.5)
+    out = dedup.incremental_dedup(new, heavy)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert re.search(
         r"BroadcastExchange HashedRelationBroadcastMode\(List\(input\[0, string.*\n"
@@ -2186,7 +2194,7 @@ def test_incremental_dedup_no_broadcast_when_disabled(spark):
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        out = dedup.incremental_dedup(new, seen, expected_seen=2, fpp=0.5)
+        out = dedup.incremental_dedup(new, seen)
         got = sorted(r.doc_id for r in out.collect())
         plan = out._jdf.queryExecution().executedPlan().toString()
     finally:
@@ -2196,7 +2204,7 @@ def test_incremental_dedup_no_broadcast_when_disabled(spark):
 
 
 def test_incremental_dedup_verify_gate_counts_bytes(spark):
-    """Few but long maybe-hit texts past autoBroadcastJoinThreshold: the
+    """Few but long batch texts past autoBroadcastJoinThreshold: the
     verify anti-join shuffles instead of broadcasting the texts, with the
     same survivors as the broadcast plan."""
     pad = " ".join(f"w{j}" for j in range(400))  # ~2.3 KB per doc
@@ -2213,7 +2221,7 @@ def test_incremental_dedup_verify_gate_counts_bytes(spark):
     old = spark.conf.get(key)
 
     def run():
-        out = dedup.incremental_dedup(new, seen, expected_seen=2, fpp=0.5)
+        out = dedup.incremental_dedup(new, seen)
         got = sorted(r.doc_id for r in out.collect())
         return got, out._jdf.queryExecution().executedPlan().toString()
 
@@ -2230,16 +2238,13 @@ def test_incremental_dedup_verify_gate_counts_bytes(spark):
 
 
 def test_incremental_dedup_empty_corpus(spark):
-    """An empty corpus drops nothing but batch-internal copies; at
-    num_ranges=4 every range's filter is empty, and batch rows routed
-    to those ranges must still flow through."""
+    """An empty corpus drops nothing but batch-internal copies."""
     new, _ = _inc_dedup_frames(spark)
     seen = new.where(F.lit(False))
-    for nr in (1, 4):
-        out = dedup.incremental_dedup(new, seen, expected_seen=0, num_ranges=nr)
-        # batch-internal dedup still applies (3001 duplicates 3000 and 1007/3000 collide)
-        got = sorted(r.doc_id for r in out.collect())
-        assert 3001 not in got and len(got) == 60, nr
+    out = dedup.incremental_dedup(new, seen)
+    # batch-internal dedup still applies (3001 duplicates 3000 and 1007/3000 collide)
+    got = sorted(r.doc_id for r in out.collect())
+    assert 3001 not in got and len(got) == 60
 
 
 def test_incremental_near_dups_finds_cross_snapshot_copies(spark):
@@ -2297,14 +2302,6 @@ def test_incremental_near_dups_rejects_mismatched_signature_table(spark):
         dedup.incremental_near_dups(
             batch, seen, num_hashes=64, seen_signatures=narrow
         ).collect()
-
-
-def test_bloom_digest_null_sentinel_distinct_from_nul_content():
-    """NULL text and a document whose content is the literal "\\x00"
-    must hash to different digests — otherwise lossy (verify=False)
-    incremental dedup cross-drops one against the other."""
-    h1, h2 = dedup._bloom_digests([None, "\x00", ""])
-    assert h1[0] != h1[1] and h1[0] != h1[2] and h1[1] != h1[2]
 
 
 def test_incremental_near_dups_overfull_bucket_witness(spark):
@@ -2524,52 +2521,6 @@ def test_decision_only_stage2_fallback_parity(spark):
         assert by_id[1000 + i].seen_id == 2 * i + 1
 
 
-def test_incremental_dedup_ranged_matches_broadcast_tier(spark):
-    """Digest ranges (sequential range-scoped filters, no
-    full-key-space bitmap anywhere) must produce the exact same
-    survivor set as one filter — including at num_ranges=1 (the
-    default, run again) and with intra-batch dups."""
-    seen = spark.createDataFrame(
-        [(i, f"corpus document number {i} with shared body") for i in range(200)],
-        ["doc_id", "text"],
-    )
-    batch = spark.createDataFrame(
-        # 30 planted corpus copies, 50 fresh, plus an intra-batch dup pair
-        [(1000 + i, f"corpus document number {i} with shared body") for i in range(30)]
-        + [(2000 + i, f"fresh document {i}") for i in range(50)]
-        + [(3000, "fresh document 0")],
-        ["doc_id", "text"],
-    )
-    want = sorted(
-        r.doc_id for r in dedup.incremental_dedup(batch, seen).collect()
-    )
-    assert len(want) == 50  # the fresh docs, first occurrence each
-    for nr in (1, 4, 16):
-        got = sorted(
-            r.doc_id
-            for r in dedup.incremental_dedup(batch, seen, num_ranges=nr).collect()
-        )
-        assert got == want, f"num_ranges={nr}"
-
-
-def test_incremental_dedup_ranged_lossy_mode(spark):
-    """verify=False drops every true duplicate (no false negatives) in
-    range mode too; survivors are a subset of the fresh set."""
-    seen = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(100)], ["doc_id", "text"]
-    )
-    batch = spark.createDataFrame(
-        [(500 + i, f"doc {i}") for i in range(20)]
-        + [(900 + i, f"new doc {i}") for i in range(20)],
-        ["doc_id", "text"],
-    )
-    got = {r.doc_id for r in dedup.incremental_dedup(
-        batch, seen, num_ranges=4, verify=False).collect()}
-    assert not any(d < 900 for d in got)          # all true dups dropped
-    assert got <= {900 + i for i in range(20)}    # ~fpp over-drop allowed
-    assert len(got) >= 18
-
-
 def test_incremental_dedup_hot_duplicate_key_and_plan(spark):
     """A batch that is mostly copies of ONE document (hot content key)
     dedups via the map-side-combined min-struct agg — survivors stay
@@ -2600,9 +2551,8 @@ def test_incremental_dedup_hot_duplicate_key_and_plan(spark):
 
 
 def test_incremental_dedup_nested_map_column_falls_back_to_window(spark):
-    """A map nested inside a struct is not struct-orderable; one range
-    and several must detect it recursively and fall back to the window
-    dedup."""
+    """A map nested inside a struct is not struct-orderable; the batch
+    dedup must detect it recursively and fall back to the window."""
     seen = spark.createDataFrame([(1, "known doc")], "doc_id long, text string")
     new = spark.sql("""
         SELECT * FROM VALUES
@@ -2611,16 +2561,13 @@ def test_incremental_dedup_nested_map_column_falls_back_to_window(spark):
           (12, 'fresh doc',  named_struct('tags', map('e','f')))
         AS t(doc_id, text, meta)
     """)
-    for nr in (1, 4):
-        got = sorted(
-            r.doc_id for r in dedup.incremental_dedup(new, seen, num_ranges=nr).collect()
-        )
-        assert got == [11], nr
+    got = sorted(r.doc_id for r in dedup.incremental_dedup(new, seen).collect())
+    assert got == [11]
 
 
 def test_incremental_dedup_partition_layout_invariant(spark):
     """Survivors depend on content + ids only, never on how either side
-    happens to be partitioned (one range or several)."""
+    happens to be partitioned."""
     new, seen = _inc_dedup_frames(spark)
     want = [1000 + i for i in range(50)]
     for np_, sp_ in [(1, 7), (13, 1), (5, 3)]:
@@ -2631,19 +2578,11 @@ def test_incremental_dedup_partition_layout_invariant(spark):
             ).collect()
         )
         assert got == want, (np_, sp_)
-    got_ranged = sorted(
-        r.doc_id
-        for r in dedup.incremental_dedup(
-            new.repartition(11), seen.repartition(3), num_ranges=4
-        ).collect()
-    )
-    assert got_ranged == want
 
 
 def test_incremental_dedup_hot_corpus_content(spark):
-    """A corpus that is mostly copies of one document: the per-batch
-    distinct before insertion keeps the build correct and survivors
-    exact, at one range and at several."""
+    """A corpus that is mostly copies of one document: the matched corpus
+    rows collapse to one per content and the survivors stay exact."""
     seen = spark.createDataFrame(
         [(i, "the single hot corpus document body") for i in range(2000)]
         + [(9000, "a rare distinct corpus doc")],
@@ -2655,30 +2594,8 @@ def test_incremental_dedup_hot_corpus_content(spark):
          (12, "a genuinely fresh document")],
         ["doc_id", "text"],
     )
-    for nr in (1, 4):
-        got = sorted(r.doc_id for r in dedup.incremental_dedup(
-            new, seen, num_ranges=nr).collect())
-        assert got == [12], nr
-
-
-def test_estimate_rows_uses_footers_and_overestimates_derived(spark, tmp_path):
-    """Bloom sizing estimate: a parquet-backed frame answers from file
-    footers (even when filtered — the over-estimate is harmless), and a
-    frame with no file lineage falls back to an exact count."""
-    p = str(tmp_path / "seen.parquet")
-    spark.range(1000).selectExpr("CAST(id AS STRING) AS text").write.parquet(p)
-    full = spark.read.parquet(p)
-    assert dedup._estimate_rows(full) == 1000
-    filtered = full.where("CAST(text AS INT) % 10 = 0")
-    assert dedup._estimate_rows(filtered) == 1000  # upper bound, not 100
-    mem = spark.createDataFrame([(str(i),) for i in range(7)], ["text"])
-    assert dedup._estimate_rows(mem) == 7
-    # row-MULTIPLYING plans must NOT trust the footers (an undersized
-    # filter saturates and verify=False would over-drop): exact count
-    exploded = full.selectExpr("explode(array(text, text)) AS text")
-    assert dedup._estimate_rows(exploded) == 2000
-    unioned = full.unionByName(mem)
-    assert dedup._estimate_rows(unioned) == 1007
+    got = sorted(r.doc_id for r in dedup.incremental_dedup(new, seen).collect())
+    assert got == [12]
 
 
 def test_signature_store_roundtrip_scan(spark, tmp_path):

@@ -956,6 +956,22 @@ def test_add_points_spreads_across_subshards(spark):
     idx.shards_df.unpersist()
 
 
+def test_build_split_bounds_largest_shard(spark):
+    """The build's skew split sizes its split counts against the fair
+    share of the layout it BUILDS (n over the shard count after the
+    split), not of the pre-split cell count: on the skewed corpus at
+    8 cells the largest realized shard stays within max_shard_factor x
+    that share."""
+    skew = _skewed_blob_corpus(spark)
+    params = VamanaParams(dim=16, alpha=1.2, R=16, L=32, ef_search=48, seed=42)
+    idx = PartitionedVamanaIndex.build(spark, skew, params, num_shards=8, graph=False)
+    S = int(idx.params.num_shards)
+    sizes = {r["shard"]: r["count"] for r in idx.shards_df.groupBy("shard").count().collect()}
+    assert sum(sizes.values()) == 3000
+    assert max(sizes.values()) <= 2.0 * 3000 / S, (S, sizes)
+    idx.shards_df.unpersist()
+
+
 def test_routing_concentration_in_subshard_units(spark):
     """r9 (ADVICE r8): on a skew-split index the diagnostic must count
     in the units nprobe spends — a split cell's near-tie sub-shards all

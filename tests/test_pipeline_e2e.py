@@ -112,7 +112,8 @@ def test_cli_sample_temperature(spark, tmp_path, capsys):
 
 def test_cli_dedup_incremental(spark, tmp_path, capsys):
     """dedup --mode incremental drops batch rows already in --against
-    (exact semantics via Bloom + verify) and keeps the rest."""
+    (exact semantics: digest semi-join + text anti-join) and keeps the
+    rest."""
     import json
 
     from vamana_spark.__main__ import main

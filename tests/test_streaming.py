@@ -249,8 +249,8 @@ def test_streaming_quality_filters_match_batch(spark, documents, tmp_path):
 
 def test_streaming_incremental_dedup_matches_batch(spark, documents, tmp_path):
     """Stream-vs-corpus ingest dedup parity on a closed input: the
-    streaming mirror (Bloom probe per micro-batch + stream-static anti
-    verify + within-watermark first-occurrence) == the batch
+    streaming mirror (stream-static anti-join of every row +
+    within-watermark first-occurrence) == the batch
     incremental_dedup survivor set. Sorted single-partition input makes
     first-processed == min doc_id, so the two keep the same survivors."""
     from vamana_spark.operators.dedup import incremental_dedup

@@ -103,14 +103,12 @@ def cmd_dedup(args) -> int:
         )
     elif args.mode == "incremental":
         # dedup the input BATCH against an already-ingested corpus
-        # (Bloom-broadcast; the corpus never shuffles)
+        # (one corpus pass; the corpus never shuffles on content)
         if not args.against:
             raise SystemExit("--mode incremental requires --against <corpus>")
         seen = spark.read.parquet(args.against)
         out = dedup.incremental_dedup(
-            docs, seen, text_col=args.text_col, id_col=args.id_col,
-            fpp=args.bloom_fpp, num_ranges=args.ranges,
-            verify=not args.no_verify,
+            docs, seen, text_col=args.text_col, id_col=args.id_col
         )
     elif args.mode == "incremental-near":
         # cross-snapshot near-dup PAIRS (batch_id, seen_id, jaccard) —
@@ -640,21 +638,14 @@ def main(argv=None) -> int:
     d.add_argument("--against", default=None,
                    help="mode=incremental|incremental-near: parquet path of "
                         "the already-ingested corpus to dedup the input "
-                        "batch against")
-    d.add_argument("--bloom-fpp", dest="bloom_fpp", type=float, default=0.01)
-    d.add_argument("--ranges", type=int, default=1,
-                   help="mode=incremental: >1 builds and probes the Bloom "
-                        "filter in that many sequential digest-range passes, "
-                        "so no broadcast exceeds m/ranges bits at the price "
-                        "of one narrow corpus pass per range")
+                        "batch against; mode=incremental drops exactly the "
+                        "batch rows whose normalized text the corpus holds, "
+                        "in one corpus pass")
     d.add_argument("--signatures", default=None,
                    help="mode=incremental-near: directory of a persisted "
                         "corpus signature store (dedup.save_signatures) — "
                         "skips the corpus signature pass and takes banding "
                         "parameters from the store's metadata")
-    d.add_argument("--no-verify", dest="no_verify", action="store_true",
-                   help="mode=incremental: skip the exact re-check of Bloom "
-                        "candidates (may over-drop ~fpp of unique rows)")
     d.add_argument("--text-col", dest="text_col", default="text")
     d.add_argument("--id-col", dest="id_col", default="doc_id")
     d.add_argument("--vec-col", dest="vec_col", default="embedding")

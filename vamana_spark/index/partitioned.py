@@ -427,15 +427,19 @@ class PartitionedVamanaIndex:
         cell can swallow several blobs (measured at the 1M k-blob rung:
         straggler cells crossed the graph crossover and their dense
         kernels ran 10× longer than the rest of the build combined).
-        Cells whose estimated population exceeds
-        ``max_shard_factor × n/num_shards`` are hash-split into evenly
-        sized sub-shards (deterministic vec_id hash); each sub-shard
+        Cells whose population (points whose nearest cell it is)
+        exceeds ``max_shard_factor ×`` the fair share of the built
+        layout (n over the shard count after the split) are
+        hash-split into evenly sized sub-shards (deterministic vec_id
+        hash); the split counts are ``cells._split_counts``' fixed
+        point, the rule ``resplit_oversized`` applies. Each sub-shard
         repeats its parent's center, so routing degrades gracefully —
         probing a big cell just probes its sub-shards as near-ties.
-        Population estimates come from the center-training sample
-        already on the driver (zero extra jobs; ~32 samples/shard
-        resolves the ≥2× skew that matters). Uniform corpora split
-        nothing and the path is a no-op. ``None`` disables."""
+        The populations are exact, from one aggregate over the cell
+        assignment (one extra job): the ~32-row-per-cell training
+        sample misreads a cell's share by a few percent, enough to
+        leave a shard past the bound. Uniform corpora split nothing.
+        ``None`` disables the split and its counting job."""
         import dataclasses
 
         # never mutate the caller's params (same as VamanaIndex.build):
@@ -481,17 +485,21 @@ class PartitionedVamanaIndex:
             kernels._kmeans(Xs, min(num_shards, Xs.shape[0]), params.seed, 10)
         )
 
-        # oversized-cell splitting (see docstring): estimate cell
-        # populations from the training sample already in hand, split
-        # any cell past the factor into hash-addressed sub-shards, and
-        # repeat the parent center per sub-shard so routing is unchanged
+        # oversized-cell splitting (see docstring): count each cell's
+        # rows exactly, split any cell past the factor into
+        # hash-addressed sub-shards, and repeat the parent center per
+        # sub-shard so routing is unchanged
         n_cells = C.shape[0]
         if max_shard_factor is not None and n_cells > 1:
-            dS = exact._dist_matrix(Xs, C.astype(np.float64), "l2sq")
-            counts = np.bincount(dS.argmin(axis=1), minlength=n_cells)
-            est = counts / max(counts.sum(), 1)  # population share
-            cap = float(max_shard_factor) / n_cells
-            nsplit = np.maximum(1, np.ceil(est / cap)).astype(np.int64)
+            pop = dict(
+                assign_cells(pts, C, 1, metric, mips_m)
+                .groupBy("shard").count().collect()
+            )
+            counts = np.array([pop.get(c, 0) for c in range(n_cells)], dtype=np.int64)
+            nsplit = _split_counts(
+                counts, np.ones(n_cells, dtype=np.int64), int(counts.sum()),
+                max_shard_factor,
+            )
         else:
             nsplit = np.ones(n_cells, dtype=np.int64)
         C = np.repeat(C, nsplit, axis=0)

@@ -21,6 +21,11 @@ Scale notes (the whole point of these):
   cross-snapshot scans and their streaming mirror.
 - SimHash buckets by 16-bit bands of a 64-bit signature (Hamming-ball
   blocking), same bucket walk, and verifies by the same hash sets.
+- Exact dedup of a new batch against a corpus at rest
+  (``incremental_dedup``) reads the corpus once: the batch's content
+  digests (8 B per distinct batch content) broadcast into one map-side
+  semi-join, and a batch-sized text anti-join over the matched corpus
+  rows makes the answer exact.
 """
 
 from __future__ import annotations
@@ -119,6 +124,14 @@ def ngram_jaccard_join(
     recall trade). Set ``max_exact_rows=0`` to force the LSH path, or
     pass ``block_col`` to keep exact semantics at scale. Pairs are
     scored by ``_hash_set_jaccard`` either way.
+
+    Eager: the call runs Spark jobs before it returns. Unblocked, it
+    counts ``df`` to pick the tier. The exact path ``localCheckpoint``s
+    the shingle hash sets before joining them with themselves, so the
+    Python shingle pass runs once, not once per join side (a cross
+    join has no exchange to reuse). A local checkpoint keeps its blocks
+    only on the executors that wrote them, so losing one of those
+    executors fails the job that reads them instead of recomputing.
     """
     from vamana_spark.functions.util import ensure_parallelism
 
@@ -129,7 +142,7 @@ def ngram_jaccard_join(
     blk = [block_col] if block_col else []
     hs = _shingle_hash_sets(
         ensure_parallelism(df.select(id_col, text_col, *blk)), text_col, id_col, n, *blk
-    )
+    ).localCheckpoint()
     a = hs.select(F.col(id_col).alias("a_id"), F.col("_hs").alias("a_hs"),
                   *[F.col(c).alias("_blk") for c in blk])
     b = hs.select(F.col(id_col).alias("b_id"), F.col("_hs").alias("b_hs"),
@@ -1806,446 +1819,11 @@ def cut_duplicate_spans(
 
 # ---------------------------------------------------- incremental dedup
 
-def _bloom_geometry(expected_items: int, fpp: float) -> tuple:
-    """(m_bits, k_hashes) for a Bloom filter (Bloom 1970) at the
-    requested capacity.
-
-    Standard sizing: m = -n·ln(p)/ln(2)^2, k = (m/n)·ln(2). m is rounded
-    up to a multiple of 64 so the bitmap is whole uint64 words. Probes
-    use Kirsch–Mitzenmacher 2006 double hashing (see _positions_from_h).
-    """
-    import math
-
-    n = max(int(expected_items), 1)
-    p = min(max(float(fpp), 1e-9), 0.5)
-    m = int(math.ceil(-n * math.log(p) / (math.log(2) ** 2)))
-    m = max((m + 63) // 64 * 64, 64)
-    k = max(int(round(m / n * math.log(2))), 1)
-    return m, min(k, 32)
-
-
-_ROW_PRESERVING_NODES = (
-    "Project", "Filter", "Relation", "LogicalRelation", "GlobalLimit",
-    "LocalLimit", "Sort", "Repartition", "RepartitionByExpression",
-    "Coalesce", "SubqueryAlias", "View", "ResolvedHint", "Sample",
-)
-
-
-def _estimate_rows(df) -> int:
-    """Upper-bound row-count estimate for Bloom sizing, from the
-    frame's parquet footers (driver-side metadata only — no Spark job).
-
-    SOUNDNESS: footer totals upper-bound the frame's row count only
-    when every operator between the scan and the frame is
-    row-preserving-or-reducing (project/filter/limit/sort/...). A
-    row-MULTIPLYING plan (join, union, explode/generate, expand) over
-    the same files could exceed the footer total, and an undersized
-    Bloom filter saturates — in verify=False mode that would silently
-    over-drop far beyond the documented ~fpp. So the footer path is
-    used only when the optimized plan contains exclusively whitelisted
-    node types; anything else falls back to an exact ``count()``.
-    Callers with expensive derived corpora should pass an explicit
-    ``expected_seen`` (oversizing is harmless).
-    """
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if files:
-        try:
-            import re
-
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-            nodes = re.findall(r"^[\s+:\-]*'?([A-Za-z]+)", plan, re.MULTILINE)
-            if not all(
-                any(n == a or n.startswith(a) for a in _ROW_PRESERVING_NODES)
-                for n in nodes if n
-            ):
-                files = []
-        except Exception:
-            files = []
-    if files:
-        import pyarrow.parquet as pq
-
-        total = 0
-        try:
-            for f in files:
-                u = urlparse(f)
-                path = unquote(u.path) if u.scheme in ("file", "") else None
-                if path is None:
-                    raise ValueError(f"non-local file {f}")
-                total += pq.ParquetFile(path).metadata.num_rows
-            return max(int(total), 1)
-        except Exception:
-            pass
-    return int(df.count())
-
-
-def _bloom_digests(values):
-    """(h1, h2) uint64 arrays — one blake2b-16 digest per value split
-    into two independent 64-bit halves (h2 forced odd)."""
-    import numpy as np
-
-    if len(values) == 0:
-        e = np.empty(0, dtype=np.uint64)
-        return e, e
-    # Tag byte keeps NULL distinguishable from any real content: a
-    # document whose text is literally "\x00" hashes b"\x01\x00", never
-    # the NULL sentinel b"\x00" — so lossy (verify=False) mode cannot
-    # cross-drop a NULL row against a "\x00" document or vice versa.
-    dig = np.frombuffer(
-        b"".join(
-            blake2b(
-                b"\x01" + v.encode("utf-8", "surrogatepass")
-                if v is not None
-                else b"\x00",
-                digest_size=16,
-            ).digest()
-            for v in values
-        ),
-        dtype=np.uint64,
-    ).reshape(-1, 2)
-    return dig[:, 0], dig[:, 1] | np.uint64(1)
-
-
-def _positions_from_h(h1, h2, m_bits: int, k: int):
-    """(n, k) int64 bit positions: position_i = (h1 + i·h2) mod m
-    (Kirsch–Mitzenmacher — k probes from one digest)."""
-    import numpy as np
-
-    i = np.arange(k, dtype=np.uint64)
-    return ((h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m_bits)).astype(
-        np.int64
-    )
-
-
-def _bloom_positions(values, m_bits: int, k: int):
-    """(len(values), k) int64 bit positions via double hashing."""
-    import numpy as np
-
-    if len(values) == 0:
-        return np.empty((0, k), dtype=np.int64)
-    h1, h2 = _bloom_digests(values)
-    return _positions_from_h(h1, h2, m_bits, k)
-
-
 def _content_norm(c: str) -> Column:
     """The content-identity normalization every exact-dedup path shares
-    (whitespace runs collapsed, lowercased) — Bloom insertion, Bloom
-    probe, and the verify join must hash the SAME string."""
+    (whitespace runs collapsed, lowercased): the batch key, the corpus
+    key and the verify join must compare the SAME string."""
     return F.lower(F.regexp_replace(F.col(c), r"\s+", " "))
-
-
-def build_bloom(
-    df_norm: DataFrame,
-    m_bits: int,
-    k: int,
-    max_build_tasks: int = 256,
-    chunk_words: int = 1 << 21,
-    range_filter: "Optional[tuple[int, int]]" = None,
-):
-    """Fold a one-string-column DataFrame (column ``_n``) into a Bloom
-    filter; returns the broadcast bitmap (``.value`` = m_bits/8 bytes).
-
-    One mapInPandas pass emits each task's partition-local bitmap SPLIT
-    into fixed ``chunk_words``-word chunks (16 MiB at the default),
-    skipping all-zero chunks; chunks OR-merge per chunk id in one
-    applyInPandas level and stream to the driver via ``toLocalIterator``
-    (the driver holds the final bitmap + one chunk, never a bitmap per
-    task). No content-keyed shuffle anywhere — the only movement is the
-    partial chunks, whose total volume is ≤ #build-tasks × m/8, which is
-    why the input is coalesced (narrow, no shuffle) to
-    ``max_build_tasks`` when it has more partitions: partials cost
-    bitmap-size each regardless of how few rows a task holds. Raise
-    ``max_build_tasks`` for more build parallelism (linear partial
-    traffic), raise ``fpp`` upstream to shrink m for very large key
-    counts. Insertion is idempotent — no distinct() pre-pass.
-
-    ``range_filter=(r, num_ranges)`` builds a RANGE-SCOPED filter:
-    only values whose digest falls in range ``r`` of ``num_ranges``
-    equal slices of the digest space (``_shard_of``) are inserted, so
-    ``m_bits`` only needs to cover that range's share of the keys — the
-    per-range build of ``incremental_dedup(num_ranges=...)``.
-    """
-    import numpy as np
-
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    n_words = m_bits // 64
-    if df_norm.rdd.getNumPartitions() > max_build_tasks:
-        df_norm = df_norm.coalesce(max_build_tasks)
-
-    def _partition_bloom(batches):
-        bits = np.zeros(n_words, dtype=np.uint64)
-        for pdf in batches:
-            # insertion is idempotent — hash each distinct content once
-            # per batch (a hot-content batch pays pandas dedup, not a
-            # blake2b per copy)
-            vals = pdf["_n"].drop_duplicates().tolist()
-            if range_filter is not None:
-                h1, h2 = _bloom_digests(vals)
-                keep = _shard_of(h1, range_filter[1]) == range_filter[0]
-                pos = _positions_from_h(h1[keep], h2[keep], m_bits, k).ravel()
-            else:
-                pos = _bloom_positions(vals, m_bits, k).ravel()
-            np.bitwise_or.at(
-                bits, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64)
-            )
-        for w0 in range(0, n_words, chunk_words):
-            chunk = bits[w0 : w0 + chunk_words]
-            if chunk.any():
-                yield pd.DataFrame({"w0": [w0], "bits": [chunk.tobytes()]})
-
-    def _or_chunk(pdf):
-        acc = np.frombuffer(pdf["bits"].iloc[0], dtype=np.uint64).copy()
-        for b in pdf["bits"].iloc[1:]:
-            acc |= np.frombuffer(b, dtype=np.uint64)
-        return pd.DataFrame({"w0": [int(pdf["w0"].iloc[0])], "bits": [acc.tobytes()]})
-
-    bloom_schema = StructType(
-        [StructField("w0", LongType()), StructField("bits", BinaryType())]
-    )
-    partials = df_norm.mapInPandas(_partition_bloom, schema=bloom_schema)
-    merged = partials.groupBy("w0").applyInPandas(_or_chunk, schema=bloom_schema)
-    bits = np.zeros(n_words, dtype=np.uint64)
-    for row in merged.toLocalIterator():
-        w0 = int(row["w0"])
-        arr = np.frombuffer(row["bits"], dtype=np.uint64)
-        bits[w0 : w0 + len(arr)] |= arr
-    return df_norm.sparkSession.sparkContext.broadcast(bits.tobytes())
-
-
-def flag_bloom_membership(
-    df: DataFrame, b_bloom, m_bits: int, k: int, flag_col: str = "_maybe"
-) -> DataFrame:
-    """Append ``flag_col``: whether the row's ``_n`` column is maybe-in
-    the broadcast Bloom filter. Stateless mapInPandas — works on batch
-    AND streaming DataFrames (the streaming mirror probes per
-    micro-batch with the same filter)."""
-    import numpy as np
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    def _maybe_seen(batches):
-        local = np.frombuffer(b_bloom.value, dtype=np.uint64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pos = _bloom_positions(pdf["_n"].tolist(), m_bits, k)
-            hit = (
-                (local[pos >> 6] >> (pos & 63).astype(np.uint64)) & np.uint64(1)
-            ).astype(bool).all(axis=1)
-            yield pdf.assign(**{flag_col: hit})
-
-    out_schema = StructType(df.schema.fields + [StructField(flag_col, BooleanType())])
-    return df.mapInPandas(_maybe_seen, schema=out_schema)
-
-
-def _exact_verify_tail(flagged: DataFrame, seen_norm: DataFrame) -> DataFrame:
-    """Exact confirmation of ``incremental_dedup``'s Bloom maybe-hits,
-    for one range or many.
-
-    Decide on digests, then attach the payload with one careful join:
-    broadcast the candidate DIGESTS (xxhash64, 8 B per distinct
-    maybe-content), pull only the hash-matched corpus rows in one
-    map-side semi-join (with broadcasts enabled the corpus never
-    shuffles on content), then make the result exact with a
-    candidate-sized text anti-join — digest collisions cannot cause a
-    false drop because the final anti-join compares the full
-    normalized text. The matched corpus rows are deduplicated on
-    ``_n`` first, one Exchange hashpartitioning(_n) over candidate-
-    bounded rows, so a corpus holding many copies of one content
-    still moves one row per distinct matched content.
-
-    The previous tail broadcast the candidate and confirmed TEXTS
-    (two `F.broadcast` of full normalized documents). With a dup-heavy
-    batch that is NOT tiny: on a 10M-doc corpus (2.1M maybe-hits) the
-    two string broadcasts were ~300 MB each and dominated the whole
-    operator (measured: the verify tail was ~400 of ~500 s); at 100 TB
-    it would be a driver OOM. Moved bytes now: 8 B × |candidates|
-    broadcast + one candidate-bounded movement of matched texts — as a
-    broadcast while the maybe-hit texts' estimated size (one aggregate
-    over the checkpoint: count and total bytes of ``_n``) stays within
-    ``spark.sql.autoBroadcastJoinThreshold`` (the anti-join's probe
-    side then does not exchange), as a candidate-bounded shuffle past
-    it.
-
-    With ``spark.sql.autoBroadcastJoinThreshold`` < 0 nothing
-    broadcasts: the digest semi-join then shuffles ALL of
-    ``seen_norm``, a full-corpus shuffle on content.
-    """
-    # batch-sized (the small side by construction); feeds the clear
-    # branch, the maybe branch AND the pricing count without replaying
-    # the Bloom probe pipeline
-    from vamana_spark.functions.util import bytes_conf
-
-    thresh = bytes_conf(
-        flagged.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 << 20
-    )
-    flagged = flagged.localCheckpoint()
-    maybe = flagged.where(F.col("_maybe"))
-    clear = flagged.where(~F.col("_maybe"))
-    cand_h = maybe.select(F.xxhash64("_n").alias("_h")).distinct()
-    # distinct: a dup-heavy corpus holds many copies of one matched
-    # content; one row per distinct content keeps the broadcast below
-    # within the byte gate. With broadcasts disabled (threshold < 0)
-    # the digest semi-join shuffles the whole corpus instead.
-    seen_matched = (
-        seen_norm.withColumn("_h", F.xxhash64("_n"))
-        .join(F.broadcast(cand_h) if thresh >= 0 else cand_h, "_h", "left_semi")
-        .select("_n")
-        .distinct()
-    )
-    # one job over the checkpoint prices the anti-join's build side:
-    # seen_matched holds at most one row per maybe-hit text, and an
-    # UnsafeRow of one string costs ~16 B (null bits + offset/size word)
-    # plus its bytes
-    n_maybe, text_bytes = maybe.agg(
-        F.count(F.lit(1)), F.coalesce(F.sum(F.octet_length("_n")), F.lit(0))
-    ).first()
-    if thresh >= 0 and text_bytes + 16 * n_maybe <= thresh:
-        kept_maybe = maybe.join(F.broadcast(seen_matched), "_n", "left_anti")
-    else:  # user disabled broadcasts, or candidate set too big to hold
-        kept_maybe = maybe.join(seen_matched, "_n", "left_anti")
-    return clear.unionByName(kept_maybe).drop("_n", "_maybe")
-
-
-def incremental_dedup(
-    new_df: DataFrame,
-    seen_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = True,
-    expected_seen: Optional[int] = None,
-    fpp: float = 0.01,
-    num_ranges: int = 1,
-    verify: bool = True,
-    max_build_tasks: int = 256,
-) -> DataFrame:
-    """Dedup a NEW batch against an already-ingested corpus (X1
-    incremental form): the crawl-snapshot-over-snapshot pass a training
-    pipeline runs before appending data, where ``seen_df`` is orders of
-    magnitude larger than the batch. Returns the new rows that survive
-    (first occurrence within the batch, and not present in the corpus),
-    schema = ``new_df``.
-
-    100 TB shape — the corpus never shuffles on content while
-    broadcasts are enabled (with ``spark.sql.autoBroadcastJoinThreshold``
-    < 0 the verify tail's digest semi-join shuffles the whole corpus):
-    - One narrow pass over ``seen_df`` (coalesced to ``max_build_tasks``
-      so partial traffic is bounded at tasks × m/8 bytes) folds each
-      task's content hashes into a Bloom bitmap emitted as 16 MiB
-      chunks; chunks OR-merge per chunk id and stream to the driver —
-      see ``build_bloom``. Insertion is idempotent, so no distinct() is
-      needed first.
-    - The merged filter broadcasts; new rows drop map-side unless the
-      Bloom says "maybe seen" (false-positive rate ``fpp``).
-    - ``verify=True`` (default) makes the result EXACT: the candidate
-      DIGESTS (8 B per distinct maybe-content) broadcast back against a
-      second map-side pass over ``seen_df`` (broadcast semi-join; still
-      no corpus shuffle), the hash-matched corpus rows — candidate-
-      bounded, not corpus-bounded — join the maybe rows in a text
-      anti-join, and only exact text matches drop (digest collisions
-      cannot cause a false drop). See ``_exact_verify_tail``.
-      ``verify=False`` skips the second corpus pass and accepts
-      dropping ~fpp of unique new rows — the cheap mode for lossy
-      ingest.
-    - The batch itself pays one content-keyed shuffle for its internal
-      first-occurrence dedup (an associative min-struct agg with
-      map-side partials — hot duplicate keys combine before the
-      exchange) — it is the small side by construction.
-
-    Memory envelope: one filter over the whole key space costs m bits
-    on the driver and on every executor (10^9 keys at fpp=0.01 is
-    ~1.2 GB). ``num_ranges`` = R > 1 cuts the digest space into R
-    equal slices (``_shard_of``: the digest's high bits, while probe
-    positions use the low-mod range, so each range's filter fills
-    evenly) and runs them one after another: each range builds a
-    filter over only its share of the corpus keys, probes only the
-    batch rows routed to it, checkpoints its flagged rows and destroys
-    its broadcast before the next range builds. The price is R narrow
-    corpus passes for the builds; the bound is at most m/R bits per
-    broadcast (150 MB per pass for the 10^9-key example at R = 8), and
-    the corpus still never shuffles. At that scale, persist or
-    ``localCheckpoint`` a ``select(<normalized text>)`` projection of
-    the corpus first so the repeated scans read one slim column, and
-    raise R only as far as the memory bound requires. The exact-verify
-    tail runs ONCE over the union of all ranges' maybe-hits, so R does
-    not change the result under ``verify=True``.
-
-    ``expected_seen`` sizes the filter (~1.2 bytes/row at fpp=0.01).
-    When None, the count is estimated from the corpus files' parquet
-    FOOTERS (driver-side metadata, no Spark job) — an upper bound when
-    ``seen_df`` is a filtered/derived frame, which is harmless: an
-    oversized Bloom filter only lowers the real fpp. Only a corpus
-    with no file lineage (in-memory frames, non-parquet sources) falls
-    back to a full ``seen_df.count()`` pass — pass ``expected_seen``
-    explicitly there to avoid it. Bloom membership has NO false
-    negatives, so every true duplicate is always dropped in both
-    modes.
-
-    Eager: the call runs Spark jobs before it returns. The Bloom build
-    streams its chunks to the driver in both modes. With R > 1 the call
-    also ``localCheckpoint``s the routed batch and each range's flagged
-    rows. With ``verify=True`` the verify tail ``localCheckpoint``s the
-    flagged batch and runs one aggregate over it (the maybe-hit count
-    and text bytes that choose the anti-join's plan). A local checkpoint
-    truncates lineage and keeps its blocks only on the executors that
-    wrote them, so losing one of those executors fails the job that
-    reads them instead of recomputing.
-    """
-    from functools import reduce
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    R = max(int(num_ranges), 1)
-    norm = _content_norm if normalize else F.col
-    if expected_seen is None:
-        expected_seen = _estimate_rows(seen_df)
-    # each range's filter holds its share of the keys: ceil(expected / R)
-    m_bits, k = _bloom_geometry(-(-int(expected_seen) // R), fpp)
-
-    seen_norm = seen_df.select(norm(text_col).alias("_n"))
-    batch = _first_occurrence(new_df, text_col, id_col, norm)
-    if R == 1:
-        b_bloom = build_bloom(seen_norm, m_bits, k, max_build_tasks)
-        flagged = flag_bloom_membership(batch, b_bloom, m_bits, k)
-    else:
-        def _route(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                h1, _h2 = _bloom_digests(pdf["_n"].tolist())
-                yield pdf.assign(_range=_shard_of(h1, R))
-
-        routed_schema = StructType(
-            batch.schema.fields + [StructField("_range", IntegerType())]
-        )
-        # feeds R probe passes — recomputing would replay the batch's
-        # first-occurrence shuffle per range
-        routed = batch.mapInPandas(_route, schema=routed_schema).localCheckpoint()
-        parts = []
-        for r in range(R):
-            b_bloom = build_bloom(
-                seen_norm, m_bits, k, max_build_tasks, range_filter=(r, R)
-            )
-            parts.append(
-                flag_bloom_membership(
-                    routed.where(F.col("_range") == r), b_bloom, m_bits, k
-                ).localCheckpoint()  # materialize before the broadcast goes
-            )
-            # destroy, not unpersist: the checkpoint above is eager, so
-            # the broadcast is never re-read, and destroy() releases the
-            # driver-side copy too — unpersist leaves it to GC, which
-            # could hold all R filters on the driver at once
-            b_bloom.destroy()
-        flagged = reduce(DataFrame.unionByName, parts).drop("_range")
-    if not verify:
-        return flagged.where(~F.col("_maybe")).drop("_n", "_maybe")
-
-    return _exact_verify_tail(flagged, seen_norm)
 
 
 def _struct_orderable(dt) -> bool:
@@ -2264,7 +1842,7 @@ def _struct_orderable(dt) -> bool:
 
 def _first_occurrence(new_df: DataFrame, text_col: str, id_col: str, norm) -> DataFrame:
     """Batch-internal first-occurrence dedup + the ``_n`` content key
-    (same normalization the Bloom hashed). min(struct(id, rest)) per
+    (the normalization the corpus side is keyed by). min(struct(id, rest)) per
     content key, not a window rank: the associative min gets MAP-SIDE
     partials, so a batch that is mostly copies of one document (the
     skew case for a content-keyed window — dedup_lines documents the
@@ -2287,13 +1865,107 @@ def _first_occurrence(new_df: DataFrame, text_col: str, id_col: str, norm) -> Da
     )
 
 
-def _shard_of(h1, num_ranges: int):
-    """Digest range id from the digest's high bits (positions use the
-    low-mod range, so range routing and probe bits draw on different
-    entropy)."""
-    import numpy as np
+def _exact_verify_tail(batch: DataFrame, seen_norm: DataFrame) -> DataFrame:
+    """Drop the batch rows whose ``_n`` occurs in ``seen_norm``, exactly,
+    in one pass over the corpus.
 
-    return ((h1 >> np.uint64(33)) % np.uint64(num_ranges)).astype(np.int32)
+    Decide on digests, then attach the payload with one careful join:
+    broadcast the batch's content DIGESTS (xxhash64, 8 B per distinct
+    batch content), pull only the hash-matched corpus rows in one
+    map-side semi-join (with broadcasts enabled the corpus never
+    shuffles on content), then make the result exact with a
+    batch-sized text anti-join — digest collisions cannot cause a
+    false drop because the anti-join compares the full normalized
+    text. The matched corpus rows are deduplicated on ``_n`` first,
+    one Exchange hashpartitioning(_n) over batch-bounded rows, so a
+    corpus holding many copies of one content still moves one row per
+    distinct matched content.
+
+    Moved bytes: 8 B × |batch| broadcast + one batch-bounded movement
+    of matched texts — as a broadcast while the batch texts' estimated
+    size (one aggregate over the checkpoint: count and total bytes of
+    ``_n``) stays within ``spark.sql.autoBroadcastJoinThreshold`` (the
+    anti-join's probe side then does not exchange), as a batch-bounded
+    shuffle past it. Broadcasting texts instead of digests does not
+    scale: on a 10M-doc corpus with 2.1M candidate rows two text
+    broadcasts of ~300 MB each took ~400 of ~500 s.
+
+    With ``spark.sql.autoBroadcastJoinThreshold`` < 0 nothing
+    broadcasts: the digest semi-join then shuffles ALL of
+    ``seen_norm``, a full-corpus shuffle on content.
+    """
+    from vamana_spark.functions.util import bytes_conf
+
+    thresh = bytes_conf(
+        batch.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 << 20
+    )
+    # feeds the digest broadcast, the anti-join AND the pricing
+    # aggregate without replaying the first-occurrence shuffle
+    batch = batch.localCheckpoint()
+    batch_h = batch.select(F.xxhash64("_n").alias("_h")).distinct()
+    # distinct: a dup-heavy corpus holds many copies of one matched
+    # content; one row per distinct content keeps the broadcast below
+    # within the byte gate
+    seen_matched = (
+        seen_norm.withColumn("_h", F.xxhash64("_n"))
+        .join(F.broadcast(batch_h) if thresh >= 0 else batch_h, "_h", "left_semi")
+        .select("_n")
+        .distinct()
+    )
+    # one job over the checkpoint prices the anti-join's build side:
+    # seen_matched holds at most one row per batch text, and an
+    # UnsafeRow of one string costs ~16 B (null bits + offset/size word)
+    # plus its bytes
+    n_rows, text_bytes = batch.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.octet_length("_n")), F.lit(0))
+    ).first()
+    if thresh >= 0 and text_bytes + 16 * n_rows <= thresh:
+        kept = batch.join(F.broadcast(seen_matched), "_n", "left_anti")
+    else:  # user disabled broadcasts, or the batch texts are too big to hold
+        kept = batch.join(seen_matched, "_n", "left_anti")
+    return kept.drop("_n")
+
+
+def incremental_dedup(
+    new_df: DataFrame,
+    seen_df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    normalize: bool = True,
+) -> DataFrame:
+    """Dedup a NEW batch against an already-ingested corpus (X1
+    incremental form): the crawl-snapshot-over-snapshot pass a training
+    pipeline runs before appending data, where ``seen_df`` is orders of
+    magnitude larger than the batch. Returns the new rows that survive
+    (first occurrence within the batch, and not present in the corpus),
+    schema = ``new_df``. The result is exact: a row drops only when its
+    normalized text equals a corpus row's.
+
+    100 TB shape — one narrow pass over ``seen_df``, which never
+    shuffles on content while broadcasts are enabled:
+    - The batch pays one content-keyed shuffle for its internal
+      first-occurrence dedup (an associative min-struct agg with
+      map-side partials — hot duplicate keys combine before the
+      exchange); it is the small side by construction.
+    - The batch's content digests, 8 B per distinct batch content,
+      force-broadcast (``F.broadcast``, whatever the threshold) into a
+      map-side semi-join over ``seen_df`` that keeps only the
+      hash-matched corpus rows, then a text anti-join against them
+      drops exact matches. See ``_exact_verify_tail``.
+    - With ``spark.sql.autoBroadcastJoinThreshold`` < 0 nothing
+      broadcasts, and the digest semi-join shuffles the whole corpus.
+
+    Eager: the call runs Spark jobs before it returns. It
+    ``localCheckpoint``s the first-occurrence batch and runs one
+    aggregate over it (the batch's row count and text bytes, which
+    choose the anti-join's plan). A local checkpoint truncates lineage
+    and keeps its blocks only on the executors that wrote them, so
+    losing one of those executors fails the job that reads them
+    instead of recomputing.
+    """
+    norm = _content_norm if normalize else F.col
+    seen_norm = seen_df.select(norm(text_col).alias("_n"))
+    return _exact_verify_tail(_first_occurrence(new_df, text_col, id_col, norm), seen_norm)
 
 
 def _witness_bands(

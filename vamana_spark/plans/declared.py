@@ -688,8 +688,7 @@ _JACCARD_PAIRS_SQL = """
 
 
 # The plain anti-join that incremental_dedup's survivors must match bit
-# for bit, at one digest range (q_incremental_dedup) or several
-# (q_incremental_dedup_tiers).
+# for bit (q_incremental_dedup).
 _INC_DEDUP_ORACLE = r"""
     WITH seen AS (
       SELECT lower(regexp_replace(text, '\s+', ' ', 'g')) AS n
@@ -711,60 +710,6 @@ _INC_DEDUP_ORACLE = r"""
     WHERE rn = 1 AND NOT EXISTS (SELECT 1 FROM seen s WHERE s.n = f.n)
     ORDER BY doc_id
     """
-
-
-# the same anti-join under the 'ranged' tier tag — wrapping
-# _INC_DEDUP_ORACLE (whose trailing ORDER BY forbids subquerying it
-# verbatim) as an explicit CTE keeps the tagged oracle readable
-_INC_DEDUP_TIERS_ORACLE = r"""
-    WITH seen AS (
-      SELECT lower(regexp_replace(text, '\s+', ' ', 'g')) AS n
-      FROM documents WHERE doc_id % 3 <> 0
-    ), batch AS (
-      SELECT doc_id + 1000000 AS doc_id,
-             lower(regexp_replace(text, '\s+', ' ', 'g')) AS n
-      FROM documents WHERE doc_id % 3 = 0
-      UNION ALL
-      SELECT doc_id + 2000000 AS doc_id,
-             lower(regexp_replace(text, '\s+', ' ', 'g')) AS n
-      FROM documents WHERE doc_id % 3 <> 0 AND doc_id % 7 = 0
-    ), firsts AS (
-      SELECT doc_id, n,
-             row_number() OVER (PARTITION BY n ORDER BY doc_id) AS rn
-      FROM batch
-    ), surv AS (
-      SELECT doc_id FROM firsts f
-      WHERE rn = 1 AND NOT EXISTS (SELECT 1 FROM seen s WHERE s.n = f.n)
-    )
-    SELECT 'ranged' AS tier, doc_id FROM surv
-    ORDER BY tier, doc_id
-    """
-
-
-@declare("q_incremental_dedup_tiers", _INC_DEDUP_TIERS_ORACLE)
-def q_incremental_dedup_tiers(spark, sf_dir):
-    """Incremental ingest dedup past one broadcast filter, tagged
-    'ranged': ``incremental_dedup(num_ranges=4)`` splits the batch by
-    digest range, and each range builds a range-scoped filter over only
-    that range's corpus keys, so no single filter spans the key space.
-    It runs the same planted batch as q_incremental_dedup against the
-    SAME anti-join oracle: the survivors must not depend on the number
-    of ranges."""
-    docs = _docs(spark, sf_dir)
-    seen = docs.where(F.col("doc_id") % 3 != 0)
-    batch = (
-        docs.where(F.col("doc_id") % 3 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-        .unionByName(
-            docs.where((F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 7 == 0))
-            .select((F.col("doc_id") + 2000000).alias("doc_id"), "text")
-        )
-    )
-    return (
-        dedup.incremental_dedup(batch, seen, num_ranges=4)
-        .select(F.lit("ranged").alias("tier"), "doc_id")
-        .orderBy("tier", "doc_id")
-    )
 
 
 @declare(
@@ -951,10 +896,11 @@ def q_incremental_dedup(spark, sf_dir):
     (snapshot-over-snapshot ingest). seen = docs with id % 3 != 0; the
     batch = the id % 3 == 0 docs (re-keyed +1M) plus planted copies of
     seen docs (re-keyed +2M, id % 7 == 0) so the driver row exercises
-    both drop paths. The engine path is Bloom-broadcast: the corpus
-    folds into a partition-local-OR'd Bloom filter (never shuffles on
-    content), candidates re-verify via broadcast semi-join — output is
-    exact, hash-matched against the plain anti-join oracle."""
+    both drop paths. The engine path reads the corpus once: the batch's
+    content digests broadcast into a map-side semi-join (the corpus
+    never shuffles on content), and a text anti-join over the matched
+    corpus rows makes the output exact, hash-matched against the plain
+    anti-join oracle."""
     docs = _docs(spark, sf_dir)
     seen = docs.where(F.col("doc_id") % 3 != 0)
     batch = (
@@ -1919,8 +1865,8 @@ def q_skewed_build(spark, sf_dir):
     build partitioned with num_shards=4 / overlap=2, and assert the
     oversized-cell split actually fires and stays bounded. ``ok`` folds
     in (a) split fired: final num_shards > 4, (b) the realized max
-    shard ≤ 2.6× the fair share (sample-noise slack over the 2.0
-    factor), (c) coverage: every point indexed exactly once per
+    shard ≤ 2.6× the fair share (slack over the 2.0 factor for the
+    overlap copies, which the split does not count), (c) coverage: every point indexed exactly once per
     overlap-distinct cell, (d) exhaustive search recall ≥ 0.9 vs exact
     kNN on the same skewed table. Rows-only by nature (k-means build);
     the equivalent invariants run at unit scale in

@@ -110,10 +110,6 @@ def streaming_incremental_dedup(
     text_col: str = "text",
     ts_col: str = "ts",
     watermark: str = "1 hour",
-    expected_seen=None,
-    fpp: float = 0.01,
-    verify: bool = True,
-    max_build_tasks: int = 256,
 ) -> DataFrame:
     """Incremental-INGEST dedup on a stream — the streaming mirror of
     ``operators.dedup.incremental_dedup``: drop rows whose content
@@ -121,45 +117,21 @@ def streaming_incremental_dedup(
     the first occurrence of each content key within the stream's
     watermark horizon.
 
-    The corpus Bloom filter builds ONCE at stream definition (a batch
-    job over ``seen_df`` — the corpus never shuffles on content, see
-    ``operators.dedup.build_bloom``) and broadcasts; every micro-batch
-    probes it with a stateless mapInPandas. ``verify=True`` re-checks
-    the 'maybe seen' rows with a stream-static LEFT ANTI join against
-    the corpus content keys — only candidate rows (~fpp of the stream +
-    true dups) enter that join each micro-batch, but the static side is
-    re-scanned per batch: pass a persisted/stored hash table as
-    ``seen_df`` for long-running streams. ``verify=False`` drops maybes
-    outright (lossy by ~fpp, zero per-batch corpus cost). Bloom
-    membership has no false negatives — true duplicates always drop.
+    Every streamed row meets the corpus content keys in one
+    stream-static LEFT ANTI join on the normalized text, so the result
+    is exact. The static side is re-scanned every micro-batch: pass a
+    persisted or stored table of the corpus as ``seen_df`` for
+    long-running streams.
     """
-    from vamana_spark.operators.dedup import (
-        _bloom_geometry,
-        _content_norm,
-        build_bloom,
-        flag_bloom_membership,
-    )
+    from vamana_spark.operators.dedup import _content_norm
 
-    if expected_seen is None:
-        expected_seen = seen_df.count()
-    m_bits, k = _bloom_geometry(expected_seen, fpp)
     seen_norm = seen_df.select(_content_norm(text_col).alias("_n"))
-    b_bloom = build_bloom(seen_norm, m_bits, k, max_build_tasks)
-
-    keyed = docs.withColumn("_n", _content_norm(text_col))
-    flagged = flag_bloom_membership(keyed, b_bloom, m_bits, k)
-    clean = flagged.where(~F.col("_maybe"))
-    if verify:
-        survivors_c = flagged.where(F.col("_maybe")).join(
-            seen_norm, "_n", "left_anti"
-        )
-        out = clean.unionByName(survivors_c)
-    else:
-        out = clean
     return (
-        out.withWatermark(ts_col, watermark)
+        docs.withColumn("_n", _content_norm(text_col))
+        .join(seen_norm, "_n", "left_anti")
+        .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["_n"])
-        .drop("_n", "_maybe")
+        .drop("_n")
     )
 
 
