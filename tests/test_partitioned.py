@@ -279,9 +279,9 @@ def test_oversized_cells_split_on_skewed_corpus(spark):
     assert idx.centers.shape[0] == S
     sizes = {r["shard"]: r["count"] for r in idx.shards_df.groupBy("shard").count().collect()}
     assert idx.shards_df.select("vec_id").distinct().count() == 5000
-    # fair share with overlap 2; sample-estimated splitting + hash
-    # leveling must keep the realized max within ~the factor (slack for
-    # sample noise)
+    # fair share with overlap 2; splitting on nearest-cell counts +
+    # hash leveling must keep the realized max within ~the factor
+    # (slack for the overlap copies the split does not count)
     fair = 2 * 5000 / S
     assert max(sizes.values()) <= 2.6 * fair, (S, sizes)
     q = df.limit(20).select(
@@ -961,7 +961,11 @@ def test_build_split_bounds_largest_shard(spark):
     share of the layout it BUILDS (n over the shard count after the
     split), not of the pre-split cell count: on the skewed corpus at
     8 cells the largest realized shard stays within max_shard_factor x
-    that share."""
+    that share. At overlap 1 the counts are the populations
+    resplit_oversized measures, so it finds nothing to split on a
+    fresh build."""
+    from vamana_spark.index.partitioned import resplit_oversized
+
     skew = _skewed_blob_corpus(spark)
     params = VamanaParams(dim=16, alpha=1.2, R=16, L=32, ef_search=48, seed=42)
     idx = PartitionedVamanaIndex.build(spark, skew, params, num_shards=8, graph=False)
@@ -969,7 +973,26 @@ def test_build_split_bounds_largest_shard(spark):
     sizes = {r["shard"]: r["count"] for r in idx.shards_df.groupBy("shard").count().collect()}
     assert sum(sizes.values()) == 3000
     assert max(sizes.values()) <= 2.0 * 3000 / S, (S, sizes)
+    assert resplit_oversized(idx, max_shard_factor=2.0) is idx
     idx.shards_df.unpersist()
+
+
+@pytest.mark.parametrize("factor", [1.0, 0.5])
+def test_build_rejects_shard_factor_at_or_below_one(spark, factor):
+    """The split fixed point diverges at a factor <= 1 (the counts grow
+    without bound), so build refuses it, as resplit_oversized does,
+    before any Spark job runs: every read of this frame fails."""
+
+    @F.udf("array<float>")
+    def unreadable(v):
+        raise RuntimeError("build read the corpus")
+
+    df = _skewed_blob_corpus(spark).select("vec_id", unreadable("embedding").alias("embedding"))
+    params = VamanaParams(dim=16, alpha=1.2, R=16, L=32, ef_search=48, seed=42)
+    with pytest.raises(ValueError, match="max_shard_factor must be > 1"):
+        PartitionedVamanaIndex.build(
+            spark, df, params, num_shards=8, max_shard_factor=factor
+        )
 
 
 def test_routing_concentration_in_subshard_units(spark):

@@ -26,12 +26,18 @@ from vamana_spark.index.vamana import _metric_transform
 _SPLIT_HASH_MULT = np.uint64(0x9E3779B97F4A7C15)
 
 
+def _split_hash(vec_ids: np.ndarray) -> np.ndarray:
+    """The vec_id hash behind ``_subshard_of``, before the modulus:
+    non-negative int64 below 2**31."""
+    h = (vec_ids.astype(np.uint64) * _SPLIT_HASH_MULT) >> np.uint64(33)
+    return h.astype(np.int64)
+
+
 def _subshard_of(vec_ids: np.ndarray, nsplit: np.ndarray) -> np.ndarray:
     """Deterministic sub-shard level for each vec_id within its cell's
     split count (elementwise; ``nsplit`` broadcast-compatible with
     ``vec_ids``). 1-split cells always map to level 0."""
-    h = (vec_ids.astype(np.uint64) * _SPLIT_HASH_MULT) >> np.uint64(33)
-    return h.astype(np.int64) % nsplit
+    return _split_hash(vec_ids) % nsplit
 
 
 def _dedupe_centers(C: np.ndarray) -> np.ndarray:
@@ -88,6 +94,18 @@ def _cell_layout(centers: np.ndarray):
     return base, nsplit, cell_of_shard
 
 
+def _check_shard_factor(factor: float) -> None:
+    """The split fixed point converges only for ``factor`` > 1: at or
+    below it the cap shrinks every round and the counts grow without
+    bound (int64 overflow in ceil(pop/cap) and an enormous center
+    matrix). Callers check before any Spark job runs."""
+    if not float(factor) > 1.0:
+        raise ValueError(
+            f"max_shard_factor must be > 1 (got {factor}); the "
+            "split fixed point diverges at or below the fair share"
+        )
+
+
 def _split_counts(
     sizes: np.ndarray, start: np.ndarray, total: int, factor: float, fixed: int = 0
 ) -> np.ndarray:
@@ -98,8 +116,8 @@ def _split_counts(
     of itself: populations [940, 20, 20, 20] at factor 2 would split
     1→2 on one maintenance call and 2→3 on the next with no data change.
     Counts start at ``start`` and never shrink; the iteration is
-    monotone and converges for any factor > 1, so a second call on
-    unchanged populations lands on the same counts."""
+    monotone and converges for any factor > 1 (``_check_shard_factor``),
+    so a second call on unchanged populations lands on the same counts."""
     want = start.copy()
     for _ in range(100):
         cap = float(factor) * total / max(fixed + int(want.sum()), 1)
@@ -110,25 +128,20 @@ def _split_counts(
     return want
 
 
-def assign_cells(
+def nearest_cells(
     pts: DataFrame, C: np.ndarray, overlap: int, metric: str, mips_m
 ) -> DataFrame:
-    """``pts`` (vec_id, embedding) -> (vec_id, embedding, shard): one row
-    per point and cell for the point's ``overlap`` nearest cells.
-
-    Routing runs on ONE center row per cell (``_cell_layout``), in the
-    metric-transformed space: overlap must insure across distinct
-    cells, not across a split cell's sub-shards, and routing on the
-    repeated rows would tie every point to a split cell's first
-    sub-shard. Inside a split cell the sub-shard is the deterministic
-    vec_id hash ``_subshard_of``."""
-    base, nsplit, _ = _cell_layout(C)
-    bc = pts.sparkSession.sparkContext.broadcast(
-        (np.asarray(C)[base].astype(np.float64), base, nsplit)
-    )
+    """``pts`` (vec_id, embedding) -> (vec_id, embedding, cell, _h,
+    _nearest): one row per point and each of its ``overlap`` nearest
+    rows of ``C`` (``cell`` = row index), in the metric-transformed
+    space. ``_nearest`` marks exactly one row per point, its nearest
+    cell. ``_h`` is the point's ``_split_hash``, so a split layout
+    chosen after this pass places the rows (``place_in_layout``)
+    without a second pass over the vectors."""
+    bc = pts.sparkSession.sparkContext.broadcast(np.asarray(C).astype(np.float64))
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cc, base_v, nsplit_v = bc.value
+        Cc = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -145,17 +158,60 @@ def assign_cells(
             else:
                 sh = np.argpartition(d, overlap - 1, axis=1)[:, :overlap]
             sh = np.asarray(sh)
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            final = base_v[sh] + _subshard_of(vid[:, None], nsplit_v[sh])
-            out = pdf[["vec_id", "embedding"]].iloc[
-                np.repeat(np.arange(len(pdf)), sh.shape[1])
-            ].copy()
-            out["shard"] = final.ravel().astype(np.int32)
+            rep = np.repeat(np.arange(len(pdf)), sh.shape[1])
+            first = np.take_along_axis(d, sh, axis=1).argmin(axis=1)
+            out = pdf[["vec_id", "embedding"]].iloc[rep].copy()
+            out["cell"] = sh.ravel().astype(np.int32)
+            out["_h"] = _split_hash(pdf["vec_id"].to_numpy(dtype=np.int64))[rep]
+            out["_nearest"] = (np.arange(sh.shape[1]) == first[:, None]).ravel()
             yield out
 
     return pts.mapInPandas(
-        assign, schema="vec_id long, embedding array<float>, shard int"
+        assign,
+        schema="vec_id long, embedding array<float>, cell int, _h long, _nearest boolean",
     )
+
+
+def place_in_layout(
+    near: DataFrame, base: np.ndarray, nsplit: np.ndarray
+) -> DataFrame:
+    """``nearest_cells`` rows -> (vec_id, embedding, shard): ``shard`` =
+    ``base[cell]`` + ``_h % nsplit[cell]``, the ``_subshard_of`` rule
+    (``_h`` is non-negative, so SQL's ``%`` equals numpy's). The layout
+    rides a tiny broadcast-joined table, one row per cell, not literal
+    arrays in the plan."""
+    layout = near.sparkSession.createDataFrame(
+        pd.DataFrame(
+            {
+                "cell": np.arange(len(base), dtype=np.int32),
+                "_base": np.asarray(base, dtype=np.int64),
+                "_nsplit": np.asarray(nsplit, dtype=np.int64),
+            }
+        ),
+        "cell int, _base long, _nsplit long",
+    )
+    return near.join(F.broadcast(layout), "cell").select(
+        "vec_id",
+        "embedding",
+        (F.col("_base") + F.col("_h") % F.col("_nsplit")).cast("int").alias("shard"),
+    )
+
+
+def assign_cells(
+    pts: DataFrame, C: np.ndarray, overlap: int, metric: str, mips_m
+) -> DataFrame:
+    """``pts`` (vec_id, embedding) -> (vec_id, embedding, shard): one row
+    per point and cell for the point's ``overlap`` nearest cells.
+
+    Routing runs on ONE center row per cell (``_cell_layout``), in the
+    metric-transformed space: overlap must insure across distinct
+    cells, not across a split cell's sub-shards, and routing on the
+    repeated rows would tie every point to a split cell's first
+    sub-shard. Inside a split cell the sub-shard is the deterministic
+    vec_id hash ``_subshard_of``."""
+    base, nsplit, _ = _cell_layout(C)
+    near = nearest_cells(pts, np.asarray(C)[base], overlap, metric, mips_m)
+    return place_in_layout(near, base, nsplit)
 
 
 def lloyd_centers(

@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from vamana_spark import exact
 from vamana_spark.index import kernels
 from vamana_spark.index.cells import (
-    _cell_layout, _dedupe_centers, _split_counts, _subshard_of, assign_cells,
+    _cell_layout, _check_shard_factor, _dedupe_centers, _split_counts,
+    _subshard_of, assign_cells, nearest_cells, place_in_layout,
 )
 from vamana_spark.params import VamanaParams
 
@@ -432,15 +433,25 @@ class PartitionedVamanaIndex:
         layout (n over the shard count after the split) are
         hash-split into evenly sized sub-shards (deterministic vec_id
         hash); the split counts are ``cells._split_counts``' fixed
-        point, the rule ``resplit_oversized`` applies. Each sub-shard
-        repeats its parent's center, so routing degrades gracefully —
-        probing a big cell just probes its sub-shards as near-ties.
-        The populations are exact, from one aggregate over the cell
-        assignment (one extra job): the ~32-row-per-cell training
-        sample misreads a cell's share by a few percent, enough to
-        leave a shard past the bound. Uniform corpora split nothing.
-        ``None`` disables the split and its counting job."""
+        point, the rule ``resplit_oversized`` applies. Overlap copies
+        are not counted: at a few cells they spread a hot cell's
+        points over every cell and the split would never fire. Each
+        sub-shard repeats its parent's center, so routing degrades
+        gracefully — probing a big cell just probes its sub-shards as
+        near-ties. The counts are exact: the one cell-assignment pass
+        is cached and counted (one small aggregate job), then placed
+        into the split layout without another pass over the vectors;
+        the ~32-row-per-cell training sample misreads a cell's share
+        by a few percent, enough to leave a shard past the bound. The
+        cache holds ``overlap`` copies of every embedding until the
+        shard kernels have run. Uniform corpora split nothing. The
+        factor must be > 1 (the split fixed point diverges at or below
+        it; ``ValueError`` before any job runs). ``None`` disables the
+        split, its cache and its counting job."""
         import dataclasses
+
+        if max_shard_factor is not None:
+            _check_shard_factor(max_shard_factor)
 
         # never mutate the caller's params (same as VamanaIndex.build):
         # the copy carries n/num_shards on the index
@@ -485,26 +496,21 @@ class PartitionedVamanaIndex:
             kernels._kmeans(Xs, min(num_shards, Xs.shape[0]), params.seed, 10)
         )
 
-        # oversized-cell splitting (see docstring): count each cell's
-        # rows exactly, split any cell past the factor into
-        # hash-addressed sub-shards, and repeat the parent center per
-        # sub-shard so routing is unchanged
+        # oversized-cell splitting (see docstring): one assignment pass
+        # on the unsplit cells, cached and counted, split any cell past
+        # the factor into hash-addressed sub-shards, and repeat the
+        # parent center per sub-shard so routing is unchanged
         n_cells = C.shape[0]
+        near = nearest_cells(pts, C, overlap, metric, mips_m)
+        nsplit = np.ones(n_cells, dtype=np.int64)
         if max_shard_factor is not None and n_cells > 1:
-            pop = dict(
-                assign_cells(pts, C, 1, metric, mips_m)
-                .groupBy("shard").count().collect()
-            )
+            near = near.cache()
+            pop = dict(near.where("_nearest").groupBy("cell").count().collect())
             counts = np.array([pop.get(c, 0) for c in range(n_cells)], dtype=np.int64)
-            nsplit = _split_counts(
-                counts, np.ones(n_cells, dtype=np.int64), int(counts.sum()),
-                max_shard_factor,
-            )
-        else:
-            nsplit = np.ones(n_cells, dtype=np.int64)
+            nsplit = _split_counts(counts, nsplit, int(counts.sum()), max_shard_factor)
+        assigned = place_in_layout(near, np.cumsum(nsplit) - nsplit, nsplit)
         C = np.repeat(C, nsplit, axis=0)
         num_shards = int(nsplit.sum())
-        assigned = assign_cells(pts, C, overlap, metric, mips_m)
 
         # Collision-free task spread: applyInPandas hash-partitions the
         # group key, and Murmur3 over a handful of small shard ids
@@ -540,6 +546,7 @@ class PartitionedVamanaIndex:
             spark.conf.set(
                 "spark.sql.adaptive.coalescePartitions.enabled", prev
             )
+            near.unpersist()
         params.n = pts.count()
         params.num_shards = num_shards
         params.shard_overlap = overlap
@@ -1981,12 +1988,12 @@ def resplit_oversized(
     split-when-full recipe this implements shard-locally).
 
     The build-time skew guard (``build``'s ``max_shard_factor``) fixes
-    the split layout once, from a population SAMPLE; ``add_points``
-    preserves that layout, so a cell that keeps receiving appends — the
-    normal shape of a growing clustered corpus — outgrows its split
-    count and its sub-shard kernels/scan tasks become exactly the
-    stragglers the guard exists to bound. This operator measures actual
-    shard sizes (one tiny groupBy-count — exact, not sampled), grows
+    the split layout once, from the populations at build time;
+    ``add_points`` preserves that layout, so a cell that keeps
+    receiving appends — the normal shape of a growing clustered corpus
+    — outgrows its split count and its sub-shard kernels/scan tasks
+    become exactly the stragglers the guard exists to bound. This
+    operator measures actual shard sizes (one tiny groupBy-count), grows
     the split count of any cell whose population exceeds
     ``max_shard_factor ×`` the fair share, and rebuilds ONLY the
     re-split cells' rows: every other shard keeps its subgraph
@@ -2012,14 +2019,7 @@ def resplit_oversized(
     ``_carry_calibration``). No-op (same object) when nothing is
     oversized.
     """
-    # the split fixed point converges only for factor > 1: at or below
-    # it the cap shrinks every round and the counts grow without bound
-    # (int64 overflow in ceil(pop/cap) and an enormous center matrix)
-    if not float(max_shard_factor) > 1.0:
-        raise ValueError(
-            f"max_shard_factor must be > 1 (got {max_shard_factor}); the "
-            "split fixed point diverges at or below the fair share"
-        )
+    _check_shard_factor(max_shard_factor)
     spark = index.spark
     params = index.params
     C = index.centers

@@ -1886,7 +1886,11 @@ def _exact_verify_tail(batch: DataFrame, seen_norm: DataFrame) -> DataFrame:
     size (one aggregate over the checkpoint: count and total bytes of
     ``_n``) stays within ``spark.sql.autoBroadcastJoinThreshold`` (the
     anti-join's probe side then does not exchange), as a batch-bounded
-    shuffle past it. Broadcasting texts instead of digests does not
+    shuffle past it. The gate prices the WHOLE batch, an upper bound on
+    the matched set it broadcasts: pricing the matched set itself would
+    take a second job over the corpus, so a mostly-fresh batch whose
+    texts pass the threshold takes the shuffled anti-join even when
+    few of them match. Broadcasting texts instead of digests does not
     scale: on a 10M-doc corpus with 2.1M candidate rows two text
     broadcasts of ~300 MB each took ~400 of ~500 s.
 
@@ -1948,10 +1952,11 @@ def incremental_dedup(
       map-side partials — hot duplicate keys combine before the
       exchange); it is the small side by construction.
     - The batch's content digests, 8 B per distinct batch content,
-      force-broadcast (``F.broadcast``, whatever the threshold) into a
-      map-side semi-join over ``seen_df`` that keeps only the
-      hash-matched corpus rows, then a text anti-join against them
-      drops exact matches. See ``_exact_verify_tail``.
+      force-broadcast (``F.broadcast``, whatever their size, while
+      broadcasts are enabled) into a map-side semi-join over
+      ``seen_df`` that keeps only the hash-matched corpus rows, then a
+      text anti-join against them drops exact matches. See
+      ``_exact_verify_tail``.
     - With ``spark.sql.autoBroadcastJoinThreshold`` < 0 nothing
       broadcasts, and the digest semi-join shuffles the whole corpus.
 

@@ -1866,9 +1866,10 @@ def q_skewed_build(spark, sf_dir):
     oversized-cell split actually fires and stays bounded. ``ok`` folds
     in (a) split fired: final num_shards > 4, (b) the realized max
     shard ≤ 2.6× the fair share (slack over the 2.0 factor for the
-    overlap copies, which the split does not count), (c) coverage: every point indexed exactly once per
-    overlap-distinct cell, (d) exhaustive search recall ≥ 0.9 vs exact
-    kNN on the same skewed table. Rows-only by nature (k-means build);
+    overlap copies, which the split does not count), (c) coverage:
+    every point indexed exactly once per overlap-distinct cell, (d)
+    exhaustive search recall ≥ 0.9 vs exact kNN on the same skewed
+    table. Rows-only by nature (k-means build);
     the equivalent invariants run at unit scale in
     test_partitioned.py::test_oversized_cells_split_on_skewed_corpus."""
     from vamana_spark import quality
@@ -1917,8 +1918,9 @@ def q_resplit_consolidation(spark, sf_dir):
     append leaves behind — then run ``resplit_oversized`` and assert it
     restores the bound. ``ok`` folds in: (a) the resplit fired
     (num_shards grew), (b) the realized max shard ≤ 2.6× the fair
-    share (sample-noise slack over the 2.0 factor, same bar as
-    q_skewed_build), (c) coverage: every point indexed exactly once
+    share (slack over the 2.0 factor for the uneven vec_id-hash
+    leveling inside a split cell; same bar as q_skewed_build), (c)
+    coverage: every point indexed exactly once
     per overlap-distinct cell, (d) exhaustive-search recall ≥ 0.9 vs
     exact kNN on the same skewed table — byte-preserved untouched
     shards and re-hashed hot-cell members both serve. Rows-only by
